@@ -293,20 +293,6 @@ object Bench {
       case _ => () => 0L
     }
 
-  private def buildSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.util.LocalIo.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions"))
-      .getOrCreate()
-    graft.util.LocalIo.relaxLocalChecksums(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Warm the JVM/codegen paths (cheap scans/aggs) and build the
     * build-once fixtures, so per-query timings reflect data work, not
     * first-query JIT or one-time fixture construction. Fixtures are
@@ -569,7 +555,7 @@ object Bench {
         n => familyOf(n) == family))
       .sorted
     val floors = loadFloors(sfJsonOf(sfDir))
-    val spark = buildSession()
+    val spark = graft.util.LocalIo.session()
     warm(spark, sfDir)
     val (probeBefore, spinMsBefore) = spinProbe()
     val env = envProbe(sfDir, spinMsBefore)
@@ -783,7 +769,7 @@ object Bench {
     var parentSpark: Option[SparkSession] = None
     var parentWarmed = false
     def parentSession(): SparkSession = {
-      val s = parentSpark.getOrElse { val b = buildSession()
+      val s = parentSpark.getOrElse { val b = graft.util.LocalIo.session()
         parentSpark = Some(b); b }
       if (!parentWarmed) { warm(s, sfDir); parentWarmed = true }
       s

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dump `.explain("formatted")` for named queries to files — the
@@ -18,19 +17,10 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val Array(outDir, namesCsv) = args
     val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLANS_SUFFIX", "plan")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    val spark = graft.util.LocalIo.relaxLocalChecksums(
-      graft.util.LocalIo.tune(b0).getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalIo.session()
     try SparkEntry.prewarm(spark, sfDir)
     catch { case e: Throwable =>
       System.err.println(s"[plans] prewarm failed: $e")

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query execution profile: where does the wall go?
   *
@@ -72,21 +71,12 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val names = args.headOption
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq.empty)
     require(names.nonEmpty, "usage: runMain graft.Profile q1,q2,...")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    // same local-FS bindings as the measured entry points
-    val spark = graft.util.LocalIo.relaxLocalChecksums(
-      graft.util.LocalIo.tune(b0).getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    // the same session as the measured entry points
+    val spark = graft.util.LocalIo.session()
     try SparkEntry.prewarm(spark, sfDir)
     catch { case e: Throwable =>
       System.err.println(s"[profile] prewarm failed: $e")

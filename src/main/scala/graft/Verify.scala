@@ -1,24 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.util.LocalIo.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // FAIR so concurrent streaming queries share executors fairly
-      // (reference: AutomateTable.py:64-66 + fairscheduler.xml)
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions"))
-      .getOrCreate()
-    graft.util.LocalIo.relaxLocalChecksums(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalIo.session()
     new java.io.File(outDir).mkdirs()
     // dev loop: SPARK_GRAFT_VERIFY_ONLY=q1,q2 dumps just those queries
     // (blank = no filter, same contract as Bench's SPARK_GRAFT_BENCH_ONLY)

@@ -8,10 +8,9 @@ package graft.operators
   * encoding of records (zigzag LEB128 varints for int/long, length-
   * prefixed UTF-8 strings and bytes, little-endian IEEE float/double,
   * 1-byte booleans, union branch indexes), and both standard block
-  * codecs WIRED TO THIS REPO'S OWN DECODERS — `deflate` is raw RFC
-  * 1951 via [[Inflate.inflateRaw]], `snappy` is raw snappy via
-  * [[Snappy.uncompress]] plus Avro's trailing BIG-endian CRC-32 of the
-  * uncompressed block (verified).
+  * codecs — `deflate` is raw RFC 1951 via [[Inflate.inflateRaw]],
+  * `snappy` is raw snappy via [[Snappy.uncompress]] plus Avro's
+  * trailing BIG-endian CRC-32 of the uncompressed block (verified).
   *
   * Schema scope, rejected loudly by name outside it: one top-level
   * record of primitive fields (null/boolean/int/long/float/double/
@@ -192,7 +191,7 @@ object Avro {
       val data = codec match {
         case "null" => raw
         case "deflate" =>
-          // avro 'deflate' is RAW RFC 1951 — this repo's own inflater
+          // avro 'deflate' is RAW RFC 1951
           val (out, end) = Inflate.inflateRaw(raw, 0)
           require(end == raw.length,
             "torn avro: deflate block has trailing garbage")

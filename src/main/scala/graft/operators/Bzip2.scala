@@ -1,324 +1,50 @@
 package graft.operators
 
-/** bzip2 decompression from scratch (pure JVM) — the wiki-dump /
-  * archive-corpus member of the compressed-shard family next to
-  * [[Lz4]]/[[Snappy]]/[[Inflate]], and the only one built on a
-  * block-sorting transform rather than LZ77: the full decode chain per
-  * the public bzip2 format — "BZh" + level stream header (level ×
-  * 100000 block limit), the 48-bit block magic, the 16+16×16-bit used-
-  * symbol bitmap, 2..6 Huffman groups with unary-MTF-coded selectors
-  * switching every 50 symbols, per-group delta-coded code lengths,
-  * canonical Huffman decode, RUNA/RUNB bijective-base-2 zero runs, the
-  * move-to-front inverse, the inverse Burrows–Wheeler transform
-  * (counting-sort successor vector walked from origPtr), the final
-  * 4-byte run-length layer, the bzip2 MSB-first CRC-32 per block, and
-  * the stream footer's rotating combined CRC. Multi-STREAM files (the
-  * pbzip2 concatenation shape) decode like gzip members. Deprecated
-  * RANDOMIZED blocks reject loudly by name.
-  *
-  * The format is fully self-describing — every Huffman table travels in
-  * the stream, so unlike VP8's lossy tier there are no external spec
-  * constants to transcribe. Cross-validated in Bzip2Spec against the
-  * INDEPENDENT commons-compress implementation on Spark's classpath
-  * (org.apache.commons.compress): our decoder must reproduce its
-  * compressor's output bit-exactly at every block size, and torn
-  * streams (bad magics, wrong block/stream CRC, truncation) reject
-  * loudly. There is no encoder here — the fixture corpus is
-  * commons-compress-produced, which makes the cross-validation
-  * foreign-origin rather than self-referential.
-  *
-  * Beyond-reference source surface (SURVEY §2.1 scope).
+import LibCodec.{drain, loud}
+
+/** bzip2 — the wiki-dump / archive-corpus member of the compressed-shard
+  * family next to [[Lz4]]/[[Snappy]]/[[Inflate]]. Each stream is decoded
+  * by commons-compress (Huffman groups, MTF, inverse BWT, RLE layers,
+  * block and combined CRCs all verified there); this object owns the
+  * STREAM walk: the "BZh" + level header of every stream, MULTI-STREAM
+  * files (the pbzip2 concatenation shape) decoded like gzip members,
+  * tolerated zero padding between streams, and the decompressed-size
+  * ceiling across the whole file.
   */
 object Bzip2 {
 
-  private final class BitReader(p: Array[Byte]) {
-    var bytePos = 0
-    private var bitPos = 0
-    def readBit(): Int = {
-      require(bytePos < p.length, "torn bzip2: read past end of stream")
-      val b = ((p(bytePos) & 0xff) >> (7 - bitPos)) & 1
-      bitPos += 1
-      if (bitPos == 8) { bitPos = 0; bytePos += 1 }
-      b
-    }
-    def bits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) { v = (v << 1) | readBit(); i += 1 }
-      v
-    }
-    def bitsLong(n: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < n) { v = (v << 1) | readBit(); i += 1 }
-      v
-    }
-    def align(): Unit = if (bitPos != 0) { bitPos = 0; bytePos += 1 }
-    def atEnd: Boolean = bytePos >= p.length
-  }
-
-  // bzip2's CRC-32: polynomial 0x04c11db7, MSB-first, init ~0, final ~
-  private val CrcTable: Array[Int] = {
-    val t = new Array[Int](256)
-    var i = 0
-    while (i < 256) {
-      var c = i << 24
-      var k = 0
-      while (k < 8) {
-        c = if ((c & 0x80000000) != 0) (c << 1) ^ 0x04c11db7 else c << 1
-        k += 1
-      }
-      t(i) = c
-      i += 1
-    }
-    t
-  }
-
-  private final class BlockCrc {
-    private var crc = 0xffffffff
-    def update(b: Int): Unit =
-      crc = (crc << 8) ^ CrcTable(((crc >>> 24) ^ b) & 0xff)
-    def value: Int = ~crc
-  }
-
-  // canonical Huffman over lengths 1..23, MSB-first incremental decode
-  private final class Huffman(lengths: Array[Int]) {
-    private val MaxLen = 23
-    private val counts = new Array[Int](MaxLen + 1)
-    lengths.foreach { l =>
-      require(l >= 1 && l <= MaxLen, s"bzip2 code length $l out of 1..23")
-      counts(l) += 1
-    }
-    private val sorted = lengths.indices
-      .sortBy(i => (lengths(i), i)).toArray
-    def decode(br: BitReader): Int = {
-      var code = 0
-      var first = 0
-      var index = 0
-      var len = 1
-      while (len <= MaxLen) {
-        code |= br.readBit()
-        val n = counts(len)
-        if (code - first < n) return sorted(index + code - first)
-        index += n
-        first = (first + n) << 1
-        code <<= 1
-        len += 1
-      }
-      throw new IllegalArgumentException(
-        "invalid bzip2 Huffman code (over-long bit pattern)")
-    }
-  }
-
   final case class Bz2Info(content: Array[Byte], nStreams: Int,
-      nBlocks: Int, level: Int)
+      level: Int)
 
   /** Decode a complete (possibly multi-stream) .bz2 file. */
   def decode(p: Array[Byte]): Bz2Info = {
     require(p.length >= 10, "torn bzip2: shorter than any stream")
     val out = new java.io.ByteArrayOutputStream()
     var nStreams = 0
-    var nBlocks = 0
     var level = 0
-    val br = new BitReader(p)
-    while (!br.atEnd) {
-      require(br.bits(8) == 'B' && br.bits(8) == 'Z' && br.bits(8) == 'h',
-        "not a bzip2 stream (missing BZh magic)")
-      val lvl = br.bits(8) - '0'
-      require(lvl >= 1 && lvl <= 9, s"bzip2 level $lvl outside 1..9")
-      level = lvl
-      val blockLimit = 100000 * lvl
+    var o = 0
+    while (o < p.length) {
+      require(o + 4 <= p.length && p(o) == 'B' && p(o + 1) == 'Z' &&
+        p(o + 2) == 'h', "not a bzip2 stream (missing BZh magic)")
+      level = p(o + 3) - '0'
+      require(level >= 1 && level <= 9, s"bzip2 level $level outside 1..9")
+      // one stream per decoder: it stops at the stream's end-of-stream
+      // footer, so the bytes it left unread start the next stream
+      val in = new java.io.ByteArrayInputStream(p, o, p.length - o)
+      val bz = loud("bzip2")(new org.apache.commons.compress.compressors
+        .bzip2.BZip2CompressorInputStream(in, false))
+      val dec = drain("bzip2", bz, LibCodec.MaxOutput - out.size)
+      out.write(dec, 0, dec.length)
       nStreams += 1
-      var combined = 0
-      var streamEnd = false
-      while (!streamEnd) {
-        val magic = br.bitsLong(48)
-        if (magic == 0x177245385090L) { // end-of-stream footer
-          val gotCombined = br.bits(32)
-          require(gotCombined == combined,
-            f"bzip2 combined stream CRC mismatch " +
-              f"(got 0x$gotCombined%08x, want 0x$combined%08x)")
-          br.align() // a following stream starts byte-aligned
-          streamEnd = true
-        } else {
-          require(magic == 0x314159265359L,
-            f"torn bzip2: block magic 0x$magic%012x")
-          val wantCrc = br.bits(32)
-          require(br.readBit() == 0,
-            "RANDOMIZED bzip2 blocks unsupported (deprecated since 0.9.5)")
-          val origPtr = br.bits(24)
-          // used-symbol map: 16 group bits, then 16 bits per set group
-          val groups16 = br.bits(16)
-          val used = new Array[Boolean](256)
-          var g = 0
-          while (g < 16) {
-            if (((groups16 >> (15 - g)) & 1) != 0) {
-              val inner = br.bits(16)
-              var k = 0
-              while (k < 16) {
-                if (((inner >> (15 - k)) & 1) != 0) used(g * 16 + k) = true
-                k += 1
-              }
-            }
-            g += 1
-          }
-          val seqToUnseq = (0 until 256).filter(used).toArray
-          val nUsed = seqToUnseq.length
-          require(nUsed > 0, "bzip2 block with an empty symbol map")
-          val alphaSize = nUsed + 2 // RUNA, RUNB, MTF values, EOB
-          val nGroups = br.bits(3)
-          require(nGroups >= 2 && nGroups <= 6,
-            s"bzip2 group count $nGroups outside 2..6")
-          val nSelectors = br.bits(15)
-          require(nSelectors >= 1, "bzip2 block with no selectors")
-          // selectors are MTF-coded in unary
-          val selectorMtf = Array.tabulate(nGroups)(identity)
-          val selectors = new Array[Int](nSelectors)
-          var i = 0
-          while (i < nSelectors) {
-            var j = 0
-            while (br.readBit() == 1) {
-              j += 1
-              require(j < nGroups, "bzip2 selector outside group count")
-            }
-            val v = selectorMtf(j)
-            while (j > 0) { selectorMtf(j) = selectorMtf(j - 1); j -= 1 }
-            selectorMtf(0) = v
-            selectors(i) = v
-            i += 1
-          }
-          // per-group delta-coded code lengths
-          val tables = Array.tabulate(nGroups) { _ =>
-            val lens = new Array[Int](alphaSize)
-            var len = br.bits(5)
-            var s = 0
-            while (s < alphaSize) {
-              var moving = true
-              while (moving) {
-                require(len >= 1 && len <= 23,
-                  s"bzip2 delta walked code length to $len")
-                if (br.readBit() == 0) moving = false
-                else if (br.readBit() == 0) len += 1
-                else len -= 1
-              }
-              lens(s) = len
-              s += 1
-            }
-            new Huffman(lens)
-          }
-          // MTF + RLE2 decode of the block's BWT column
-          val eob = alphaSize - 1
-          val mtf = seqToUnseq.clone()
-          val bwt = new Array[Byte](blockLimit + 10)
-          var blockLen = 0
-          var groupPos = 0
-          var groupCount = 0
-          def nextSym(): Int = {
-            if (groupCount == 0) {
-              require(groupPos < nSelectors,
-                "bzip2 block ran out of selectors")
-              groupCount = 50
-              groupPos += 1
-            }
-            groupCount -= 1
-            tables(selectors(groupPos - 1)).decode(br)
-          }
-          var sym = nextSym()
-          while (sym != eob) {
-            if (sym <= 1) { // RUNA/RUNB: bijective base-2 zero run
-              var run = 0L
-              var shift = 0
-              while (sym <= 1) {
-                run += (sym + 1).toLong << shift
-                shift += 1
-                require(shift < 40, "runaway bzip2 zero run")
-                sym = nextSym()
-              }
-              require(blockLen + run <= blockLimit,
-                s"bzip2 zero run overflows the $blockLimit-byte block")
-              val b = mtf(0).toByte
-              var k = 0L
-              while (k < run) { bwt(blockLen) = b; blockLen += 1; k += 1 }
-            } else {
-              // MTF value: index sym-1 in the current list
-              var j = sym - 1
-              require(j < nUsed, s"bzip2 MTF index $j of $nUsed")
-              val v = mtf(j)
-              while (j > 0) { mtf(j) = mtf(j - 1); j -= 1 }
-              mtf(0) = v
-              require(blockLen < blockLimit,
-                s"bzip2 block overflows its $blockLimit-byte limit")
-              bwt(blockLen) = v.toByte
-              blockLen += 1
-              sym = nextSym()
-            }
-          }
-          require(origPtr < blockLen,
-            s"bzip2 origPtr $origPtr outside the $blockLen-byte block")
-          // inverse BWT: successor vector via counting sort
-          val cftab = new Array[Int](257)
-          var k = 0
-          while (k < blockLen) {
-            cftab((bwt(k) & 0xff) + 1) += 1
-            k += 1
-          }
-          k = 1
-          while (k <= 256) { cftab(k) += cftab(k - 1); k += 1 }
-          val next = new Array[Int](blockLen)
-          k = 0
-          while (k < blockLen) {
-            val c = bwt(k) & 0xff
-            next(cftab(c)) = k
-            cftab(c) += 1
-            k += 1
-          }
-          // walk + final RLE1 (runs of 4 equal bytes carry a count byte)
-          val crc = new BlockCrc
-          var pPos = next(origPtr)
-          var emitted = 0
-          var runByte = -1
-          var runLen = 0
-          var expectCount = false
-          while (emitted < blockLen) {
-            val b = bwt(pPos) & 0xff
-            pPos = next(pPos)
-            emitted += 1
-            if (expectCount) {
-              var r = 0
-              while (r < b) { out.write(runByte); crc.update(runByte); r += 1 }
-              expectCount = false
-              runByte = -1
-              runLen = 0
-            } else {
-              out.write(b)
-              crc.update(b)
-              if (b == runByte) {
-                runLen += 1
-                if (runLen == 4) expectCount = true
-              } else {
-                runByte = b
-                runLen = 1
-              }
-            }
-          }
-          require(!expectCount,
-            "torn bzip2: block ends inside a 4-run length escape")
-          require(crc.value == wantCrc,
-            f"bzip2 block CRC mismatch (got 0x${crc.value}%08x, " +
-              f"want 0x$wantCrc%08x)")
-          combined = ((combined << 1) | (combined >>> 31)) ^ crc.value
-          nBlocks += 1
-        }
-      }
+      o = p.length - in.available()
       // trailing zero padding after a stream is tolerated (tar-style)
-      while (!br.atEnd && p(br.bytePos) == 0) br.bytePos += 1
+      while (o < p.length && p(o) == 0) o += 1
     }
-    Bz2Info(out.toByteArray, nStreams, nBlocks, level)
+    Bz2Info(out.toByteArray, nStreams, level)
   }
 
   // -------------------------------------------------------------------
-  // Fixture: commons-compress-produced .jsonl.bz2 shards (foreign-origin
-  // corpus — the decoder under test never sees its own encoder's bytes)
+  // Fixture: commons-compress-written .jsonl.bz2 shards
 
   def fixtureLineCount(id: Long): Int = 60 + (id % 50).toInt
 

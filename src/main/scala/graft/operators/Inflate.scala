@@ -1,241 +1,42 @@
 package graft.operators
 
-/** DEFLATE / gzip / zlib decompression from scratch (pure JVM) — the
-  * foundational codec of the ingestion family ([[Warc]]/[[Tar]] lean on
-  * gzip, PNG/TIFF on zlib): RFC 1951 raw DEFLATE with all three block
-  * types (stored with LEN/NLEN verification, fixed Huffman, dynamic
-  * Huffman with the 19-symbol code-length code and repeat codes
-  * 16/17/18), the full length (257..285) and distance (0..29) extra-bit
-  * tables, the 32 KiB sliding window with overlap-capable copies;
-  * RFC 1952 gzip members with every optional header field (FEXTRA /
-  * FNAME / FCOMMENT / FHCRC — the 16-bit header CRC verified), CRC-32
-  * + ISIZE trailer verification, and MULTI-MEMBER streams (the
-  * .warc.gz / pigz shape); RFC 1950 zlib with CMF/FLG consistency and
-  * Adler-32 verification (Adler-32 implemented here — the two
-  * mod-65521 running sums).
-  *
-  * Cross-validated in InflateSpec against the JDK's independent
-  * implementation both ways: our inflater must decode
-  * Deflater/GZIPOutputStream output at every compression level
-  * (stored, fixed and dynamic blocks all appear across levels 0..9)
-  * bit-exactly, and java.util.zip.Inflater must accept our
-  * stored/fixed-block writer. Torn streams (bad LEN/NLEN, oversubscribed
-  * Huffman codes, out-of-window distances, wrong CRC/ISIZE/Adler,
-  * truncation) reject loudly by name.
-  *
-  * Formats are public RFCs 1950/1951/1952. Beyond-reference source
-  * surface (SURVEY §2.1 scope).
+import LibCodec.loud
+
+/** DEFLATE / gzip — the foundational codec of the ingestion family
+  * ([[Warc]]/[[Tar]] lean on gzip, PNG/TIFF on zlib) and the codec of
+  * parquet GZIP pages, ORC ZLIB chunks and Avro `deflate` blocks. Raw
+  * RFC 1951 streams are inflated by the JDK's `java.util.zip.Inflater`;
+  * this object owns the RFC 1952 gzip MEMBER walk: magic, CM, reserved
+  * FLG bits, every optional header field (FEXTRA / FNAME / FCOMMENT /
+  * FHCRC — the 16-bit header CRC verified), the CRC-32 + ISIZE trailer,
+  * and MULTI-MEMBER streams (the .warc.gz / pigz shape), plus the
+  * decompressed-size ceiling every inflate runs under.
   */
 object Inflate {
-
-  // -------------------------------------------------------------------
-  // LSB-first bit reader (DEFLATE packs Huffman codes bit-reversed)
-
-  private final class BitReader(p: Array[Byte], var bytePos: Int) {
-    private var bitPos = 0
-    def readBit(): Int = {
-      require(bytePos < p.length, "torn DEFLATE: read past end of input")
-      val b = (p(bytePos) >> bitPos) & 1
-      bitPos += 1
-      if (bitPos == 8) { bitPos = 0; bytePos += 1 }
-      b
-    }
-    def bits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) { v |= readBit() << i; i += 1 }
-      v
-    }
-    def align(): Unit = if (bitPos != 0) { bitPos = 0; bytePos += 1 }
-  }
-
-  // canonical Huffman decoded incrementally, code bits MSB-first
-  private final class Huffman(lengths: Array[Int]) {
-    private val MaxLen = 15
-    private val counts = new Array[Int](MaxLen + 1)
-    lengths.foreach { l =>
-      require(l >= 0 && l <= MaxLen, s"code length $l")
-      if (l > 0) counts(l) += 1
-    }
-    require(counts.sum > 0, "DEFLATE Huffman code with no symbols")
-    // over-subscription is torn input; incompleteness is legal only for
-    // the degenerate 1-code distance alphabet RFC 1951 permits
-    private var left = 1
-    for (l <- 1 to MaxLen) {
-      left <<= 1
-      left -= counts(l)
-      require(left >= 0, "over-subscribed DEFLATE Huffman code")
-    }
-    private val sorted = lengths.indices.filter(lengths(_) > 0)
-      .sortBy(i => (lengths(i), i)).toArray
-    def decode(br: BitReader): Int = {
-      var code = 0
-      var first = 0
-      var index = 0
-      var len = 1
-      while (len <= MaxLen) {
-        code |= br.readBit()
-        val n = counts(len)
-        if (code - first < n) return sorted(index + code - first)
-        index += n
-        first = (first + n) << 1
-        code <<= 1
-        len += 1
-      }
-      throw new IllegalArgumentException(
-        "invalid DEFLATE Huffman code (over-long bit pattern)")
-    }
-  }
-
-  // RFC 1951 §3.2.5 — length and distance bases/extra bits
-  private val LenBase = Array(3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17,
-    19, 23, 27, 31, 35, 43, 51, 59, 67, 83, 99, 115, 131, 163, 195, 227,
-    258)
-  private val LenExtra = Array(0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1,
-    2, 2, 2, 2, 3, 3, 3, 3, 4, 4, 4, 4, 5, 5, 5, 5, 0)
-  private val DistBase = Array(1, 2, 3, 4, 5, 7, 9, 13, 17, 25, 33, 49,
-    65, 97, 129, 193, 257, 385, 513, 769, 1025, 1537, 2049, 3073, 4097,
-    6145, 8193, 12289, 16385, 24577)
-  private val DistExtra = Array(0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4,
-    5, 5, 6, 6, 7, 7, 8, 8, 9, 9, 10, 10, 11, 11, 12, 12, 13, 13)
-  // RFC 1951 §3.2.7 — code-length code transmission order
-  private val ClOrder = Array(16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4,
-    12, 3, 13, 2, 14, 1, 15)
-
-  private lazy val FixedLit: Huffman = {
-    val l = new Array[Int](288)
-    for (i <- 0 until 144) l(i) = 8
-    for (i <- 144 until 256) l(i) = 9
-    for (i <- 256 until 280) l(i) = 7
-    for (i <- 280 until 288) l(i) = 8
-    new Huffman(l)
-  }
-  private lazy val FixedDist: Huffman = new Huffman(Array.fill(30)(5))
-
-  /** Decompressed-size ceiling (1 GiB), matching the Snappy/Xz refuse
-    * threshold: deflate reaches ~1032:1, so a few-MiB crafted bomb would
-    * otherwise inflate unbounded into the ByteArrayOutputStream and OOM
-    * the executor — a loud reject is the scale-safe behavior.
-    */
-  private val MaxOutput = 1 << 30
 
   /** Inflate a raw RFC 1951 stream starting at `off`; returns the
     * decompressed bytes and the first byte position past the final
     * block (so wrappers can find their trailers and further members).
-    * `maxOut` caps the decompressed size (exceeded → loud reject);
-    * callers keep the default — it is a parameter only so the guard is
-    * testable without emitting a real gibibyte.
+    * Output past `maxOut` bytes rejects (decompression-bomb guard).
     */
   def inflateRaw(p: Array[Byte], off: Int,
-      maxOut: Int = MaxOutput): (Array[Byte], Int) = {
-    val br = new BitReader(p, off)
-    val out = new java.io.ByteArrayOutputStream()
-    val window = new Array[Byte](1 << 15) // 32 KiB ring
-    var wPos = 0
-    var total = 0
-    def emit(b: Byte): Unit = {
-      require(total < maxOut,
-        s"DEFLATE output exceeds the $maxOut-byte ceiling (bomb guard)")
-      out.write(b)
-      window(wPos) = b
-      wPos = (wPos + 1) & 0x7fff
-      total += 1
-    }
-    var fin = false
-    while (!fin) {
-      fin = br.readBit() == 1
-      br.bits(2) match {
-        case 0 => // stored
-          br.align()
-          require(br.bytePos + 4 <= p.length, "torn stored block header")
-          val len = (p(br.bytePos) & 0xff) | ((p(br.bytePos + 1) & 0xff) << 8)
-          val nlen = (p(br.bytePos + 2) & 0xff) |
-            ((p(br.bytePos + 3) & 0xff) << 8)
-          require((len ^ nlen) == 0xffff,
-            "stored block LEN/NLEN mismatch (torn DEFLATE)")
-          br.bytePos += 4
-          require(br.bytePos + len <= p.length,
-            "torn DEFLATE: stored block overruns input")
-          var i = 0
-          while (i < len) { emit(p(br.bytePos + i)); i += 1 }
-          br.bytePos += len
-        case t if t == 1 || t == 2 =>
-          val (lit, dist) =
-            if (t == 1) (FixedLit, FixedDist)
-            else {
-              val hlit = 257 + br.bits(5)
-              val hdist = 1 + br.bits(5)
-              val hclen = 4 + br.bits(4)
-              require(hlit <= 286 && hdist <= 30,
-                s"dynamic header counts $hlit/$hdist out of range")
-              val clLengths = new Array[Int](19)
-              var i = 0
-              while (i < hclen) {
-                clLengths(ClOrder(i)) = br.bits(3)
-                i += 1
-              }
-              val cl = new Huffman(clLengths)
-              val lengths = new Array[Int](hlit + hdist)
-              var sym = 0
-              while (sym < lengths.length) {
-                cl.decode(br) match {
-                  case c if c < 16 => lengths(sym) = c; sym += 1
-                  case 16 =>
-                    require(sym > 0, "repeat code with no previous length")
-                    val rep = 3 + br.bits(2)
-                    require(sym + rep <= lengths.length,
-                      "code-length repeat overruns the alphabets")
-                    val prev = lengths(sym - 1)
-                    var k = 0
-                    while (k < rep) { lengths(sym) = prev; sym += 1; k += 1 }
-                  case 17 =>
-                    val rep = 3 + br.bits(3)
-                    require(sym + rep <= lengths.length,
-                      "zero-repeat overruns the alphabets")
-                    sym += rep
-                  case _ =>
-                    val rep = 11 + br.bits(7)
-                    require(sym + rep <= lengths.length,
-                      "zero-repeat overruns the alphabets")
-                    sym += rep
-                }
-              }
-              // a literal-only block may declare NO distance codes
-              // (HDIST=1, single zero length) — legal per RFC 1951;
-              // such a block using a length symbol anyway is torn
-              val distLens = lengths.drop(hlit)
-              (new Huffman(lengths.take(hlit)),
-                if (distLens.forall(_ == 0)) null
-                else new Huffman(distLens))
-            }
-          var end = false
-          while (!end) {
-            val s = lit.decode(br)
-            if (s < 256) emit(s.toByte)
-            else if (s == 256) end = true
-            else {
-              require(s <= 285, s"invalid length symbol $s")
-              require(dist != null,
-                "length symbol in a block declaring no distance codes")
-              val len = LenBase(s - 257) + br.bits(LenExtra(s - 257))
-              val dcode = dist.decode(br)
-              require(dcode <= 29, s"invalid distance symbol $dcode")
-              val d = DistBase(dcode) + br.bits(DistExtra(dcode))
-              require(d <= total,
-                s"DEFLATE distance $d reaches before the output")
-              var k = 0
-              while (k < len) {
-                emit(window((wPos - d) & 0x7fff))
-                k += 1
-              }
-            }
-          }
-        case _ => throw new IllegalArgumentException(
-          "reserved DEFLATE block type 3")
+      maxOut: Int = LibCodec.MaxOutput): (Array[Byte], Int) = {
+    LibCodec.inBounds("DEFLATE", p, off, p.length - off)
+    val inf = new java.util.zip.Inflater(true)
+    try {
+      inf.setInput(p, off, p.length - off)
+      val out = new java.io.ByteArrayOutputStream()
+      val buf = new Array[Byte](math.max(1, math.min(maxOut, 1 << 16)))
+      while (!inf.finished()) {
+        val n = loud("DEFLATE")(inf.inflate(buf))
+        require(n > 0 || inf.finished(),
+          "torn DEFLATE: input ends before the final block")
+        require(out.size.toLong + n <= maxOut,
+          s"DEFLATE output exceeds the $maxOut-byte ceiling (bomb guard)")
+        out.write(buf, 0, n)
       }
-    }
-    br.align()
-    (out.toByteArray, br.bytePos)
+      (out.toByteArray, p.length - inf.getRemaining)
+    } finally inf.end()
   }
 
   // -------------------------------------------------------------------
@@ -245,9 +46,14 @@ object Inflate {
       comment: Option[String], extra: Option[Array[Byte]],
       content: Array[Byte])
 
-  def gunzipMembers(p: Array[Byte]): Seq[GzipMember] = {
+  /** Every member of a gzip stream; all members together inflate to at
+    * most `maxOut` bytes.
+    */
+  def gunzipMembers(p: Array[Byte],
+      maxOut: Int = LibCodec.MaxOutput): Seq[GzipMember] = {
     val out = Vector.newBuilder[GzipMember]
     var o = 0
+    var total = 0L
     require(p.length >= 18, "torn gzip: shorter than any member")
     while (o < p.length) {
       require(o + 10 <= p.length, "torn gzip: member header")
@@ -285,16 +91,14 @@ object Inflate {
           "gzip header CRC (FHCRC) mismatch")
         o += 2
       }
-      val (content, after) = inflateRaw(p, o)
+      val (content, after) = inflateRaw(p, o, (maxOut - total).toInt)
+      total += content.length
       require(after + 8 <= p.length, "torn gzip: missing CRC32/ISIZE")
-      val crcGot = ((p(after) & 0xffL)) | ((p(after + 1) & 0xffL) << 8) |
-        ((p(after + 2) & 0xffL) << 16) | ((p(after + 3) & 0xffL) << 24)
       val c = new java.util.zip.CRC32()
       c.update(content)
-      require(c.getValue == crcGot, "gzip CRC32 mismatch")
-      val isize = ((p(after + 4) & 0xffL)) |
-        ((p(after + 5) & 0xffL) << 8) |
-        ((p(after + 6) & 0xffL) << 16) | ((p(after + 7) & 0xffL) << 24)
+      require(c.getValue == (LibCodec.le32(p, after) & 0xffffffffL),
+        "gzip CRC32 mismatch")
+      val isize = LibCodec.le32(p, after + 4) & 0xffffffffL
       require(isize == (content.length & 0xffffffffL),
         s"gzip ISIZE $isize != ${content.length}")
       out += GzipMember(name, comment, extra, content)
@@ -304,158 +108,16 @@ object Inflate {
   }
 
   /** All members' content concatenated — the gunzip(1) behavior. */
-  def gunzip(p: Array[Byte]): Array[Byte] = {
+  def gunzip(p: Array[Byte], maxOut: Int = LibCodec.MaxOutput): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
-    gunzipMembers(p).foreach(m => bos.write(m.content, 0, m.content.length))
+    gunzipMembers(p, maxOut)
+      .foreach(m => bos.write(m.content, 0, m.content.length))
     bos.toByteArray
   }
 
-  // -------------------------------------------------------------------
-  // zlib (RFC 1950)
-
-  def adler32(b: Array[Byte], off: Int, len: Int): Int = {
-    var a = 1
-    var s = 0
-    var i = 0
-    while (i < len) {
-      a += b(off + i) & 0xff
-      if (a >= 65521) a -= 65521
-      s += a
-      s %= 65521
-      i += 1
-    }
-    (s << 16) | a
-  }
-
-  def zlibDecode(p: Array[Byte]): Array[Byte] = {
-    require(p.length >= 6, "torn zlib: shorter than any stream")
-    val cmf = p(0) & 0xff
-    val flg = p(1) & 0xff
-    require((cmf & 0x0f) == 8, "zlib CM must be 8 (deflate)")
-    require((cmf * 256 + flg) % 31 == 0, "zlib CMF/FLG check bits wrong")
-    require((flg & 0x20) == 0, "preset-dictionary zlib unsupported")
-    val (content, after) = inflateRaw(p, 2)
-    require(after + 4 <= p.length, "torn zlib: missing Adler-32")
-    val got = ((p(after) & 0xff) << 24) | ((p(after + 1) & 0xff) << 16) |
-      ((p(after + 2) & 0xff) << 8) | (p(after + 3) & 0xff)
-    require(got == adler32(content, 0, content.length),
-      "zlib Adler-32 mismatch")
-    content
-  }
-
-  // -------------------------------------------------------------------
-  // Deflate writers (fixture + spec surface): stored and fixed-Huffman
-  // blocks — valid RFC 1951 the JDK inflater asserts in InflateSpec
-
-  private final class BitWriter {
-    val buf = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var n = 0
-    def bit(b: Int): Unit = {
-      cur |= (b & 1) << n
-      n += 1
-      if (n == 8) { buf.write(cur); cur = 0; n = 0 }
-    }
-    def bits(v: Int, len: Int): Unit = {
-      var i = 0
-      while (i < len) { bit((v >> i) & 1); i += 1 }
-    }
-    /** Huffman code bits go most-significant-first. */
-    def huff(code: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) { bit((code >> i) & 1); i -= 1 }
-    }
-    def align(): Unit = while (n != 0) bit(0)
-    def toBytes: Array[Byte] = { align(); buf.toByteArray }
-  }
-
-  /** Raw-deflate writer: one stored block per 65535 bytes. */
-  def deflateStored(src: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    var o = 0
-    var first = true
-    while (o < src.length || first) {
-      first = false
-      val n = math.min(65535, src.length - o)
-      val fin = o + n >= src.length
-      out.write(if (fin) 1 else 0) // BFINAL + BTYPE 00 (aligned header)
-      out.write(n & 0xff); out.write((n >>> 8) & 0xff)
-      out.write(~n & 0xff); out.write((~n >>> 8) & 0xff)
-      out.write(src, o, n)
-      o += n
-    }
-    out.toByteArray
-  }
-
-  private def fixedCode(sym: Int): (Int, Int) =
-    if (sym < 144) (0x30 + sym, 8)
-    else if (sym < 256) (0x190 + (sym - 144), 9)
-    else if (sym < 280) (sym - 256, 7)
-    else (0xc0 + (sym - 280), 8)
-
-  /** Raw-deflate writer: a single fixed-Huffman block with greedy
-    * 32 KiB-window matches — exercises the decoder's fixed tables and
-    * window copies from an independently checkable direction.
+  /** Write one gzip member with the full optional-header surface (the
+    * fixture writer; the body is the JDK's raw Deflater at `level`).
     */
-  def deflateFixed(src: Array[Byte]): Array[Byte] = {
-    val w = new BitWriter()
-    w.bit(1) // BFINAL
-    w.bits(1, 2) // BTYPE 01
-    def lenSym(len: Int): Int = {
-      var i = LenBase.length - 1
-      while (LenBase(i) > len) i -= 1
-      // code 285 (base 258) only encodes exactly 258
-      if (i == 28 && len != 258) i = 27
-      257 + i
-    }
-    def distSym(d: Int): Int = {
-      var i = DistBase.length - 1
-      while (DistBase(i) > d) i -= 1
-      i
-    }
-    val hashBits = 15
-    val table = new Array[Int](1 << hashBits)
-    java.util.Arrays.fill(table, -1)
-    def h3(i: Int): Int =
-      (((src(i) & 0xff) << 16 | (src(i + 1) & 0xff) << 8 |
-        (src(i + 2) & 0xff)) * -1640531535) >>> (32 - hashBits)
-    var i = 0
-    while (i < src.length) {
-      var emitted = false
-      if (i + 3 <= src.length) {
-        val h = h3(i)
-        val cand = table(h)
-        table(h) = i
-        if (cand >= 0 && i - cand <= 32768 &&
-          src(cand) == src(i) && src(cand + 1) == src(i + 1) &&
-          src(cand + 2) == src(i + 2)) {
-          var mLen = 3
-          val maxLen = math.min(258, src.length - i)
-          while (mLen < maxLen && src(cand + mLen) == src(i + mLen))
-            mLen += 1
-          val ls = lenSym(mLen)
-          val (lc, ll) = fixedCode(ls)
-          w.huff(lc, ll)
-          w.bits(mLen - LenBase(ls - 257), LenExtra(ls - 257))
-          val ds = distSym(i - cand)
-          w.huff(ds, 5) // fixed distance codes: 5 bits each
-          w.bits((i - cand) - DistBase(ds), DistExtra(ds))
-          i += mLen
-          emitted = true
-        }
-      }
-      if (!emitted) {
-        val (c, l) = fixedCode(src(i) & 0xff)
-        w.huff(c, l)
-        i += 1
-      }
-    }
-    val (c, l) = fixedCode(256)
-    w.huff(c, l)
-    w.toBytes
-  }
-
-  /** Write one gzip member with the full optional-header surface. */
   def gzipMember(content: Array[Byte], name: Option[String] = None,
       comment: Option[String] = None, extra: Option[Array[Byte]] = None,
       headerCrc: Boolean = false, level: Int = 6): Array[Byte] = {
@@ -484,9 +146,6 @@ object Inflate {
       out.write((c.getValue & 0xff).toInt)
       out.write(((c.getValue >> 8) & 0xff).toInt)
     }
-    // deflate body: JDK Deflater (nowrap) at the requested level — the
-    // independent compressor our inflater must accept; level 0 emits
-    // stored blocks, higher levels fixed/dynamic ones
     val d = new java.util.zip.Deflater(level, true)
     d.setInput(content); d.finish()
     val buf = new Array[Byte](8192)

@@ -1,213 +1,50 @@
 package graft.operators
 
-/** LZ4 decompression from scratch (pure JVM) — the compressed-shard
-  * member of the ingestion family next to [[Warc]]/[[Tar]]/[[Zip]]:
-  * training corpora ship as `.jsonl.lz4` shard files, and a curation
-  * pipeline's first task-local step is frame decode. Implements the two
-  * public specs end to end:
+import LibCodec.{declared, inBounds, le32, loud}
+
+/** LZ4 — the compressed-shard member of the ingestion family next to
+  * [[Warc]]/[[Tar]]/[[Zip]] (training corpora ship as `.jsonl.lz4`
+  * shards), and the codec of parquet LZ4_RAW pages and ORC LZ4 chunks.
+  * Blocks are decoded by lz4-java's SAFE decompressor (net.jpountz;
+  * the fast decompressor trusts its input) and hashed by its XXHash32;
+  * this object owns the FRAME format walk: the 0x184D2204 magic, the
+  * FLG/BD descriptor (version 01, independent blocks, optional block
+  * checksums / content size / content checksum, reserved bits zero),
+  * the `(xxh32 >> 8) & 0xff` header checksum, 4-byte block headers with
+  * the uncompressed bit, the EndMark, and verification of every
+  * checksum present. Every block decodes into at most the frame's
+  * declared block maximum.
   *
-  *   - the LZ4 BLOCK format: token byte (literal-length nibble /
-  *     match-length nibble), 255-terminated length extensions, 16-bit
-  *     little-endian match offsets, overlap-capable match copy, and the
-  *     literals-only final sequence;
-  *   - the LZ4 FRAME format: 0x184D2204 magic, FLG/BD descriptor
-  *     (version 01, independent blocks, optional block checksums /
-  *     content size / content checksum), the `(xxh32 >> 8) & 0xff`
-  *     header checksum, 4-byte block headers with the uncompressed-bit,
-  *     the EndMark, and xxHash32 verification of blocks and content;
-  *   - xxHash32 itself (seeded 4-accumulator stripes + avalanche) —
-  *     needed by the frame checksums.
-  *
-  * Every piece is CROSS-VALIDATED in Lz4Spec against the independent
-  * lz4-java implementation shipped with Spark (net.jpountz): our
-  * decoder must decode lz4-java's compressor output bit-exactly, our
-  * block compressor's output must satisfy lz4-java's safe decompressor,
-  * and our xxHash32 must equal jpountz's on arbitrary buffers. Torn
-  * frames (bad magic, wrong header/block/content checksum, truncation,
-  * out-of-window offsets) reject loudly by name.
-  *
-  * Formats are the public lz4.org block/frame specifications.
-  * Beyond-reference source surface (SURVEY §2.1 scope).
+  * Format: the public lz4.org frame specification.
   */
 object Lz4 {
 
-  // -------------------------------------------------------------------
-  // xxHash32 (32-bit, seeded) — the frame format's checksum primitive
-
-  private val P1 = -1640531535 // 2654435761
-  private val P2 = -2048144777 // 2246822519
-  private val P3 = -1028477379 // 3266489917
-  private val P4 = 668265263
-  private val P5 = 374761393
-
-  private def le32(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-      ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
-
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-
-  def xxhash32(buf: Array[Byte], off: Int, len: Int, seed: Int): Int = {
-    require(off >= 0 && len >= 0 && off + len <= buf.length)
-    var idx = off
-    val end = off + len
-    var h =
-      if (len >= 16) {
-        var v1 = seed + P1 + P2
-        var v2 = seed + P2
-        var v3 = seed
-        var v4 = seed - P1
-        val limit = end - 16
-        while (idx <= limit) {
-          v1 = Integer.rotateLeft(v1 + le32(buf, idx) * P2, 13) * P1
-          v2 = Integer.rotateLeft(v2 + le32(buf, idx + 4) * P2, 13) * P1
-          v3 = Integer.rotateLeft(v3 + le32(buf, idx + 8) * P2, 13) * P1
-          v4 = Integer.rotateLeft(v4 + le32(buf, idx + 12) * P2, 13) * P1
-          idx += 16
-        }
-        Integer.rotateLeft(v1, 1) + Integer.rotateLeft(v2, 7) +
-          Integer.rotateLeft(v3, 12) + Integer.rotateLeft(v4, 18)
-      } else seed + P5
-    h += len
-    while (idx + 4 <= end) {
-      h = Integer.rotateLeft(h + le32(buf, idx) * P3, 17) * P4
-      idx += 4
-    }
-    while (idx < end) {
-      h = Integer.rotateLeft(h + (buf(idx) & 0xff) * P5, 11) * P1
-      idx += 1
-    }
-    h ^= h >>> 15
-    h *= P2
-    h ^= h >>> 13
-    h *= P3
-    h ^= h >>> 16
-    h
-  }
-
-  // -------------------------------------------------------------------
-  // Block format
+  private val safe =
+    net.jpountz.lz4.LZ4Factory.fastestInstance().safeDecompressor()
+  private val xxh32 =
+    net.jpountz.xxhash.XXHashFactory.fastestInstance().hash32()
 
   /** Decode one LZ4 block of known decompressed size. */
   def decompressBlock(src: Array[Byte], srcOff: Int, srcLen: Int,
       dstLen: Int): Array[Byte] = {
-    val dst = new Array[Byte](dstLen)
-    var s = srcOff
-    val end = srcOff + srcLen
-    require(end <= src.length, "torn LZ4 block: input overruns the buffer")
-    var d = 0
-    var done = false
-    while (!done) {
-      require(s < end, "torn LZ4 block: missing sequence token")
-      val token = src(s) & 0xff
-      s += 1
-      var litLen = token >>> 4
-      if (litLen == 15) {
-        var b = 255
-        while (b == 255) {
-          require(s < end, "torn LZ4 block: truncated literal length")
-          b = src(s) & 0xff
-          s += 1
-          litLen += b
-        }
-      }
-      require(s + litLen <= end, "torn LZ4 block: literals overrun input")
-      require(d + litLen <= dstLen, "LZ4 block: literals overrun output")
-      System.arraycopy(src, s, dst, d, litLen)
-      s += litLen
-      d += litLen
-      if (s == end) {
-        // the final sequence is literals-only by spec
-        require(d == dstLen,
-          s"LZ4 block decoded $d of $dstLen declared bytes")
-        done = true
-      } else {
-        require(s + 2 <= end, "torn LZ4 block: truncated match offset")
-        val offset = le16(src, s)
-        s += 2
-        require(offset != 0, "LZ4 block: zero match offset is invalid")
-        require(offset <= d,
-          s"LZ4 block: match offset $offset reaches before the output")
-        var mLen = (token & 15) + 4
-        if ((token & 15) == 15) {
-          var b = 255
-          while (b == 255) {
-            require(s < end, "torn LZ4 block: truncated match length")
-            b = src(s) & 0xff
-            s += 1
-            mLen += b
-          }
-        }
-        require(d + mLen <= dstLen, "LZ4 block: match overruns output")
-        // byte-wise copy: offsets < mLen legitimately overlap (RLE)
-        var k = 0
-        while (k < mLen) {
-          dst(d) = dst(d - offset)
-          d += 1
-          k += 1
-        }
-      }
-    }
+    val dst = decompressBlockUnknown(src, srcOff, srcLen, dstLen)
+    require(dst.length == dstLen,
+      s"LZ4 block decoded ${dst.length} of $dstLen declared bytes")
     dst
   }
 
-  /** Greedy LZ4 block compressor (fixture + spec surface): 4-byte hash
-    * chaining, matches end >= 12 bytes before the input end and the
-    * last 5 bytes stay literal — the spec's end-of-block rules, so
-    * independent decoders (lz4-java asserted in Lz4Spec) accept the
-    * output.
+  /** Decode one LZ4 block whose output is at most `maxLen` bytes (frame
+    * blocks, ORC chunks). A sequence yields at most 255 output bytes per
+    * input byte, so small blocks never size their buffer by `maxLen`.
     */
-  def compressBlock(src: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    val n = src.length
-    def writeLen(first: Int): Unit = {
-      var rem = first
-      while (rem >= 255) { out.write(255); rem -= 255 }
-      out.write(rem)
-    }
-    def emit(litOff: Int, litLen: Int, mLen: Int, offset: Int): Unit = {
-      val litNib = math.min(litLen, 15)
-      val matNib = if (mLen == 0) 0 else math.min(mLen - 4, 15)
-      out.write((litNib << 4) | matNib)
-      if (litNib == 15) writeLen(litLen - 15)
-      out.write(src, litOff, litLen)
-      if (mLen > 0) {
-        out.write(offset & 0xff)
-        out.write((offset >> 8) & 0xff)
-        if (matNib == 15) writeLen(mLen - 4 - 15)
-      }
-    }
-    if (n < 13) { // too short for any match under the end rules
-      emit(0, n, 0, 0)
-      return out.toByteArray
-    }
-    val hashBits = 14
-    val table = new Array[Int](1 << hashBits)
-    java.util.Arrays.fill(table, -1)
-    def hash4(i: Int): Int =
-      (le32(src, i) * -1640531535) >>> (32 - hashBits)
-    val mflimit = n - 12 // last match must start before this
-    var anchor = 0
-    var i = 0
-    while (i < mflimit) {
-      val h = hash4(i)
-      val cand = table(h)
-      table(h) = i
-      if (cand >= 0 && i - cand <= 65535 &&
-        le32(src, cand) == le32(src, i)) {
-        var mLen = 4
-        val maxLen = n - 5 - i // keep the last 5 bytes literal
-        while (mLen < maxLen && src(cand + mLen) == src(i + mLen))
-          mLen += 1
-        if (mLen >= 4) {
-          emit(anchor, i - anchor, mLen, i - cand)
-          i += mLen
-          anchor = i
-        } else i += 1
-      } else i += 1
-    }
-    emit(anchor, n - anchor, 0, 0)
-    out.toByteArray
+  def decompressBlockUnknown(src: Array[Byte], off: Int, len: Int,
+      maxLen: Int): Array[Byte] = {
+    inBounds("LZ4 block", src, off, len)
+    val cap = math.min(declared("LZ4 block", maxLen).toLong,
+      255L * len + 64).toInt
+    val buf = new Array[Byte](cap)
+    val n = loud("LZ4 block")(safe.decompress(src, off, len, buf, 0, cap))
+    if (n == cap) buf else java.util.Arrays.copyOf(buf, n)
   }
 
   // -------------------------------------------------------------------
@@ -229,8 +66,7 @@ object Lz4 {
     require((flg & 0x02) == 0, "reserved FLG bit set")
     require((flg & 0x01) == 0, "dictionary frames unsupported (DictID)")
     require((flg & 0x20) != 0,
-      "block-DEPENDENT frames unsupported (cross-block match windows; " +
-        "documented seam — independent blocks are the format default)")
+      "block-DEPENDENT frames unsupported (cross-block match windows)")
     val blockChecksums = (flg & 0x10) != 0
     val hasContentSize = (flg & 0x08) != 0
     val contentChecksum = (flg & 0x04) != 0
@@ -242,17 +78,17 @@ object Lz4 {
     require(bsCode >= 4 && bsCode <= 7, s"reserved block-max-size $bsCode")
     val blockMax = 1 << (8 + 2 * bsCode) // 4->64KB .. 7->4MB
     var o = 6
-    var declared: Option[Long] = None
+    var declaredSize: Option[Long] = None
     if (hasContentSize) {
       require(p.length >= o + 8, "torn LZ4 frame: content size")
       var v = 0L
       for (i <- 0 until 8) v |= (p(o + i) & 0xffL) << (8 * i)
-      declared = Some(v)
+      declaredSize = Some(v)
       o += 8
     }
     // header checksum: second byte of xxh32 over FLG..content-size
     require(o < p.length, "torn LZ4 frame: missing header checksum")
-    val hc = (xxhash32(p, 4, o - 4, 0) >>> 8) & 0xff
+    val hc = (xxh32.hash(p, 4, o - 4, 0) >>> 8) & 0xff
     require((p(o) & 0xff) == hc,
       f"LZ4 frame header checksum mismatch (got 0x${p(o) & 0xff}%02x, " +
         f"want 0x$hc%02x)")
@@ -274,18 +110,16 @@ object Lz4 {
         if (blockChecksums) {
           require(o + size + 4 <= p.length,
             "torn LZ4 frame: missing block checksum")
-          val got = le32(p, o + size)
-          val want = xxhash32(p, o, size, 0)
-          require(got == want,
+          require(le32(p, o + size) == xxh32.hash(p, o, size, 0),
             f"LZ4 block checksum mismatch (block $nBlocks)")
         }
         if (uncompressed) content.write(p, o, size)
         else {
-          // block format carries no decompressed size: decode into the
-          // frame's max block size by re-walking once for the true size
           val dec = decompressBlockUnknown(p, o, size, blockMax)
           content.write(dec, 0, dec.length)
         }
+        require(content.size <= LibCodec.MaxOutput,
+          "LZ4 frame output exceeds the 1 GiB ceiling (bomb guard)")
         o += size + (if (blockChecksums) 4 else 0)
         nBlocks += 1
       }
@@ -293,107 +127,33 @@ object Lz4 {
     val bytes = content.toByteArray
     if (contentChecksum) {
       require(o + 4 <= p.length, "torn LZ4 frame: missing content checksum")
-      val got = le32(p, o)
-      val want = xxhash32(bytes, 0, bytes.length, 0)
-      require(got == want, "LZ4 content checksum mismatch")
+      require(le32(p, o) == xxh32.hash(bytes, 0, bytes.length, 0),
+        "LZ4 content checksum mismatch")
       o += 4
     }
-    declared.foreach(d => require(d == bytes.length,
+    declaredSize.foreach(d => require(d == bytes.length,
       s"LZ4 frame declared $d content bytes, decoded ${bytes.length}"))
-    FrameInfo(bytes, nBlocks, blockChecksums, contentChecksum, declared)
+    FrameInfo(bytes, nBlocks, blockChecksums, contentChecksum, declaredSize)
   }
 
-  /** Block decode when the exact output size is unknown (frame blocks,
-    * ORC chunk streams): first pass computes the size from the sequence
-    * structure, second pass materializes — same loud rejects as
-    * [[decompressBlock]]. `maxLen` bounds a corrupted stream's
-    * inflation claim.
+  /** Write a complete LZ4 frame over `content` (lz4-java's frame
+    * writer, independent blocks of max-size code `bsCode`).
     */
-  def decompressBlockUnknown(src: Array[Byte], off: Int, len: Int,
-      maxLen: Int): Array[Byte] = {
-    var s = off
-    val end = off + len
-    var d = 0
-    var done = false
-    while (!done) {
-      require(s < end, "torn LZ4 block: missing sequence token")
-      val token = src(s) & 0xff
-      s += 1
-      var litLen = token >>> 4
-      if (litLen == 15) {
-        var b = 255
-        while (b == 255) {
-          require(s < end, "torn LZ4 block: truncated literal length")
-          b = src(s) & 0xff; s += 1; litLen += b
-        }
-      }
-      require(s + litLen <= end, "torn LZ4 block: literals overrun input")
-      s += litLen
-      d += litLen
-      if (s == end) done = true
-      else {
-        require(s + 2 <= end, "torn LZ4 block: truncated match offset")
-        s += 2
-        var mLen = (token & 15) + 4
-        if ((token & 15) == 15) {
-          var b = 255
-          while (b == 255) {
-            require(s < end, "torn LZ4 block: truncated match length")
-            b = src(s) & 0xff; s += 1; mLen += b
-          }
-        }
-        d += mLen
-      }
-      require(d <= maxLen,
-        s"LZ4 block inflates past the frame's $maxLen-byte block max")
-    }
-    decompressBlock(src, off, len, d)
-  }
-
-  /** Write a complete LZ4 frame over `content`. */
   def encodeFrame(content: Array[Byte], bsCode: Int = 4,
       blockChecksums: Boolean = false, contentChecksum: Boolean = true,
       withContentSize: Boolean = false): Array[Byte] = {
-    require(bsCode >= 4 && bsCode <= 7, "block-max-size code 4..7")
-    val blockMax = 1 << (8 + 2 * bsCode)
-    val out = new java.io.ByteArrayOutputStream()
-    def w32(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >>> 8) & 0xff)
-      out.write((v >>> 16) & 0xff); out.write((v >>> 24) & 0xff)
-    }
-    w32(Magic)
-    val flg = 0x40 | (if (blockChecksums) 0x10 else 0) |
-      (if (withContentSize) 0x08 else 0) |
-      (if (contentChecksum) 0x04 else 0) | 0x20 // independent blocks
-    val header = new java.io.ByteArrayOutputStream()
-    header.write(flg)
-    header.write(bsCode << 4)
-    if (withContentSize)
-      for (i <- 0 until 8)
-        header.write(((content.length.toLong >>> (8 * i)) & 0xff).toInt)
-    val hb = header.toByteArray
-    out.write(hb, 0, hb.length)
-    out.write((xxhash32(hb, 0, hb.length, 0) >>> 8) & 0xff)
-    var o = 0
-    while (o < content.length) {
-      val n = math.min(blockMax, content.length - o)
-      val chunk = java.util.Arrays.copyOfRange(content, o, o + n)
-      val packed = compressBlock(chunk)
-      if (packed.length < n) {
-        w32(packed.length)
-        out.write(packed, 0, packed.length)
-        if (blockChecksums)
-          w32(xxhash32(packed, 0, packed.length, 0))
-      } else { // incompressible: store raw with the high bit set
-        w32(n | 0x80000000)
-        out.write(chunk, 0, n)
-        if (blockChecksums) w32(xxhash32(chunk, 0, n, 0))
-      }
-      o += n
-    }
-    w32(0) // EndMark
-    if (contentChecksum) w32(xxhash32(content, 0, content.length, 0))
-    out.toByteArray
+    import net.jpountz.lz4.LZ4FrameOutputStream.{BLOCKSIZE, FLG}
+    val bits = Seq(FLG.Bits.BLOCK_INDEPENDENCE) ++
+      Option.when(blockChecksums)(FLG.Bits.BLOCK_CHECKSUM) ++
+      Option.when(contentChecksum)(FLG.Bits.CONTENT_CHECKSUM) ++
+      Option.when(withContentSize)(FLG.Bits.CONTENT_SIZE)
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new net.jpountz.lz4.LZ4FrameOutputStream(bos,
+      BLOCKSIZE.valueOf(bsCode),
+      if (withContentSize) content.length.toLong else -1L, bits: _*)
+    out.write(content)
+    out.close()
+    bos.toByteArray
   }
 
   // -------------------------------------------------------------------

@@ -3101,7 +3101,7 @@ object Maintenance {
     * concurrent [[commitAppend]] writers.
     */
   def compact(spark: SparkSession, path: String, targetFiles: Int): Unit =
-    optimisticRewrite(spark, path, "__compact_tmp") { (df, tmp) =>
+    optimisticRewrite(spark, path, "compact") { (df, tmp) =>
       val w = df.coalesce(targetFiles).write.mode(SaveMode.Overwrite)
       val pc = readPartitioning(path)
       (if (pc.nonEmpty) w.partitionBy(pc: _*) else w).parquet(tmp)
@@ -3116,7 +3116,7 @@ object Maintenance {
   def cluster(spark: SparkSession, path: String, clusterCols0: Seq[String],
       targetFiles: Int): Unit = {
     val clusterCols = clusterCols0.map(toPhysical(path, _))
-    optimisticRewrite(spark, path, "__cluster_tmp") { (df, tmp) =>
+    optimisticRewrite(spark, path, "cluster") { (df, tmp) =>
       val w = df.repartitionByRange(targetFiles, clusterCols.map(col): _*)
         .sortWithinPartitions(clusterCols.map(col): _*)
         .write.mode(SaveMode.Overwrite)
@@ -3160,7 +3160,7 @@ object Maintenance {
       s"zorderN takes 2..8 columns, got ${zCols.size}")
     val n = zCols.size
     val bitsPer = math.min(16, 62 / n)
-    optimisticRewrite(spark, path, "__zorder_tmp") { (df, tmp) =>
+    optimisticRewrite(spark, path, "zorder") { (df, tmp) =>
       val aggs = zCols.flatMap(c =>
         Seq(min(col(c).cast("double")), max(col(c).cast("double"))))
       val mm = df.agg(aggs.head, aggs.tail: _*).first()
@@ -3199,8 +3199,8 @@ object Maintenance {
   val rewriteConflicts = new java.util.concurrent.atomic.AtomicLong()
 
   private def optimisticRewrite(spark: SparkSession, path: String,
-      tmpSuffix: String)(write: (DataFrame, String) => Unit): Unit = {
-    val tmp = path + tmpSuffix
+      op: String)(write: (DataFrame, String) => Unit): Unit = {
+    val tmp = s"${path}__${op}_tmp"
     val maxOptimistic = 4
     var attempts = 0
     var committed = false
@@ -3213,7 +3213,10 @@ object Maintenance {
       // tracked schema, not one random file's subset
       write(readTable(spark, path), tmp)
       committed = withCommitLock(path) {
-        if (readVersion(path) == v0) { swapCommit(spark, path, tmp); true }
+        if (readVersion(path) == v0) {
+          swapCommit(spark, path, tmp, op)
+          true
+        }
         else {
           rewriteConflicts.incrementAndGet()
           deleteRecursively(new java.io.File(tmp)); false
@@ -3225,7 +3228,7 @@ object Maintenance {
       // rewrite (appenders briefly queue on the lock; progress guaranteed)
       withCommitLock(path, timeoutMs = 300000L) {
         write(readTable(spark, path), tmp)
-        swapCommit(spark, path, tmp)
+        swapCommit(spark, path, tmp, op)
       }
     }
   }
@@ -3233,9 +3236,15 @@ object Maintenance {
   /** Swap the rewritten tree in and advance the version. Caller holds the
     * commit lock. The whole `_graft_log` (manifest + version + live-file
     * registry) is table history, not data — it carries over the rewrite.
+    * Rewritten files get version-unique names first: Spark names a
+    * task's output after the task and job alone, so a partitioned
+    * rewrite puts the SAME name in every partition directory, and the
+    * per-file stats and deletion vectors are keyed by file name.
     */
   private def swapCommit(spark: SparkSession, path: String,
-      tmp: String): Unit = {
+      tmp: String, op: String): Unit = {
+    val v = readVersion(path) + 1
+    moveStagedIn(tmp, tmp, op, v)
     val old = path + "__old"
     Files.move(Paths.get(path), Paths.get(old), StandardCopyOption.ATOMIC_MOVE)
     Files.move(Paths.get(tmp), Paths.get(path), StandardCopyOption.ATOMIC_MOVE)
@@ -3243,7 +3252,6 @@ object Maintenance {
     if (Files.exists(oldLog))
       Files.move(oldLog, Paths.get(path, "_graft_log"))
     deleteRecursively(new java.io.File(old))
-    val v = readVersion(path) + 1
     // the rewrite replaced every data file: snapshot the new FULL listing
     // for this version — older snapshots stay on disk but their files are
     // gone, so readAsOf on them now fails with the reclaimed-files error

@@ -20,8 +20,8 @@ package graft.operators
   * DECIMAL's unbounded zigzag varints + SECONDARY scale stream, and
   * BINARY. PRESENT streams reassemble nulls row-aligned; every
   * stream's chunk framing decompresses through
-  * [[OrcMeta.decompressStream]] and so through THIS REPO'S OWN
-  * Inflate/Snappy/Lz4/Zstd codecs. Legacy RLEv1 column encodings
+  * [[OrcMeta.decompressStream]] and so through the Inflate/Snappy/Lz4/
+  * Zstd codec objects. Legacy RLEv1 column encodings
   * (DIRECT/DICTIONARY without _V2) and nested types reject loudly by
   * name.
   *

@@ -6,20 +6,20 @@ package graft.operators
   * (PROTOBUF WIRE FORMAT from scratch — varint/64-bit/length-delimited/
   * 32-bit wire types, unknown fields skipped structurally — with the
   * field-8000 "ORC" magic), the compressed-stream chunk framing (3-byte
-  * little-endian headers carrying (length << 1) | isOriginal) routed
-  * through THIS REPO'S OWN codecs — ZLIB chunks are raw RFC 1951 via
-  * [[Inflate.inflateRaw]], SNAPPY chunks via [[Snappy.uncompress]] —
-  * and the Footer message down to per-column IntegerStatistics (sint64
-  * ZIGZAG minimum/maximum/sum), stripe row counts, the type tree and
-  * hasNull flags.
+  * little-endian headers carrying (length << 1) | isOriginal, each
+  * chunk decoded by the codec library Spark ships — ZLIB chunks are raw
+  * RFC 1951 via [[Inflate.inflateRaw]], SNAPPY via [[Snappy]], LZ4 via
+  * [[Lz4]], ZSTD via [[Zstd]]) — and the Footer message down to
+  * per-column IntegerStatistics (sint64 ZIGZAG minimum/maximum/sum),
+  * stripe row counts, the type tree and hasNull flags.
   *
   * Footer-only reads are the planning lever at 100 TB, same as the
   * parquet tier: row counts and column ranges from KBs of tail per
   * multi-GB file. Cross-validated in OrcMetaSpec against the
   * INDEPENDENT orc-core implementation on Spark-written files (which
-  * Spark compresses with snappy by default, so the chunk framing and
-  * our snappy decoder run against real foreign bytes). Formats are the
-  * public ORC specification and the protobuf wire format.
+  * Spark compresses with zstd by default, so the chunk framing runs
+  * against real foreign bytes). Formats are the public ORC
+  * specification and the protobuf wire format.
   */
 object OrcMeta {
 
@@ -149,17 +149,18 @@ object OrcMeta {
     OrcType(kind, names.result())
   }
 
-  /** Decompress an ORC metadata stream: NONE passes through; ZLIB (raw
+  /** Decompress an ORC stream: NONE passes through; ZLIB (raw
     * deflate), SNAPPY, LZ4 and ZSTD chunks sit behind 3-byte LE headers
-    * of (chunkLength << 1) | isOriginal, each decoded by this repo's
-    * own codec — ZSTD chunks are complete RFC 8878 frames routed
-    * through [[Zstd.decode]] (Spark 4's DEFAULT ORC compression, the
-    * r13 seam this round closed). LZO rejects by name.
+    * of (chunkLength << 1) | isOriginal, and each compressed chunk
+    * decodes through its codec into at most the postscript's
+    * compression block size (256 KiB when unset). LZO rejects by name.
     */
   private[operators] def decompressStream(p: Array[Byte], off: Int, len: Int,
       compression: Int, blockSize: Int): Array[Byte] = compression match {
     case 0 => java.util.Arrays.copyOfRange(p, off, off + len)
     case 1 | 2 | 4 | 5 =>
+      val max = LibCodec.declared("ORC compression block",
+        if (blockSize > 0) blockSize else 1 << 18)
       val out = new java.io.ByteArrayOutputStream()
       var o = off
       val end = off + len
@@ -172,22 +173,16 @@ object OrcMeta {
         val n = h >>> 1
         require(o + n <= end, s"torn ORC: $n-byte chunk overruns")
         if (original) out.write(p, o, n)
-        else compression match {
-          case 1 => // ZLIB = raw deflate
-            val (dec, _) = Inflate.inflateRaw(
-              java.util.Arrays.copyOfRange(p, o, o + n), 0)
-            out.write(dec, 0, dec.length)
-          case 2 =>
-            val dec = Snappy.uncompress(p, o, n)
-            out.write(dec, 0, dec.length)
-          case 5 =>
-            val dec = Zstd.decode(
-              java.util.Arrays.copyOfRange(p, o, o + n)).content
-            out.write(dec, 0, dec.length)
-          case _ => // LZ4 block, bounded by the declared block size
-            val dec = Lz4.decompressBlockUnknown(p, o, n,
-              math.max(blockSize, 1 << 18))
-            out.write(dec, 0, dec.length)
+        else {
+          val dec = compression match {
+            case 1 => // ZLIB = raw deflate
+              Inflate.inflateRaw(
+                java.util.Arrays.copyOfRange(p, o, o + n), 0, max)._1
+            case 2 => Snappy.uncompress(p, o, n, max)
+            case 5 => Zstd.decompress(p, o, n, max)
+            case _ => Lz4.decompressBlockUnknown(p, o, n, max)
+          }
+          out.write(dec, 0, dec.length)
         }
         o += n
       }

@@ -44,8 +44,8 @@ package graft.operators
   *   - compression NONE (postscript kind 0, raw streams) or ZSTD
   *     (kind 5): every stream, stripe footer and file footer framed in
   *     the ORC chunk format — 3-byte LE `(len << 1) | isOriginal`
-  *     headers, bodies through THIS REPO'S OWN [[Zstd.compress]], raw
-  *     chunks where entropy coding cannot shrink the block.
+  *     headers, bodies through zstd-jni at level 3, raw chunks where
+  *     entropy coding cannot shrink the block.
   *
   * Validated the strong way in OrcWriteSpec: Spark's own orc-core
   * reader — the independent implementation — must read written files
@@ -1025,15 +1025,15 @@ object OrcWrite {
 
   /** ORC chunk framing for one compressed section: 3-byte LE headers
     * `(len << 1) | isOriginal`, bodies ≤ `blockSize`, each chunk a
-    * [[Zstd.compress]] frame unless raw is smaller.
+    * zstd-jni frame (level 3) unless raw is smaller.
     */
   private def frameZstd(b: Array[Byte], blockSize: Int): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(b.length / 2 + 8)
     var off = 0
     while (off < b.length) {
       val n = math.min(blockSize, b.length - off)
-      val packed = Zstd.compress(
-        java.util.Arrays.copyOfRange(b, off, off + n))
+      val packed = com.github.luben.zstd.Zstd.compress(
+        java.util.Arrays.copyOfRange(b, off, off + n), 3)
       val (body, orig) =
         if (packed.length < n) (packed, 0) else (null, 1)
       val len = if (orig == 1) n else body.length

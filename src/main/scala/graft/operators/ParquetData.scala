@@ -13,7 +13,8 @@ package graft.operators
   * values, DELTA_BINARY_PACKED ints (block/miniblock geometry, zigzag
   * first/min values, wrap-around Long arithmetic),
   * DELTA_LENGTH_BYTE_ARRAY and front-coded DELTA_BYTE_ARRAY strings —
-  * with page decompression routed through THIS REPO'S OWN codecs:
+  * with page decompression through the codec libraries Spark ships,
+  * each bounded by the page header's uncompressed size:
   * SNAPPY → [[Snappy]], GZIP → [[Inflate]], ZSTD → [[Zstd]],
   * LZ4_RAW → [[Lz4]]. Definition levels reassemble nulls row-aligned;
   * repetition levels feed [[assembleList]]'s 3-level LIST reassembly
@@ -47,32 +48,20 @@ object ParquetData {
     */
   val RawByteArray: Int = -6
 
-  /** Decompress one page body per the chunk's codec id. */
+  /** Decompress one page body per the chunk's codec id. The header's
+    * uncompressed size is checked against the bomb ceiling, then bounds
+    * the library call: a page that inflates to anything else rejects.
+    */
   private def decompress(p: Array[Byte], off: Int, len: Int, codec: Int,
-      uncompressedSize: Int): Array[Byte] = codec match {
-    case 0 => java.util.Arrays.copyOfRange(p, off, off + len)
-    case 1 =>
-      val out = Snappy.uncompress(p, off, len)
-      require(out.length == uncompressedSize,
-        s"snappy page inflated to ${out.length}, header said " +
-          s"$uncompressedSize")
-      out
-    case 2 =>
-      val out = Inflate.gunzip(
-        java.util.Arrays.copyOfRange(p, off, off + len))
-      require(out.length == uncompressedSize,
-        s"gzip page inflated to ${out.length}, header said " +
-          s"$uncompressedSize")
-      out
-    case 6 =>
-      val out = Zstd.decode(
-        java.util.Arrays.copyOfRange(p, off, off + len)).content
-      require(out.length == uncompressedSize,
-        s"zstd page inflated to ${out.length}, header said " +
-          s"$uncompressedSize")
-      out
-    case 7 => // LZ4_RAW: a single raw LZ4 block, no frame
-      Lz4.decompressBlock(p, off, len, uncompressedSize)
+      uncompressedSize: Int): Array[Byte] = {
+    val n = LibCodec.declared("parquet page", uncompressedSize)
+    val out = codec match {
+      case 0 => java.util.Arrays.copyOfRange(p, off, off + len)
+      case 1 => Snappy.uncompress(p, off, len, n)
+      case 2 =>
+        Inflate.gunzip(java.util.Arrays.copyOfRange(p, off, off + len), n)
+      case 6 => Zstd.decompress(p, off, len, n)
+      case 7 => Lz4.decompressBlock(p, off, len, n) // LZ4_RAW: one raw block
     case 3 => throw new IllegalArgumentException(
       "parquet codec 3 (LZO) unsupported")
     case 4 => throw new IllegalArgumentException(
@@ -82,6 +71,10 @@ object ParquetData {
         "writers emit LZ4_RAW (7)")
     case c => throw new IllegalArgumentException(
       s"parquet codec $c unknown")
+    }
+    require(codec == 0 || out.length == n,
+      s"parquet codec $codec page inflated to ${out.length}, header said $n")
+    out
   }
 
   /** Decode `n` values of the RLE / bit-packed hybrid encoding starting

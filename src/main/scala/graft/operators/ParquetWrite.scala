@@ -10,8 +10,8 @@ package graft.operators
   * enough to pay for it (parquet-mr's own policy shape: bounded
   * dictionary attempt, fall back to PLAIN past 64 Ki distinct or under
   * 2× repetition) — a PLAIN dictionary page + RLE_DICTIONARY index
-  * pages, page compression through THIS REPO'S OWN codecs
-  * ([[Snappy.compress]], [[Zstd.compress]], or UNCOMPRESSED),
+  * pages, page compression through the codec libraries Spark ships
+  * (snappy-java, zstd-jni at level 3, or UNCOMPRESSED),
   * per-chunk Statistics (min_value/max_value/null_count, the modern
   * field ids), a PAGE-INDEX section (OffsetIndex per chunk,
   * ColumnIndex per stats-bearing chunk — parquet-mr's column-index
@@ -42,6 +42,10 @@ package graft.operators
   * Thrift compact protocol spec.
   */
 object ParquetWrite {
+
+  /** Split-block bloom filters hash with XXH64 (seed 0), per spec. */
+  private val xxh64 =
+    net.jpountz.xxhash.XXHashFactory.fastestInstance().hash64()
 
   /** The footer's `created_by` — parseable under parquet-mr's
     * VersionParser (see the footer emitter). Also the EXACTNESS
@@ -425,7 +429,7 @@ object ParquetWrite {
       : Array[Byte] = codec match {
     case 0 => body
     case 1 => Snappy.compress(body)
-    case 6 => Zstd.compress(body)
+    case 6 => com.github.luben.zstd.Zstd.compress(body, 3)
     case c => throw new IllegalArgumentException(
       s"parquet writer codec $c unsupported (UNCOMPRESSED=0, SNAPPY=1, " +
         "ZSTD=6)")
@@ -591,7 +595,7 @@ object ParquetWrite {
                 s"bloom filter on column '${f.name}': " +
                   s"${x.getClass.getName} values unsupported")
             }
-            Zstd.xxh64(bytes, 0, bytes.length, 0L)
+            xxh64.hash(bytes, 0, bytes.length, 0L)
           }
           var r0 = 0
           while (r0 < nRows) {

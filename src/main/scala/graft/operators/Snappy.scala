@@ -1,192 +1,46 @@
 package graft.operators
 
-/** Snappy decompression from scratch (pure JVM) — the second
-  * compressed-shard member of the ingestion family next to [[Lz4]]
-  * (Snappy is the other codec training shards and columnar files ship
-  * with). Implements both public layers:
+import LibCodec.{declared, inBounds, le32, loud}
+
+/** Snappy — the second compressed-shard member of the ingestion family
+  * next to [[Lz4]], and the codec of graftpq/graftorc snappy pages.
+  * Raw blocks are encoded and decoded by snappy-java (org.xerial.snappy);
+  * this object owns the FRAMING format (.sz) walk: the 0xff "sNaPpY"
+  * stream identifier, 0x00 compressed / 0x01 uncompressed chunks each
+  * led by a MASKED CRC-32C of the uncompressed data
+  * (`rotr15(crc) + 0xa282ead8`, CRC-32C from the JDK), 0xfe padding and
+  * reserved-skippable chunks counted, reserved-unskippable chunks
+  * rejected loudly.
   *
-  *   - the RAW format: varint uncompressed length, then tagged
-  *     elements — 2-bit type 00 literals (lengths 61..64 spill into
-  *     1..4 little-endian extra bytes), 01 copies (3-bit length + 4,
-  *     11-bit offset split across the tag and one byte), 10 copies
-  *     (6-bit length + 1, 16-bit LE offset), 11 copies (32-bit LE
-  *     offset), overlap-capable match copy;
-  *   - the FRAMING format (.sz): the 0xff "sNaPpY" stream identifier,
-  *     0x00 compressed / 0x01 uncompressed chunks each led by a MASKED
-  *     CRC-32C of the uncompressed data (`rotr15(crc) + 0xa282ead8`),
-  *     0xfe padding and reserved-skippable chunks, reserved-unskippable
-  *     chunks rejecting loudly.
-  *
-  * Cross-validated in SnappySpec against the independent snappy-java
-  * implementation on Spark's classpath (org.xerial.snappy): our
-  * decoder must decode its compressor's raw output bit-exactly and its
-  * `SnappyFramedInputStream` must accept our framed writer (and vice
-  * versa); CRC-32C comes from the JDK's java.util.zip.CRC32C, so the
-  * mask arithmetic is the only checksum code trusted to this module.
-  *
-  * Formats are the public google/snappy format descriptions
-  * (format_description.txt, framing_format.txt). Beyond-reference
-  * source surface (SURVEY §2.1 scope).
+  * A raw block's varint length is read and checked against the caller's
+  * bound (65,536 bytes for a framed chunk, the page size for a parquet
+  * page, the 1 GiB ceiling otherwise) before the output is allocated.
+  * Format: google/snappy framing_format.txt.
   */
 object Snappy {
 
-  // -------------------------------------------------------------------
-  // Raw format
-
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-
-  private def le32(b: Array[Byte], o: Int): Int =
-    le16(b, o) | (le16(b, o + 2) << 16)
-
-  /** Decode one raw-Snappy buffer (preamble + elements). */
-  def uncompress(src: Array[Byte], srcOff: Int, srcLen: Int): Array[Byte] = {
-    val end = srcOff + srcLen
-    require(end <= src.length, "torn snappy: input overruns the buffer")
-    // varint32 uncompressed length
-    var s = srcOff
-    var dstLen = 0
-    var shift = 0
-    var more = true
-    while (more) {
-      require(s < end && shift <= 28, "torn snappy: unterminated varint")
-      val b = src(s) & 0xff
-      s += 1
-      dstLen |= (b & 0x7f) << shift
-      shift += 7
-      more = (b & 0x80) != 0
-    }
-    require(dstLen >= 0 && dstLen <= (1 << 30),
-      s"snappy declares $dstLen bytes (refusing > 1 GiB)")
-    val dst = new Array[Byte](dstLen)
-    var d = 0
-    while (s < end) {
-      val tag = src(s) & 0xff
-      s += 1
-      (tag & 3) match {
-        case 0 => // literal
-          var len = (tag >>> 2) + 1
-          if (len > 60) {
-            val extra = len - 60
-            require(s + extra <= end, "torn snappy: literal length bytes")
-            len = 0
-            var i = 0
-            while (i < extra) {
-              len |= (src(s + i) & 0xff) << (8 * i)
-              i += 1
-            }
-            len += 1
-            s += extra
-          }
-          require(s + len <= end, "torn snappy: literal overruns input")
-          require(d + len <= dstLen, "snappy: literal overruns output")
-          System.arraycopy(src, s, dst, d, len)
-          s += len
-          d += len
-        case c =>
-          val (len, offset) = c match {
-            case 1 =>
-              require(s < end, "torn snappy: 1-byte-offset copy")
-              val l = ((tag >>> 2) & 7) + 4
-              val o = ((tag >>> 5) << 8) | (src(s) & 0xff)
-              s += 1
-              (l, o)
-            case 2 =>
-              require(s + 2 <= end, "torn snappy: 2-byte-offset copy")
-              val l = (tag >>> 2) + 1
-              val o = le16(src, s)
-              s += 2
-              (l, o)
-            case _ =>
-              require(s + 4 <= end, "torn snappy: 4-byte-offset copy")
-              val l = (tag >>> 2) + 1
-              val o = le32(src, s)
-              s += 4
-              (l, o)
-          }
-          require(offset > 0, "snappy: zero copy offset is invalid")
-          require(offset <= d,
-            s"snappy: copy offset $offset reaches before the output")
-          require(d + len <= dstLen, "snappy: copy overruns output")
-          var k = 0
-          while (k < len) { // byte-wise: offsets < len overlap (RLE)
-            dst(d) = dst(d - offset)
-            d += 1
-            k += 1
-          }
-      }
-    }
-    require(d == dstLen, s"snappy decoded $d of $dstLen declared bytes")
+  /** Decode one raw-Snappy buffer whose declared length is at most
+    * `maxLen` bytes. An element yields at most 64 output bytes per 3
+    * input bytes, so the declared length is also checked against that.
+    */
+  def uncompress(src: Array[Byte], srcOff: Int, srcLen: Int,
+      maxLen: Int = LibCodec.MaxOutput): Array[Byte] = {
+    inBounds("snappy", src, srcOff, srcLen)
+    val n = declared("snappy", loud("snappy")(
+      org.xerial.snappy.Snappy.uncompressedLength(src, srcOff, srcLen)),
+      math.min(maxLen.toLong, 22L * srcLen + 64))
+    val dst = new Array[Byte](n)
+    // snappy reports every corruption as one error code; name its causes
+    val got = loud("snappy raw block (truncated element, copy offset " +
+      "outside the output, or length overrun)")(
+      org.xerial.snappy.Snappy.uncompress(src, srcOff, srcLen, dst, 0))
+    require(got == n, s"snappy decoded $got of $n declared bytes")
     dst
   }
 
-  /** Raw-Snappy compressor (fixture + spec surface): greedy 4-byte
-    * hash matching like the reference implementation's shape — valid
-    * output, not byte-identical to it; snappy-java's decompressor
-    * asserts acceptance in SnappySpec.
-    */
-  def compress(src: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    // varint preamble
-    var v = src.length
-    while ((v & ~0x7f) != 0) { out.write((v & 0x7f) | 0x80); v >>>= 7 }
-    out.write(v)
-    def literal(off: Int, len: Int): Unit = if (len > 0) {
-      if (len <= 60) out.write(((len - 1) << 2))
-      else {
-        var extra = 0
-        var l = len - 1
-        val bytes = new Array[Int](4)
-        while (l != 0 || extra == 0) {
-          bytes(extra) = l & 0xff; l >>>= 8; extra += 1
-        }
-        out.write(((59 + extra) << 2))
-        var i = 0
-        while (i < extra) { out.write(bytes(i)); i += 1 }
-      }
-      out.write(src, off, len)
-    }
-    def copy(offset: Int, len0: Int): Unit = {
-      // long copies split into <= 64-byte 2-byte-offset elements; the
-      // reference implementation's split keeps every piece >= 4 bytes
-      def emit(take: Int): Unit = {
-        out.write(((take - 1) << 2) | 2)
-        out.write(offset & 0xff)
-        out.write((offset >>> 8) & 0xff)
-      }
-      var len = len0
-      while (len >= 68) { emit(64); len -= 64 }
-      if (len > 64) { emit(60); len -= 60 }
-      emit(len) // 4..64 by construction (matches are >= 4)
-    }
-    val n = src.length
-    if (n < 16) { literal(0, n); return out.toByteArray }
-    val hashBits = 14
-    val table = new Array[Int](1 << hashBits)
-    java.util.Arrays.fill(table, -1)
-    def read4(i: Int): Int = le32(src, i)
-    def hash4(i: Int): Int = (read4(i) * -1640531535) >>> (32 - hashBits)
-    var anchor = 0
-    var i = 0
-    val limit = n - 8
-    while (i < limit) {
-      val h = hash4(i)
-      val cand = table(h)
-      table(h) = i
-      if (cand >= 0 && i - cand <= 65535 && read4(cand) == read4(i)) {
-        var mLen = 4
-        val maxLen = n - i
-        while (mLen < maxLen && src(cand + mLen) == src(i + mLen))
-          mLen += 1
-        literal(anchor, i - anchor)
-        copy(i - cand, mLen)
-        i += mLen
-        anchor = i
-      } else i += 1
-    }
-    literal(anchor, n - anchor)
-    out.toByteArray
-  }
+  /** Raw-Snappy block (snappy-java's compressor). */
+  def compress(src: Array[Byte]): Array[Byte] =
+    org.xerial.snappy.Snappy.compress(src)
 
   // -------------------------------------------------------------------
   // Framing format (.sz)
@@ -194,12 +48,14 @@ object Snappy {
   private val StreamId: Array[Byte] =
     Array(0xff, 6, 0, 0, 's', 'N', 'a', 'P', 'p', 'Y').map(_.toByte)
 
+  /** Uncompressed bytes one framed chunk may carry. */
+  private val ChunkMax = 65536
+
   /** `rotr15(crc32c) + 0xa282ead8` — the framing format's CRC mask. */
   def maskedCrc32c(b: Array[Byte], off: Int, len: Int): Int = {
     val c = new java.util.zip.CRC32C()
     c.update(b, off, len)
-    val crc = c.getValue.toInt
-    (Integer.rotateRight(crc, 15)) + 0xa282ead8
+    Integer.rotateRight(c.getValue.toInt, 15) + 0xa282ead8
   }
 
   final case class SzInfo(content: Array[Byte], nCompressed: Int,
@@ -224,16 +80,15 @@ object Snappy {
       typ match {
         case 0x00 => // compressed: masked CRC + raw-snappy data
           require(len >= 4, "torn .sz: compressed chunk under 4 bytes")
-          val want = le32(p, o)
-          val data = uncompress(p, o + 4, len - 4)
-          require(maskedCrc32c(data, 0, data.length) == want,
+          val data = uncompress(p, o + 4, len - 4, ChunkMax)
+          require(maskedCrc32c(data, 0, data.length) == le32(p, o),
             "snappy framed chunk CRC mismatch (compressed)")
           out.write(data, 0, data.length)
           nc += 1
         case 0x01 => // uncompressed: masked CRC + plain data
-          require(len >= 4, "torn .sz: uncompressed chunk under 4 bytes")
-          val want = le32(p, o)
-          require(maskedCrc32c(p, o + 4, len - 4) == want,
+          require(len >= 4 && len - 4 <= ChunkMax,
+            s"torn .sz: uncompressed chunk of $len bytes")
+          require(maskedCrc32c(p, o + 4, len - 4) == le32(p, o),
             "snappy framed chunk CRC mismatch (uncompressed)")
           out.write(p, o + 4, len - 4)
           nu += 1
@@ -245,48 +100,42 @@ object Snappy {
         case t => throw new IllegalArgumentException(
           f"reserved UNSKIPPABLE .sz chunk 0x$t%02x")
       }
+      require(out.size <= LibCodec.MaxOutput,
+        "snappy framed output exceeds the 1 GiB ceiling (bomb guard)")
       o += len
     }
     SzInfo(out.toByteArray, nc, nu, ns)
   }
 
   /** Write a framed .sz stream: chunks of `chunkSize` uncompressed
-    * bytes, each compressed when that wins (the spec's 65536-byte max
-    * per chunk), with a padding chunk after the identifier when
-    * `withPadding`.
+    * bytes, each compressed when that wins, with a padding chunk after
+    * the identifier when `withPadding`.
     */
-  def encodeFramed(content: Array[Byte], chunkSize: Int = 65536,
+  def encodeFramed(content: Array[Byte], chunkSize: Int = ChunkMax,
       withPadding: Boolean = false): Array[Byte] = {
-    require(chunkSize >= 1 && chunkSize <= 65536,
+    require(chunkSize >= 1 && chunkSize <= ChunkMax,
       ".sz chunks carry at most 65536 uncompressed bytes")
     val out = new java.io.ByteArrayOutputStream()
     out.write(StreamId, 0, StreamId.length)
-    def chunkHeader(typ: Int, len: Int): Unit = {
+    def le24(v: Int): Unit = {
+      out.write(v & 0xff); out.write((v >>> 8) & 0xff)
+      out.write((v >>> 16) & 0xff)
+    }
+    def chunk(typ: Int, crc: Int, body: Array[Byte], off: Int,
+        len: Int): Unit = {
       out.write(typ)
-      out.write(len & 0xff)
-      out.write((len >>> 8) & 0xff)
-      out.write((len >>> 16) & 0xff)
+      le24(len + 4)
+      le24(crc); out.write((crc >>> 24) & 0xff)
+      out.write(body, off, len)
     }
-    if (withPadding) {
-      chunkHeader(0xfe, 3)
-      out.write(0); out.write(0); out.write(0)
-    }
+    if (withPadding) { out.write(0xfe); le24(3); le24(0) }
     var o = 0
     while (o < content.length) {
       val n = math.min(chunkSize, content.length - o)
       val crc = maskedCrc32c(content, o, n)
       val packed = compress(java.util.Arrays.copyOfRange(content, o, o + n))
-      if (packed.length < n) {
-        chunkHeader(0x00, packed.length + 4)
-        out.write(crc & 0xff); out.write((crc >>> 8) & 0xff)
-        out.write((crc >>> 16) & 0xff); out.write((crc >>> 24) & 0xff)
-        out.write(packed, 0, packed.length)
-      } else {
-        chunkHeader(0x01, n + 4)
-        out.write(crc & 0xff); out.write((crc >>> 8) & 0xff)
-        out.write((crc >>> 16) & 0xff); out.write((crc >>> 24) & 0xff)
-        out.write(content, o, n)
-      }
+      if (packed.length < n) chunk(0x00, crc, packed, 0, packed.length)
+      else chunk(0x01, crc, content, o, n)
       o += n
     }
     out.toByteArray
@@ -310,6 +159,6 @@ object Snappy {
     */
   def fixturePayload(id: Long): Array[Byte] =
     encodeFramed(fixtureContent(id),
-      chunkSize = if (id % 3 == 2) 512 else 65536,
+      chunkSize = if (id % 3 == 2) 512 else ChunkMax,
       withPadding = id % 5 == 0)
 }

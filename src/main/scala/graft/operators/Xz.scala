@@ -1,407 +1,30 @@
 package graft.operators
 
-/** XZ / LZMA2 decompression from scratch (pure JVM) — the
-  * highest-ratio member of the compressed-shard family next to
-  * [[Lz4]]/[[Snappy]]/[[Inflate]]/[[Bzip2]], and the only one built on
-  * an ADAPTIVE range coder: unlike VP8-lossy or zstd there are no
-  * predefined probability tables at all — every probability starts at
-  * 1/2 and adapts per bit — so the whole format is implementable and
-  * verifiable offline. Implements:
+import LibCodec.{drain, le32, loud}
+
+/** XZ — the highest-ratio member of the compressed-shard family next to
+  * [[Lz4]]/[[Snappy]]/[[Inflate]]/[[Bzip2]]. The stream is decoded by
+  * tukaani xz (org.tukaani.xz: LZMA2 chunks, block headers, block
+  * integrity checks and the index all verified there); this object owns
+  * the CONTAINER facts a query reports and the up-front checks: the
+  * stream-header magic, reserved flags and CRC32, the check type
+  * (None/CRC32/CRC64/SHA-256), the stream footer (CRC32, backward size,
+  * flags equal to the header's, the "YZ" magic), and the block count
+  * read from the index the footer points at. One stream per file;
+  * trailing bytes reject.
   *
-  *   - the XZ container (public xz file-format spec): stream
-  *     header/footer magics, CRC32-protected stream flags and block
-  *     headers, variable-length integers, the filter list (LZMA2 id
-  *     0x21 only — delta/BCJ filters reject by name), 4-byte padding
-  *     discipline, per-block integrity checks (None/CRC32/CRC64/
-  *     SHA-256 — CRC64 ECMA-182 implemented here), and the Index with
-  *     its unpadded-size/uncompressed-size records verified against
-  *     the walked blocks, plus the footer's backward-size check;
-  *   - LZMA2 chunking (dict/state/props reset control bytes,
-  *     uncompressed chunks, 21-bit unpacked / 16-bit packed sizes);
-  *   - the LZMA decoder proper (public LZMA spec / LzmaSpec.cpp
-  *     reference semantics): the binary range decoder with 11-bit
-  *     adaptive probabilities and 2^24 normalization, the 12-state
-  *     machine, literal coding with the matched-byte path, bit-tree
-  *     and reverse-bit-tree decoding, the length coders, position
-  *     slots with aligned/direct bits, and the rep0..rep3 distance
-  *     history.
-  *
-  * Cross-validated in XzSpec against the INDEPENDENT org.tukaani.xz
-  * implementation on Spark's classpath: tukaani-compressed streams at
-  * every preset (0..9, including BT4 match finders and multi-block
-  * files) must decode bit-exactly; fixtures are tukaani-written
-  * (foreign-origin bytes, like the [[Bzip2]] tier). Torn streams
-  * (bad magics, wrong any-of-four CRCs, index mismatches, truncation)
-  * reject loudly by name.
-  *
-  * Beyond-reference source surface (SURVEY §2.1 scope).
+  * Format: the public xz file-format specification.
   */
 object Xz {
 
-  // -------------------------------------------------------------------
-  // CRC64 (ECMA-182, reflected) — the xz default check
-
-  private val Crc64Table: Array[Long] = {
-    val poly = 0xC96C5795D7870F42L
-    val t = new Array[Long](256)
-    var i = 0
-    while (i < 256) {
-      var c = i.toLong
-      var k = 0
-      while (k < 8) {
-        c = if ((c & 1L) != 0) (c >>> 1) ^ poly else c >>> 1
-        k += 1
-      }
-      t(i) = c
-      i += 1
-    }
-    t
-  }
-
-  def crc64(b: Array[Byte], off: Int, len: Int): Long = {
-    var crc = -1L
-    var i = 0
-    while (i < len) {
-      crc = (crc >>> 8) ^ Crc64Table(((crc ^ b(off + i)) & 0xff).toInt)
-      i += 1
-    }
-    ~crc
-  }
+  final case class XzInfo(content: Array[Byte], nBlocks: Int,
+      checkType: Int)
 
   private def crc32(b: Array[Byte], off: Int, len: Int): Long = {
     val c = new java.util.zip.CRC32()
     c.update(b, off, len)
     c.getValue
   }
-
-  // -------------------------------------------------------------------
-  // LZMA range decoder (probabilities are 11-bit, kTopValue = 2^24)
-
-  private final class RangeDecoder(p: Array[Byte], var pos: Int,
-      val end: Int) {
-    private var range = 0xFFFFFFFFL
-    private var code = 0L
-    // init: one zero byte then 4 code bytes, big-endian
-    require(pos + 5 <= end, "torn LZMA: range-coder init")
-    require(p(pos) == 0, "LZMA chunk must start with a zero byte")
-    pos += 1
-    var i = 0
-    while (i < 4) { code = (code << 8) | (p(pos) & 0xffL); pos += 1; i += 1 }
-    private def normalize(): Unit =
-      if (range < (1L << 24)) {
-        require(pos < end, "torn LZMA: range-coder ran out of input")
-        range <<= 8
-        code = ((code << 8) | (p(pos) & 0xffL)) & 0xFFFFFFFFL
-        pos += 1
-      }
-    def decodeBit(probs: Array[Short], idx: Int): Int = {
-      val prob = probs(idx)
-      val bound = (range >>> 11) * prob
-      if (code < bound) {
-        range = bound
-        probs(idx) = (prob + ((2048 - prob) >>> 5)).toShort
-        normalize()
-        0
-      } else {
-        range -= bound
-        code -= bound
-        probs(idx) = (prob - (prob >>> 5)).toShort
-        normalize()
-        1
-      }
-    }
-    def decodeDirect(n: Int): Int = {
-      var res = 0
-      var k = 0
-      while (k < n) {
-        range >>>= 1
-        val bit = if (code >= range) { code -= range; 1 } else 0
-        res = (res << 1) | bit
-        normalize()
-        k += 1
-      }
-      res
-    }
-    def finished: Boolean = code == 0
-  }
-
-  private def newProbs(n: Int): Array[Short] = Array.fill[Short](n)(1024)
-
-  private def bitTree(rc: RangeDecoder, probs: Array[Short],
-      base: Int, n: Int): Int = {
-    var m = 1
-    var k = 0
-    while (k < n) { m = (m << 1) | rc.decodeBit(probs, base + m); k += 1 }
-    m - (1 << n)
-  }
-
-  private def bitTreeReverse(rc: RangeDecoder, probs: Array[Short],
-      base: Int, n: Int): Int = {
-    var m = 1
-    var sym = 0
-    var k = 0
-    while (k < n) {
-      val b = rc.decodeBit(probs, base + m)
-      m = (m << 1) | b
-      sym |= b << k
-      k += 1
-    }
-    sym
-  }
-
-  // LZMA probability model + decode state, persistent across LZMA2
-  // chunks until a state-reset control byte
-  private final class LzmaState(var lc: Int, var lp: Int, var pb: Int) {
-    var state = 0
-    var rep0 = 0
-    var rep1 = 0
-    var rep2 = 0
-    var rep3 = 0
-    var lit: Array[Short] = _
-    val isMatch = newProbs(12 << 4)
-    val isRep = newProbs(12)
-    val isRepG0 = newProbs(12)
-    val isRepG1 = newProbs(12)
-    val isRepG2 = newProbs(12)
-    val isRep0Long = newProbs(12 << 4)
-    val posSlot = Array.fill(4)(newProbs(64))
-    val specPos = newProbs(128)
-    val align = newProbs(16)
-    // length coders: [choice, choice2, low[16*8], mid[16*8], high[256]]
-    final class LenCoder {
-      val choice = newProbs(2)
-      val low = newProbs(16 << 3)
-      val mid = newProbs(16 << 3)
-      val high = newProbs(256)
-      def decode(rc: RangeDecoder, posState: Int): Int =
-        if (rc.decodeBit(choice, 0) == 0)
-          2 + bitTree(rc, low, posState << 3, 3)
-        else if (rc.decodeBit(choice, 1) == 0)
-          10 + bitTree(rc, mid, posState << 3, 3)
-        else 18 + bitTree(rc, high, 0, 8)
-    }
-    var lenCoder = new LenCoder
-    var repLenCoder = new LenCoder
-    def resetState(): Unit = {
-      state = 0; rep0 = 0; rep1 = 0; rep2 = 0; rep3 = 0
-      java.util.Arrays.fill(isMatch, 1024.toShort)
-      java.util.Arrays.fill(isRep, 1024.toShort)
-      java.util.Arrays.fill(isRepG0, 1024.toShort)
-      java.util.Arrays.fill(isRepG1, 1024.toShort)
-      java.util.Arrays.fill(isRepG2, 1024.toShort)
-      java.util.Arrays.fill(isRep0Long, 1024.toShort)
-      posSlot.foreach(a => java.util.Arrays.fill(a, 1024.toShort))
-      java.util.Arrays.fill(specPos, 1024.toShort)
-      java.util.Arrays.fill(align, 1024.toShort)
-      lenCoder = new LenCoder
-      repLenCoder = new LenCoder
-      lit = newProbs(0x300 << (lc + lp))
-    }
-    resetState()
-  }
-
-  /** Decode one LZMA chunk of exactly `unpacked` bytes into `out`
-    * (which already holds the dictionary history back to `dictStart`).
-    */
-  private def lzmaChunk(rc: RangeDecoder, s: LzmaState,
-      out: java.io.ByteArrayOutputStream, window: Array[Byte],
-      winLen0: Int, dictStart: Int, unpacked: Int): Int = {
-    // window: growable history buffer; winLen = current length
-    var winLen = winLen0
-    def ensure(n: Int): Unit =
-      require(winLen + n <= window.length, "LZMA output overruns buffer")
-    val posMask = (1 << s.pb) - 1
-    val litPosMask = (1 << s.lp) - 1
-    var produced = 0
-    while (produced < unpacked) {
-      val posState = winLen & posMask
-      if (rc.decodeBit(s.isMatch, (s.state << 4) | posState) == 0) {
-        // literal
-        val prevByte = if (winLen > dictStart) window(winLen - 1) & 0xff
-          else 0
-        val litState =
-          ((winLen & litPosMask) << s.lc) + (prevByte >> (8 - s.lc))
-        val base = 0x300 * litState
-        var symbol = 1
-        if (s.state < 7) {
-          while (symbol < 0x100)
-            symbol = (symbol << 1) | rc.decodeBit(s.lit, base + symbol)
-        } else {
-          require(winLen - s.rep0 - 1 >= dictStart,
-            "LZMA matched literal reaches before the dictionary")
-          var matchByte = window(winLen - s.rep0 - 1) & 0xff
-          var break = false
-          while (!break && symbol < 0x100) {
-            val matchBit = (matchByte >> 7) & 1
-            matchByte = (matchByte << 1) & 0xff
-            val bit = rc.decodeBit(s.lit,
-              base + ((1 + matchBit) << 8) + symbol)
-            symbol = (symbol << 1) | bit
-            if (matchBit != bit) {
-              while (symbol < 0x100)
-                symbol = (symbol << 1) | rc.decodeBit(s.lit, base + symbol)
-              break = true
-            }
-          }
-        }
-        ensure(1)
-        window(winLen) = (symbol & 0xff).toByte
-        winLen += 1
-        produced += 1
-        s.state = if (s.state < 4) 0 else if (s.state < 10) s.state - 3
-          else s.state - 6
-      } else if (rc.decodeBit(s.isRep, s.state) == 0) {
-        // new match
-        val len = s.lenCoder.decode(rc, posState)
-        s.rep3 = s.rep2; s.rep2 = s.rep1; s.rep1 = s.rep0
-        val lenToPosState = math.min(len - 2, 3)
-        val slot = bitTree(rc, s.posSlot(lenToPosState), 0, 6)
-        var dist = slot
-        if (slot >= 4) {
-          val numDirect = (slot >> 1) - 1
-          dist = (2 | (slot & 1)) << numDirect
-          if (slot < 14)
-            dist += bitTreeReverse(rc, s.specPos, dist - slot, numDirect)
-          else {
-            dist += rc.decodeDirect(numDirect - 4) << 4
-            dist += bitTreeReverse(rc, s.align, 0, 4)
-          }
-        }
-        require(dist != -1 && dist != 0xFFFFFFFF,
-          "unexpected LZMA end marker inside a sized LZMA2 chunk")
-        s.rep0 = dist
-        s.state = if (s.state < 7) 7 else 10
-        require(winLen - dist - 1 >= dictStart && dist >= 0,
-          s"LZMA match distance ${dist + 1} reaches before the dictionary")
-        require(produced + len <= unpacked,
-          "LZMA match overruns the chunk's declared size")
-        ensure(len)
-        var k = 0
-        while (k < len) {
-          window(winLen) = window(winLen - dist - 1)
-          winLen += 1
-          k += 1
-        }
-        produced += len
-      } else {
-        // rep match family
-        var len = -1
-        if (rc.decodeBit(s.isRepG0, s.state) == 0) {
-          if (rc.decodeBit(s.isRep0Long, (s.state << 4) | posState) == 0) {
-            // SHORTREP: one byte at rep0
-            s.state = if (s.state < 7) 9 else 11
-            require(winLen - s.rep0 - 1 >= dictStart,
-              "LZMA shortrep reaches before the dictionary")
-            ensure(1)
-            window(winLen) = window(winLen - s.rep0 - 1)
-            winLen += 1
-            produced += 1
-            len = 0
-          }
-        } else {
-          val dist =
-            if (rc.decodeBit(s.isRepG1, s.state) == 0) s.rep1
-            else if (rc.decodeBit(s.isRepG2, s.state) == 0) {
-              val d = s.rep2; s.rep2 = s.rep1; d
-            } else {
-              val d = s.rep3; s.rep3 = s.rep2; s.rep2 = s.rep1; d
-            }
-          s.rep1 = s.rep0
-          s.rep0 = dist
-        }
-        if (len != 0) { // not shortrep: decode a rep length
-          len = s.repLenCoder.decode(rc, posState)
-          s.state = if (s.state < 7) 8 else 11
-          require(winLen - s.rep0 - 1 >= dictStart,
-            s"LZMA rep match reaches before the dictionary")
-          require(produced + len <= unpacked,
-            "LZMA rep match overruns the chunk's declared size")
-          ensure(len)
-          var k = 0
-          while (k < len) {
-            window(winLen) = window(winLen - s.rep0 - 1)
-            winLen += 1
-            k += 1
-          }
-          produced += len
-        }
-      }
-    }
-    out.write(window, winLen0, winLen - winLen0)
-    winLen
-  }
-
-  /** Decode a complete LZMA2 stream of known uncompressed size. */
-  private def lzma2(p: Array[Byte], off: Int, len: Int,
-      outSize: Int): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    val window = new Array[Byte](outSize)
-    var winLen = 0
-    var dictStart = 0
-    var o = off
-    val end = off + len
-    var s: LzmaState = null
-    var done = false
-    while (!done) {
-      require(o < end, "torn LZMA2: missing control byte")
-      val ctrl = p(o) & 0xff
-      o += 1
-      if (ctrl == 0) done = true
-      else if (ctrl <= 2) { // uncompressed chunk; 1 = dict reset
-        if (ctrl == 1) dictStart = winLen
-        require(o + 2 <= end, "torn LZMA2: uncompressed chunk size")
-        val n = (((p(o) & 0xff) << 8) | (p(o + 1) & 0xff)) + 1
-        o += 2
-        require(o + n <= end, "torn LZMA2: uncompressed chunk overruns")
-        require(winLen + n <= window.length,
-          "LZMA2 output overruns the declared size")
-        System.arraycopy(p, o, window, winLen, n)
-        out.write(p, o, n)
-        winLen += n
-        o += n
-        if (s != null) s.resetState() // spec: plain chunks reset state
-      } else {
-        require(ctrl >= 0x80, s"reserved LZMA2 control byte $ctrl")
-        require(o + 4 <= end, "torn LZMA2: chunk sizes")
-        val unpacked = (((ctrl & 0x1f) << 16) |
-          ((p(o) & 0xff) << 8) | (p(o + 1) & 0xff)) + 1
-        val packed = (((p(o + 2) & 0xff) << 8) | (p(o + 3) & 0xff)) + 1
-        o += 4
-        val resetMode = (ctrl >> 5) & 3
-        if (resetMode >= 2) { // new props byte
-          require(o < end, "torn LZMA2: props byte")
-          val d = p(o) & 0xff
-          o += 1
-          require(d < 9 * 5 * 5, s"LZMA props byte $d out of range")
-          val lc = d % 9
-          val rest = d / 9
-          val lp = rest % 5
-          val pb = rest / 5
-          require(lc + lp <= 4, s"LZMA2 forbids lc+lp > 4 (lc=$lc lp=$lp)")
-          s = new LzmaState(lc, lp, pb)
-        }
-        require(s != null, "torn LZMA2: chunk before any props")
-        if (resetMode >= 1 && resetMode < 2) s.resetState()
-        if (resetMode == 3) dictStart = winLen
-        require(o + packed <= end, "torn LZMA2: packed chunk overruns")
-        require(winLen + unpacked <= window.length,
-          "LZMA2 output overruns the declared size")
-        val rc = new RangeDecoder(p, o, o + packed)
-        winLen = lzmaChunk(rc, s, out, window, winLen, dictStart, unpacked)
-        require(rc.pos == o + packed,
-          s"LZMA chunk consumed ${rc.pos - o} of $packed packed bytes")
-        o += packed
-      }
-    }
-    require(o == end, "torn LZMA2: trailing bytes after the end chunk")
-    out.toByteArray
-  }
-
-  // -------------------------------------------------------------------
-  // XZ container
-
-  final case class XzInfo(content: Array[Byte], nBlocks: Int,
-      checkType: Int)
 
   private def readVli(p: Array[Byte], pos0: Int): (Long, Int) = {
     var v = 0L
@@ -428,177 +51,31 @@ object Xz {
     require(checkType == 0 || checkType == 1 || checkType == 4 ||
       checkType == 10,
       s"xz check type $checkType unsupported (None/CRC32/CRC64/SHA-256)")
-    val hdrCrc = (p(8) & 0xffL) | ((p(9) & 0xffL) << 8) |
-      ((p(10) & 0xffL) << 16) | ((p(11) & 0xffL) << 24)
-    require(hdrCrc == crc32(p, 6, 2), "xz stream-header CRC32 mismatch")
-    val checkSize = checkType match {
-      case 0 => 0
-      case 1 => 4
-      case 4 => 8
-      case _ => 32
-    }
-    val out = new java.io.ByteArrayOutputStream()
-    var o = 12
-    var blockRecords = Vector.empty[(Long, Long)] // (unpadded, unpacked)
-    var index = false
-    while (!index) {
-      require(o < p.length, "torn xz: missing index")
-      if (p(o) == 0) index = true // index indicator
-      else {
-        val blockStart = o
-        val hdrSize = ((p(o) & 0xff) + 1) * 4
-        require(o + hdrSize <= p.length, "torn xz: block header")
-        val bhCrc = (p(o + hdrSize - 4) & 0xffL) |
-          ((p(o + hdrSize - 3) & 0xffL) << 8) |
-          ((p(o + hdrSize - 2) & 0xffL) << 16) |
-          ((p(o + hdrSize - 1) & 0xffL) << 24)
-        require(bhCrc == crc32(p, o, hdrSize - 4),
-          "xz block-header CRC32 mismatch")
-        val flags = p(o + 1) & 0xff
-        require((flags & 0x3c) == 0, "reserved xz block flags")
-        val nFilters = (flags & 3) + 1
-        var cursor = o + 2
-        var declaredPacked = -1L
-        var declaredUnpacked = -1L
-        if ((flags & 0x40) != 0) {
-          val (v, np) = readVli(p, cursor); declaredPacked = v; cursor = np
-        }
-        if ((flags & 0x80) != 0) {
-          val (v, np) = readVli(p, cursor); declaredUnpacked = v
-          cursor = np
-        }
-        var dictSizeProp = -1
-        var f = 0
-        while (f < nFilters) {
-          val (fid, np1) = readVli(p, cursor)
-          val (propLen, np2) = readVli(p, np1)
-          require(fid == 0x21,
-            f"xz filter 0x$fid%x unsupported (LZMA2 only — " +
-              "delta/BCJ reject by name)")
-          require(propLen == 1, "LZMA2 filter needs 1 property byte")
-          dictSizeProp = p(np2) & 0xff
-          cursor = np2 + 1
-          f += 1
-        }
-        require(dictSizeProp >= 0 && dictSizeProp <= 40,
-          s"LZMA2 dict-size property $dictSizeProp")
-        o += hdrSize
-        // block data: LZMA2 chunks; with no declared sizes we walk the
-        // chunk structure to find the extent
-        val dataStart = o
-        var unpackedTotal = 0L
-        var scan = o
-        var scanning = true
-        while (scanning) {
-          require(scan < p.length, "torn xz: LZMA2 chunk walk")
-          val ctrl = p(scan) & 0xff
-          scan += 1
-          if (ctrl == 0) scanning = false
-          else if (ctrl <= 2) {
-            require(scan + 2 <= p.length, "torn xz: chunk walk sizes")
-            val n = (((p(scan) & 0xff) << 8) | (p(scan + 1) & 0xff)) + 1
-            unpackedTotal += n
-            scan += 2 + n
-          } else {
-            require(ctrl >= 0x80, s"reserved LZMA2 control byte $ctrl")
-            require(scan + 4 <= p.length, "torn xz: chunk walk sizes")
-            val unpacked = (((ctrl & 0x1f) << 16) |
-              ((p(scan) & 0xff) << 8) | (p(scan + 1) & 0xff)) + 1
-            val packed = (((p(scan + 2) & 0xff) << 8) |
-              (p(scan + 3) & 0xff)) + 1
-            val resetMode = (ctrl >> 5) & 3
-            unpackedTotal += unpacked
-            scan += 4 + (if (resetMode >= 2) 1 else 0) + packed
-          }
-          require(scan <= p.length, "torn xz: chunk overruns the stream")
-        }
-        require(unpackedTotal <= (1L << 30),
-          "xz block declares > 1 GiB (refusing)")
-        if (declaredUnpacked >= 0)
-          require(declaredUnpacked == unpackedTotal,
-            "xz block header unpacked size contradicts the chunk walk")
-        val dataLen = scan - dataStart
-        if (declaredPacked >= 0)
-          require(declaredPacked == dataLen,
-            "xz block header packed size contradicts the chunk walk")
-        val dec = lzma2(p, dataStart, dataLen, unpackedTotal.toInt)
-        require(dec.length == unpackedTotal, "LZMA2 decoded short")
-        o = scan
-        while ((o - blockStart) % 4 != 0) { // block padding
-          require(o < p.length && p(o) == 0, "xz block padding must be 0")
-          o += 1
-        }
-        // integrity check over the uncompressed data
-        require(o + checkSize <= p.length, "torn xz: missing block check")
-        checkType match {
-          case 0 => ()
-          case 1 =>
-            val want = (p(o) & 0xffL) | ((p(o + 1) & 0xffL) << 8) |
-              ((p(o + 2) & 0xffL) << 16) | ((p(o + 3) & 0xffL) << 24)
-            require(crc32(dec, 0, dec.length) == want,
-              "xz block CRC32 mismatch")
-          case 4 =>
-            var want = 0L
-            var i = 0
-            while (i < 8) { want |= (p(o + i) & 0xffL) << (8 * i); i += 1 }
-            require(crc64(dec, 0, dec.length) == want,
-              "xz block CRC64 mismatch")
-          case _ =>
-            val md = java.security.MessageDigest.getInstance("SHA-256")
-            val got = md.digest(dec)
-            require((0 until 32).forall(i => got(i) == p(o + i)),
-              "xz block SHA-256 mismatch")
-        }
-        o += checkSize
-        val unpadded = (scan - blockStart) + checkSize
-        blockRecords :+= (unpadded.toLong, unpackedTotal)
-        out.write(dec, 0, dec.length)
-      }
-    }
-    // index: indicator already seen at p(o)
-    val indexStart = o
-    o += 1
-    val (nRec, o1) = readVli(p, o)
-    require(nRec == blockRecords.length,
-      s"xz index records $nRec != ${blockRecords.length} blocks")
-    o = o1
-    blockRecords.foreach { case (unpadded, unpacked) =>
-      val (u1, n1) = readVli(p, o)
-      val (u2, n2) = readVli(p, n1)
-      require(u1 == unpadded && u2 == unpacked,
-        "xz index record contradicts the walked block")
-      o = n2
-    }
-    while ((o - indexStart) % 4 != 0) {
-      require(o < p.length && p(o) == 0, "xz index padding must be 0")
-      o += 1
-    }
-    require(o + 4 <= p.length, "torn xz: missing index CRC32")
-    val idxCrc = (p(o) & 0xffL) | ((p(o + 1) & 0xffL) << 8) |
-      ((p(o + 2) & 0xffL) << 16) | ((p(o + 3) & 0xffL) << 24)
-    require(idxCrc == crc32(p, indexStart, o - indexStart),
-      "xz index CRC32 mismatch")
-    o += 4
+    require((le32(p, 8) & 0xffffffffL) == crc32(p, 6, 2),
+      "xz stream-header CRC32 mismatch")
     // stream footer: CRC32(backward size + flags), backward size, flags, YZ
-    require(o + 12 <= p.length, "torn xz: stream footer")
-    val ftCrc = (p(o) & 0xffL) | ((p(o + 1) & 0xffL) << 8) |
-      ((p(o + 2) & 0xffL) << 16) | ((p(o + 3) & 0xffL) << 24)
-    require(ftCrc == crc32(p, o + 4, 6), "xz stream-footer CRC32 mismatch")
-    val backwardBytes = ((p(o + 4) & 0xffL) | ((p(o + 5) & 0xffL) << 8) |
-      ((p(o + 6) & 0xffL) << 16) | ((p(o + 7) & 0xffL) << 24)) * 4 + 4
-    require(backwardBytes == (o - indexStart),
-      s"xz footer backward size $backwardBytes != ${o - indexStart}")
-    require(p(o + 8) == p(6) && p(o + 9) == p(7),
-      "xz footer stream flags differ from the header")
-    require(p(o + 10) == 'Y' && p(o + 11) == 'Z',
+    val ft = p.length - 12
+    require(p(ft + 10) == 'Y' && p(ft + 11) == 'Z',
       "xz footer magic YZ missing")
-    require(o + 12 == p.length,
+    require((le32(p, ft) & 0xffffffffL) == crc32(p, ft + 4, 6),
+      "xz stream-footer CRC32 mismatch")
+    require(p(ft + 8) == p(6) && p(ft + 9) == p(7),
+      "xz footer stream flags differ from the header")
+    val indexStart = ft - ((le32(p, ft + 4) & 0xffffffffL) * 4 + 4)
+    require(indexStart >= 12 && p(indexStart.toInt) == 0,
+      "xz footer backward size does not point at an index")
+    val (nBlocks, _) = readVli(p, indexStart.toInt + 1)
+    require(nBlocks <= Int.MaxValue, s"xz index declares $nBlocks blocks")
+    val in = new java.io.ByteArrayInputStream(p)
+    val content = drain("xz", loud("xz")(new org.tukaani.xz
+      .SingleXZInputStream(in, LibCodec.MaxOutput / 1024)))
+    require(in.available() == 0,
       "trailing bytes after the xz stream (multi-stream unsupported)")
-    XzInfo(out.toByteArray, blockRecords.length, checkType)
+    XzInfo(content, nBlocks.toInt, checkType)
   }
 
   // -------------------------------------------------------------------
-  // Fixture: tukaani-written .jsonl.xz shards (foreign-origin corpus)
+  // Fixture: tukaani-written .jsonl.xz shards
 
   def fixtureLineCount(id: Long): Int = 45 + (id % 40).toInt
 
@@ -613,9 +90,8 @@ object Xz {
     * 0/3/6/9 (0 uses the fast hash-chain match finder, 9 BT4), check
     * type rotates CRC64 (default) / CRC32 / SHA-256. The dictionary is
     * capped at 64 KiB — the payload is ~4 KiB, and the preset defaults
-    * (up to 64 MiB for preset 9) would cost a giant allocation per
-    * shard on the ENCODE side for zero effect on the bytes our decoder
-    * sees beyond the dict-size property.
+    * (up to 64 MiB for preset 9) would cost a giant dictionary
+    * allocation per shard on both the encode and the decode side.
     */
   def fixturePayload(id: Long): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()

@@ -1,1217 +1,73 @@
 package graft.operators
 
-/** Zstandard from scratch (pure JVM), BOTH directions — the last
-  * big-league member of the compressed-shard codec family
-  * ([[Lz4]]/[[Snappy]]/[[Inflate]]/[[Bzip2]]/[[Xz]]), and the default
-  * ORC compression in Spark 4, so this decoder also unblocks
-  * [[OrcMeta]] from its snappy-pinned fixtures. Implements RFC 8878:
-  *
-  *   - frame layer: magic, frame-header descriptor (single-segment,
-  *     FCS field sizes 0/1/2/4/8, dictionary-ID flags — non-zero
-  *     dictionary IDs reject by name), window descriptor with the
-  *     exponent+mantissa size formula, skippable frames
-  *     (0x184D2A50..5F), multi-frame concatenation, and the optional
-  *     content checksum = low 32 bits of XXH64(content) — XXH64
-  *     implemented here and verified when present;
-  *   - block layer: raw / RLE / compressed block headers (LE24:
-  *     last-flag, type, size), 128 KiB block maximum;
-  *   - literals: raw / RLE / Huffman-compressed / treeless-repeat,
-  *     all four size formats, 1-stream and 4-stream layouts with the
-  *     6-byte jump table and the (regen+3)/4 per-stream split;
-  *   - Huffman: weights direct (4-bit packed) or FSE-compressed (two
-  *     interleaved states over a shared backward bitstream, ending on
-  *     bit-exhaustion per the reference tail loop), the implicit last
-  *     weight completing Σ2^(w-1) to a power of two, max code length
-  *     11, canonical fill from longest codes at index 0;
-  *   - FSE/tANS: the variable-bit normalized-count header (threshold
-  *     descent, "less than 1" = -1 probabilities, 2-bit zero-run
-  *     repeat flags), decode-table spread with step
-  *     (size/2 + size/8 + 3) skipping the high cells reserved for
-  *     -1 symbols, per-cell nbBits = AL - floor(log2(x)) and
-  *     baseline = (x << nbBits) - size;
-  *   - sequences: the RFC's PREDEFINED LL/ML/OF distributions
-  *     (accuracy logs 6/6/5) transcribed from the spec, RLE and
-  *     FSE-compressed and repeat table modes, interleaved state
-  *     machine (init order LL,OF,ML; value-bit order OF,ML,LL;
-  *     update order LL,ML,OF), the three-slot repeat-offset history
-  *     with the litLen==0 shift and the rep1-1 corner, and full
-  *     backward-bitstream exhaustion checks.
-  *
-  * Cross-validated in ZstdSpec against the INDEPENDENT zstd-jni
-  * (libzstd) implementation on Spark's classpath: jni-compressed
-  * streams at every level class (fast/default/btopt/btultra2, with
-  * and without content checksums, multi-frame, skippable leaders)
-  * must decode bit-exactly; fixtures are jni-written (foreign-origin
-  * bytes, like the [[Bzip2]]/[[Xz]] tiers). Torn streams (bad magic,
-  * reserved bits, corrupt counts, over-subscribed tables, truncation,
-  * wrong checksum) reject loudly by name.
-  *
-  * The WRITE side ([[compress]]) emits greedy-LZ77 frames whose
-  * sequences ride the predefined FSE distributions (no table headers)
-  * over raw literals, falling back per block to raw when entropy
-  * coding cannot shrink the chunk, plus [[encodeRawFrame]] for inputs
-  * past the window cap; both are cross-validated the strong way —
-  * zstd-jni must decompress our frames bit-exactly.
-  *
-  * DICTIONARY frames decode through `decode(p, dict)`: structured
-  * dictionaries (magic 0xEC30A437 — Huffman + OF/ML/LL FSE tables,
-  * three repeat offsets, content window) and raw-content dictionaries
-  * both preload the frame state; a frame-declared dictionary_ID must
-  * match. `decode(p)` without a dictionary still rejects ID-carrying
-  * frames loudly (a shard that needs a side channel must say so).
-  *
-  * Beyond-reference source surface (SURVEY §2.1 scope).
+import com.github.luben.zstd.{Zstd => Jni}
+
+import LibCodec.{declared, drain, inBounds, le32, loud}
+
+/** Zstandard — the dominant modern shard codec (.jsonl.zst), Spark 4's
+  * default ORC compression, and the codec of graftpq zstd pages. Frames
+  * are decoded by zstd-jni (libzstd: blocks, entropy tables, repeat
+  * offsets and the XXH64 content checksum all verified there); this
+  * object owns the RFC 8878 FRAME walk whose counts the queries report
+  * and whose checks run before any native call: skippable frames
+  * (0x184D2A50..5F) counted and skipped, the frame magic, the
+  * frame-header descriptor's reserved bit, dictionary IDs (rejected by
+  * name — no dictionary is ever provided), the window size against a
+  * 2^27-byte cap, the declared content size against the 1 GiB ceiling,
+  * and multi-frame concatenation. A frame without a declared content
+  * size (a streamed writer's output) decodes through the library's
+  * stream decoder under the same ceiling.
   */
 object Zstd {
 
-  /** Decompressed-size ceiling (1 GiB), the family-wide bomb guard. */
-  private val MaxOutput = 1 << 30
   /** Window-size ceiling: a frame demanding more history than this is
-    * refused rather than buffered (scale guard; libzstd's own default
-    * limit is 2^27 too).
+    * refused (libzstd's own default limit is 2^27 too).
     */
   private val MaxWindow = 1 << 27
+  /** Output one block can carry: with 3-byte block headers this bounds a
+    * frame's output by its compressed length, whatever its header says.
+    */
   private val BlockMax = 128 * 1024
-
-  /** Encode `data` as a spec-legal zstd frame of RAW (uncompressed)
-    * blocks — the write side of this codec stack. Not a size win by
-    * itself (4-magic + 2–5 header + 3 bytes per ≤64 KiB block): the
-    * parquet writer pairs it with dictionary encoding, which is where
-    * the bytes actually go; any conformant decoder (libzstd/zstd-jni,
-    * and [[decode]]) accepts the frame. RFC 8878 §3.1.1: magic, frame
-    * header with Single_Segment_Flag set (window = content size) and
-    * the matching frame-content-size field width, then raw blocks
-    * (Block_Type 0) with the last-block bit on the final one.
-    */
-  def encodeRawFrame(data: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(data.length + 16)
-    def le32(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >>> 8) & 0xff)
-      out.write((v >>> 16) & 0xff); out.write((v >>> 24) & 0xff)
-    }
-    le32(0xFD2FB528)
-    val n = data.length
-    if (n <= 255) { // FCS code 0 + single-segment → 1-byte size
-      out.write(0x20); out.write(n)
-    } else if (n <= 65535 + 256) { // FCS code 1 → 2 bytes, biased 256
-      out.write(0x60)
-      val v = n - 256
-      out.write(v & 0xff); out.write((v >>> 8) & 0xff)
-    } else if (n <= MaxWindow) { // FCS code 2 → 4 bytes
-      out.write(0xA0); le32(n)
-    } else {
-      // Past the window cap a single-segment header would declare
-      // window = content size > MaxWindow, which [[decode]]'s own
-      // scale guard refuses — so emit a NON-single-segment header
-      // with a Window_Descriptor pinned at the cap (exponent 17,
-      // mantissa 0 → 2^27). Raw blocks reference no history, so any
-      // bounded window is spec-legal for this frame shape.
-      out.write(0x80) // FCS code 2, Single_Segment_Flag off
-      out.write((27 - 10) << 3) // Window_Descriptor: 2^27
-      le32(n)
-    }
-    if (n == 0) { out.write(1); out.write(0); out.write(0) }
-    else {
-      var off = 0
-      while (off < n) {
-        val len = math.min(65536, n - off)
-        val hdr = (len << 3) | (if (off + len == n) 1 else 0)
-        out.write(hdr & 0xff); out.write((hdr >>> 8) & 0xff)
-        out.write((hdr >>> 16) & 0xff)
-        out.write(data, off, len)
-        off += len
-      }
-    }
-    out.toByteArray
-  }
-
-  // -------------------------------------------------------------------
-  // COMPRESSION (RFC 8878 §3.1.1.3, the encode direction of everything
-  // [[decode]] reads): greedy hash-chain LZ77 matching, RAW literals,
-  // and sequences entropy-coded with the PREDEFINED FSE distributions —
-  // the mode every decoder must ship tables for, so no table headers
-  // are written. The FSE encoder is derived as the mathematical inverse
-  // of [[buildFse]]'s decode table: decode state i carries ordinal
-  // x(i) ∈ [f, 2f) for its symbol (f = normalized frequency) and jumps
-  // to next = (x << nb) − size + bits, so the encoder — walking the
-  // sequences BACKWARD, as the backward bitstream requires — picks for
-  // symbol s and known next-decode-state c ∈ [size, 2size) the unique
-  // nb with (c >> nb) ∈ [f, 2f), lands on s's state of ordinal
-  // (c >> nb), and emits the low nb bits of c. The bit order problem
-  // (the decoder reads interleaved state-inits, extras and updates
-  // front-to-back of its backward stream) is solved by materializing
-  // the decoder's exact read list and writing it reversed through a
-  // forward LSB-first writer, sentinel bit last.
-
-  /** One LZ77 sequence: `ll` literal bytes, then a match of `ml` bytes
-    * at distance `off` (≥ 1, ≤ every previously-output byte).
-    */
-  private final case class ZSeq(ll: Int, off: Int, ml: Int)
-
-  /** Encode tables derived from a decode [[FseTable]]: per symbol, its
-    * decode states in increasing index order (= increasing ordinal x).
-    */
-  private final class FseEnc(table: FseTable, counts: Array[Int]) {
-    val al: Int = table.al
-    val size: Int = 1 << al
-    private val freq = counts.map(math.abs)
-    private val states: Array[Array[Int]] = {
-      val ls = Array.fill(counts.length)(Vector.newBuilder[Int])
-      var i = 0
-      while (i < size) { ls(table.sym(i)) += i; i += 1 }
-      ls.map(_.result().toArray)
-    }
-    /** Backward step: decoder will hold state `cNext − size` AFTER this
-      * symbol; returns (state decoding the symbol, update bits, nb).
-      */
-    def stepBack(s: Int, cNext: Int): (Int, Int, Int) = {
-      val f = freq(s)
-      var nb = 0
-      while ((cNext >> nb) >= 2 * f) nb += 1
-      val x = cNext >> nb
-      (states(s)(x - f), cNext & ((1 << nb) - 1), nb)
-    }
-    def anyState(s: Int): Int = states(s)(0)
-  }
-
-  private lazy val LlEnc = new FseEnc(LlPredef, LlDefault)
-  private lazy val MlEnc = new FseEnc(MlPredef, MlDefault)
-  private lazy val OfEnc = new FseEnc(OfPredef, OfDefault)
-
-  /** Largest code whose baseline is ≤ v (the tables are increasing). */
-  private def codeOf(bases: Array[Int], v: Int): Int = {
-    var c = bases.length - 1
-    while (bases(c) > v) c -= 1
-    c
-  }
-
-  /** Forward LSB-first bit writer (the container [[BackBits]] reads
-    * back-to-front); `finish` appends the sentinel 1 and pads.
-    */
-  private final class FwdBitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var acc = 0L
-    private var nAcc = 0
-    def push(v: Long, n: Int): Unit = if (n > 0) {
-      acc |= (v & ((1L << n) - 1)) << nAcc
-      nAcc += n
-      while (nAcc >= 8) {
-        out.write((acc & 0xff).toInt); acc >>>= 8; nAcc -= 8
-      }
-    }
-    def finish(): Array[Byte] = {
-      push(1L, 1)
-      if (nAcc > 0) { out.write((acc & 0xff).toInt); nAcc = 0; acc = 0 }
-      out.toByteArray
-    }
-  }
-
-  /** Build one compressed block (literals section + sequences section)
-    * for `data[cs, ce)` with the given sequences; `anchor0 = cs`.
-    * Returns the block body (no block header).
-    */
-  private def buildCompressedBlock(data: Array[Byte], cs: Int, ce: Int,
-      seqs: Seq[ZSeq]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    // ---- literals section: RAW, sizes per §3.1.1.3.1.1
-    val litLen = (ce - cs) - seqs.iterator.map(_.ml).sum
-    if (litLen <= 31) out.write(litLen << 3)
-    else if (litLen <= 4095) {
-      out.write(((litLen & 0xf) << 4) | (1 << 2))
-      out.write(litLen >>> 4)
-    } else {
-      out.write(((litLen & 0xf) << 4) | (3 << 2))
-      out.write((litLen >>> 4) & 0xff)
-      out.write(litLen >>> 12)
-    }
-    var pos = cs
-    for (q <- seqs) { out.write(data, pos, q.ll); pos += q.ll + q.ml }
-    out.write(data, pos, ce - pos) // tail literals after the last match
-    // ---- sequences section
-    val n = seqs.length
-    if (n == 0) { out.write(0); return out.toByteArray }
-    if (n < 128) out.write(n)
-    else if (n < 0x7f00) { out.write(128 + (n >>> 8)); out.write(n & 0xff) }
-    else { out.write(255); out.write((n - 0x7f00) & 0xff)
-      out.write((n - 0x7f00) >>> 8) }
-    out.write(0) // modes: predefined × 3, reserved bits clear
-    // codes + extras per sequence
-    val llC = new Array[Int](n)
-    val mlC = new Array[Int](n)
-    val ofC = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      val q = seqs(i)
-      llC(i) = codeOf(LlBase, q.ll)
-      mlC(i) = codeOf(MlBase, q.ml)
-      val offVal = q.off + 3L // never a repeat code
-      ofC(i) = 63 - java.lang.Long.numberOfLeadingZeros(offVal).toInt
-      i += 1
-    }
-    // state chains, chosen backward so every transition is legal
-    val llS = new Array[Int](n)
-    val mlS = new Array[Int](n)
-    val ofS = new Array[Int](n)
-    val llU = new Array[(Int, Int)](n) // update bits AFTER seq i (i<n-1)
-    val mlU = new Array[(Int, Int)](n)
-    val ofU = new Array[(Int, Int)](n)
-    llS(n - 1) = LlEnc.anyState(llC(n - 1))
-    mlS(n - 1) = MlEnc.anyState(mlC(n - 1))
-    ofS(n - 1) = OfEnc.anyState(ofC(n - 1))
-    i = n - 2
-    while (i >= 0) {
-      val (ls, lu, ln) = LlEnc.stepBack(llC(i), llS(i + 1) + LlEnc.size)
-      val (ms, mu, mn) = MlEnc.stepBack(mlC(i), mlS(i + 1) + MlEnc.size)
-      val (os, ou, on) = OfEnc.stepBack(ofC(i), ofS(i + 1) + OfEnc.size)
-      llS(i) = ls; llU(i) = (lu, ln)
-      mlS(i) = ms; mlU(i) = (mu, mn)
-      ofS(i) = os; ofU(i) = (ou, on)
-      i -= 1
-    }
-    // the decoder's exact read list, then written in reverse
-    val reads = Vector.newBuilder[(Long, Int)]
-    reads += ((llS(0).toLong, LlEnc.al))
-    reads += ((ofS(0).toLong, OfEnc.al))
-    reads += ((mlS(0).toLong, MlEnc.al))
-    i = 0
-    while (i < n) {
-      val q = seqs(i)
-      val offVal = q.off + 3L
-      reads += ((offVal - (1L << ofC(i)), ofC(i)))
-      reads += (((q.ml - MlBase(mlC(i))).toLong, MlExtra(mlC(i))))
-      reads += (((q.ll - LlBase(llC(i))).toLong, LlExtra(llC(i))))
-      if (i < n - 1) {
-        reads += ((llU(i)._1.toLong, llU(i)._2))
-        reads += ((mlU(i)._1.toLong, mlU(i)._2))
-        reads += ((ofU(i)._1.toLong, ofU(i)._2))
-      }
-      i += 1
-    }
-    val w = new FwdBitWriter
-    for ((v, nb) <- reads.result().reverseIterator) w.push(v, nb)
-    val bits = w.finish()
-    out.write(bits, 0, bits.length)
-    out.toByteArray
-  }
-
-  /** Compress `data` into one zstd frame: greedy 4-byte-hash matching,
-    * raw literals, predefined-FSE sequences; any chunk the sequences
-    * cannot shrink ships as a raw block instead. Frames decode with
-    * [[decode]] and any conformant decoder (cross-validated against
-    * zstd-jni in ZstdSpec). Inputs past the decoder-side window cap
-    * fall back to [[encodeRawFrame]] whole.
-    */
-  def compress(data: Array[Byte]): Array[Byte] = {
-    val n = data.length
-    if (n < 32 || n > MaxWindow) return encodeRawFrame(data)
-    val out = new java.io.ByteArrayOutputStream(n / 2 + 64)
-    def le32o(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >>> 8) & 0xff)
-      out.write((v >>> 16) & 0xff); out.write((v >>> 24) & 0xff)
-    }
-    le32o(Magic)
-    if (n <= 255) { out.write(0x20); out.write(n) }
-    else if (n <= 65535 + 256) {
-      out.write(0x60)
-      val v = n - 256
-      out.write(v & 0xff); out.write((v >>> 8) & 0xff)
-    } else { out.write(0xA0); le32o(n) }
-    emitBlocks(data, 0, out)
-    out.toByteArray
-  }
-
-  /** The block loop shared by [[compress]] and [[compressDict]]:
-    * greedy hash-4 matching over `hist`, emitting blocks ONLY for
-    * `hist[from, hist.length)` — positions before `from` (dictionary
-    * content) are indexed as match history but never re-emitted, so
-    * sequences may carry offsets reaching back into the dictionary
-    * exactly as RFC 8878 §5 defines ("content as if it preceded the
-    * frame").
-    */
-  private def emitBlocks(hist: Array[Byte], from: Int,
-      out: java.io.ByteArrayOutputStream): Unit = {
-    val n = hist.length
-    val hbits = 16
-    val table = new Array[Int](1 << hbits)
-    java.util.Arrays.fill(table, -1)
-    def hash4(i: Int): Int = {
-      val v = (hist(i) & 0xff) | ((hist(i + 1) & 0xff) << 8) |
-        ((hist(i + 2) & 0xff) << 16) | ((hist(i + 3) & 0xff) << 24)
-      (v * 0x9E3779B1) >>> (32 - hbits)
-    }
-    var d = 0
-    while (d + 4 <= from) { table(hash4(d)) = d; d += 1 }
-    var cs = from
-    if (cs >= n) { // empty frame body: one last empty raw block
-      out.write(1); out.write(0); out.write(0)
-      return
-    }
-    while (cs < n) {
-      val ce = math.min(cs + BlockMax, n)
-      val seqs = Vector.newBuilder[ZSeq]
-      var anchor = cs
-      var i = cs
-      while (i + 4 <= ce) {
-        val h = hash4(i)
-        val j = table(h)
-        table(h) = i
-        if (j >= 0 && i - j <= MaxWindow &&
-            hist(j) == hist(i) && hist(j + 1) == hist(i + 1) &&
-            hist(j + 2) == hist(i + 2) && hist(j + 3) == hist(i + 3)) {
-          var len = 4
-          while (i + len < ce && hist(j + len) == hist(i + len)) len += 1
-          seqs += ZSeq(i - anchor, i - j, len)
-          // index the matched span too (small blocks: quality over speed)
-          var k = i + 1
-          val stop = math.min(i + len, ce - 4)
-          while (k < stop) { table(hash4(k)) = k; k += 1 }
-          anchor = i + len
-          i += len
-        } else i += 1
-      }
-      val qs = seqs.result()
-      val body = buildCompressedBlock(hist, cs, ce, qs)
-      val last = if (ce == n) 1 else 0
-      if (body.length < ce - cs) { // compressed block (type 2)
-        val hdr = (body.length << 3) | (2 << 1) | last
-        out.write(hdr & 0xff); out.write((hdr >>> 8) & 0xff)
-        out.write((hdr >>> 16) & 0xff)
-        out.write(body, 0, body.length)
-      } else { // incompressible chunk: raw block
-        val hdr = ((ce - cs) << 3) | last
-        out.write(hdr & 0xff); out.write((hdr >>> 8) & 0xff)
-        out.write((hdr >>> 16) & 0xff)
-        out.write(hist, cs, ce - cs)
-      }
-      cs = ce
-    }
-  }
-
-  /** Smallest legal Window_Descriptor byte whose window is ≥ `target`
-    * (exponent 0–17, mantissa 0–7: window = 2^(10+e) · (8+m)/8, capped
-    * at [[MaxWindow]]).
-    */
-  private def windowDescriptorFor(target: Long): Int = {
-    var best = -1
-    var bestW = Long.MaxValue
-    val goal = math.min(target, MaxWindow.toLong)
-    var e = 0
-    while (e <= 17) {
-      var m = 0
-      while (m <= 7) {
-        val base = 1L << (10 + e)
-        val w = base + (base / 8) * m
-        if (w >= goal && w <= MaxWindow && w < bestW) {
-          bestW = w; best = (e << 3) | m
-        }
-        m += 1
-      }
-      e += 1
-    }
-    require(best >= 0, s"no legal window for $target")
-    best
-  }
-
-  /** Compress `data` into a DICTIONARY-REFERENCING frame (the encode
-    * twin of `decode(p, dict)`): the dictionary's content becomes
-    * virtual history before position 0, so matches reach back into it
-    * — the whole point of dictionary compression for small objects. A
-    * STRUCTURED dictionary (magic 0xEC30A437) stamps its dictionary ID
-    * into the frame header (decoders must be handed the same dict); a
-    * raw-content dictionary compresses ID-less. Entropy stays
-    * PREDEFINED-FSE/raw-literals — spec-legal under a dictionary
-    * (Predefined_Mode explicitly resets to the default distributions,
-    * and no repeat-offset codes are ever emitted), so the dictionary's
-    * entropy tables are simply not needed by the frame. Decodes with
-    * [[decode]](p, dict) and zstd-jni given the same dictionary
-    * (cross-validated in ZstdSpec).
-    */
-  def compressDict(data: Array[Byte], dict: Array[Byte]): Array[Byte] = {
-    val zd = new ZstdDict(dict)
-    val content = zd.content
-    val n = data.length
-    // past the window cap the dictionary can't help anyway
-    if (n > MaxWindow) return encodeRawFrame(data)
-    require(content.length.toLong + n <= (Int.MaxValue >> 1),
-      s"zstd: ${content.length}-byte dictionary + $n-byte input " +
-        "exceeds buffer limits")
-    val hist = new Array[Byte](content.length + n)
-    System.arraycopy(content, 0, hist, 0, content.length)
-    System.arraycopy(data, 0, hist, content.length, n)
-    val out = new java.io.ByteArrayOutputStream(n / 2 + 64)
-    def le32o(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >>> 8) & 0xff)
-      out.write((v >>> 16) & 0xff); out.write((v >>> 24) & 0xff)
-    }
-    le32o(Magic)
-    // FCS code 2 (4 bytes, unbiased), no single-segment (an explicit
-    // window spans dict + frame), dictionary-ID flag sized to the id
-    val dictFlag =
-      if (zd.id == 0) 0
-      else if (zd.id <= 0xff) 1
-      else if (zd.id <= 0xffff) 2
-      else 3
-    out.write(0x80 | dictFlag)
-    out.write(windowDescriptorFor(content.length.toLong + n))
-    val idBytes = dictFlag match {
-      case 0 => 0
-      case 1 => 1
-      case 2 => 2
-      case _ => 4
-    }
-    var ib = 0
-    while (ib < idBytes) {
-      out.write(((zd.id >>> (8 * ib)) & 0xff).toInt); ib += 1
-    }
-    le32o(n)
-    emitBlocks(hist, content.length, out)
-    out.toByteArray
-  }
-
-  // -------------------------------------------------------------------
-  // XXH64 (public xxHash spec) — frame content checksums
-
-  private val P1 = 0x9E3779B185EBCA87L
-  private val P2 = 0xC2B2AE3D27D4EB4FL
-  private val P3 = 0x165667B19E3779F9L
-  private val P4 = 0x85EBCA77C2B2AE63L
-  private val P5 = 0x27D4EB2F165667C5L
-
-  def xxh64(b: Array[Byte], off: Int, len: Int, seed: Long): Long = {
-    def le64(o: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < 8) { v |= (b(o + i) & 0xffL) << (8 * i); i += 1 }
-      v
-    }
-    def le32(o: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < 4) { v |= (b(o + i) & 0xffL) << (8 * i); i += 1 }
-      v
-    }
-    def rotl(x: Long, r: Int): Long = (x << r) | (x >>> (64 - r))
-    def round(acc: Long, in: Long): Long =
-      rotl(acc + in * P2, 31) * P1
-    var o = off
-    val end = off + len
-    var h =
-      if (len >= 32) {
-        var a1 = seed + P1 + P2
-        var a2 = seed + P2
-        var a3 = seed
-        var a4 = seed - P1
-        while (o + 32 <= end) {
-          a1 = round(a1, le64(o)); a2 = round(a2, le64(o + 8))
-          a3 = round(a3, le64(o + 16)); a4 = round(a4, le64(o + 24))
-          o += 32
-        }
-        var x = rotl(a1, 1) + rotl(a2, 7) + rotl(a3, 12) + rotl(a4, 18)
-        x = (x ^ round(0, a1)) * P1 + P4
-        x = (x ^ round(0, a2)) * P1 + P4
-        x = (x ^ round(0, a3)) * P1 + P4
-        x = (x ^ round(0, a4)) * P1 + P4
-        x
-      } else seed + P5
-    h += len
-    while (o + 8 <= end) {
-      h = rotl(h ^ round(0, le64(o)), 27) * P1 + P4
-      o += 8
-    }
-    if (o + 4 <= end) {
-      h = rotl(h ^ (le32(o) * P1), 23) * P2 + P3
-      o += 4
-    }
-    while (o < end) {
-      h = rotl(h ^ ((b(o) & 0xffL) * P5), 11) * P1
-      o += 1
-    }
-    h ^= h >>> 33; h *= P2; h ^= h >>> 29; h *= P3; h ^= h >>> 32
-    h
-  }
-
-  // -------------------------------------------------------------------
-  // bit IO
-
-  /** Forward little-endian bit reader (FSE normalized-count headers). */
-  private final class FwdBits(b: Array[Byte], val from: Int,
-      val to: Int) {
-    var pos = 0 // bit position relative to `from`
-    private def bit(i: Int): Int = {
-      val byteIdx = from + (i >>> 3)
-      if (byteIdx >= to) 0
-      else (b(byteIdx) >>> (i & 7)) & 1
-    }
-    def peek(n: Int): Int = {
-      var v = 0
-      var k = 0
-      while (k < n) { v |= bit(pos + k) << k; k += 1 }
-      v
-    }
-    def skip(n: Int): Unit = pos += n
-    def read(n: Int): Int = { val v = peek(n); skip(n); v }
-    /** Bytes consumed so far, rounded up. */
-    def bytesUsed: Int = (pos + 7) >>> 3
-    def checkWithin(): Unit =
-      require(from + bytesUsed <= to,
-        "torn zstd: FSE count header overruns its region")
-  }
-
-  /** Backward bitstream (FSE streams, Huffman streams, sequences):
-    * values are written LSB-first forward and read back-to-front; the
-    * last byte's most-significant set bit is the padding sentinel.
-    * Reads past the logical start return zero bits and set
-    * `overflowed` — the reference decoder's zero-padded container
-    * semantics, which the FSE weight loop uses as its stop signal;
-    * strict consumers require an exact landing on zero instead.
-    */
-  private final class BackBits(b: Array[Byte], from: Int, to: Int) {
-    require(to > from, "torn zstd: empty backward bitstream")
-    private val sentinelByte = b(to - 1) & 0xff
-    require(sentinelByte != 0,
-      "torn zstd: backward bitstream missing its sentinel bit")
-    private val totalBits =
-      (to - from - 1) * 8 + (31 - Integer.numberOfLeadingZeros(sentinelByte))
-    var bitIndex: Int = totalBits
-    def overflowed: Boolean = bitIndex < 0
-    private def bit(i: Int): Int =
-      if (i < 0) 0 else (b(from + (i >>> 3)) >>> (i & 7)) & 1
-    def peek(n: Int): Int = {
-      var v = 0
-      var k = 0
-      while (k < n) { v |= bit(bitIndex - n + k) << k; k += 1 }
-      v
-    }
-    def read(n: Int): Int = { val v = peek(n); bitIndex -= n; v }
-    def readLong(n: Int): Long = {
-      var v = 0L
-      var k = 0
-      while (k < n) { v |= bit(bitIndex - n + k).toLong << k; k += 1 }
-      bitIndex -= n
-      v
-    }
-    def finished: Boolean = bitIndex == 0
-  }
-
-  // -------------------------------------------------------------------
-  // FSE
-
-  private final case class FseTable(al: Int, sym: Array[Int],
-      nb: Array[Int], base: Array[Int])
-
-  /** Read a normalized-count header (RFC 8878 §4.1.1). Returns the
-    * counts (index = symbol, value -1..2^AL) and leaves `fb` positioned
-    * after the header bits (byte-aligned by the caller via bytesUsed).
-    */
-  private def readNCount(fb: FwdBits, maxSym: Int,
-      maxLog: Int): (Array[Int], Int) = {
-    val al = fb.read(4) + 5
-    require(al <= maxLog, s"zstd FSE accuracy log $al exceeds $maxLog")
-    var remaining = (1 << al) + 1
-    var threshold = 1 << al
-    var nbBits = al + 1
-    val counts = new Array[Int](maxSym + 1)
-    var charnum = 0
-    var previous0 = false
-    while (remaining > 1) {
-      require(charnum <= maxSym,
-        "torn zstd: FSE counts exceed the symbol alphabet")
-      if (previous0) {
-        var n0 = charnum
-        while (fb.peek(2) == 3) { fb.skip(2); n0 += 3 }
-        n0 += fb.read(2)
-        require(n0 <= maxSym, "torn zstd: FSE zero-run past the alphabet")
-        while (charnum < n0) { counts(charnum) = 0; charnum += 1 }
-      }
-      val max = (2 * threshold - 1) - remaining
-      var count =
-        if ((fb.peek(nbBits) & (threshold - 1)) < max) {
-          val v = fb.peek(nbBits) & (threshold - 1)
-          fb.skip(nbBits - 1)
-          v
-        } else {
-          val v = fb.read(nbBits) & (2 * threshold - 1)
-          if (v >= threshold) v - max else v
-        }
-      count -= 1 // -1 encodes the "less than 1" probability
-      remaining -= math.abs(count)
-      require(remaining >= 1, "torn zstd: over-subscribed FSE counts")
-      counts(charnum) = count
-      charnum += 1
-      previous0 = count == 0
-      while (remaining < threshold && remaining > 1) {
-        nbBits -= 1; threshold >>= 1
-      }
-    }
-    fb.checkWithin()
-    (counts, al)
-  }
-
-  private def buildFse(counts: Array[Int], al: Int): FseTable = {
-    val size = 1 << al
-    val sym = new Array[Int](size)
-    var high = size - 1
-    for (s <- counts.indices) if (counts(s) == -1) {
-      sym(high) = s; high -= 1
-    }
-    val step = (size >> 1) + (size >> 3) + 3
-    val mask = size - 1
-    var pos = 0
-    for (s <- counts.indices) {
-      var k = 0
-      while (k < counts(s)) { // counts(s) > 0 only
-        sym(pos) = s
-        pos = (pos + step) & mask
-        while (pos > high) pos = (pos + step) & mask
-        k += 1
-      }
-    }
-    require(pos == 0, "torn zstd: FSE spread did not close")
-    val next = counts.map(math.abs)
-    val nb = new Array[Int](size)
-    val base = new Array[Int](size)
-    var i = 0
-    while (i < size) {
-      val s = sym(i)
-      val x = next(s)
-      next(s) += 1
-      val nbb = al - (31 - Integer.numberOfLeadingZeros(x))
-      nb(i) = nbb
-      base(i) = (x << nbb) - size
-      i += 1
-    }
-    FseTable(al, sym, nb, base)
-  }
-
-  /** A degenerate 1-state table for the RLE sequence-table mode. */
-  private def rleTable(symbol: Int): FseTable =
-    FseTable(0, Array(symbol), Array(0), Array(0))
-
-  // -------------------------------------------------------------------
-  // Huffman (literals)
-
-  private final case class HufTable(maxBits: Int, sym: Array[Int],
-      nb: Array[Int])
-
-  private def buildHuf(weights: Array[Int]): HufTable = {
-    var sum = 0L
-    for (w <- weights) {
-      require(w >= 0 && w <= 11, s"zstd Huffman weight $w out of range")
-      if (w > 0) sum += 1L << (w - 1)
-    }
-    require(sum > 0, "torn zstd: Huffman table with no coded symbols")
-    val maxBits = 64 - java.lang.Long.numberOfLeadingZeros(sum - 1) match {
-      case 0 => 1 // sum == 1
-      case n => n
-    }
-    require(maxBits <= 11,
-      s"zstd Huffman code length $maxBits exceeds the 11-bit maximum")
-    require(sum == (1L << maxBits),
-      "torn zstd: Huffman weights do not complete a power of two")
-    val size = 1 << maxBits
-    val sym = new Array[Int](size)
-    val nb = new Array[Int](size)
-    var pos = 0
-    var w = 1
-    while (w <= maxBits) {
-      var s = 0
-      while (s < weights.length) {
-        if (weights(s) == w) {
-          val cells = 1 << (w - 1)
-          val nbb = maxBits + 1 - w
-          var k = 0
-          while (k < cells) { sym(pos + k) = s; nb(pos + k) = nbb; k += 1 }
-          pos += cells
-        }
-        s += 1
-      }
-      w += 1
-    }
-    require(pos == size, "torn zstd: Huffman fill did not close")
-    HufTable(maxBits, sym, nb)
-  }
-
-  /** Read a Huffman tree description starting at `off`; returns the
-    * table and the bytes consumed (header byte included).
-    */
-  private def readHufTable(p: Array[Byte], off: Int,
-      end: Int): (HufTable, Int) = {
-    require(off < end, "torn zstd: missing Huffman tree description")
-    val hByte = p(off) & 0xff
-    if (hByte >= 128) {
-      // direct: (hByte - 127) 4-bit weights, two per byte, high first
-      val n = hByte - 127
-      val nBytes = (n + 1) / 2
-      require(off + 1 + nBytes <= end,
-        "torn zstd: direct Huffman weights overrun the literals")
-      val weights = new Array[Int](n + 1) // + implicit last
-      var i = 0
-      while (i < n) {
-        val b = p(off + 1 + i / 2) & 0xff
-        weights(i) = if (i % 2 == 0) b >>> 4 else b & 0xf
-        i += 1
-      }
-      (finishWeights(weights, n), 1 + nBytes)
-    } else {
-      // FSE-compressed weights: hByte = compressed size
-      require(off + 1 + hByte <= end,
-        "torn zstd: FSE Huffman weights overrun the literals")
-      val fb = new FwdBits(p, off + 1, off + 1 + hByte)
-      val (counts, al) = readNCount(fb, 255, 6)
-      val table = buildFse(counts, al)
-      val streamFrom = off + 1 + fb.bytesUsed
-      val bs = new BackBits(p, streamFrom, off + 1 + hByte)
-      var s1 = bs.read(al)
-      var s2 = bs.read(al)
-      require(!bs.overflowed, "torn zstd: Huffman weight stream too short")
-      val ws = Array.newBuilder[Int]
-      var n = 0
-      var stop = false
-      // the reference tail loop: states alternate; the state whose
-      // UPDATE over-reads is dropped and the other state emits once
-      // more, ending the stream
-      while (!stop) {
-        require(n < 255, "torn zstd: runaway Huffman weight stream")
-        ws += table.sym(s1)
-        n += 1
-        s1 = table.base(s1) + bs.read(table.nb(s1))
-        if (bs.overflowed) { ws += table.sym(s2); n += 1; stop = true }
-        else {
-          ws += table.sym(s2)
-          n += 1
-          s2 = table.base(s2) + bs.read(table.nb(s2))
-          if (bs.overflowed) { ws += table.sym(s1); n += 1; stop = true }
-        }
-      }
-      val weights = ws.result() :+ 0 // slot for the implicit last
-      (finishWeights(weights, weights.length - 1), 1 + hByte)
-    }
-  }
-
-  /** Deduce the implicit last weight (completes Σ2^(w-1) to a power of
-    * two) and build the table. `weights` has `n` explicit entries and
-    * one spare slot.
-    */
-  private def finishWeights(weights: Array[Int], n: Int): HufTable = {
-    require(n >= 1 && n <= 255,
-      s"torn zstd: $n explicit Huffman weights (1..255 allowed)")
-    var sum = 0L
-    var i = 0
-    while (i < n) {
-      require(weights(i) <= 11, "zstd Huffman weight out of range")
-      if (weights(i) > 0) sum += 1L << (weights(i) - 1)
-      i += 1
-    }
-    require(sum > 0, "torn zstd: all-zero Huffman weights")
-    val maxBits = 64 - java.lang.Long.numberOfLeadingZeros(sum)
-    val nextPow2 = 1L << maxBits
-    val rest = nextPow2 - sum
-    require(java.lang.Long.bitCount(rest) == 1,
-      "torn zstd: Huffman weights do not leave a power-of-two remainder")
-    weights(n) = java.lang.Long.numberOfTrailingZeros(rest).toInt + 1
-    buildHuf(weights.take(n + 1))
-  }
-
-  /** Decode one Huffman-coded literal stream of exactly `expect`
-    * bytes; the stream must consume its bits exactly.
-    */
-  private def hufStream(t: HufTable, p: Array[Byte], from: Int, to: Int,
-      out: Array[Byte], outOff: Int, expect: Int): Unit = {
-    val bs = new BackBits(p, from, to)
-    var i = 0
-    while (i < expect) {
-      val idx = bs.peek(t.maxBits)
-      out(outOff + i) = t.sym(idx).toByte
-      bs.bitIndex -= t.nb(idx)
-      require(bs.bitIndex >= 0,
-        "torn zstd: Huffman literal stream exhausted early")
-      i += 1
-    }
-    require(bs.finished,
-      "torn zstd: Huffman literal stream not fully consumed")
-  }
-
-  // -------------------------------------------------------------------
-  // sequences: predefined distributions and code tables (RFC 8878)
-
-  private val LlDefault = Array(
-    4, 3, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 1, 1, 1,
-    2, 2, 2, 2, 2, 2, 2, 2, 2, 3, 2, 1, 1, 1, 1, 1,
-    -1, -1, -1, -1)
-  private val MlDefault = Array(
-    1, 4, 3, 2, 2, 2, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1,
-    1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-    1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, -1, -1,
-    -1, -1, -1, -1, -1)
-  private val OfDefault = Array(
-    1, 1, 1, 1, 1, 1, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1,
-    1, 1, 1, 1, 1, 1, 1, 1, -1, -1, -1, -1, -1)
-
-  private lazy val LlPredef = buildFse(LlDefault, 6)
-  private lazy val MlPredef = buildFse(MlDefault, 6)
-  private lazy val OfPredef = buildFse(OfDefault, 5)
-
-  // literal-length codes: baseline and extra bits per code
-  private val LlBase = Array(
-    0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15,
-    16, 18, 20, 22, 24, 28, 32, 40, 48, 64, 128, 256, 512, 1024,
-    2048, 4096, 8192, 16384, 32768, 65536)
-  private val LlExtra = Array(
-    0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
-    1, 1, 1, 1, 2, 2, 3, 3, 4, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16)
-  // match-length codes
-  private val MlBase = Array(
-    3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16, 17, 18,
-    19, 20, 21, 22, 23, 24, 25, 26, 27, 28, 29, 30, 31, 32, 33, 34,
-    35, 37, 39, 41, 43, 47, 51, 59, 67, 83, 99, 131, 259, 515, 1027,
-    2051, 4099, 8195, 16387, 32771, 65539)
-  private val MlExtra = Array(
-    0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
-    0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
-    1, 1, 1, 1, 2, 2, 3, 3, 4, 4, 5, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16)
-
-  // -------------------------------------------------------------------
-  // frame decoding
-
   private val Magic = 0xFD2FB528
   private val SkippableBase = 0x184D2A50
 
   final case class ZstdInfo(content: Array[Byte], nFrames: Int,
       nSkippable: Int, nChecksums: Int)
 
-  private def le32(p: Array[Byte], o: Int): Int =
-    (p(o) & 0xff) | ((p(o + 1) & 0xff) << 8) | ((p(o + 2) & 0xff) << 16) |
-      ((p(o + 3) & 0xff) << 24)
-
-  /** A parsed dictionary (RFC 8878 §5): either STRUCTURED — magic
-    * 0xEC30A437, dictionary ID, entropy tables (Huffman for literals,
-    * then FSE for offsets / match lengths / literal lengths), three
-    * 4-byte repeat offsets, content — or RAW CONTENT (no magic): the
-    * bytes are just match-window history.
+  /** Decode one zstd frame of at most `maxLen` decompressed bytes (a
+    * parquet page, an ORC chunk, one frame of [[decode]]). A declared
+    * content size is checked against `maxLen` and sizes the output
+    * exactly; a frame without one streams through the library's decoder
+    * under the same bound.
     */
-  private final class ZstdDict(d: Array[Byte]) {
-    val structured: Boolean =
-      d.length >= 8 && le32(d, 0) == 0xEC30A437
-    val id: Long = if (structured) le32(d, 4) & 0xffffffffL else 0L
-    var huf: HufTable = null
-    var llT: FseTable = null
-    var mlT: FseTable = null
-    var ofT: FseTable = null
-    val reps: Array[Int] = Array(1, 4, 8)
-    val content: Array[Byte] =
-      if (!structured) d
-      else {
-        var o = 8
-        val (h, hufUsed) = readHufTable(d, o, d.length)
-        huf = h
-        o += hufUsed
-        val fbOf = new FwdBits(d, o, d.length)
-        val (ofC, ofAl) = readNCount(fbOf, 31, 8)
-        ofT = buildFse(ofC, ofAl)
-        o += fbOf.bytesUsed
-        val fbMl = new FwdBits(d, o, d.length)
-        val (mlC, mlAl) = readNCount(fbMl, 52, 9)
-        mlT = buildFse(mlC, mlAl)
-        o += fbMl.bytesUsed
-        val fbLl = new FwdBits(d, o, d.length)
-        val (llC, llAl) = readNCount(fbLl, 35, 9)
-        llT = buildFse(llC, llAl)
-        o += fbLl.bytesUsed
-        require(o + 12 <= d.length, "torn zstd dictionary: rep offsets")
-        var i = 0
-        while (i < 3) {
-          reps(i) = le32(d, o + 4 * i)
-          require(reps(i) > 0,
-            s"torn zstd dictionary: repeat offset ${reps(i)}")
-          i += 1
-        }
-        o += 12
-        val c = java.util.Arrays.copyOfRange(d, o, d.length)
-        require(reps.forall(_ <= c.length + 1),
-          "torn zstd dictionary: repeat offset outside the content")
-        c
-      }
+  def decompress(p: Array[Byte], off: Int, len: Int,
+      maxLen: Int): Array[Byte] = {
+    inBounds("zstd", p, off, len)
+    require(len >= 4 && le32(p, off) == Magic,
+      f"not zstd: magic 0x${if (len >= 4) le32(p, off) else 0}%08x")
+    val (contentSize, _) = frameHeader(p, off + 4, off + len)
+    if (contentSize < 0)
+      drain("zstd", new com.github.luben.zstd.ZstdInputStreamNoFinalizer(
+        new java.io.ByteArrayInputStream(p, off, len)), maxLen)
+    else {
+      val n = declared("zstd frame", contentSize, maxLen)
+      val dst = new Array[Byte](n)
+      val got = loud("zstd")(Jni.decompressByteArray(dst, 0, n, p, off, len))
+      require(got == n,
+        s"torn zstd: decoded $got bytes, header declared $n")
+      dst
+    }
   }
 
-  /** Per-frame mutable decoder state: accumulated output (match
-    * window), repeat offsets, and the tables `repeat`/treeless modes
-    * reuse across blocks. A dictionary preloads the window, the repeat
-    * offsets and the entropy tables; its `dictLen` prefix never leaves
-    * the frame.
+  /** Decode a (possibly multi-frame) zstd payload; libzstd verifies
+    * every content checksum present.
     */
-  private final class FrameState(dict: ZstdDict = null) {
-    var buf = new Array[Byte](64 * 1024)
-    var len = 0
-    val reps = Array(1, 4, 8)
-    var huf: HufTable = null
-    var llT: FseTable = null
-    var mlT: FseTable = null
-    var ofT: FseTable = null
-    val dictLen: Int = if (dict == null) 0 else dict.content.length
-    if (dict != null) {
-      huf = dict.huf; llT = dict.llT; mlT = dict.mlT; ofT = dict.ofT
-      System.arraycopy(dict.reps, 0, reps, 0, 3)
-      append(dict.content, 0, dict.content.length)
-    }
-    def ensure(extra: Int): Unit = {
-      require(len.toLong + extra <= MaxOutput,
-        s"zstd output exceeds the $MaxOutput-byte ceiling (bomb guard)")
-      if (len + extra > buf.length) {
-        var cap = buf.length
-        while (cap < len + extra)
-          cap = if (cap > MaxOutput / 2) MaxOutput else cap * 2
-        buf = java.util.Arrays.copyOf(buf, cap)
-      }
-    }
-    def append(src: Array[Byte], off: Int, n: Int): Unit = {
-      ensure(n)
-      System.arraycopy(src, off, buf, len, n)
-      len += n
-    }
-    def appendByte(b: Byte, n: Int): Unit = {
-      ensure(n)
-      java.util.Arrays.fill(buf, len, len + n, b)
-      len += n
-    }
-    def copyMatch(offset: Int, n: Int): Unit = {
-      require(offset >= 1 && offset <= len,
-        s"torn zstd: match offset $offset outside the $len-byte window")
-      ensure(n)
-      var i = 0
-      while (i < n) { // byte-wise: overlapping copies are the format
-        buf(len + i) = buf(len + i - offset)
-        i += 1
-      }
-      len += n
-    }
-  }
-
-  /** Decode the literals section; returns (literals, bytesConsumed). */
-  private def decodeLiterals(p: Array[Byte], off: Int, end: Int,
-      st: FrameState): (Array[Byte], Int) = {
-    require(off < end, "torn zstd: missing literals section")
-    val b0 = p(off) & 0xff
-    val ltype = b0 & 3
-    val sizeFormat = (b0 >>> 2) & 3
-    if (ltype <= 1) { // raw or RLE
-      val (regen, hdr) = sizeFormat match {
-        case 0 | 2 => (b0 >>> 3, 1)
-        case 1 =>
-          require(off + 2 <= end, "torn zstd: literals size header")
-          ((b0 >>> 4) | ((p(off + 1) & 0xff) << 4), 2)
-        case _ =>
-          require(off + 3 <= end, "torn zstd: literals size header")
-          ((b0 >>> 4) | ((p(off + 1) & 0xff) << 4) |
-            ((p(off + 2) & 0xff) << 12), 3)
-      }
-      require(regen <= BlockMax, s"zstd literals $regen exceed a block")
-      if (ltype == 0) {
-        require(off + hdr + regen <= end, "torn zstd: raw literals")
-        (java.util.Arrays.copyOfRange(p, off + hdr, off + hdr + regen),
-          hdr + regen)
-      } else {
-        require(off + hdr + 1 <= end, "torn zstd: RLE literal byte")
-        val out = new Array[Byte](regen)
-        java.util.Arrays.fill(out, p(off + hdr))
-        (out, hdr + 1)
-      }
-    } else { // compressed (2) or treeless (3)
-      val (regen, comp, hdr, fourStreams) = sizeFormat match {
-        case 0 | 1 =>
-          require(off + 3 <= end, "torn zstd: literals size header")
-          val b1 = p(off + 1) & 0xff
-          val b2 = p(off + 2) & 0xff
-          ((b0 >>> 4) | ((b1 & 0x3f) << 4), (b1 >>> 6) | (b2 << 2), 3,
-            sizeFormat == 1)
-        case 2 =>
-          require(off + 4 <= end, "torn zstd: literals size header")
-          val b1 = p(off + 1) & 0xff
-          val b2 = p(off + 2) & 0xff
-          val b3 = p(off + 3) & 0xff
-          ((b0 >>> 4) | (b1 << 4) | ((b2 & 3) << 12),
-            (b2 >>> 2) | (b3 << 6), 4, true)
-        case _ =>
-          require(off + 5 <= end, "torn zstd: literals size header")
-          val b1 = p(off + 1) & 0xff
-          val b2 = p(off + 2) & 0xff
-          val b3 = p(off + 3) & 0xff
-          val b4 = p(off + 4) & 0xff
-          ((b0 >>> 4) | (b1 << 4) | ((b2 & 0x3f) << 12),
-            (b2 >>> 6) | (b3 << 2) | (b4 << 10), 5, true)
-      }
-      require(regen <= BlockMax, s"zstd literals $regen exceed a block")
-      require(off + hdr + comp <= end,
-        "torn zstd: compressed literals overrun the block")
-      var o = off + hdr
-      val streamsEnd = off + hdr + comp
-      if (ltype == 2) {
-        val (t, used) = readHufTable(p, o, streamsEnd)
-        st.huf = t
-        o += used
-      } else require(st.huf != null,
-        "torn zstd: treeless literals with no previous Huffman table")
-      val t = st.huf
-      val out = new Array[Byte](regen)
-      if (!fourStreams) {
-        hufStream(t, p, o, streamsEnd, out, 0, regen)
-      } else {
-        require(o + 6 <= streamsEnd, "torn zstd: literals jump table")
-        val s1 = (p(o) & 0xff) | ((p(o + 1) & 0xff) << 8)
-        val s2 = (p(o + 2) & 0xff) | ((p(o + 3) & 0xff) << 8)
-        val s3 = (p(o + 4) & 0xff) | ((p(o + 5) & 0xff) << 8)
-        o += 6
-        val s4 = streamsEnd - o - s1 - s2 - s3
-        require(s4 > 0, "torn zstd: literals stream sizes overrun")
-        val part = (regen + 3) / 4
-        val last = regen - 3 * part
-        require(last >= 0, "torn zstd: literals split underflow")
-        hufStream(t, p, o, o + s1, out, 0, part)
-        hufStream(t, p, o + s1, o + s1 + s2, out, part, part)
-        hufStream(t, p, o + s1 + s2, o + s1 + s2 + s3, out, 2 * part, part)
-        hufStream(t, p, o + s1 + s2 + s3, streamsEnd, out, 3 * part, last)
-      }
-      (out, hdr + comp)
-    }
-  }
-
-  /** Read one sequence-table description per its 2-bit mode. */
-  private def seqTable(p: Array[Byte], off: Int, end: Int, mode: Int,
-      maxSym: Int, maxLog: Int, predef: => FseTable,
-      prev: FseTable): (FseTable, Int) = mode match {
-    case 0 => (predef, 0)
-    case 1 =>
-      require(off < end, "torn zstd: RLE sequence-table byte")
-      val s = p(off) & 0xff
-      require(s <= maxSym, s"zstd RLE sequence symbol $s > $maxSym")
-      (rleTable(s), 1)
-    case 2 =>
-      val fb = new FwdBits(p, off, end)
-      val (counts, al) = readNCount(fb, maxSym, maxLog)
-      (buildFse(counts, al), fb.bytesUsed)
-    case _ =>
-      require(prev != null,
-        "torn zstd: repeat sequence table with no previous table")
-      (prev, 0)
-  }
-
-  /** Decode one compressed block's content into the frame state. */
-  private def decodeBlock(p: Array[Byte], off: Int, end: Int,
-      st: FrameState): Unit = {
-    val (lits, litBytes) = decodeLiterals(p, off, end, st)
-    var o = off + litBytes
-    require(o < end, "torn zstd: missing sequences section")
-    val b0 = p(o) & 0xff
-    o += 1
-    val nSeq =
-      if (b0 == 0) 0
-      else if (b0 < 128) b0
-      else if (b0 < 255) {
-        require(o < end, "torn zstd: sequence count")
-        val v = ((b0 - 128) << 8) + (p(o) & 0xff); o += 1; v
-      } else {
-        require(o + 2 <= end, "torn zstd: sequence count")
-        val v = (p(o) & 0xff) + ((p(o + 1) & 0xff) << 8) + 0x7f00
-        o += 2; v
-      }
-    if (nSeq == 0) {
-      require(o == end, "torn zstd: trailing bytes after empty sequences")
-      st.append(lits, 0, lits.length)
-      return
-    }
-    require(o < end, "torn zstd: missing compression-modes byte")
-    val modes = p(o) & 0xff
-    o += 1
-    require((modes & 3) == 0, "reserved sequence-mode bits set")
-    val (llT, llUsed) = seqTable(p, o, end, (modes >>> 6) & 3, 35, 9,
-      LlPredef, st.llT)
-    o += llUsed
-    val (ofT, ofUsed) = seqTable(p, o, end, (modes >>> 4) & 3, 31, 8,
-      OfPredef, st.ofT)
-    o += ofUsed
-    val (mlT, mlUsed) = seqTable(p, o, end, (modes >>> 2) & 3, 52, 9,
-      MlPredef, st.mlT)
-    o += mlUsed
-    st.llT = llT; st.ofT = ofT; st.mlT = mlT
-    val bs = new BackBits(p, o, end)
-    var ll = bs.read(llT.al)
-    var of = bs.read(ofT.al)
-    var ml = bs.read(mlT.al)
-    require(!bs.overflowed, "torn zstd: sequence bitstream too short")
-    var litPos = 0
-    var i = 0
-    while (i < nSeq) {
-      val ofCode = ofT.sym(of)
-      val mlCode = mlT.sym(ml)
-      val llCode = llT.sym(ll)
-      require(ofCode <= 31 && mlCode <= 52 && llCode <= 35,
-        "torn zstd: sequence code out of range")
-      val offVal = (1L << ofCode) + bs.readLong(ofCode)
-      val mlVal = MlBase(mlCode) + bs.read(MlExtra(mlCode))
-      val llVal = LlBase(llCode) + bs.read(LlExtra(llCode))
-      require(!bs.overflowed, "torn zstd: sequence bitstream exhausted")
-      // repeat-offset resolution (RFC 8878 §3.1.1.5)
-      val offset: Int =
-        if (offVal > 3) {
-          val x = offVal - 3
-          require(x <= MaxWindow, s"zstd offset $x exceeds the window cap")
-          st.reps(2) = st.reps(1); st.reps(1) = st.reps(0)
-          st.reps(0) = x.toInt
-          x.toInt
-        } else {
-          val idx = offVal.toInt - 1 + (if (llVal == 0) 1 else 0)
-          idx match {
-            case 0 => st.reps(0)
-            case 1 =>
-              val x = st.reps(1)
-              st.reps(1) = st.reps(0); st.reps(0) = x; x
-            case 2 =>
-              val x = st.reps(2)
-              st.reps(2) = st.reps(1); st.reps(1) = st.reps(0)
-              st.reps(0) = x; x
-            case _ =>
-              val x = st.reps(0) - 1
-              require(x >= 1, "torn zstd: repeat offset underflow")
-              st.reps(2) = st.reps(1); st.reps(1) = st.reps(0)
-              st.reps(0) = x; x
-          }
-        }
-      require(litPos + llVal <= lits.length,
-        "torn zstd: sequence consumes more literals than regenerated")
-      st.append(lits, litPos, llVal)
-      litPos += llVal
-      st.copyMatch(offset, mlVal)
-      i += 1
-      if (i < nSeq) { // no state update after the last sequence
-        ll = llT.base(ll) + bs.read(llT.nb(ll))
-        ml = mlT.base(ml) + bs.read(mlT.nb(ml))
-        of = ofT.base(of) + bs.read(ofT.nb(of))
-        require(!bs.overflowed, "torn zstd: sequence states exhausted")
-      }
-    }
-    require(bs.finished, "torn zstd: sequence bitstream not consumed")
-    st.append(lits, litPos, lits.length - litPos)
-  }
-
-  /** Decode a (possibly multi-frame) zstd payload, verifying every
-    * content checksum present.
-    */
-  def decode(p: Array[Byte]): ZstdInfo = decodeWith(p, null)
-
-  /** Decode with a dictionary — `dict` is either a structured
-    * dictionary (magic 0xEC30A437: entropy tables + repeat offsets +
-    * content) or raw content bytes; every frame starts from the
-    * dictionary's window/tables/offsets, and a frame-declared
-    * dictionary ID must match a structured dictionary's.
-    */
-  def decode(p: Array[Byte], dict: Array[Byte]): ZstdInfo =
-    decodeWith(p, new ZstdDict(dict))
-
-  private def decodeWith(p: Array[Byte], dict: ZstdDict): ZstdInfo = {
+  def decode(p: Array[Byte]): ZstdInfo = {
     var o = 0
-    var nFrames = 0
     var nSkippable = 0
     var nChecksums = 0
-    val out = new java.io.ByteArrayOutputStream()
+    var total = 0L
+    val frames = Vector.newBuilder[Array[Byte]]
     require(p.length >= 4, "torn zstd: shorter than any frame")
     while (o < p.length) {
       require(o + 4 <= p.length, "torn zstd: trailing garbage")
@@ -1225,130 +81,83 @@ object Zstd {
         nSkippable += 1
       } else {
         require(magic == Magic, f"not zstd: magic 0x$magic%08x")
-        o += 4
-        require(o < p.length, "torn zstd: missing frame header")
-        val desc = p(o) & 0xff
-        o += 1
-        val dictFlag = desc & 3
-        val checksumFlag = (desc >>> 2) & 1
-        require((desc & 0x08) == 0, "reserved frame-descriptor bit set")
-        val singleSegment = (desc >>> 5) & 1
-        val fcsFlag = (desc >>> 6) & 3
-        var windowSize = 0L
-        if (singleSegment == 0) {
-          require(o < p.length, "torn zstd: missing window descriptor")
-          val wd = p(o) & 0xff
-          o += 1
-          val base = 1L << (10 + (wd >>> 3))
-          windowSize = base + (base / 8) * (wd & 7)
-        }
-        val dictBytes = dictFlag match {
-          case 0 => 0
-          case 1 => 1
-          case 2 => 2
-          case _ => 4
-        }
-        if (dictBytes > 0) {
-          require(o + dictBytes <= p.length, "torn zstd: dictionary ID")
-          var dictId = 0L
-          for (i <- 0 until dictBytes) dictId |= (p(o + i) & 0xffL) << (8 * i)
-          if (dict == null)
-            require(dictId == 0,
-              s"zstd frame declares dictionary_ID $dictId but no " +
-                "dictionary was provided (pass one to decode(p, dict))")
-          else require(dict.id == 0 || dict.id == dictId,
-            s"zstd dictionary mismatch: frame wants ID $dictId, " +
-              s"dictionary carries ${dict.id}")
-          o += dictBytes
-        }
-        val fcsBytes = fcsFlag match {
-          case 0 => if (singleSegment == 1) 1 else 0
-          case 1 => 2
-          case 2 => 4
-          case _ => 8
-        }
-        var contentSize = -1L
-        if (fcsBytes > 0) {
-          require(o + fcsBytes <= p.length, "torn zstd: content size field")
-          var v = 0L
-          for (i <- 0 until fcsBytes) v |= (p(o + i) & 0xffL) << (8 * i)
-          if (fcsBytes == 2) v += 256
-          contentSize = v
-          o += fcsBytes
-        }
-        if (singleSegment == 1) {
-          require(contentSize >= 0,
-            "torn zstd: single-segment frame without content size")
-          windowSize = contentSize
-        }
-        require(windowSize <= MaxWindow,
-          s"zstd window $windowSize exceeds the $MaxWindow-byte cap " +
-            "(scale guard)")
-        val st = new FrameState(dict)
-        var last = false
-        while (!last) {
-          require(o + 3 <= p.length, "torn zstd: block header")
-          val h = (p(o) & 0xff) | ((p(o + 1) & 0xff) << 8) |
-            ((p(o + 2) & 0xff) << 16)
-          o += 3
-          last = (h & 1) == 1
-          val btype = (h >>> 1) & 3
-          val bsize = h >>> 3
-          btype match {
-            case 0 =>
-              require(bsize <= BlockMax, "zstd raw block exceeds maximum")
-              require(o + bsize <= p.length, "torn zstd: raw block")
-              st.append(p, o, bsize)
-              o += bsize
-            case 1 =>
-              require(bsize <= BlockMax, "zstd RLE block exceeds maximum")
-              require(o < p.length, "torn zstd: RLE block byte")
-              st.appendByte(p(o), bsize)
-              o += 1
-            case 2 =>
-              require(bsize <= BlockMax,
-                "zstd compressed block exceeds maximum")
-              require(o + bsize <= p.length, "torn zstd: compressed block")
-              decodeBlock(p, o, o + bsize, st)
-              o += bsize
-            case _ =>
-              throw new IllegalArgumentException(
-                "reserved zstd block type 3")
-          }
-        }
-        // the dictionary prefix is window history, never frame output
-        val produced = st.len - st.dictLen
-        if (contentSize >= 0)
-          require(produced == contentSize,
-            s"torn zstd: decoded $produced bytes, header declared " +
-              s"$contentSize")
-        if (checksumFlag == 1) {
-          require(o + 4 <= p.length, "torn zstd: missing content checksum")
-          val want = le32(p, o) & 0xffffffffL
-          val got = xxh64(st.buf, st.dictLen, produced, 0L) & 0xffffffffL
-          require(got == want,
-            f"zstd content checksum mismatch (got 0x$got%08x, " +
-              f"want 0x$want%08x)")
-          o += 4
-          nChecksums += 1
-        }
-        out.write(st.buf, st.dictLen, produced)
-        nFrames += 1
+        val (_, checksum) = frameHeader(p, o + 4, p.length)
+        val frameLen = loud("zstd")(Jni.findFrameCompressedSize(p, o))
+        require(frameLen > 0 && o + frameLen <= p.length,
+          "torn zstd: frame overruns input")
+        val out = decompress(p, o, frameLen.toInt, math.min(
+          LibCodec.MaxOutput - total, (frameLen / 3 + 1) * BlockMax).toInt)
+        total += out.length
+        frames += out
+        if (checksum) nChecksums += 1
+        o += frameLen.toInt
       }
     }
-    require(nFrames > 0, "torn zstd: no data frames")
-    ZstdInfo(out.toByteArray, nFrames, nSkippable, nChecksums)
+    val all = frames.result()
+    require(all.nonEmpty, "torn zstd: no data frames")
+    val content =
+      if (all.length == 1) all.head
+      else {
+        val bos = new java.io.ByteArrayOutputStream(total.toInt)
+        all.foreach(f => bos.write(f, 0, f.length))
+        bos.toByteArray
+      }
+    ZstdInfo(content, all.length, nSkippable, nChecksums)
+  }
+
+  /** Walk one frame header from just after the magic at `o0` to at most
+    * `end`; returns the declared content size (-1 when absent) and the
+    * checksum flag.
+    */
+  private def frameHeader(p: Array[Byte], o0: Int,
+      end: Int): (Long, Boolean) = {
+    var o = o0
+    require(o < end, "torn zstd: missing frame header")
+    val desc = p(o) & 0xff
+    o += 1
+    require((desc & 0x08) == 0, "reserved frame-descriptor bit set")
+    val singleSegment = (desc >>> 5) & 1
+    var windowSize = 0L
+    if (singleSegment == 0) {
+      require(o < end, "torn zstd: missing window descriptor")
+      val wd = p(o) & 0xff
+      o += 1
+      val base = 1L << (10 + (wd >>> 3))
+      windowSize = base + (base / 8) * (wd & 7)
+    }
+    val dictBytes = Array(0, 1, 2, 4)(desc & 3)
+    require(o + dictBytes <= end, "torn zstd: dictionary ID")
+    var dictId = 0L
+    for (i <- 0 until dictBytes) dictId |= (p(o + i) & 0xffL) << (8 * i)
+    require(dictId == 0,
+      s"zstd frame declares dictionary_ID $dictId (dictionaries " +
+        "unsupported)")
+    o += dictBytes
+    val fcsBytes = (desc >>> 6) & 3 match {
+      case 0 => if (singleSegment == 1) 1 else 0
+      case 1 => 2
+      case 2 => 4
+      case _ => 8
+    }
+    var contentSize = -1L
+    if (fcsBytes > 0) {
+      require(o + fcsBytes <= end, "torn zstd: content size field")
+      var v = 0L
+      for (i <- 0 until fcsBytes) v |= (p(o + i) & 0xffL) << (8 * i)
+      contentSize = if (fcsBytes == 2) v + 256 else v
+    }
+    if (singleSegment == 1) windowSize = contentSize
+    require(windowSize <= MaxWindow,
+      s"zstd window $windowSize exceeds the $MaxWindow-byte cap " +
+        "(scale guard)")
+    (contentSize, ((desc >>> 2) & 1) == 1)
   }
 
   // -------------------------------------------------------------------
-  // Fixture: zstd-jni-produced .jsonl.zst shards (foreign-origin corpus
-  // — the decoder under test never sees bytes it produced itself).
-  // Levels rotate through the fast/default/lazy/btopt match-finder
-  // classes so every table mode (predefined, FSE-compressed, RLE,
-  // repeat; raw and 4-stream Huffman literals) appears in the corpus;
-  // id%4==3 shards are two concatenated frames with a skippable-frame
-  // leader (the pzstd / seekable shape); id%2==0 frames carry content
-  // checksums.
+  // Fixture: zstd-jni-written .jsonl.zst shards. Levels rotate through
+  // the fast/default/lazy/btopt match-finder classes; id%4==3 shards are
+  // two concatenated frames with a skippable-frame leader (the pzstd /
+  // seekable shape); id%2==0 frames carry content checksums.
 
   def fixtureLineCount(id: Long): Int = 70 + (id % 60).toInt
 

@@ -406,9 +406,9 @@ object Sources {
   // ---------------------------------------------------------------------
   // S17: LZ4-framed shard ingestion (operators.Lz4) — the compressed
   // text-shard shape (.jsonl.lz4) a training corpus ships in, next to
-  // the archive family. The frame decode (from-scratch LZ4 block +
-  // frame + xxHash32, cross-validated both directions against lz4-java
-  // in Lz4Spec) runs per task in mapPartitions — one shard per task,
+  // the archive family. The frame decode (operators.Lz4's frame walk
+  // over lz4-java's safe block decoder and xxHash32) runs per task in
+  // mapPartitions — one shard per task,
   // no shuffle until the per-shard lines aggregate; the JSON lines then
   // flow through Spark's native from_json + hash aggregate, so the
   // Spark side of the pipeline is declarative and codegen'd. Oracle
@@ -458,10 +458,9 @@ object Sources {
 
   // ---------------------------------------------------------------------
   // S18: snappy-framed shard ingestion (operators.Snappy) — the second
-  // compressed-shard codec (.tsv.sz) next to s17's LZ4, decoded by the
-  // from-scratch raw+framed Snappy implementation (cross-validated both
-  // directions against snappy-java in SnappySpec, chunk CRC-32C masks
-  // verified). Same scale contract: one shard per task in
+  // compressed-shard codec (.tsv.sz) next to s17's LZ4, decoded by
+  // operators.Snappy's framing walk over snappy-java's raw decoder
+  // (chunk CRC-32C masks verified). Same scale contract: one shard per task in
   // mapPartitions, then Spark-native split + hash aggregate. Oracle
   // reconstructs every TSV row string in SQL (chr(9) tabs) and
   // recomputes row counts, the token-field sum, distinct langs, and
@@ -505,11 +504,10 @@ object Sources {
 
   // ---------------------------------------------------------------------
   // S19: multi-member gzip shard ingestion (operators.Inflate) — the
-  // .jsonl.gz / pigz / .warc.gz member-per-chunk shape decoded by the
-  // FROM-SCRATCH RFC 1951/1952 inflater (all three block types, full
-  // optional-header grammar, CRC-32/ISIZE/FHCRC verified; JDK
-  // cross-validated both directions in InflateSpec) instead of the
-  // JDK's GZIPInputStream the other gzip consumers use. Same per-task
+  // .jsonl.gz / pigz / .warc.gz member-per-chunk shape decoded by
+  // operators.Inflate's RFC 1952 member walk (full optional-header
+  // grammar, CRC-32/ISIZE/FHCRC verified) over the JDK's raw Inflater,
+  // so member names and boundaries survive. Same per-task
   // scale contract; the member fan-out keeps doc-level constants
   // (member count, byte total, first member name) computed once in the
   // task, so the aggregate can't double-count them.
@@ -568,13 +566,10 @@ object Sources {
 
   // ---------------------------------------------------------------------
   // S20: bzip2 shard ingestion (operators.Bzip2) — the wiki-dump /
-  // archive-corpus shape (.jsonl.bz2), decoded by the FROM-SCRATCH
-  // block-sorting decoder (Huffman groups + selectors, MTF, RUNA/RUNB
-  // runs, inverse BWT, RLE1, per-block and combined CRCs verified;
-  // commons-compress cross-validated in Bzip2Spec). The fixture corpus
-  // is commons-compress-PRODUCED, so the decode under measurement runs
-  // against foreign-origin bytes; id%4==3 shards are two concatenated
-  // streams (the pbzip2 shape). Same per-task scale contract as
+  // archive-corpus shape (.jsonl.bz2), decoded by operators.Bzip2's
+  // stream walk over commons-compress (block and combined CRCs verified
+  // there). id%4==3 shards are two concatenated streams (the pbzip2
+  // shape), counted per shard. Same per-task scale contract as
   // s17-s19.
   private def s20Bzip2Ingest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -623,9 +618,9 @@ object Sources {
   // ---------------------------------------------------------------------
   // S21: Avro OCF shard ingestion (operators.Avro) — the Kafka-dump /
   // data-lake row format, decoded by the from-scratch OCF reader whose
-  // deflate/snappy block codecs route through this repo's OWN
-  // Inflate/Snappy decoders (avro-java cross-validated in AvroSpec;
-  // the fixture corpus is avro-java-WRITTEN, foreign-origin). The
+  // deflate/snappy block codecs route through operators.Inflate/Snappy
+  // (avro-java cross-validated in AvroSpec; the fixture corpus is
+  // avro-java-WRITTEN, foreign-origin). The
   // `quarters` field is an exact multiple of 0.25, so scaling by 4
   // yields exact integers in both engines — no float comparison.
   private def s21AvroIngest(s: SparkSession, dir: String): DataFrame = {
@@ -727,18 +722,17 @@ object Sources {
   // ---------------------------------------------------------------------
   // S23: ORC tail scan (operators.OrcMeta) — the second columnar
   // format's metadata read from scratch (protobuf wire format,
-  // postscript, ZSTD-framed footer chunks through this repo's OWN
-  // RFC 8878 decoder, operators.Zstd), answering row counts and column
+  // postscript, ZSTD-framed footer chunks through operators.Zstd over
+  // zstd-jni), answering row counts and column
   // ranges from KBs of tail per file; the oracle re-derives every fact
   // by full scan of the parquet-side events table (the ORC fixture is
   // a lossless round-trip of it). orc-core cross-validation lives in
   // OrcMetaSpec.
   /** Build-once zstd-compressed ORC fixture — Spark 4's DEFAULT ORC
-    * codec, pinned explicitly so the query exercises the from-scratch
-    * zstd path even if the session default drifts (r13 pinned snappy
-    * here because zstd was still a documented seam; r14's decoder
-    * closed it). The directory name carries the codec so a cached
-    * snappy-era fixture can never satisfy this build.
+    * codec, pinned explicitly so the query exercises the zstd chunk
+    * path even if the session default drifts. The directory name
+    * carries the codec so a cached snappy-era fixture can never satisfy
+    * this build.
     */
   def ensureOrcMetaFixture(s: SparkSession, dir: String): String = {
     val tmp = new java.io.File(sys.props("java.io.tmpdir"),
@@ -788,13 +782,11 @@ object Sources {
 
   // ---------------------------------------------------------------------
   // S24: xz shard ingestion (operators.Xz) — the highest-ratio
-  // compressed-shard codec (.jsonl.xz), decoded by the from-scratch
-  // XZ/LZMA2 implementation (adaptive range coder — no predefined
-  // tables anywhere — with block checks, index and footer verified;
-  // tukaani cross-validated at every preset in XzSpec). The fixture
-  // corpus is tukaani-WRITTEN (foreign-origin bytes) with preset and
-  // check type rotating per id. Same per-task scale contract as the
-  // rest of the compressed-shard family.
+  // compressed-shard codec (.jsonl.xz), decoded by tukaani xz behind
+  // operators.Xz's stream header/footer checks, which report the check
+  // type. The fixture corpus is tukaani-written with preset and check
+  // type rotating per id. Same per-task scale contract as the rest of
+  // the compressed-shard family.
   private def s24XzIngest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     docIds(s, dir)
@@ -900,13 +892,10 @@ object Sources {
 
   // ---------------------------------------------------------------------
   // S26: zstd shard ingestion (operators.Zstd) — the dominant modern
-  // lake/shard codec (.jsonl.zst), decoded by the from-scratch RFC 8878
-  // implementation (FSE/tANS with the spec's predefined distributions,
-  // Huffman literals with FSE-compressed weights, repeat offsets,
-  // XXH64 content checksums verified; zstd-jni cross-validated at
-  // every level class in ZstdSpec). The fixture corpus is
-  // zstd-jni-WRITTEN (foreign-origin bytes) with the level rotating
-  // through the fast/default/lazy/btopt match-finder classes; id%4==3
+  // lake/shard codec (.jsonl.zst), decoded by operators.Zstd's RFC 8878
+  // frame walk over zstd-jni (XXH64 content checksums verified by
+  // libzstd). The fixture corpus is zstd-jni-written with the level
+  // rotating through the fast/default/lazy/btopt match-finder classes; id%4==3
   // shards carry a skippable-frame leader plus two concatenated frames
   // (the pzstd/seekable shape) and id%2==0 frames carry checksums.
   // Same fan-out + per-task decode scale contract as s17-s25.
@@ -959,14 +948,14 @@ object Sources {
   // (s22): thrift PageHeader walk, dictionary + v1 data pages, the
   // RLE/bit-packed hybrid definition levels and index streams, PLAIN
   // longs/doubles and dictionary-encoded strings, ZSTD page
-  // decompression through this repo's own RFC 8878 decoder — then the
+  // decompression through operators.Zstd (zstd-jni) — then the
   // recovered rows flow through Spark-native groupBy/agg. The oracle
   // full-scans the same events data on the parquet side in DuckDB, so
   // a slipped level, wrong dictionary index, misaligned null, or
   // byte-order bug in any page fails the value compare. Same fan-out
   // contract as s22/s23: one FILE per task.
   /** Build-once zstd-compressed parquet fixture (explicitly pinned so
-    * the page path exercises the from-scratch zstd decoder regardless
+    * the page path exercises the zstd page decompression regardless
     * of the session default); 2 files so the file fan-out is real.
     */
   def ensureParquetDataFixture(s: SparkSession, dir: String): String = {
@@ -1052,8 +1041,8 @@ object Sources {
   // second columnar format's DATA, not just its tail (s23): stripe
   // directory and StripeFooter protobufs, integer RLEv2 in all four
   // sub-encodings, boolean/byte RLE present streams, dictionary AND
-  // direct strings, every stream's chunk framing through this repo's
-  // own zstd decoder — then the recovered rows flow through
+  // direct strings, every stream's chunk framing through
+  // operators.Zstd — then the recovered rows flow through
   // Spark-native groupBy/agg. The oracle full-scans the parquet-side
   // events table (the fixture is a lossless ORC round-trip of it), so
   // a slipped run header, wrong patch gap, misaligned present bit, or
@@ -1125,7 +1114,7 @@ object Sources {
   // S31: the from-scratch parquet WRITER (operators.ParquetWrite)
   // end-to-end — the engine WRITES its storage format without
   // parquet-mr (thrift-compact footer, v1 PLAIN pages behind
-  // RLE-hybrid definition levels, our own snappy compressor, modern
+  // RLE-hybrid definition levels, snappy-java page compression, modern
   // min_value/max_value chunk statistics), distributed one file per
   // partition where the data is. The read-back goes through Spark's
   // OWN parquet-mr reader — the independent implementation — so a
@@ -2087,7 +2076,7 @@ object Sources {
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("value"))
           .repartition(s.sparkContext.defaultParallelism),
-        tmp, compression = 5) // every section through our own zstd
+        tmp, compression = 5) // every section zstd-framed
     }
     s.read.orc(tmp)
       .groupBy(col("event_type"))

@@ -3281,7 +3281,8 @@ private[sources] class GraftParquetScan(fullSchema: StructType,
           s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
         case _ => return None
       }
-      Some(graft.operators.Zstd.xxh64(bytes, 0, bytes.length, 0L))
+      Some(net.jpountz.xxhash.XXHashFactory.fastestInstance().hash64()
+        .hash(bytes, 0, bytes.length, 0L))
     }
     def might(c: String, v: Any): Boolean = (for {
       col <- cols.find(_.path == c)

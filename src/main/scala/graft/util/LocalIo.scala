@@ -68,6 +68,28 @@ object LocalIo {
     else b.config("spark.hadoop.fs.AbstractFileSystem.file.impl",
       "org.apache.hadoop.fs.local.RawLocalFs")
 
+  /** The local session every driver entry point (Bench, Verify, Profile,
+    * Plans) runs on: `local[SPARK_GRAFT_CPUS]` (default 4) with as many
+    * shuffle partitions, FAIR scheduling so concurrent streaming queries
+    * share executors (reference: AutomateTable.py:64-66 +
+    * fairscheduler.xml), graft's planner extensions, no UI, a UTC
+    * session time zone, the local-FS tuning above and WARN logging.
+    */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = tune(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.scheduler.mode", "FAIR")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions"))
+      .getOrCreate()
+    relaxLocalChecksums(spark)
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Disable checksum write/verify on the process-wide cached local
     * FileSystem instance (no-op when `SPARK_GRAFT_LOCAL_RAWFS=0`).
     * Returns the session for call-site chaining.

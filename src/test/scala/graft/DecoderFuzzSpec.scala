@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Corruption-robustness contract across EVERY from-scratch decoder:
+/** Corruption-robustness contract across EVERY decoder:
   * a seeded mutation of a valid fixture (single-byte XORs, truncations,
   * double flips) must either decode or reject LOUDLY — an
   * IllegalArgument/IllegalState exception from our guards, or an
@@ -17,8 +17,34 @@ class DecoderFuzzSpec extends AnyFunSuite {
   import graft.{multimodal => mm}
   import graft.{operators => op}
 
-  private val cases: Seq[(String, Seq[Array[Byte]], Array[Byte] => Any)] =
-    Seq(
+  /** One Spark-written single-file parquet/ORC image of a small
+    * 4-column table under `codec`.
+    */
+  private def sparkFile(format: String, codec: String): Array[Byte] = {
+    val dir = java.nio.file.Files
+      .createTempDirectory(s"graft-fuzz-$format-$codec").toString
+    val s = SparkTestSession.spark
+    import s.implicits._
+    (0 until 300).map(i =>
+      (i.toLong, s"y${i % 9}", i * 0.5, i % 2 == 0))
+      .toDF("a", "b", "c", "d")
+      .coalesce(1).write.mode("overwrite")
+      .option("compression", codec).format(format).save(dir)
+    val f = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(s".$format")).head
+    java.nio.file.Files.readAllBytes(f.toPath)
+  }
+
+  private def parquetRows(b: Array[Byte]): Int =
+    op.ParquetData.readRows(b, Seq("a", "b", "c", "d")).length
+
+  private def orcRows(b: Array[Byte]): Int =
+    op.OrcData.readRows(b, Seq("a", "b", "c", "d")).length
+
+  private type Case = (String, Seq[Array[Byte]], Array[Byte] => Any)
+
+  private val cases: Seq[Case] =
+    Seq[Case](
       ("tiff", (0L until 6L).map(mm.Tiff.fixturePayload),
         b => mm.Tiff.decode(b)),
       ("png", (0L until 6L).map(mm.Png.fixturePayload),
@@ -79,34 +105,13 @@ class DecoderFuzzSpec extends AnyFunSuite {
           .filter(_.getName.endsWith(".orc")).head
         Seq(java.nio.file.Files.readAllBytes(f.toPath))
       }, b => op.OrcMeta.read(b)),
-      ("parquet-data", {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-fuzz-pqdata").toString
-        val s = SparkTestSession.spark
-        import s.implicits._
-        (0 until 300).map(i =>
-          (i.toLong, s"y${i % 9}", i * 0.5, i % 2 == 0))
-          .toDF("a", "b", "c", "d")
-          .coalesce(1).write.mode("overwrite")
-          .option("compression", "zstd").parquet(dir)
-        val f = new java.io.File(dir).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        Seq(java.nio.file.Files.readAllBytes(f.toPath))
-      }, b => op.ParquetData.readRows(b, Seq("a", "b", "c", "d")).length),
-      ("orc-data", {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-fuzz-orcdata").toString
-        val s = SparkTestSession.spark
-        import s.implicits._
-        (0 until 300).map(i =>
-          (i.toLong, s"y${i % 9}", i * 0.5, i % 2 == 0))
-          .toDF("a", "b", "c", "d")
-          .coalesce(1).write.mode("overwrite")
-          .option("compression", "zstd").orc(dir)
-        val f = new java.io.File(dir).listFiles()
-          .filter(_.getName.endsWith(".orc")).head
-        Seq(java.nio.file.Files.readAllBytes(f.toPath))
-      }, b => op.OrcData.readRows(b, Seq("a", "b", "c", "d")).length))
+      ("parquet-data", Seq(sparkFile("parquet", "zstd")), parquetRows(_)),
+      ("orc-data", Seq(sparkFile("orc", "zstd")), orcRows(_))) ++
+    // every other page/chunk codec the library-backed decoders serve
+    Seq("snappy", "gzip", "lz4_raw").map(c =>
+      (s"parquet-data-$c", Seq(sparkFile("parquet", c)), parquetRows(_))) ++
+    Seq("zlib", "lz4", "snappy").map(c =>
+      (s"orc-data-$c", Seq(sparkFile("orc", c)), orcRows(_)))
 
   private def loud(t: Throwable): Boolean = t match {
     case _: IllegalArgumentException => true

@@ -2,6 +2,8 @@ package graft
 
 import java.util.UUID
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
@@ -1889,5 +1891,43 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(Maintenance.scanPruned(spark, dir, "k", 9000, 9999)
       .count() == 0)
     graft.streaming.WorkDirs.deleteRecursively(new java.io.File(dir))
+  }
+
+  test("compact on a coin_id-partitioned table names every rewritten " +
+      "file uniquely: graftpq per-coin filters and DV deletes stay right") {
+    val p = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft-pcompact-${UUID.randomUUID()}/t").getAbsolutePath
+    val bars = spark.range(0, 2000).toDF("id")
+      .withColumn("coin_id", (col("id") % 8).cast("int"))
+      .withColumn("px", col("id") * 0.5)
+    Maintenance.commitAppend(spark, p, bars.filter(col("id") < 1000),
+      partitionBy = Seq("coin_id"))
+    Maintenance.commitAppend(spark, p, bars.filter(col("id") >= 1000))
+    Maintenance.compact(spark, p, targetFiles = 1)
+    val names = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
+      .iterator().asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".parquet")).toSeq
+    assert(names.size == 8 && names.distinct.size == 8,
+      s"one uniquely named file per partition: $names")
+    for (c <- 0 until 8) {
+      def stats(df: org.apache.spark.sql.DataFrame) =
+        df.filter(col("coin_id") === c).agg(count(lit(1)), sum("id"))
+          .first().toSeq
+      val want = stats(Maintenance.readTable(spark, p))
+      assert(want.head == 250L)
+      assert(stats(spark.read.format("graftpq").load(p)) == want,
+        s"coin $c")
+    }
+    val dv = Maintenance.deleteWithVectors(spark, p, col("id") % 10 === 0)
+    assert(dv.rowsDeleted == 200L)
+    assert(Maintenance.applyDeleteVectors(spark, p) == 4) // even coins
+    Maintenance.deleteWhere(spark, p, col("id") % 10 === 1)
+    val left = Maintenance.readTable(spark, p)
+    assert(left.count() == 1600L)
+    assert(left.filter(col("id") % 10 <= 1).count() == 0L)
+    assert(spark.read.format("graftpq").load(p)
+      .filter(col("coin_id") === 3).count() == 200L)
+    graft.streaming.WorkDirs.deleteRecursively(
+      new java.io.File(p).getParentFile)
   }
 }

@@ -6,12 +6,12 @@ import graft.operators.ParquetData
 
 /** Parquet data-page decoding (operators.ParquetData), cross-validated
   * against Spark's own vectorized reader on Spark-written files: every
-  * supported codec (pages decompressed by this repo's own
-  * Snappy/Inflate/Zstd/Lz4), both writer versions (v1 and v2 pages),
-  * real nulls through the definition levels, dictionary AND
-  * plain-fallback value pages, booleans/ints/longs/floats/doubles/
+  * supported codec (pages decompressed through the
+  * Snappy/Inflate/Zstd/Lz4 codec objects), both writer versions (v1
+  * and v2 pages), real nulls through the definition levels, dictionary
+  * AND plain-fallback value pages, booleans/ints/longs/floats/doubles/
   * strings, and multi-page chunks under a tiny page size. Torn pages
-  * reject loudly.
+  * and pages declaring a huge uncompressed size reject loudly.
   */
 class ParquetDataSpec extends AnyFunSuite {
 
@@ -127,5 +127,60 @@ class ParquetDataSpec extends AnyFunSuite {
       ParquetData.readRows(good, Seq("nope")).length)
     assert(e2.getMessage.contains("nope"), e2.getMessage)
     graft.streaming.WorkDirs.deleteRecursively(new java.io.File(dir))
+  }
+
+  test("a page header declaring a huge uncompressed size rejects before " +
+      "any allocation, on every codec") {
+    // one hand-built v1 data page (thrift compact PageHeader) holding a
+    // single required INT64 value, its body compressed by `codec`
+    def varint(v0: Long): Array[Byte] = {
+      val b = Array.newBuilder[Byte]
+      var v = v0
+      while ((v & ~0x7fL) != 0) { b += ((v & 0x7f) | 0x80).toByte; v >>>= 7 }
+      b += v.toByte
+      b.result()
+    }
+    def i32(v: Int): Array[Byte] = // field delta 1, compact type i32
+      Array[Byte](0x15) ++ varint(((v << 1) ^ (v >> 31)) & 0xffffffffL)
+    val value = java.nio.ByteBuffer.allocate(8)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).putLong(424242L).array()
+    def gzip(b: Array[Byte]): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val gz = new java.util.zip.GZIPOutputStream(bos)
+      gz.write(b); gz.close()
+      bos.toByteArray
+    }
+    val bodies = Seq(
+      1 -> org.xerial.snappy.Snappy.compress(value),
+      2 -> gzip(value),
+      6 -> com.github.luben.zstd.Zstd.compress(value, 3),
+      7 -> net.jpountz.lz4.LZ4Factory.fastestInstance().fastCompressor()
+        .compress(value))
+    def chunk(codec: Int, body: Array[Byte], unc: Int) = {
+      val dataPageHeader = i32(1) ++ i32(0) ++ i32(3) ++ i32(3) ++
+        Array[Byte](0)
+      val bytes = i32(0) ++ i32(unc) ++ i32(body.length) ++
+        Array[Byte](0x2c) ++ dataPageHeader ++ Array[Byte](0) ++ body
+      val col = graft.operators.ParquetFooter.PqColumn("v", 2, 1L, codec,
+        None, None, None, dataPageOffset = 0L,
+        totalCompressedSize = bytes.length.toLong)
+      () => ParquetData.readChunkLevels(bytes, col, 0, 0, 2, 0, 1)
+    }
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val me = Thread.currentThread.getId
+    for ((codec, body) <- bodies) {
+      // the honest header decodes: the hand-built page itself is valid
+      assert(chunk(codec, body, 8)().vals.toSeq == Seq(424242L),
+        s"codec $codec")
+      for (huge <- Seq(1 << 30, Int.MaxValue)) {
+        val before = threads.getThreadAllocatedBytes(me)
+        val e = intercept[IllegalArgumentException](chunk(codec, body, huge)())
+        val allocated = threads.getThreadAllocatedBytes(me) - before
+        assert(allocated < (16L << 20),
+          s"codec $codec, declared $huge: allocated $allocated bytes " +
+            s"before rejecting (${e.getMessage})")
+      }
+    }
   }
 }

@@ -189,8 +189,8 @@ class ParquetWriteSpec extends AnyFunSuite {
     }
   }
 
-  test("ZSTD pages through the from-scratch raw-block encoder: " +
-      "parquet-mr (zstd-jni) and Zstd.decode both accept the frames") {
+  test("ZSTD pages: parquet-mr (zstd-jni) and this repo's reader both " +
+      "decode the written frames") {
     val dir = tmpDir("zstd")
     try {
       val fields = Seq(PwFields.int64("id"), PwFields.string("s"))
@@ -207,14 +207,6 @@ class ParquetWriteSpec extends AnyFunSuite {
       val bytes = java.nio.file.Files.readAllBytes(f.toPath)
       val own = ParquetData.readRows(bytes, Seq("id", "s")).toVector
       assert(own.length == 5000 && own(1)(1) == "payload-1")
-      // the raw-frame encoder round-trips through our own decoder
-      val payload = Array.tabulate[Byte](200000)(i => (i * 31).toByte)
-      val frame = graft.operators.Zstd.encodeRawFrame(payload)
-      assert(graft.operators.Zstd.decode(frame).content.sameElements(
-        payload))
-      assert(graft.operators.Zstd.decode(
-        graft.operators.Zstd.encodeRawFrame(Array.emptyByteArray))
-        .content.isEmpty)
     } finally graft.streaming.WorkDirs.deleteRecursively(dir)
   }
 

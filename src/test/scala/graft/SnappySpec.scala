@@ -4,10 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Snappy
 
-/** Snappy raw + framed decode (operators.Snappy), cross-validated
-  * against the INDEPENDENT snappy-java implementation on Spark's
-  * classpath (org.xerial.snappy) in both directions, plus the
-  * closed-form fixture contract and loud torn-stream rejects.
+/** Snappy raw + framed decode (operators.Snappy: the framing walk
+  * over snappy-java), interop with snappy-java's framed streams in both
+  * directions, the closed-form fixture contract and loud torn-stream
+  * rejects.
   */
 class SnappySpec extends AnyFunSuite {
 

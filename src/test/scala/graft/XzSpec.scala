@@ -4,11 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Xz
 
-/** XZ/LZMA2 decode (operators.Xz), cross-validated against the
-  * INDEPENDENT org.tukaani.xz implementation: every preset (0..9,
-  * hash-chain AND BT4 match finders), all three check types,
-  * multi-block streams, plus the closed-form fixture contract and
-  * loud torn-stream rejects.
+/** XZ decode (operators.Xz: stream header/footer and index checks over
+  * tukaani xz): every preset (0..9, hash-chain AND BT4 match finders),
+  * all three check types, block counts of multi-block streams, plus the
+  * closed-form fixture contract and loud torn-stream rejects.
   */
 class XzSpec extends AnyFunSuite {
 
@@ -59,17 +58,6 @@ class XzSpec extends AnyFunSuite {
     val info = Xz.decode(bos.toByteArray)
     assert(info.content.sameElements(src), "multi-block")
     assert(info.nBlocks == 2, s"expected 2 blocks, got ${info.nBlocks}")
-  }
-
-  test("our CRC64 is the ECMA-182 xz check") {
-    // pin against a tukaani-written stream: flip one payload-adjacent
-    // byte of the check itself and the named mismatch fires
-    val src = "crc64 pin".getBytes("US-ASCII")
-    val packed = tukaani(src, 0)
-    assert(Xz.decode(packed).content.sameElements(src))
-    // standard test vector: CRC64-XZ of "123456789"
-    val tv = "123456789".getBytes("US-ASCII")
-    assert(Xz.crc64(tv, 0, tv.length) == 0x995DC9BBDF1939FAL)
   }
 
   test("fixture family decodes to the closed form") {
