@@ -330,19 +330,61 @@ object Maintenance {
     */
   private def readFilesWithBases(spark: SparkSession, tablePath: String,
       paths: Seq[String]): DataFrame = {
-    val schema = readTableSchema(tablePath)
-    val partCols = readPartitioning(tablePath)
-    def read(base: String, ps: Seq[String]) = {
-      val r = schema.map(spark.read.schema).getOrElse(spark.read)
-      (if (partCols.nonEmpty) r.option("basePath", base) else r)
-        .parquet(ps: _*)
-    }
     val rem = removedPath(tablePath)
     val (quarantined, live) = paths.partition(_.startsWith(rem))
     Seq((tablePath, live), (rem, quarantined))
       .filter(_._2.nonEmpty)
-      .map { case (b, ps) => read(b, ps) }
+      .map { case (b, ps) =>
+        readFiles(spark, tablePath, ps.map(new java.io.File(_)), Some(b)) }
       .reduce(_.unionByName(_))
+  }
+
+  /** Data files the caller already walked, as a DataFrame through the
+    * tracked schema, with no listing. `spark.read.parquet(files: _*)`
+    * re-lists its paths, in a job of one task per file above 32 paths;
+    * here the file index answers from a cache pre-filled with each
+    * file's status instead. Spark's own partition inference under `base`
+    * (default: the table root) still decides partition values (escaping,
+    * nulls, types), and the partition columns stay real partition
+    * columns, so a filter's partition conjuncts prune the scan.
+    */
+  private def readFiles(spark: SparkSession, tablePath: String,
+      files: Seq[java.io.File], base: Option[String] = None): DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+      HadoopFsRelation, InMemoryFileIndex}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+    val paths = files.map(f => new Path(f.toURI))
+    val statuses = paths.zip(files).map { case (p, f) =>
+      p -> Array(new FileStatus(f.length, false, 1, f.length, f.lastModified, p))
+    }.toMap
+    val known = new FileStatusCache {
+      override def getLeafFiles(p: Path) = statuses.get(p)
+      def putLeafFiles(p: Path, fs: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    val options = Map("basePath" -> base.getOrElse(tablePath))
+    val tracked = readTableSchema(tablePath)
+    val index = new InMemoryFileIndex(spark, paths, options, tracked, known)
+    val format = new ParquetFileFormat
+    val partSchema = index.partitionSchema
+    // as the reader does: the data schema is the tracked (else inferred)
+    // one minus the partition columns, nullable at every level
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), true)
+      case o => o
+    }
+    val dataSchema = nullable(StructType(tracked
+      .orElse(format.inferSchema(spark, options, index.allFiles()))
+      .getOrElse(throw new IllegalStateException(
+        s"cannot infer a schema for $tablePath from ${files.size} files"))
+      .filterNot(f => partSchema.fieldNames.contains(f.name))))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, partSchema,
+      dataSchema.asInstanceOf[StructType], None, format, options)(spark))
   }
 
   /** Change Data Feed analogue (Delta's `table_changes`): the rows ADDED
@@ -829,6 +871,40 @@ object Maintenance {
     Option(f.getParentFile)
       .filter(_.getName.endsWith("__stage"))
       .foreach(_.delete())
+  }
+
+  /** The shared tail of an in-place rewrite; caller holds the commit
+    * lock. `replaced` leaves the live set, quarantined (history, not
+    * garbage) or, for a rewrite that reclaims its inputs, deleted; the
+    * stage moves in; stats of the replaced names go (they would pin
+    * dead names) and the new files get footer and partition stats; and
+    * version `v` snapshots the full listing. The caller writes its
+    * marker and bumps the version.
+    */
+  private def swapIn(spark: SparkSession, tablePath: String,
+      replaced: Seq[java.io.File], stage: String, prefix: String, v: Long,
+      quarantine: Boolean = true): Unit = {
+    val root = Paths.get(tablePath)
+    replaced.foreach { f =>
+      if (quarantine) {
+        val dest = Paths.get(removedPath(tablePath))
+          .resolve(root.relativize(f.toPath).toString)
+        Files.createDirectories(dest.getParent)
+        Files.move(f.toPath, dest, StandardCopyOption.ATOMIC_MOVE)
+      } else Files.delete(f.toPath)
+    }
+    val committed = moveStagedIn(tablePath, stage, prefix, v)
+    val gone = replaced.map(_.getName).toSet
+    writeFileStats(tablePath, readFileStats(tablePath).toSeq.collect {
+      case ((f, c), (l, h)) if !gone.contains(f) => (f, c, l, h)
+    }, append = false)
+    writeFileStats(tablePath, footerStats(spark, committed.map(_.toFile)) ++
+      partitionStats(tablePath, committed), append = true)
+    if (Files.exists(Paths.get(liveFilesPath(tablePath))))
+      recordLiveFiles(tablePath)
+    writeFileList(snapshotFullPath(tablePath, v),
+      listParquetFiles(new java.io.File(tablePath))
+        .map(f => root.relativize(f.toPath).toString))
   }
 
   /** Optimistically commit an append: stage the write OUTSIDE the lock
@@ -1706,12 +1782,9 @@ object Maintenance {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc))
     } else {
       val byName = listParquetFiles(new java.io.File(tablePath))
-        .map(f => f.getName -> f.getAbsolutePath).toMap
-      val reader = schema.map(spark.read.schema).getOrElse(spark.read)
-      // basePath keeps partition-dir columns resolvable on a pruned list
+        .map(f => f.getName -> f).toMap
       applyColumnMap(tablePath, withDvApplied(spark, tablePath,
-        reader.option("basePath", tablePath)
-          .parquet(kept.map(byName): _*)))
+        readFiles(spark, tablePath, kept.map(byName))))
     }
   }
 
@@ -2044,11 +2117,14 @@ object Maintenance {
       filesAffected: Int, filesTotal: Int)
 
   /** DELETE FROM t WHERE `predicate` — as deletion vectors. One
-    * confirmation scan finds the matching (still-visible) rows; their
-    * positions land as the version's vector dataset and the rows
-    * themselves as its CDC change files. No data file is touched: the
-    * delete costs O(matches) metadata regardless of file sizes. Stacks:
-    * a second DV delete only matches rows the first left visible.
+    * confirmation scan over the live-file list the commit lock walked
+    * finds the matching (still-visible) rows; conjuncts on partition
+    * columns prune it to the matching partitions, and rows whose
+    * predicate is NULL never match. Their positions land as the
+    * version's vector dataset and the rows themselves as its CDC change
+    * files. No data file is touched: the delete costs O(matches)
+    * metadata regardless of file sizes. Stacks: a second DV delete only
+    * matches rows the first left visible.
     */
   def deleteWithVectors(spark: SparkSession, tablePath: String,
       predicate0: Column): DvDeleteResult =
@@ -2057,17 +2133,16 @@ object Maintenance {
       val v0 = readVersion(tablePath)
       val live = listParquetFiles(new java.io.File(tablePath))
       val total = live.size
-      val schema = readTableSchema(tablePath)
-      val delPred = coalesce(predicate, lit(false))
-      val base = schema.map(spark.read.schema).getOrElse(spark.read)
-        .parquet(tablePath)
+      val base = readFiles(spark, tablePath, live)
         .withColumn("__dv_file",
           expr("substring_index(_metadata.file_path, '/', -1)"))
         .withColumn("__dv_pos", col("_metadata.row_index"))
       val visible = dvEntries(spark, tablePath, None)
         .map(dv => base.join(dv, Seq("__dv_file", "__dv_pos"), "left_anti"))
         .getOrElse(base)
-      val matched = visible.filter(delPred).localCheckpoint()
+      // the raw predicate: a Filter drops NULL results as coalesce(p,
+      // false) would, and its partition conjuncts prune the scan
+      val matched = visible.filter(predicate).localCheckpoint()
       val rowsDeleted = matched.count()
       if (rowsDeleted == 0) DvDeleteResult(v0, 0L, 0, total)
       else {
@@ -2109,45 +2184,19 @@ object Maintenance {
       val names = outstandingDvFiles(tablePath).toSeq.sorted
       if (names.isEmpty) 0
       else {
-        val root = Paths.get(tablePath)
         val byName = listParquetFiles(new java.io.File(tablePath))
           .map(f => f.getName -> f).toMap
-        val schema = readTableSchema(tablePath)
         val partCols = readPartitioning(tablePath)
-        val reader = {
-          val r = schema.map(spark.read.schema).getOrElse(spark.read)
-          if (partCols.nonEmpty) r.option("basePath", tablePath) else r
-        }
         val dv = dvEntries(spark, tablePath, None).get
-        val survivors = applyDv(
-          reader.parquet(names.map(byName(_).getAbsolutePath): _*), dv)
+        val survivors =
+          applyDv(readFiles(spark, tablePath, names.map(byName)), dv)
         val stage = s"${tablePath}__stage/${java.util.UUID.randomUUID()}"
         val sw = survivors.write.mode(SaveMode.Overwrite)
         (if (partCols.nonEmpty) sw.partitionBy(partCols: _*) else sw)
           .parquet(stage)
         try {
           val v = readVersion(tablePath) + 1
-          names.foreach { name =>
-            val rel = root.relativize(byName(name).toPath).toString
-            val dest = Paths.get(removedPath(tablePath)).resolve(rel)
-            Files.createDirectories(dest.getParent)
-            Files.move(byName(name).toPath, dest,
-              StandardCopyOption.ATOMIC_MOVE)
-          }
-          val committed = moveStagedIn(tablePath, stage, "dvapply", v)
-          val gone = names.toSet
-          writeFileStats(tablePath,
-            readFileStats(tablePath).toSeq.collect {
-              case ((f, c), (l, h)) if !gone.contains(f) => (f, c, l, h)
-            }, append = false)
-          writeFileStats(tablePath,
-            footerStats(spark, committed.map(_.toFile)) ++
-              partitionStats(tablePath, committed), append = true)
-          val reg = Paths.get(liveFilesPath(tablePath))
-          if (Files.exists(reg)) recordLiveFiles(tablePath)
-          writeFileList(snapshotFullPath(tablePath, v),
-            listParquetFiles(new java.io.File(tablePath))
-              .map(f => root.relativize(f.toPath).toString))
+          swapIn(spark, tablePath, names.map(byName), stage, "dvapply", v)
           writeVersion(tablePath, v)
           names.size
         } finally dropStage(stage)
@@ -2377,13 +2426,7 @@ object Maintenance {
     Files.createDirectories(out.getParent)
     val files = listParquetFiles(new java.io.File(tablePath))
     if (files.isEmpty) { Files.writeString(out, ""); return }
-    val schema = readTableSchema(tablePath)
-    val partCols = readPartitioning(tablePath)
-    val reader = {
-      val r = schema.map(spark.read.schema).getOrElse(spark.read)
-      if (partCols.nonEmpty) r.option("basePath", tablePath) else r
-    }
-    val df = reader.parquet(files.map(_.getAbsolutePath): _*)
+    val df = readFiles(spark, tablePath, files)
       .select(input_file_name().as("__f"), col(column).as("__v"))
     // pass 1 (column-pruned, counts only): the largest per-file
     // cardinality bound drives the shared sizing
@@ -2482,11 +2525,9 @@ object Maintenance {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc))
     } else {
       val byName = listParquetFiles(new java.io.File(tablePath))
-        .map(f => f.getName -> f.getAbsolutePath).toMap
-      val reader = schema.map(spark.read.schema).getOrElse(spark.read)
+        .map(f => f.getName -> f).toMap
       applyColumnMap(tablePath, withDvApplied(spark, tablePath,
-        reader.option("basePath", tablePath)
-          .parquet(kept.flatMap(byName.get): _*))
+        readFiles(spark, tablePath, kept.flatMap(byName.get)))
         .filter(col(column) === lit(value)))
     }
   }
@@ -2539,14 +2580,15 @@ object Maintenance {
     }
 
   /** DELETE with an arbitrary predicate — the general `DELETE FROM t
-    * WHERE <expr>` form. No stats prune is possible for a free-form
-    * predicate, so every file is a candidate: the confirmation scan reads
-    * the table ONCE (codegen'd predicate, column-pruned to what the
-    * predicate needs plus counts), and still only the files actually
-    * holding matches are rewritten — the rewrite blast radius stays
-    * proportional to the matches, only the read is full. Prefer
+    * WHERE <expr>` form. No stats prune runs for a free-form predicate,
+    * so every live file is a candidate, read from the file list the
+    * commit lock already walked (no listing job). The confirmation scan
+    * counts matches per file in one pass (codegen'd predicate,
+    * column-pruned); conjuncts on partition columns prune it to the
+    * matching partitions, so `coin_id = 3 AND ...` reads one partition.
+    * Only the files actually holding matches are rewritten. Prefer
     * [[deleteRange]] when the predicate is a range on a stats-covered
-    * column.
+    * data column.
     */
   def deleteWhere(spark: SparkSession, tablePath: String,
       predicate: Column): DeleteResult =
@@ -2555,51 +2597,46 @@ object Maintenance {
         toPhysicalPred(tablePath, predicate), None)
     }
 
+  /** (file name, row count) for every input file of `df` with rows. */
+  private def countPerFile(df: DataFrame): Array[(String, Long)] =
+    df.groupBy(input_file_name().as("path")).count().collect()
+      .map(r => (Paths.get(new java.net.URI(r.getString(0)).getPath)
+        .getFileName.toString, r.getLong(1)))
+
   /** Shared delete engine; caller holds the commit lock. `candidates`
     * None = all live files.
     */
   private def deleteCore(spark: SparkSession, tablePath: String,
       predicate: Column, candidatesOpt: Option[Seq[String]]): DeleteResult = {
       requireNoOutstandingDvs(tablePath, "rewrite-based delete")
-      val root = Paths.get(tablePath)
       val v0 = readVersion(tablePath)
       val byName = listParquetFiles(new java.io.File(tablePath))
         .map(f => f.getName -> f).toMap
       val candidates = candidatesOpt.getOrElse(byName.keys.toSeq.sorted)
       val total = byName.size
-      val schema = readTableSchema(tablePath)
       val partCols = readPartitioning(tablePath)
-      // basePath keeps partition-dir columns resolvable when reading an
-      // explicit file list out of a partitioned layout
-      def reader = {
-        val r = schema.map(spark.read.schema).getOrElse(spark.read)
-        if (partCols.nonEmpty) r.option("basePath", tablePath) else r
-      }
-      val delPred = coalesce(predicate, lit(false))
       // exact confirmation of the conservative stats prune: one metadata-
       // scale job over the candidate files counts matches per file; files
-      // whose stats overlap but hold no matching row stay untouched
+      // whose stats overlap but hold no matching row stay untouched. The
+      // raw predicate drops NULL results like coalesce(p, false) and lets
+      // its partition conjuncts prune the scan; survivors keep the
+      // coalesced complement, so NULL rows stay
       val perFile: Array[(String, Long)] =
         if (candidates.isEmpty) Array.empty
-        else reader.parquet(candidates.map(byName(_).getAbsolutePath): _*)
-          .filter(delPred)
-          .groupBy(input_file_name().as("path")).count()
-          .collect()
-          .map(r => (Paths.get(new java.net.URI(r.getString(0)).getPath)
-            .getFileName.toString, r.getLong(1)))
+        else countPerFile(readFiles(spark, tablePath, candidates.map(byName))
+          .filter(predicate))
       if (perFile.isEmpty)
         DeleteResult(v0, 0L, 0, total)
       else {
         val affected = perFile.map(_._1).toSeq.sorted
         val rowsDeleted = perFile.map(_._2).sum
         val v = v0 + 1
-        val affPaths = affected.map(byName(_).getAbsolutePath)
-        val aff = reader.parquet(affPaths: _*)
+        val aff = readFiles(spark, tablePath, affected.map(byName))
         // CDC change files (the deleted rows) — written BEFORE any
         // original moves, while the source paths are still live; sized
         // by the affected bytes (an upper bound on the deleted rows)
         val affBytes = affected.map(byName(_).length()).sum
-        aff.filter(delPred).coalesce(changeWriteParts(affBytes))
+        aff.filter(predicate).coalesce(changeWriteParts(affBytes))
           .write.mode(SaveMode.Overwrite)
           .parquet(changesPath(tablePath, v))
         // survivors staged outside the table, then renamed in — same
@@ -2608,36 +2645,13 @@ object Maintenance {
         // concurrent appender stages under the same __stage sibling
         // before it queues on the lock.
         val stage = s"${tablePath}__stage/${java.util.UUID.randomUUID()}"
-        val survW = aff.filter(not(delPred)).write.mode(SaveMode.Overwrite)
+        val survW = aff.filter(not(coalesce(predicate, lit(false))))
+          .write.mode(SaveMode.Overwrite)
         (if (partCols.nonEmpty) survW.partitionBy(partCols: _*) else survW)
           .parquet(stage)
         try {
-          // quarantine the originals (history, not garbage)
-          affected.foreach { name =>
-            val rel = root.relativize(byName(name).toPath).toString
-            val dest = Paths.get(removedPath(tablePath)).resolve(rel)
-            Files.createDirectories(dest.getParent)
-            Files.move(byName(name).toPath, dest,
-              StandardCopyOption.ATOMIC_MOVE)
-          }
-          val committed = moveStagedIn(tablePath, stage, "delete", v)
-          // stats: entries of quarantined files would pin dead names —
-          // drop them; the replacement files get fresh footer stats
-          val gone = affected.toSet
-          writeFileStats(tablePath,
-            readFileStats(tablePath).toSeq.collect {
-              case ((f, c), (l, h)) if !gone.contains(f) => (f, c, l, h)
-            }, append = false)
-          writeFileStats(tablePath,
-            footerStats(spark, committed.map(_.toFile)) ++
-              partitionStats(tablePath, committed), append = true)
-          val reg = Paths.get(liveFilesPath(tablePath))
-          if (Files.exists(reg)) recordLiveFiles(tablePath)
-          // snapshot: full listing (delete versions reconstruct directly)
-          // + the delete marker naming what left the live set
-          writeFileList(snapshotFullPath(tablePath, v),
-            listParquetFiles(new java.io.File(tablePath))
-              .map(f => root.relativize(f.toPath).toString))
+          swapIn(spark, tablePath, affected.map(byName), stage, "delete", v)
+          // the delete marker names what left the live set
           writeFileList(snapshotDeletePath(tablePath, v), affected)
           writeVersion(tablePath, v)
           DeleteResult(v, rowsDeleted, affected.size, total)
@@ -2657,13 +2671,15 @@ object Maintenance {
   /** UPDATE t SET col = expr, ... WHERE `predicate` — the third DML verb
     * next to DELETE and MERGE (Delta's UPDATE; the reference gets it
     * from the table format). Same scale shape as [[deleteWhere]]: one
-    * confirmation scan counts matches per file, ONLY files holding
-    * matched rows are rewritten (survivor rows copied, matched rows with
-    * `set` expressions applied), originals are quarantined for time
-    * travel, and the version's change files carry typed
+    * confirmation scan over the walked live-file list (no listing job)
+    * counts matches per file, and conjuncts on partition columns prune
+    * that scan to the matching partitions. ONLY files holding matched
+    * rows are rewritten (survivor rows copied, matched rows with `set`
+    * expressions applied), originals are quarantined for time travel,
+    * and the version's change files carry typed
     * `update_preimage`/`update_postimage` rows for the CDC feed. `set`
     * expressions may reference the row's own columns (`cents + 1000`).
-    * A NULL predicate row is not matched (same coalesce-to-false
+    * A row whose predicate is NULL is neither matched nor dropped (same
     * convention as delete). Set columns must exist — UPDATE never adds
     * columns (schema evolution is the merge path's job).
     */
@@ -2678,44 +2694,35 @@ object Maintenance {
         toPhysical(tablePath, c) -> toPhysicalPred(tablePath, e)
       }
       require(set.nonEmpty, "updateWhere with an empty SET")
-      val root = Paths.get(tablePath)
       val v0 = readVersion(tablePath)
       val byName = listParquetFiles(new java.io.File(tablePath))
         .map(f => f.getName -> f).toMap
       val total = byName.size
-      val schema = readTableSchema(tablePath)
       val partCols = readPartitioning(tablePath)
-      def reader = {
-        val r = schema.map(spark.read.schema).getOrElse(spark.read)
-        if (partCols.nonEmpty) r.option("basePath", tablePath) else r
-      }
-      schema.foreach { sc =>
+      readTableSchema(tablePath).foreach { sc =>
         val missing = set.keySet -- sc.fieldNames
         require(missing.isEmpty,
           s"updateWhere SET names columns $tablePath lacks: $missing")
       }
-      val updPred = coalesce(predicate, lit(false))
+      // matched rows take the raw predicate (NULL drops, partition
+      // conjuncts prune); kept rows its coalesced complement
       val candidates = byName.keys.toSeq.sorted
       val perFile: Array[(String, Long)] =
         if (candidates.isEmpty) Array.empty
-        else reader.parquet(candidates.map(byName(_).getAbsolutePath): _*)
-          .filter(updPred)
-          .groupBy(input_file_name().as("path")).count()
-          .collect()
-          .map(r => (Paths.get(new java.net.URI(r.getString(0)).getPath)
-            .getFileName.toString, r.getLong(1)))
+        else countPerFile(readFiles(spark, tablePath, candidates.map(byName))
+          .filter(predicate))
       if (perFile.isEmpty) UpdateResult(v0, 0L, 0, total)
       else {
         val affected = perFile.map(_._1).toSeq.sorted
         val rowsUpdated = perFile.map(_._2).sum
         val v = v0 + 1
-        val aff = reader.parquet(affected.map(byName(_).getAbsolutePath): _*)
+        val aff = readFiles(spark, tablePath, affected.map(byName))
         def applySet(df: DataFrame) =
           set.foldLeft(df) { case (d, (c, e)) => d.withColumn(c, e) }
         // typed CDC — written BEFORE any original moves
-        val pre = aff.filter(updPred)
+        val pre = aff.filter(predicate)
           .withColumn("__change_type", lit("update_preimage"))
-        val post = applySet(aff.filter(updPred))
+        val post = applySet(aff.filter(predicate))
           .withColumn("__change_type", lit("update_postimage"))
         // pre + post images ≤ 2× the affected bytes — size the CDC write
         val affBytes = affected.map(byName(_).length()).sum
@@ -2724,8 +2731,8 @@ object Maintenance {
           .parquet(changesPath(tablePath, v))
         // replacement content: untouched rows + updated rows
         val stage = s"${tablePath}__stage/${java.util.UUID.randomUUID()}"
-        val rewritten = aff.filter(not(updPred))
-          .unionByName(applySet(aff.filter(updPred)))
+        val rewritten = aff.filter(not(coalesce(predicate, lit(false))))
+          .unionByName(applySet(aff.filter(predicate)))
         val rw = rewritten.write.mode(SaveMode.Overwrite)
         (if (partCols.nonEmpty) rw.partitionBy(partCols: _*) else rw)
           .parquet(stage)
@@ -2738,27 +2745,7 @@ object Maintenance {
           () => spark.read.parquet(stage), s"update(v=$v)",
           cleanup = () => deleteRecursively(new java.io.File(stage)))
         try {
-          affected.foreach { name =>
-            val rel = root.relativize(byName(name).toPath).toString
-            val dest = Paths.get(removedPath(tablePath)).resolve(rel)
-            Files.createDirectories(dest.getParent)
-            Files.move(byName(name).toPath, dest,
-              StandardCopyOption.ATOMIC_MOVE)
-          }
-          val committed = moveStagedIn(tablePath, stage, "update", v)
-          val gone = affected.toSet
-          writeFileStats(tablePath,
-            readFileStats(tablePath).toSeq.collect {
-              case ((f, c), (l, h)) if !gone.contains(f) => (f, c, l, h)
-            }, append = false)
-          writeFileStats(tablePath,
-            footerStats(spark, committed.map(_.toFile)) ++
-              partitionStats(tablePath, committed), append = true)
-          val reg = Paths.get(liveFilesPath(tablePath))
-          if (Files.exists(reg)) recordLiveFiles(tablePath)
-          writeFileList(snapshotFullPath(tablePath, v),
-            listParquetFiles(new java.io.File(tablePath))
-              .map(f => root.relativize(f.toPath).toString))
+          swapIn(spark, tablePath, affected.map(byName), stage, "update", v)
           writeFileList(snapshotUpdatePath(tablePath, v), affected)
           writeVersion(tablePath, v)
           UpdateResult(v, rowsUpdated, affected.size, total)
@@ -2811,14 +2798,9 @@ object Maintenance {
       // to physical so the join/rewrite/CDC all speak file terms
       val source = toPhysicalDf(tablePath, source0)
       val key = toPhysical(tablePath, key0)
-      val root = Paths.get(tablePath)
       val v0 = readVersion(tablePath)
       val schema = readTableSchema(tablePath)
       val partCols = readPartitioning(tablePath)
-      def reader = {
-        val r = schema.map(spark.read.schema).getOrElse(spark.read)
-        if (partCols.nonEmpty) r.option("basePath", tablePath) else r
-      }
       // stage the source once: it feeds key-range bounds, three joins,
       // and the change files — and must not be recomputed between them
       val src = source.localCheckpoint()
@@ -2881,15 +2863,12 @@ object Maintenance {
         val srcKeys = src.select(col(key))
         val cand =
           if (candidates.isEmpty) None
-          else Some(reader.parquet(
-            candidates.map(byName(_).getAbsolutePath): _*))
+          else Some(readFiles(spark, tablePath, candidates.map(byName)))
         // exact per-file matched-row counts: candidate scan × broadcast
         // source keys, one metadata-scale job
         val perFile: Array[(String, Long)] = cand.map(
-          _.join(broadcast(srcKeys), Seq(key))
-            .groupBy(input_file_name().as("path")).count().collect()
-            .map(r => (Paths.get(new java.net.URI(r.getString(0)).getPath)
-              .getFileName.toString, r.getLong(1)))).getOrElse(Array.empty)
+          c => countPerFile(c.join(broadcast(srcKeys), Seq(key))))
+          .getOrElse(Array.empty)
         val affected = perFile.map(_._1).toSeq.sorted
         val rowsUpdated = perFile.map(_._2).sum
         // keys present in ANY candidate file are the matched set; keys in
@@ -2907,8 +2886,7 @@ object Maintenance {
           val v = v0 + 1
           val aff =
             if (affected.isEmpty) None
-            else Some(reader.parquet(
-              affected.map(byName(_).getAbsolutePath): _*))
+            else Some(readFiles(spark, tablePath, affected.map(byName)))
           // per matched target ROW, the source replacement (duplicate
           // target keys stay duplicated — Delta updates each matched row)
           val attrs = src.columns.filterNot(_ == key).toSeq
@@ -2965,27 +2943,7 @@ object Maintenance {
             () => spark.read.parquet(stage), s"merge(v=$v)",
             cleanup = () => deleteRecursively(new java.io.File(stage)))
           try {
-            affected.foreach { name =>
-              val rel = root.relativize(byName(name).toPath).toString
-              val dest = Paths.get(removedPath(tablePath)).resolve(rel)
-              Files.createDirectories(dest.getParent)
-              Files.move(byName(name).toPath, dest,
-                StandardCopyOption.ATOMIC_MOVE)
-            }
-            val committed = moveStagedIn(tablePath, stage, "merge", v)
-            val gone = affected.toSet
-            writeFileStats(tablePath,
-              readFileStats(tablePath).toSeq.collect {
-                case ((f, c), (l, h)) if !gone.contains(f) => (f, c, l, h)
-              }, append = false)
-            writeFileStats(tablePath,
-              footerStats(spark, committed.map(_.toFile)) ++
-                partitionStats(tablePath, committed), append = true)
-            val reg = Paths.get(liveFilesPath(tablePath))
-            if (Files.exists(reg)) recordLiveFiles(tablePath)
-            writeFileList(snapshotFullPath(tablePath, v),
-              listParquetFiles(new java.io.File(tablePath))
-                .map(f => root.relativize(f.toPath).toString))
+            swapIn(spark, tablePath, affected.map(byName), stage, "merge", v)
             writeFileList(snapshotMergePath(tablePath, v), affected)
             // the tracked schema evolves WITH the commit (readers of old
             // versions get nulls for the new nullable columns)
@@ -3052,21 +3010,14 @@ object Maintenance {
       // vectors as they compact)
       requireNoOutstandingDvs(tablePath, "compactWhere")
       val column = toPhysical(tablePath, column0)
-      val root = Paths.get(tablePath)
       val (candidates, _) = skippingPlan(tablePath, column, lo, hi)
       if (candidates.size <= targetFiles) 0
       else {
         val byName = listParquetFiles(new java.io.File(tablePath))
           .map(f => f.getName -> f).toMap
-        val schema = readTableSchema(tablePath)
         val partCols = readPartitioning(tablePath)
-        val readerB = {
-          val r = schema.map(spark.read.schema).getOrElse(spark.read)
-          if (partCols.nonEmpty) r.option("basePath", tablePath) else r
-        }
         val stage = s"${tablePath}__stage/${java.util.UUID.randomUUID()}"
-        val cw = readerB
-          .parquet(candidates.map(byName(_).getAbsolutePath): _*)
+        val cw = readFiles(spark, tablePath, candidates.map(byName))
           .coalesce(targetFiles)
           .write.mode(SaveMode.Overwrite)
         (if (partCols.nonEmpty) cw.partitionBy(partCols: _*) else cw)
@@ -3075,21 +3026,8 @@ object Maintenance {
           val v = readVersion(tablePath) + 1
           // a rewrite physically reclaims its inputs (same contract as
           // whole-table compact — history before it reads loudly-missing)
-          candidates.foreach(n => Files.delete(byName(n).toPath))
-          val committed = moveStagedIn(tablePath, stage, "compactw", v)
-          val gone = candidates.toSet
-          writeFileStats(tablePath,
-            readFileStats(tablePath).toSeq.collect {
-              case ((f, c), (l, h)) if !gone.contains(f) => (f, c, l, h)
-            }, append = false)
-          writeFileStats(tablePath,
-            footerStats(spark, committed.map(_.toFile)) ++
-              partitionStats(tablePath, committed), append = true)
-          val reg = Paths.get(liveFilesPath(tablePath))
-          if (Files.exists(reg)) recordLiveFiles(tablePath)
-          writeFileList(snapshotFullPath(tablePath, v),
-            listParquetFiles(new java.io.File(tablePath))
-              .map(f => root.relativize(f.toPath).toString))
+          swapIn(spark, tablePath, candidates.map(byName), stage, "compactw",
+            v, quarantine = false)
           writeVersion(tablePath, v)
           candidates.size
         } finally dropStage(stage)

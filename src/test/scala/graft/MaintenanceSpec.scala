@@ -1930,4 +1930,200 @@ class MaintenanceSpec extends AnyFunSuite {
     graft.streaming.WorkDirs.deleteRecursively(
       new java.io.File(p).getParentFile)
   }
+
+  private def tmpTable(tag: String): String =
+    new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft-$tag-${UUID.randomUUID()}/t").getAbsolutePath
+
+  /** Rows of `df` over `cols`, as sorted strings (order-free equality). */
+  private def rowsOf(df: org.apache.spark.sql.DataFrame,
+      cols: Seq[String]): Seq[String] =
+    df.select(cols.map(col): _*).collect().map(_.toString).toSeq.sorted
+
+  /** The task count of every stage `body` ran. Listener events arrive
+    * asynchronously; a marker job run after `body` bounds the wait, since
+    * once its start is delivered every earlier event has been too.
+    */
+  private def stageTasks(body: => Any): Seq[Int] = {
+    import org.apache.spark.scheduler._
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val marker = s"stage-probe-${UUID.randomUUID()}"
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        tasks.add(e.stageInfo.numTasks)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.job.description") == marker))
+          seen.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      tasks.asScala.toSeq
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("DML reads the walked file list: no per-file listing job on a " +
+      "partitioned table, results equal plain DataFrame operations") {
+    val p = tmpTable("nolist")
+    // 12 small appends x 8 coin partitions = 96 live files
+    for (i <- 0 until 12)
+      Maintenance.commitAppend(spark, p, spark.range(i * 80L, (i + 1) * 80L)
+        .toDF("id").withColumn("coin_id", (col("id") % 8).cast("int"))
+        .withColumn("px", col("id") * 0.5).coalesce(1),
+        partitionBy = Seq("coin_id"))
+    val cols = Seq("id", "coin_id", "px")
+    type Df = org.apache.spark.sql.DataFrame
+    def check(op: String, expect: Df => Df)(run: => Any): Unit = {
+      val live = Maintenance.liveFileListing(p).get.size
+      assert(live >= 64, s"$op: only $live live files")
+      val want = rowsOf(expect(Maintenance.readTable(spark, p)), cols)
+      val tasks = stageTasks(run)
+      assert(tasks.forall(_ < live),
+        s"$op ran a stage with ${tasks.max} tasks over $live live files " +
+          s"(a per-file listing job): $tasks")
+      assert(rowsOf(Maintenance.readTable(spark, p), cols) == want, op)
+      assert(Maintenance.readTable(spark, p).schema("coin_id").dataType ==
+        org.apache.spark.sql.types.IntegerType, op)
+    }
+    check("deleteWhere", _.filter(col("coin_id") =!= 3)) {
+      assert(Maintenance.deleteWhere(spark, p, col("coin_id") === 3)
+        .rowsDeleted == 120L)
+    }
+    val upd = col("coin_id") === 5 && col("id") > 400
+    check("updateWhere", _.withColumn("px",
+        when(upd, col("px") + 1000).otherwise(col("px")))) {
+      assert(Maintenance.updateWhere(spark, p, upd,
+        Map("px" -> (col("px") + 1000))).rowsUpdated == 70L)
+    }
+    val dvPred = col("coin_id") === 1 && col("id") % 3 === 0
+    check("deleteWithVectors", _.filter(!dvPred)) {
+      assert(Maintenance.deleteWithVectors(spark, p, dvPred)
+        .rowsDeleted == 40L)
+    }
+    check("applyDeleteVectors", identity) {
+      assert(Maintenance.applyDeleteVectors(spark, p) == 12)
+    }
+    // 5 old keys (107 in the deleted coin 3 and 105 DV-deleted, so both
+    // insert) + 3 new
+    val src = spark.createDataFrame(
+      (Seq(100L, 101L, 102L, 105L, 107L) ++ Seq(9000L, 9001L, 9002L))
+        .map(id => (id, (id % 8).toInt, -1.0))).toDF(cols: _*)
+    check("mergeInto", df =>
+        df.join(src.select("id"), Seq("id"), "left_anti").unionByName(src)) {
+      assert(Maintenance.mergeInto(spark, p, src, "id").rowsInserted == 5L)
+    }
+    check("compactWhere", identity) {
+      assert(Maintenance.compactWhere(spark, p, "coin_id", 0.0, 2.0,
+        targetFiles = 1) > 3)
+    }
+    graft.streaming.WorkDirs.deleteRecursively(
+      new java.io.File(p).getParentFile)
+  }
+
+  test("DML with a NULL-valued predicate: NULL rows stay unchanged and " +
+      "the CDC files hold only the matched rows") {
+    def fresh(): String = {
+      val p = tmpTable("nullpred")
+      for (lo <- Seq(0L, 10L))
+        Maintenance.commitAppend(spark, p, spark.range(lo, lo + 10).toDF("id")
+          .withColumn("x", when(col("id") % 4 =!= 0, col("id")))
+          .withColumn("tag", lit("orig")).coalesce(1))
+      p
+    }
+    val cols = Seq("id", "x", "tag")
+    val pred = col("x") > 5
+    def changes(p: String) = {
+      val v = Maintenance.readVersion(p)
+      Maintenance.readChangesBetween(spark, p, v - 1, v)
+    }
+    // 20 rows; x is NULL on 0, 4, 8, 12, 16; x > 5 on 11 rows
+    val matched = 11L
+    val d = fresh()
+    val dWant = rowsOf(Maintenance.readTable(spark, d)
+      .filter(col("x").isNull || col("x") <= 5), cols)
+    assert(Maintenance.deleteWhere(spark, d, pred).rowsDeleted == matched)
+    assert(rowsOf(Maintenance.readTable(spark, d), cols) == dWant)
+    val dCdc = changes(d)
+    assert(dCdc.count() == matched && dCdc.filter(!pred).count() == 0L)
+
+    val u = fresh()
+    val uWant = rowsOf(Maintenance.readTable(spark, u).withColumn("tag",
+      when(pred, lit("upd")).otherwise(col("tag"))), cols)
+    assert(Maintenance.updateWhere(spark, u, pred, Map("tag" -> lit("upd")))
+      .rowsUpdated == matched)
+    assert(rowsOf(Maintenance.readTable(spark, u), cols) == uWant)
+    val uCdc = changes(u)
+    assert(uCdc.count() == 2 * matched && uCdc.filter(!pred).count() == 0L)
+
+    val v = fresh()
+    assert(Maintenance.deleteWithVectors(spark, v, pred).rowsDeleted ==
+      matched)
+    assert(rowsOf(Maintenance.readTable(spark, v), cols) == dWant)
+    val vCdc = changes(v)
+    assert(vCdc.count() == matched && vCdc.filter(!pred).count() == 0L)
+    Seq(d, u, v).foreach(t => graft.streaming.WorkDirs.deleteRecursively(
+      new java.io.File(t).getParentFile))
+  }
+
+  test("DML keeps partition values and types: escaped strings, NULL " +
+      "partitions and date partitions") {
+    import org.apache.spark.sql.Column
+    // (partition column, its value per id, a predicate naming one escaped /
+    // NULL / date value for each of delete, update and DV delete)
+    case class Case(name: String, part: Column, del: Column, upd: Column,
+        dv: Column)
+    val s = Seq("a b", "x/y", "k=v", "50%", "plain")
+    val sCol = element_at(array(s.map(lit): _*), (col("id") % 5 + 1).cast("int"))
+    val cases = Seq(
+      Case("s", sCol, col("s") === "x/y", col("s") === "a b" && col("id") > 20,
+        col("s") === "k=v" || col("s") === "50%"),
+      Case("c", when(col("id") % 3 =!= 0, (col("id") % 3).cast("int")),
+        col("c").isNull && col("id") % 2 === 0, col("c").isNull,
+        col("c") === 1 && col("id") < 30),
+      Case("d", date_add(lit("2024-02-27").cast("date"),
+          (col("id") % 4).cast("int")),
+        col("d") === lit("2024-02-29").cast("date"),
+        col("d") === lit("2024-03-01").cast("date") && col("id") % 2 === 1,
+        col("d") === lit("2024-02-27").cast("date")))
+    for (c <- cases) {
+      val p = tmpTable(s"ppar-${c.name}")
+      for (lo <- Seq(0L, 20L))
+        Maintenance.commitAppend(spark, p, spark.range(lo, lo + 20).toDF("id")
+          .withColumn(c.name, c.part).withColumn("v", col("id") * 10)
+          .coalesce(1), partitionBy = Seq(c.name))
+      val cols = Seq("id", c.name, "v")
+      val partType = Maintenance.readTable(spark, p).schema(c.name).dataType
+      def step(op: String, expect: org.apache.spark.sql.DataFrame =>
+          org.apache.spark.sql.DataFrame)(run: => Long): Unit = {
+        val before = Maintenance.readTable(spark, p)
+        val want = rowsOf(expect(before), cols)
+        assert(run > 0L, s"${c.name}/$op matched nothing")
+        val after = Maintenance.readTable(spark, p)
+        assert(rowsOf(after, cols) == want, s"${c.name}/$op")
+        assert(after.schema(c.name).dataType == partType, s"${c.name}/$op")
+      }
+      step("deleteWhere", _.filter(!coalesce(c.del, lit(false)))) {
+        Maintenance.deleteWhere(spark, p, c.del).rowsDeleted
+      }
+      step("updateWhere", _.withColumn("v",
+          when(coalesce(c.upd, lit(false)), col("v") + 1).otherwise(col("v")))) {
+        Maintenance.updateWhere(spark, p, c.upd,
+          Map("v" -> (col("v") + 1))).rowsUpdated
+      }
+      step("deleteWithVectors", _.filter(!coalesce(c.dv, lit(false)))) {
+        Maintenance.deleteWithVectors(spark, p, c.dv).rowsDeleted
+      }
+      step("applyDeleteVectors", identity) {
+        Maintenance.applyDeleteVectors(spark, p).toLong
+      }
+      graft.streaming.WorkDirs.deleteRecursively(
+        new java.io.File(p).getParentFile)
+    }
+  }
 }
