@@ -354,7 +354,7 @@ object Maintenance {
     import org.apache.spark.sql.execution.datasources.{FileStatusCache,
       HadoopFsRelation, InMemoryFileIndex}
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+    import org.apache.spark.sql.types.StructType
     val paths = files.map(f => new Path(f.toURI))
     val statuses = paths.zip(files).map { case (p, f) =>
       p -> Array(new FileStatus(f.length, false, 1, f.length, f.lastModified, p))
@@ -371,14 +371,7 @@ object Maintenance {
     val partSchema = index.partitionSchema
     // as the reader does: the data schema is the tracked (else inferred)
     // one minus the partition columns, nullable at every level
-    def nullable(t: DataType): DataType = t match {
-      case s: StructType => StructType(s.fields.map(f =>
-        f.copy(dataType = nullable(f.dataType), nullable = true)))
-      case a: ArrayType => ArrayType(nullable(a.elementType), true)
-      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), true)
-      case o => o
-    }
-    val dataSchema = nullable(StructType(tracked
+    val dataSchema = graft.Tables.asNullable(StructType(tracked
       .orElse(format.inferSchema(spark, options, index.allFiles()))
       .getOrElse(throw new IllegalStateException(
         s"cannot infer a schema for $tablePath from ${files.size} files"))

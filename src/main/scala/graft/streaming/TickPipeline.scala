@@ -4,7 +4,6 @@ import java.util.UUID
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
@@ -110,19 +109,32 @@ object TickPipeline {
 
   /** Static prep for hop 2 (reference: streaming_pipeline.py:32-39): the
     * coin dimension plus the previous-day closing price per key, computed
-    * batch-side once and broadcast into the stream.
+    * batch-side once per hop — one aggregate over `events`, collected to
+    * the driver — and returned as a local relation that the stream
+    * broadcasts, so no micro-batch re-runs it. Types are numbered 1..n in
+    * Spark's string order (nulls first, as `orderBy` sorts them) over
+    * every distinct type; types without a previous-day tick, and the null
+    * type, are then dropped, keeping their numbers unused.
     */
   def dimWithPrevClose(spark: SparkSession, cfg: Config): DataFrame = {
     val e = Tables.t(spark, cfg.sfDir, "events")
-    val dim = e.select(col("event_type")).distinct()
-      .withColumn("type_id",
-        row_number().over(Window.orderBy(col("event_type"))).cast("long"))
-      .withColumn("supply", col("type_id") * lit(1000.0))
-    // W1: last tick of prevDay per key (reference: udf.py:16-46).
-    val prev = e.filter(to_date(col("ts")) === to_date(lit(cfg.prevDay)))
-      .groupBy(col("event_type"))
-      .agg(max_by(col("value"), col("ts")).as("last_price"))
-    dim.join(prev, Seq("event_type"), "inner")
+    val prevTs = when(to_date(col("ts")) === to_date(lit(cfg.prevDay)), col("ts"))
+    // W1: last tick of prevDay per key (reference: udf.py:16-46); max_by
+    // skips rows whose ordering is null, i.e. every other day's ticks
+    val perType = e.groupBy(col("event_type"))
+      .agg(max_by(col("value"), prevTs).as("last_price"),
+        count(prevTs).as("n_prev"))
+      .orderBy(col("event_type"))
+      .collect()
+    val rows = perType.zipWithIndex.collect {
+      case (r, i) if !r.isNullAt(0) && r.getLong(2) > 0 =>
+        Row(r.getString(0), i + 1L, (i + 1) * 1000.0, r.get(1))
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("event_type", StringType),
+      StructField("type_id", LongType, nullable = false),
+      StructField("supply", DoubleType, nullable = false),
+      StructField("last_price", e.schema("value").dataType))))
   }
 
   /** Hop 2: bronze stream → enriched fact (reference: etl.py:53-78). */

@@ -196,6 +196,109 @@ class StreamingSpec extends AnyFunSuite {
       .count() == 0)
   }
 
+  /** Spark jobs started while `body` runs. A marker job after `body`
+    * drains the listener bus before the count is read.
+    */
+  private def jobsIn(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val marker = s"graft-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.job.description") == marker)) seen.countDown()
+        else jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A landing dir holding the smoke events as `n` files
+    * `events_NN.parquet`, the shape the bronze hop's glob matches.
+    */
+  private def landedEvents(n: Int): String = {
+    val root = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft-landing-${java.util.UUID.randomUUID()}")
+    val tmp = new java.io.File(root, "_tmp")
+    Tables.t(spark, sfSmoke, "events").repartition(n)
+      .write.parquet(tmp.getPath)
+    val parts = tmp.listFiles().filter(_.getName.endsWith(".parquet"))
+      .sortBy(_.getName)
+    assert(parts.length == n)
+    parts.zipWithIndex.foreach { case (f, i) =>
+      assert(f.renameTo(new java.io.File(root, f"events_$i%02d.parquet")))
+    }
+    graft.util.Fs.deleteRecursively(tmp)
+    root.getPath
+  }
+
+  test("the bronze hop's fixed cost does not grow with the landed file " +
+      "count: footer schemas run no Spark job") {
+    val (few, many) = (landedEvents(3), landedEvents(12))
+    try {
+      def hopJobs(sf: String): Int = {
+        val cfg = TickPipeline.Config(sf, TickPipeline.freshWorkDir())
+        try jobsIn(TickPipeline.runBronzeHop(spark, cfg))
+        finally graft.util.Fs.deleteRecursively(new java.io.File(cfg.workDir))
+      }
+      val (at3, at12) = (hopJobs(few), hopJobs(many))
+      assert(at3 == at12,
+        s"bronze hop ran $at3 jobs at 3 landed files but $at12 at 12")
+      assert(jobsIn(Tables.footerSchema(spark, s"$many/events*.parquet")) == 0,
+        "footerSchema must read the footers on the driver")
+    } finally Seq(few, many).foreach(d =>
+      graft.util.Fs.deleteRecursively(new java.io.File(d)))
+  }
+
+  test("dimWithPrevClose numbers every type, then drops the ones without " +
+      "a previous-day close, as the distinct/Window/inner-join plan did") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    val dir = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft-dim-${java.util.UUID.randomUUID()}")
+    // "a": no prevDay tick; null type; "c": latest prevDay value is null;
+    // "Z" sorts first and "é" last by UTF-8 bytes
+    Seq[(String, String, java.lang.Double)](
+      ("a", "2024-01-30 00:00:00", 1.0),
+      (null, "2024-01-29 10:00:00", 2.0),
+      ("b", "2024-01-29 10:00:00", 3.0),
+      ("b", "2024-01-29 23:59:59", 4.0),
+      ("b", "2024-01-30 00:00:00", 5.0),
+      ("c", "2024-01-29 09:00:00", 6.0),
+      ("c", "2024-01-29 12:00:00", null),
+      ("é", "2024-01-29 08:00:00", 7.0),
+      ("Z", "2024-01-29 08:00:00", 8.0))
+      .toDF("event_type", "ts", "value")
+      .withColumn("ts", col("ts").cast("timestamp")).coalesce(1)
+      .write.parquet(s"$dir/events.parquet")
+    try {
+      val cfg = TickPipeline.Config(dir.getPath, dir.getPath)
+      val e = Tables.t(spark, cfg.sfDir, "events")
+      val reference = e.select(col("event_type")).distinct()
+        .withColumn("type_id",
+          row_number().over(Window.orderBy(col("event_type"))).cast("long"))
+        .withColumn("supply", col("type_id") * lit(1000.0))
+        .join(e.filter(to_date(col("ts")) === to_date(lit(cfg.prevDay)))
+          .groupBy(col("event_type"))
+          .agg(max_by(col("value"), col("ts")).as("last_price")),
+          Seq("event_type"), "inner")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select("event_type", "type_id", "supply", "last_price")
+          .collect().map(_.toSeq).toSeq.sortBy(_(1).asInstanceOf[Long])
+      val got = TickPipeline.dimWithPrevClose(spark, cfg)
+      assert(rows(got) == rows(reference), s"${rows(got)} vs ${rows(reference)}")
+      assert(rows(got).map(_(0)) == Seq("Z", "b", "c", "é"))
+    } finally graft.util.Fs.deleteRecursively(dir)
+  }
+
   test("pipeline is rerun-safe: fresh work dir gives identical results") {
     val a = StreamingQueries.queries("k2_stream_fact")(spark, sfSmoke).collect()
     val b = StreamingQueries.queries("k2_stream_fact")(spark, sfSmoke).collect()

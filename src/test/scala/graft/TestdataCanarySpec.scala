@@ -138,6 +138,80 @@ class TestdataCanarySpec extends AnyFunSuite {
     }
   }
 
+  test("footerSchema equals Spark's own schema inference: testdata, " +
+      "timestamp encodings, nested and decimal columns, part-file dirs") {
+    import spark.implicits._
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    def same(path: String): Unit = {
+      val want = spark.read.parquet(path).schema
+      assert(Tables.footerSchema(spark, path) == want, s"footerSchema($path)")
+    }
+    Tables.names.foreach(n => same(Tables.path(sfSmoke, n)))
+    val work = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft-footerparity-${java.util.UUID.randomUUID()}")
+    val key = "spark.sql.parquet.outputTimestampType"
+    val prevTs = spark.conf.getOption(key)
+    try {
+      // Spark-written files: the schema comes from Spark's row metadata
+      val ts = spark.sql("SELECT TIMESTAMP'2024-01-30 01:02:03.456789' AS ts, " +
+        "TIMESTAMP_NTZ'2024-01-30 01:02:03.456789' AS ntz")
+      for (enc <- Seq("TIMESTAMP_MICROS", "INT96")) {
+        spark.conf.set(key, enc)
+        ts.coalesce(1).write.parquet(s"$work/$enc")
+        same(s"$work/$enc")
+      }
+      Seq((1L, BigDecimal("12.34"), Array[Byte](1, 2), (7, "x"), Seq(1.5, 2.5),
+          Map("k" -> Seq(3L))))
+        .toDF("id", "dec", "bin", "st", "arr", "map").coalesce(1)
+        .write.parquet(s"$work/nested")
+      same(s"$work/nested")
+      // parquet-mr-written files carry no Spark metadata: the schema comes
+      // from the parquet types through Spark's converter
+      val raw = MessageTypeParser.parseMessageType(
+        """message m {
+          |  required int64 id;
+          |  optional int96 legacy_ts;
+          |  optional int64 micros (TIMESTAMP(MICROS,true));
+          |  optional int64 ntz (TIMESTAMP(MICROS,false));
+          |  optional int64 nanos (TIMESTAMP(NANOS,true));
+          |  optional int32 day (DATE);
+          |  optional fixed_len_byte_array(9) dec (DECIMAL(20,4));
+          |  optional int64 dec_small (DECIMAL(12,2));
+          |  optional binary bin;
+          |  optional binary s (STRING);
+          |  optional group st { required int32 a; optional binary b (STRING); }
+          |  optional group arr (LIST) { repeated group list {
+          |    required double element; } }
+          |}""".stripMargin)
+      val rawFile = new org.apache.hadoop.fs.Path(s"$work/raw/part-0.parquet")
+      val w = ExampleParquetWriter.builder(rawFile).withType(raw).build()
+      try w.write(new SimpleGroupFactory(raw).newGroup().append("id", 1L))
+      finally w.close()
+      same(rawFile.toString)
+      // a directory of agreeing part files, and one holding a divergent part
+      Tables.t(spark, sfSmoke, "orders").repartition(3)
+        .write.parquet(s"$work/parts")
+      same(s"$work/parts")
+      java.nio.file.Files.copy(java.nio.file.Paths.get(rawFile.toString),
+        java.nio.file.Paths.get(s"$work/parts/part-zz-divergent.parquet"))
+      val e = intercept[IllegalArgumentException] {
+        Tables.footerSchema(spark, s"$work/parts")
+      }
+      assert(e.getMessage.contains("mixed parquet schemas") &&
+        e.getMessage.contains("part-zz-divergent.parquet"),
+        s"error must name the divergent part: ${e.getMessage}")
+    } finally {
+      prevTs match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+      graft.util.Fs.deleteRecursively(work)
+    }
+  }
+
   test("the streaming source sees the same normalized ts as the batch scan") {
     // footer-derived readStream schema == batch schema after normalization
     val streamSchema = Tables.eventsStream(spark, sfSmoke).schema
