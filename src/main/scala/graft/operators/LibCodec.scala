@@ -43,6 +43,16 @@ private[operators] object LibCodec {
           s"${e.getMessage}", e)
     }
 
+  /** Rethrow an `IllegalArgumentException` from `body` (a metadata
+    * read of one file) with the file's `path` in front of its message.
+    */
+  def naming[A](path: Any)(body: => A): A =
+    try body
+    catch {
+      case e: IllegalArgumentException =>
+        throw new IllegalArgumentException(s"$path: ${e.getMessage}", e)
+    }
+
   /** Drain and close `in` (a library decoder stream; closing frees a
     * native one's context), refusing output past `max` bytes.
     */

@@ -1485,7 +1485,7 @@ object Maintenance {
   // them: its bounds are ulp-widened doubles (pruning-only,
   // conservative-by-construction), while COUNT/MIN/MAX need the exact
   // values. So each append also records, from the committed files'
-  // footer tails read through the from-scratch [[ParquetFooter]]:
+  // footer tails read through [[ParquetFooter]]:
   //   F \t <relpath> \t <rows>
   //   C \t <relpath> \t <col> \t <nullCount|-> \t <mmExact 0|1>
   //     \t <min|-> \t <max|-> \t <physicalType> \t <convertedType|->
@@ -1680,7 +1680,7 @@ object Maintenance {
 
   // Fallback stats for files the commit protocol did not write (a
   // foreign-written parquet directory, or pre-feature bootstrap data):
-  // derive [min, max] from the file's OWN footer via the from-scratch
+  // derive [min, max] from the file's OWN footer via the
   // [[graft.operators.ParquetFooter]] tail reader — O(footer) IO on the
   // driver, cached by (path, size, mtime) so repeated plans over an
   // unchanged file read its tail once. Only plain-unannotated numeric
@@ -1738,7 +1738,7 @@ object Maintenance {
 
   /** The file-level pruning decision for `column` ∈ [lo, hi]: (files to
     * scan, total live files). Files without commit-recorded stats fall
-    * back to their own footers through the from-scratch tail reader
+    * back to their own footers through the footer tail reader
     * (see [[footerRanges]]); files stat-less both ways are always kept.
     */
   def skippingPlan(tablePath: String, column0: String, lo: Double,

@@ -1,10 +1,15 @@
 package graft.operators
 
-/** ORC STRIPE-DATA decoding from scratch — the second half of reading
-  * the second columnar format (the [[OrcMeta]] protobuf file-tail walk
-  * is the first): stripe directory from the footer (offsets, index /
-  * data / footer section lengths), per-stripe StripeFooter protobuf
-  * (stream directory + column encodings), and the ORC run-length
+import scala.jdk.CollectionConverters._
+
+import org.apache.orc.OrcProto
+
+/** ORC STRIPE-DATA decoding — the second half of reading the second
+  * columnar format (the [[OrcMeta]] file-tail read is the first):
+  * stripe directory from the footer (offsets, index / data / footer
+  * section lengths), per-stripe StripeFooter (stream directory +
+  * column encodings) — every metadata message decoded by the generated
+  * `OrcProto` classes, failures named by message — and the ORC run-length
   * encodings decoded value-by-value — BYTE RLE (the boolean/present
   * substrate: run headers 0..127 = repeat, negative = literal count,
   * bits emitted MSB-first), INTEGER RLEv2 in all four sub-encodings
@@ -38,13 +43,16 @@ package graft.operators
   */
 object OrcData {
 
-  import OrcMeta.PReader
-
   final case class OrcStripe(offset: Long, indexLength: Long,
       dataLength: Long, footerLength: Long, rows: Long)
 
+  /** One node of the type tree; `attributes` are the type's key/value
+    * annotations (Spark records its own type name under
+    * `spark.sql.catalyst.type`).
+    */
   final case class OrcTypeNode(kind: Int, subtypes: Seq[Int],
-      fieldNames: Seq[String], precision: Int = 0, scale: Int = 0)
+      fieldNames: Seq[String], precision: Int = 0, scale: Int = 0,
+      attributes: Map[String, String] = Map.empty)
 
   /** `writerVersion` is the PostScript field-6 writer fence (0 =
     * pre-HIVE-8732 ORIGINAL): string statistics below 1 were compared
@@ -122,39 +130,17 @@ object OrcData {
     */
   private def parsePostscript(p: Array[Byte],
       fileLen: Long = -1L): OrcPostscript = {
-    require(p.length > 16, "torn ORC: shorter than any tail")
-    val psLen = p(p.length - 1) & 0xff
-    require(psLen > 0 && psLen < p.length - 1,
-      s"torn ORC: postscript length $psLen")
-    val psStart = p.length - 1 - psLen
-    var footerLen = -1L
-    var metadataLen = 0L
-    var compression = 0
-    var blockSize = 0L
-    var writerVersion = 0
-    var magic = ""
-    val ps = new PReader(p, psStart, p.length - 1)
-    ps.message { (id, w) =>
-      id match {
-        case 1 => footerLen = ps.varint()
-        case 2 => compression = ps.varint().toInt
-        case 3 => blockSize = ps.varint()
-        case 5 => metadataLen = ps.varint()
-        case 6 => writerVersion = ps.varint().toInt
-        case 8000 => magic = ps.str()
-        case _ => ps.skip(w)
-      }
-    }
-    require(magic == "ORC", s"not an ORC file (postscript magic '$magic')")
-    val budget = if (fileLen >= 0) fileLen - 1 - psLen else psStart.toLong
+    val (ps, psLen) = OrcMeta.postscript(p)
+    val footerLen = ps.getFooterLength
+    val metadataLen = ps.getMetadataLength
+    val budget =
+      if (fileLen >= 0) fileLen - 1 - psLen else p.length - 1L - psLen
     require(footerLen > 0 && footerLen <= budget,
       s"torn ORC: footer length $footerLen")
     require(metadataLen >= 0 && metadataLen <= budget - footerLen,
       s"torn ORC: metadata length $metadataLen")
-    require(blockSize >= 0 && blockSize <= (1L << 26),
-      s"torn ORC: compression block size $blockSize")
-    OrcPostscript(footerLen, metadataLen, compression, blockSize.toInt,
-      writerVersion)
+    OrcPostscript(footerLen, metadataLen, ps.getCompression.getNumber,
+      ps.getCompressionBlockSize.toInt, ps.getWriterVersion)
   }
 
   /** Postscript + footer walk, keeping the stripe directory and type
@@ -171,66 +157,31 @@ object OrcData {
 
   private def parseFooter(fb: Array[Byte], compression: Int,
       blockSize: Int, writerVersion: Int): OrcFileMeta = {
-    val f = new PReader(fb, 0, fb.length)
-    var numRows = -1L
-    var stride = 0
-    val stripes = Vector.newBuilder[OrcStripe]
-    val types = Vector.newBuilder[OrcTypeNode]
-    f.message { (id, w) =>
-      id match {
-        case 3 =>
-          val s = f.sub()
-          var off = -1L; var il = 0L; var dl = 0L; var fl = -1L
-          var rows = -1L
-          s.message { (sid, sw) =>
-            sid match {
-              case 1 => off = s.varint()
-              case 2 => il = s.varint()
-              case 3 => dl = s.varint()
-              case 4 => fl = s.varint()
-              case 5 => rows = s.varint()
-              case _ => s.skip(sw)
-            }
-          }
-          require(off >= 0 && fl >= 0 && rows >= 0,
-            "torn ORC: stripe directory entry missing fields")
-          require(rows <= (1L << 28) && il <= (1L << 40) &&
-            dl <= (1L << 40) && fl <= (1L << 30),
-            s"torn ORC: stripe geometry $rows/$il/$dl/$fl")
-          stripes += OrcStripe(off, il, dl, fl, rows)
-        case 4 =>
-          val t = f.sub()
-          var kind = -1
-          var precision = 0
-          var scale = 0
-          val subs = Vector.newBuilder[Int]
-          val names = Vector.newBuilder[String]
-          t.message { (tid, tw) =>
-            (tid, tw) match {
-              case (1, _) => kind = t.varint().toInt
-              case (2, 2) => // packed repeated uint32
-                val s = t.sub()
-                while (!s.atEnd) subs += s.varint().toInt
-              case (2, _) => subs += t.varint().toInt
-              case (3, _) => names += t.str()
-              case (5, _) => precision = t.varint().toInt
-              case (6, _) => scale = t.varint().toInt
-              case _ => t.skip(tw)
-            }
-          }
-          types += OrcTypeNode(kind, subs.result(), names.result(),
-            precision, scale)
-        case 6 => numRows = f.varint()
-        case 8 => stride = f.varint().toInt
-        case _ => f.skip(w)
-      }
-    }
-    val ts = types.result()
-    require(numRows >= 0 && ts.nonEmpty, "torn ORC: footer without types")
+    val f = OrcMeta.parse("Footer")(OrcProto.Footer.parseFrom(fb))
+    val stripes = f.getStripesList.asScala.map { s =>
+      require(s.hasOffset && s.hasFooterLength && s.hasNumberOfRows,
+        "torn ORC: stripe directory entry missing fields")
+      val (off, il, dl, fl, rows) = (s.getOffset, s.getIndexLength,
+        s.getDataLength, s.getFooterLength, s.getNumberOfRows)
+      require(off >= 0 && rows >= 0 && rows <= (1L << 28) && il >= 0 &&
+        il <= (1L << 40) && dl >= 0 && dl <= (1L << 40) && fl >= 0 &&
+        fl <= (1L << 30), s"torn ORC: stripe geometry $rows/$il/$dl/$fl")
+      OrcStripe(off, il, dl, fl, rows)
+    }.toVector
+    val types = f.getTypesList.asScala.map { t =>
+      require(t.hasKind, "torn ORC: type without a known kind")
+      OrcTypeNode(t.getKind.getNumber,
+        t.getSubtypesList.asScala.map(_.intValue).toVector,
+        t.getFieldNamesList.asScala.toVector, t.getPrecision, t.getScale,
+        t.getAttributesList.asScala.map(a => a.getKey -> a.getValue).toMap)
+    }.toVector
+    val stride = f.getRowIndexStride
+    require(f.hasNumberOfRows && types.nonEmpty,
+      "torn ORC: footer without types")
     require(stride >= 0 && stride <= (1 << 28),
       s"torn ORC: row index stride $stride")
-    OrcFileMeta(compression, blockSize, numRows, ts,
-      stripes.result(), stride, writerVersion)
+    OrcFileMeta(compression, blockSize, f.getNumberOfRows, types, stripes,
+      stride, writerVersion)
   }
 
   /** Tail-only planning read: positional IO of the postscript, footer
@@ -239,7 +190,7 @@ object OrcData {
     * parquet tier. Two reads: a bounded probe for the postscript, then
     * exactly the metadata+footer span it declares.
     */
-  def readPlan(path: java.nio.file.Path): OrcPlan = {
+  def readPlan(path: java.nio.file.Path): OrcPlan = LibCodec.naming(path) {
     val ch = java.nio.channels.FileChannel.open(path,
       java.nio.file.StandardOpenOption.READ)
     try {
@@ -299,114 +250,68 @@ object OrcData {
     } finally ch.close()
   }
 
-  /** Metadata section: `Metadata { repeated StripeStatistics = 1 }`,
-    * each `StripeStatistics { repeated ColumnStatistics = 1 }` aligned
-    * with the type tree. Integer stats (sint64 zigzag min=1/max=2) and
-    * double stats (fixed64 min=1/max=2) both widen to doubles; any
-    * other statistics shape yields None (never prune on it).
+  /** One ColumnStatistics message → the ranges pruning acts on:
+    * integer and date bounds (exact, and widened to doubles), double
+    * bounds, timestamp bounds and string bounds; any other statistics
+    * kind yields None (never prune on it).
     */
-  /** One ColumnStatistics message body → the numeric range pruning
-    * acts on (IntegerStatistics / DoubleStatistics only; other kinds
-    * yield None = never prune).
-    */
-  private def parseColStat(cs: PReader): OrcColStat = {
+  private def colStat(cs: OrcProto.ColumnStatistics): OrcColStat = {
+    def opt[A](set: Boolean, v: => A): Option[A] =
+      if (set) Some(v) else None
     var mn: Option[Double] = None
     var mx: Option[Double] = None
-    var mnS: Option[String] = None
-    var mxS: Option[String] = None
-    var nonNull: Option[Long] = None
-    var hasNull: Option[Boolean] = None
     var mnL: Option[Long] = None
     var mxL: Option[Long] = None
-    var smL: Option[Long] = None
+    var mnS: Option[String] = None
+    var mxS: Option[String] = None
     var exactS = false
-    cs.message { (cid, cw) =>
-      cid match {
-        case 1 => nonNull = Some(cs.varint()) // numberOfValues
-        case 10 => hasNull = Some(cs.varint() != 0)
-        case 2 => // IntegerStatistics
-          val is = cs.sub()
-          is.message { (iid, iw) =>
-            iid match {
-              case 1 =>
-                val v = is.zig()
-                mnL = Some(v)
-                mn = Some(v.toDouble)
-              case 2 =>
-                val v = is.zig()
-                mxL = Some(v)
-                mx = Some(v.toDouble)
-              case 3 => smL = Some(is.zig()) // sum (absent on overflow)
-              case _ => is.skip(iw)
-            }
-          }
-        case 3 => // DoubleStatistics
-          val ds = cs.sub()
-          ds.message { (did, dw) =>
-            did match {
-              case 1 => mn = Some(
-                java.lang.Double.longBitsToDouble(ds.fixed64()))
-              case 2 => mx = Some(
-                java.lang.Double.longBitsToDouble(ds.fixed64()))
-              case _ => ds.skip(dw)
-            }
-          }
-        case 7 => // DateStatistics: sint32 epoch days — lands in the
-          // numeric range so normalized date literals (days) prune;
-          // the exact values also feed DATE MIN/MAX aggregate pushdown
-          val ds = cs.sub()
-          ds.message { (did, dw) =>
-            did match {
-              case 1 =>
-                val v = ds.zig()
-                mnL = Some(v)
-                mn = Some(v.toDouble)
-              case 2 =>
-                val v = ds.zig()
-                mxL = Some(v)
-                mx = Some(v.toDouble)
-              case _ => ds.skip(dw)
-            }
-          }
-        case 9 => // TimestampStatistics: UTC millis (fields 3/4 — the
-          // writer-timezone-free pair) widened to the micro domain
-          // conservatively: a stat-millisecond truncates up to 999
-          // micros, so the max bound gains them back
-          val ts = cs.sub()
-          ts.message { (tid, tw) =>
-            tid match {
-              case 3 => mn = Some(ts.zig().toDouble * 1000.0)
-              case 4 => mx = Some(ts.zig().toDouble * 1000.0 + 999.0)
-              case _ => ts.skip(tw)
-            }
-          }
-        case 4 => // StringStatistics: exact minimum/maximum, or the
-          // lowerBound/upperBound TRUNCATED stand-ins long values get
-          // (a truncated lower bound is still ≤ the true min and the
-          // upper ≥ the true max, so pruning on them stays
-          // conservative)
-          val ss = cs.sub()
-          var lo: Option[String] = None
-          var hi: Option[String] = None
-          var lob: Option[String] = None
-          var hib: Option[String] = None
-          ss.message { (sid, sw) =>
-            sid match {
-              case 1 => lo = Some(ss.str())
-              case 2 => hi = Some(ss.str())
-              case 4 => lob = Some(ss.str())
-              case 5 => hib = Some(ss.str())
-              case _ => ss.skip(sw)
-            }
-          }
-          mnS = lo.orElse(lob)
-          mxS = hi.orElse(hib)
-          exactS = lo.isDefined && hi.isDefined
-        case _ => cs.skip(cw)
-      }
+    if (cs.hasIntStatistics) {
+      val is = cs.getIntStatistics
+      mnL = opt(is.hasMinimum, is.getMinimum)
+      mxL = opt(is.hasMaximum, is.getMaximum)
     }
-    OrcColStat(mn, mx, mnS, mxS, nonNull, hasNull,
-      mnL, mxL, smL, exactS)
+    if (cs.hasDoubleStatistics) {
+      val ds = cs.getDoubleStatistics
+      mn = opt(ds.hasMinimum, ds.getMinimum)
+      mx = opt(ds.hasMaximum, ds.getMaximum)
+    }
+    // DateStatistics: sint32 epoch days — lands in the numeric range so
+    // normalized date literals (days) prune; the exact values also feed
+    // DATE MIN/MAX aggregate pushdown
+    if (cs.hasDateStatistics) {
+      val ds = cs.getDateStatistics
+      mnL = opt(ds.hasMinimum, ds.getMinimum.toLong)
+      mxL = opt(ds.hasMaximum, ds.getMaximum.toLong)
+    }
+    if (mnL.isDefined || mxL.isDefined) {
+      mn = mnL.map(_.toDouble)
+      mx = mxL.map(_.toDouble)
+    }
+    // TimestampStatistics: UTC millis (the writer-timezone-free pair)
+    // widened to the micro domain conservatively: a stat-millisecond
+    // truncates up to 999 micros, so the max bound gains them back
+    if (cs.hasTimestampStatistics) {
+      val ts = cs.getTimestampStatistics
+      mn = opt(ts.hasMinimumUtc, ts.getMinimumUtc.toDouble * 1000.0)
+      mx = opt(ts.hasMaximumUtc, ts.getMaximumUtc.toDouble * 1000.0 + 999.0)
+    }
+    // StringStatistics: exact minimum/maximum, or the
+    // lowerBound/upperBound TRUNCATED stand-ins long values get (a
+    // truncated lower bound is still ≤ the true min and the upper ≥ the
+    // true max, so pruning on them stays conservative)
+    if (cs.hasStringStatistics) {
+      val ss = cs.getStringStatistics
+      mnS = opt(ss.hasMinimum, ss.getMinimum)
+        .orElse(opt(ss.hasLowerBound, ss.getLowerBound))
+      mxS = opt(ss.hasMaximum, ss.getMaximum)
+        .orElse(opt(ss.hasUpperBound, ss.getUpperBound))
+      exactS = ss.hasMinimum && ss.hasMaximum
+    }
+    val sumL = opt(cs.hasIntStatistics && cs.getIntStatistics.hasSum,
+      cs.getIntStatistics.getSum) // absent on overflow
+    OrcColStat(mn, mx, mnS, mxS,
+      opt(cs.hasNumberOfValues, cs.getNumberOfValues),
+      opt(cs.hasHasNull, cs.getHasNull), mnL, mxL, sumL, exactS)
   }
 
   /** One column's decoded ROW_INDEX stream: per row group, the seek
@@ -417,31 +322,13 @@ object OrcData {
       stat: OrcColStat)
 
   /** Parse one decompressed ROW_INDEX stream (orc_proto RowIndex). */
-  def parseRowIndex(b: Array[Byte]): Seq[OrcRowGroupIx] = {
-    val out = Vector.newBuilder[OrcRowGroupIx]
-    val r = new PReader(b, 0, b.length)
-    r.message { (id, w) =>
-      id match {
-        case 1 =>
-          val e = r.sub()
-          val posns = Vector.newBuilder[Long]
-          var stat = OrcColStat(None, None)
-          e.message { (eid, ew) =>
-            (eid, ew) match {
-              case (1, 2) => // packed repeated uint64
-                val s = e.sub()
-                while (!s.atEnd) posns += s.varint()
-              case (1, _) => posns += e.varint()
-              case (2, _) => stat = parseColStat(e.sub())
-              case _ => e.skip(ew)
-            }
-          }
-          out += OrcRowGroupIx(posns.result().toArray, stat)
-        case _ => r.skip(w)
-      }
-    }
-    out.result()
-  }
+  def parseRowIndex(b: Array[Byte]): Seq[OrcRowGroupIx] =
+    OrcMeta.parse("RowIndex")(OrcProto.RowIndex.parseFrom(b))
+      .getEntryList.asScala.map { e =>
+        OrcRowGroupIx(e.getPositionsList.asScala.map(_.longValue).toArray,
+          if (e.hasStatistics) colStat(e.getStatistics)
+          else OrcColStat(None, None))
+      }.toVector
 
   /** The ROW_INDEX entries of the requested columns in one stripe,
     * from a buffer holding (at least) the stripe's index area AND its
@@ -500,44 +387,17 @@ object OrcData {
   /** Parse one decompressed BLOOM_FILTER_UTF8 stream (orc_proto
     * BloomFilterIndex: one BloomFilter per row group).
     */
-  def parseBloomIndex(b: Array[Byte]): Seq[OrcBloom] = {
-    val out = Vector.newBuilder[OrcBloom]
-    val r = new PReader(b, 0, b.length)
-    r.message { (id, w) =>
-      id match {
-        case 1 =>
-          val e = r.sub()
-          var k = 0
-          val words = Vector.newBuilder[Long]
-          e.message { (eid, ew) =>
-            (eid, ew) match {
-              case (1, _) => k = e.varint().toInt
-              case (2, 1) => words += e.fixed64() // unpacked fixed64
-              case (2, 2) => // packed repeated fixed64
-                val s = e.sub()
-                while (!s.atEnd) words += s.fixed64()
-              case (3, _) => // utf8bitset: LE long bytes
-                val (o, n) = e.bytes()
-                require(n % 8 == 0, s"torn ORC: bloom bitset $n bytes")
-                var i = 0
-                while (i < n) {
-                  var v = 0L
-                  var j = 0
-                  while (j < 8) {
-                    v |= (b(o + i + j) & 0xffL) << (8 * j); j += 1
-                  }
-                  words += v
-                  i += 8
-                }
-              case _ => e.skip(ew)
-            }
-          }
-          out += OrcBloom(k, words.result().toArray)
-        case _ => r.skip(w)
-      }
-    }
-    out.result()
-  }
+  def parseBloomIndex(b: Array[Byte]): Seq[OrcBloom] =
+    OrcMeta.parse("BloomFilterIndex")(OrcProto.BloomFilterIndex.parseFrom(b))
+      .getBloomFilterList.asScala.map { f =>
+        val utf8 = f.getUtf8Bitset.asReadOnlyByteBuffer
+          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        require(utf8.remaining % 8 == 0,
+          s"torn ORC: bloom bitset ${utf8.remaining} bytes")
+        val words = f.getBitsetList.asScala.map(_.longValue).toArray ++
+          Array.fill(utf8.remaining / 8)(utf8.getLong())
+        OrcBloom(f.getNumHashFunctions, words)
+      }.toVector
 
   /** The BLOOM_FILTER_UTF8 entries of the requested columns in one
     * stripe, from the same two planning reads [[rowGroupStats]] uses.
@@ -654,27 +514,13 @@ object OrcData {
     true
   }
 
-  private def parseMetadata(mb: Array[Byte]): Seq[Seq[OrcColStat]] = {
-    val out = Vector.newBuilder[Seq[OrcColStat]]
-    val m = new PReader(mb, 0, mb.length)
-    m.message { (id, w) =>
-      id match {
-        case 1 =>
-          val ss = m.sub()
-          val cols = Vector.newBuilder[OrcColStat]
-          ss.message { (sid, sw) =>
-            sid match {
-              case 1 =>
-                cols += parseColStat(ss.sub())
-              case _ => ss.skip(sw)
-            }
-          }
-          out += cols.result()
-        case _ => m.skip(w)
-      }
-    }
-    out.result()
-  }
+  /** Metadata section: one StripeStatistics per stripe, each holding
+    * one ColumnStatistics per column of the type tree.
+    */
+  private def parseMetadata(mb: Array[Byte]): Seq[Seq[OrcColStat]] =
+    OrcMeta.parse("Metadata")(OrcProto.Metadata.parseFrom(mb))
+      .getStripeStatsList.asScala
+      .map(_.getColStatsList.asScala.map(colStat).toVector).toVector
 
   // ------------------------------------------------------------------
   // run-length decoders
@@ -1006,42 +852,20 @@ object OrcData {
       stripe.footerLength.toInt, compression, blockSize))
   }
 
+  /** The stream directory and column encodings of one StripeFooter; a
+    * stream or encoding kind this reader does not know becomes -1.
+    */
   private def parseStripeFooter(fb: Array[Byte])
       : (Seq[OrcStream], Map[Int, OrcEncoding]) = {
-    val r = new PReader(fb, 0, fb.length)
-    val streams = Vector.newBuilder[OrcStream]
-    val encodings = Vector.newBuilder[OrcEncoding]
-    r.message { (id, w) =>
-      id match {
-        case 1 =>
-          val s = r.sub()
-          var kind = 0; var col = 0; var len = 0L
-          s.message { (sid, sw) =>
-            sid match {
-              case 1 => kind = s.varint().toInt
-              case 2 => col = s.varint().toInt
-              case 3 => len = s.varint()
-              case _ => s.skip(sw)
-            }
-          }
-          streams += OrcStream(kind, col, len)
-        case 2 =>
-          val e = r.sub()
-          var kind = 0; var dict = 0
-          e.message { (eid, ew) =>
-            eid match {
-              case 1 => kind = e.varint().toInt
-              case 2 => dict = e.varint().toInt
-              case _ => e.skip(ew)
-            }
-          }
-          encodings += OrcEncoding(kind, dict)
-        case _ => r.skip(w)
-      }
-    }
-    val encs = encodings.result().zipWithIndex
-      .map { case (e, i) => i -> e }.toMap
-    (streams.result(), encs)
+    val f = OrcMeta.parse("StripeFooter")(OrcProto.StripeFooter.parseFrom(fb))
+    val streams = f.getStreamsList.asScala.map(st => OrcStream(
+      if (st.hasKind) st.getKind.getNumber else -1, st.getColumn,
+      st.getLength)).toVector
+    val encs = f.getColumnsList.asScala.zipWithIndex.map { case (e, i) =>
+      i -> OrcEncoding(if (e.hasKind) e.getKind.getNumber else -1,
+        e.getDictionarySize)
+    }.toMap
+    (streams, encs)
   }
 
   /** Decode one column of one stripe into row-aligned values with

@@ -23,8 +23,8 @@ package graft.operators
   *     stripe stats consume), file Footer (with merged file-level
   *     ColumnStatistics) + Postscript protobufs, trailing
   *     postscript-length byte — all protobuf wire format written by
-  *     hand (varint keys, length-delimited messages), mirrored against
-  *     [[OrcMeta.PReader]];
+  *     hand (varint keys, length-delimited messages), read back by the
+  *     `OrcProto` classes [[OrcMeta]] and [[OrcData]] parse with;
   *   - PRESENT streams as boolean RLE (bits MSB-first behind byte-RLE
   *     literal groups), only on columns that actually carry nulls;
   *   - integer columns (INT/LONG/DATE) as RLEv2 DIRECT runs of ≤ 512
@@ -105,7 +105,7 @@ object OrcWrite {
   }
 
   // -------------------------------------------------------------------
-  // protobuf wire writer (mirror of OrcMeta.PReader)
+  // protobuf wire writer (its output parses with OrcProto)
 
   private final class PB {
     val out = new java.io.ByteArrayOutputStream()

@@ -1,9 +1,9 @@
 package graft.operators
 
 /** Parquet DATA-PAGE decoding from scratch — the second half of reading
-  * the engine's own storage format (the [[ParquetFooter]] Thrift-compact
-  * footer walk is the first): page-stream walking via thrift PageHeader
-  * structs, v1 AND v2 data pages, dictionary pages, the RLE /
+  * the engine's own storage format (the [[ParquetFooter]] footer read
+  * is the first): page-stream walking via [[ParquetFooter.readPageHeader]],
+  * v1 AND v2 data pages, dictionary pages, the RLE /
   * bit-packed hybrid level-and-index encoding, PLAIN values for
   * BOOLEAN / INT32 / INT64 / FLOAT / DOUBLE / BYTE_ARRAY /
   * FIXED_LEN_BYTE_ARRAY (decimal storage) / INT96 (the legacy 12-byte

@@ -1,27 +1,35 @@
 package graft.operators
 
-/** Parquet footer reader from scratch (pure JVM) — the metadata layer
-  * this engine's own planning leans on (footer stats drive
-  * [[Maintenance]]'s data skipping), decoded here without parquet-mr:
-  * the PAR1-framed footer (trailing 4-byte LE length), the THRIFT
-  * COMPACT PROTOCOL (short/long-form field headers with delta field
-  * ids, zigzag LEB128 varints, length-prefixed binaries, size+type
-  * list headers, nested structs, boolean-in-header encoding), and the
-  * parquet-format structures that matter for planning — FileMetaData,
-  * SchemaElement, RowGroup, ColumnChunk, ColumnMetaData and Statistics
-  * (the modern min_value/max_value fields — note the spec numbers MAX
-  * as field 5 and MIN as field 6 — plus null_count), with unknown
-  * fields skipped structurally, never by guessing byte counts.
+import scala.jdk.CollectionConverters._
+
+import org.apache.parquet.format.{BloomFilterHeader, ColumnChunk,
+  ColumnIndex, FileMetaData, OffsetIndex, PageHeader, SchemaElement}
+import shaded.parquet.org.apache.thrift.{TBase, TException}
+import shaded.parquet.org.apache.thrift.protocol.TCompactProtocol
+import shaded.parquet.org.apache.thrift.transport.TIOStreamTransport
+
+/** Parquet metadata reader — the layer this engine's own planning leans
+  * on (footer stats drive [[Maintenance]]'s data skipping): the
+  * PAR1-framed footer (trailing 4-byte LE length) and the structures
+  * behind it — FileMetaData, PageHeader, OffsetIndex, ColumnIndex and
+  * BloomFilterHeader — decoded by the generated parquet-format classes
+  * parquet-mr itself reads with (`org.apache.parquet.format`).
+  *
+  * Every decode runs the compact protocol with its string and container
+  * limits set to the bytes actually present ([[decode]]), so a declared
+  * length larger than its input rejects before anything is allocated.
+  * Thrift failures surface as `IllegalArgumentException`s naming the
+  * structure (and the file, in [[readTail]]). The `Pq*` case classes are
+  * the one adapter over the generated classes' isSet fields: callers
+  * never see thrift.
   *
   * At 100 TB this read pattern is the point: per-file pruning decisions
   * come from a few KB of footer per multi-GB file, so a scan planner
   * that understands footers touches no data pages at all.
   *
-  * Cross-validated in ParquetFooterSpec against parquet-mr (the
-  * independent implementation Spark itself uses) on Spark-written
-  * files, and in the s22 oracle against DuckDB re-deriving the same
-  * facts from full scans. Formats are the public parquet-format
-  * specification and the Thrift compact protocol spec.
+  * Cross-validated in ParquetFooterSpec against parquet-mr's own footer
+  * reader on Spark-written files, and in the s22 oracle against DuckDB
+  * re-deriving the same facts from full scans.
   */
 object ParquetFooter {
 
@@ -30,302 +38,146 @@ object ParquetFooter {
       minValue: Option[Array[Byte]], maxValue: Option[Array[Byte]],
       dataPageOffset: Long = -1L, dictPageOffset: Option[Long] = None,
       totalCompressedSize: Long = -1L,
-      // page-index section locations (ColumnChunk fields 4-7):
-      // (absolute file offset, byte length) of this chunk's OffsetIndex
-      // and ColumnIndex thrift structs, absent on pre-index writers
+      // page-index section locations: (absolute file offset, byte
+      // length) of this chunk's OffsetIndex and ColumnIndex structs,
+      // absent on pre-index writers
       offsetIndex: Option[(Long, Int)] = None,
       columnIndex: Option[(Long, Int)] = None,
-      // split-block bloom filter location (ColumnMetaData fields
-      // 14/15); length absent on older writers — the header carries
-      // the bitset size either way
+      // split-block bloom filter location; length absent on older
+      // writers — the header carries the bitset size either way
       bloomOffset: Option[Long] = None,
       bloomLength: Option[Int] = None)
 
   final case class PqRowGroup(numRows: Long, columns: Seq[PqColumn])
+
+  /** The LogicalType annotation's TIMESTAMP arm: `unit` 0 = MILLIS,
+    * 1 = MICROS, 2 = NANOS.
+    */
+  final case class PqTimestamp(adjustedToUtc: Boolean, unit: Int)
 
   final case class PqSchemaField(name: String, physicalType: Int,
       numChildren: Int, convertedType: Option[Int] = None,
       hasLogicalType: Boolean = false,
       repetition: Option[Int] = None, // 0 required, 1 optional, 2 repeated
       typeLength: Int = 0, // FIXED_LEN_BYTE_ARRAY width
-      scale: Int = 0, precision: Int = 0) // DECIMAL annotation
+      scale: Int = 0, precision: Int = 0, // DECIMAL annotation
+      timestamp: Option[PqTimestamp] = None)
 
   final case class PqFooter(version: Int, numRows: Long,
       createdBy: Option[String], schema: Seq[PqSchemaField],
       rowGroups: Seq[PqRowGroup])
 
-  // thrift compact element types
-  private val T_STOP = 0
-  private val T_TRUE = 1
-  private val T_FALSE = 2
-  private val T_BYTE = 3
-  private val T_I16 = 4
-  private val T_I32 = 5
-  private val T_I64 = 6
-  private val T_DOUBLE = 7
-  private val T_BINARY = 8
-  private val T_LIST = 9
-  private val T_SET = 10
-  private val T_MAP = 11
-  private val T_STRUCT = 12
-
-  private final class TReader(p: Array[Byte], var pos: Int) {
-    def u8(): Int = {
-      require(pos < p.length, "torn thrift: read past end")
-      val b = p(pos) & 0xff
-      pos += 1
-      b
+  /** Decode one thrift struct from `p[off, off + len)` into `struct`
+    * with the compact protocol, its string and container limits set to
+    * `len` — no declared length can exceed the bytes present — and
+    * return the bytes consumed. Thrift failures become
+    * `IllegalArgumentException`s naming `what`.
+    */
+  private def decode(what: String, struct: TBase[_, _], p: Array[Byte],
+      off: Int, len: Int): Int = {
+    require(off >= 0 && len >= 0 && off <= p.length - len,
+      s"torn parquet: $what outside its ${p.length}-byte buffer")
+    val in = new java.io.ByteArrayInputStream(p, off, len)
+    try struct.read(new TCompactProtocol(new TIOStreamTransport(in),
+      len.toLong, len.toLong))
+    catch {
+      case e: TException => throw new IllegalArgumentException(
+        s"torn parquet: malformed $what: ${e.getMessage}", e)
     }
-    def varint(): Long = {
-      var n = 0L
-      var shift = 0
-      var b = 0
-      do {
-        require(shift <= 63, "torn thrift: runaway varint")
-        b = u8()
-        n |= (b & 0x7fL) << shift
-        shift += 7
-      } while ((b & 0x80) != 0)
-      n
-    }
-    def zig(): Long = { val n = varint(); (n >>> 1) ^ -(n & 1L) }
-    def binary(): Array[Byte] = {
-      val n = varint()
-      require(n >= 0 && pos + n <= p.length,
-        s"torn thrift: $n-byte binary past end")
-      val out = java.util.Arrays.copyOfRange(p, pos, pos + n.toInt)
-      pos += n.toInt
-      out
-    }
-    def str(): String = new String(binary(), "UTF-8")
-    def listHeader(): (Int, Int) = {
-      val h = u8()
-      val short = (h >>> 4) & 0xf
-      val typ = h & 0xf
-      val size = if (short == 15) {
-        val n = varint()
-        require(n >= 0 && n <= Int.MaxValue, s"torn thrift: list size $n")
-        n.toInt
-      } else short
-      (typ, size)
-    }
-    def skip(typ: Int): Unit = typ match {
-      case T_TRUE | T_FALSE => ()
-      case T_BYTE => u8()
-      case T_I16 | T_I32 | T_I64 => zig()
-      case T_DOUBLE => pos += 8
-      case T_BINARY => binary()
-      case T_LIST | T_SET =>
-        val (et, n) = listHeader()
-        var i = 0
-        while (i < n) { skip(et); i += 1 }
-      case T_MAP =>
-        val n = varint()
-        if (n > 0) {
-          val kv = u8()
-          var i = 0L
-          while (i < n) { skip((kv >>> 4) & 0xf); skip(kv & 0xf); i += 1 }
-        }
-      case T_STRUCT =>
-        var fieldId = 0
-        var stop = false
-        while (!stop) {
-          val h = u8()
-          if (h == 0) stop = true
-          else {
-            val delta = (h >>> 4) & 0xf
-            fieldId = if (delta == 0) zig().toInt else fieldId + delta
-            skip(h & 0xf)
-          }
-        }
-      case t => throw new IllegalArgumentException(
-        s"torn thrift: element type $t")
-    }
-    /** Walk one struct, dispatching (fieldId, type) to `field`; the
-      * handler must consume exactly its field's payload (or call
-      * skip). Returns when the stop byte arrives.
-      */
-    def struct(field: (Int, Int) => Unit): Unit = {
-      var fieldId = 0
-      var stop = false
-      while (!stop) {
-        val h = u8()
-        if (h == 0) stop = true
-        else {
-          val delta = (h >>> 4) & 0xf
-          fieldId = if (delta == 0) zig().toInt else fieldId + delta
-          field(fieldId, h & 0xf)
-        }
-      }
-    }
+    len - in.available()
   }
 
-  private def readStatistics(r: TReader): (Option[Long],
-      Option[Array[Byte]], Option[Array[Byte]]) = {
-    var nulls: Option[Long] = None
-    var minV: Option[Array[Byte]] = None
-    var maxV: Option[Array[Byte]] = None
-    r.struct { (id, typ) =>
-      id match {
-        case 3 => nulls = Some(r.zig())
-        case 5 => maxV = Some(r.binary()) // spec: 5 = max_value
-        case 6 => minV = Some(r.binary()) // spec: 6 = min_value
-        case _ => r.skip(typ)
-      }
+  private def column(cc: ColumnChunk): Option[PqColumn] =
+    if (!cc.isSetMeta_data) None
+    else {
+      val m = cc.getMeta_data
+      val st = if (m.isSetStatistics) Some(m.getStatistics) else None
+      def loc(set: Boolean, off: Long, len: Int): Option[(Long, Int)] =
+        if (set && off >= 0 && len > 0) Some((off, len)) else None
+      Some(PqColumn(m.getPath_in_schema.asScala.mkString("."),
+        m.getType.getValue, m.getNum_values, m.getCodec.getValue,
+        st.filter(_.isSetNull_count).map(_.getNull_count),
+        st.filter(_.isSetMin_value).map(_.getMin_value),
+        st.filter(_.isSetMax_value).map(_.getMax_value),
+        m.getData_page_offset,
+        if (m.isSetDictionary_page_offset)
+          Some(m.getDictionary_page_offset) else None,
+        m.getTotal_compressed_size,
+        loc(cc.isSetOffset_index_offset && cc.isSetOffset_index_length,
+          cc.getOffset_index_offset, cc.getOffset_index_length),
+        loc(cc.isSetColumn_index_offset && cc.isSetColumn_index_length,
+          cc.getColumn_index_offset, cc.getColumn_index_length),
+        if (m.isSetBloom_filter_offset) Some(m.getBloom_filter_offset)
+        else None,
+        if (m.isSetBloom_filter_length) Some(m.getBloom_filter_length)
+        else None))
     }
-    (nulls, minV, maxV)
+
+  private def schemaField(e: SchemaElement): PqSchemaField = {
+    val ts = Option(e.getLogicalType).filter(_.isSetTIMESTAMP)
+      .map(_.getTIMESTAMP)
+    PqSchemaField(e.getName,
+      if (e.isSetType) e.getType.getValue else -1,
+      if (e.isSetNum_children) e.getNum_children else 0,
+      if (e.isSetConverted_type) Some(e.getConverted_type.getValue)
+      else None,
+      e.isSetLogicalType,
+      if (e.isSetRepetition_type) Some(e.getRepetition_type.getValue)
+      else None,
+      if (e.isSetType_length) e.getType_length else 0,
+      if (e.isSetScale) e.getScale else 0,
+      if (e.isSetPrecision) e.getPrecision else 0,
+      ts.map { t =>
+        val u = t.getUnit
+        PqTimestamp(t.isIsAdjustedToUTC,
+          if (u.isSetMILLIS) 0 else if (u.isSetMICROS) 1
+          else if (u.isSetNANOS) 2 else -1)
+      })
   }
 
-  private def readColumnMeta(r: TReader): PqColumn = {
-    var typ = -1
-    var path = ""
-    var codec = -1
-    var numValues = -1L
-    var dataOff = -1L
-    var dictOff: Option[Long] = None
-    var totalComp = -1L
-    var bloomOff: Option[Long] = None
-    var bloomLen: Option[Int] = None
-    var stats: (Option[Long], Option[Array[Byte]], Option[Array[Byte]]) =
-      (None, None, None)
-    r.struct { (id, t) =>
-      id match {
-        case 1 => typ = r.zig().toInt
-        case 3 =>
-          val (et, n) = r.listHeader()
-          require(et == T_BINARY, "path_in_schema must be strings")
-          path = (0 until n).map(_ => r.str()).mkString(".")
-        case 4 => codec = r.zig().toInt
-        case 5 => numValues = r.zig()
-        case 7 => totalComp = r.zig()
-        case 9 => dataOff = r.zig()
-        case 11 => dictOff = Some(r.zig())
-        case 12 => stats = readStatistics(r)
-        case 14 => bloomOff = Some(r.zig()) // bloom_filter_offset
-        case 15 => bloomLen = Some(r.zig().toInt) // bloom_filter_length
-        case _ => r.skip(t)
-      }
-    }
-    PqColumn(path, typ, numValues, codec, stats._1, stats._2, stats._3,
-      dataOff, dictOff, totalComp, bloomOffset = bloomOff,
-      bloomLength = bloomLen)
+  private def footerOf(m: FileMetaData): PqFooter = {
+    require(m.getSchemaSize > 0, "torn parquet: footer without a schema")
+    PqFooter(m.getVersion, m.getNum_rows,
+      if (m.isSetCreated_by) Some(m.getCreated_by) else None,
+      m.getSchema.asScala.map(schemaField).toVector,
+      m.getRow_groups.asScala.map(g =>
+        PqRowGroup(g.getNum_rows,
+          g.getColumns.asScala.flatMap(column).toVector)).toVector)
   }
 
-  private def readColumnChunk(r: TReader): Option[PqColumn] = {
-    var meta: Option[PqColumn] = None
-    var oiOff = -1L
-    var oiLen = -1
-    var ciOff = -1L
-    var ciLen = -1
-    r.struct { (id, t) =>
-      id match {
-        case 3 => meta = Some(readColumnMeta(r))
-        case 4 => oiOff = r.zig() // offset_index_offset
-        case 5 => oiLen = r.zig().toInt // offset_index_length
-        case 6 => ciOff = r.zig() // column_index_offset
-        case 7 => ciLen = r.zig().toInt // column_index_length
-        case _ => r.skip(t)
-      }
-    }
-    meta.map(_.copy(
-      offsetIndex =
-        if (oiOff >= 0 && oiLen > 0) Some((oiOff, oiLen)) else None,
-      columnIndex =
-        if (ciOff >= 0 && ciLen > 0) Some((ciOff, ciLen)) else None))
+  /** The FileMetaData length at `b(at)` (the `len` of the trailing
+    * `len | PAR1`), checked against the `size`-byte file.
+    */
+  private def footerLength(b: Array[Byte], at: Int, size: Long): Int = {
+    val metaLen = LibCodec.le32(b, at)
+    require(metaLen > 0 && metaLen <= size - 12,
+      s"torn parquet: footer length $metaLen")
+    metaLen
   }
 
-  private def readRowGroup(r: TReader): PqRowGroup = {
-    var numRows = -1L
-    var cols = Seq.empty[PqColumn]
-    r.struct { (id, t) =>
-      id match {
-        case 1 =>
-          val (et, n) = r.listHeader()
-          require(et == T_STRUCT, "row group columns must be structs")
-          cols = (0 until n).flatMap(_ => readColumnChunk(r))
-        case 3 => numRows = r.zig()
-        case _ => r.skip(t)
-      }
-    }
-    PqRowGroup(numRows, cols)
-  }
-
-  private def readSchemaElement(r: TReader): PqSchemaField = {
-    var name = ""
-    var typ = -1
-    var children = 0
-    var converted: Option[Int] = None
-    var hasLogical = false
-    var repetition: Option[Int] = None
-    var typeLength = 0
-    var scale = 0
-    var precision = 0
-    r.struct { (id, t) =>
-      id match {
-        case 1 => typ = r.zig().toInt
-        case 2 => typeLength = r.zig().toInt
-        case 3 => repetition = Some(r.zig().toInt)
-        case 4 => name = r.str()
-        case 5 => children = r.zig().toInt
-        case 6 => converted = Some(r.zig().toInt) // ConvertedType enum
-        case 7 => scale = r.zig().toInt
-        case 8 => precision = r.zig().toInt
-        case 10 => hasLogical = true; r.skip(t) // LogicalType union
-        case _ => r.skip(t)
-      }
-    }
-    PqSchemaField(name, typ, children, converted, hasLogical, repetition,
-      typeLength, scale, precision)
-  }
+  private def par1(b: Array[Byte], at: Int): Boolean =
+    b(at) == 'P' && b(at + 1) == 'A' && b(at + 2) == 'R' && b(at + 3) == '1'
 
   /** Parse the footer of a complete parquet file image. */
   def read(p: Array[Byte]): PqFooter = {
-    require(p.length >= 12 &&
-      p(0) == 'P' && p(1) == 'A' && p(2) == 'R' && p(3) == '1' &&
-      p(p.length - 4) == 'P' && p(p.length - 3) == 'A' &&
-      p(p.length - 2) == 'R' && p(p.length - 1) == '1',
+    require(p.length >= 12 && par1(p, 0) && par1(p, p.length - 4),
       "not a parquet file (PAR1 framing)")
-    val metaLen = (p(p.length - 8) & 0xff) | ((p(p.length - 7) & 0xff) << 8) |
-      ((p(p.length - 6) & 0xff) << 16) | ((p(p.length - 5) & 0xff) << 24)
-    require(metaLen > 0 && metaLen <= p.length - 12,
-      s"torn parquet: footer length $metaLen")
-    val r = new TReader(p, p.length - 8 - metaLen)
-    var version = -1
-    var numRows = -1L
-    var createdBy: Option[String] = None
-    var schema = Seq.empty[PqSchemaField]
-    var rowGroups = Seq.empty[PqRowGroup]
-    r.struct { (id, t) =>
-      id match {
-        case 1 => version = r.zig().toInt
-        case 2 =>
-          val (et, n) = r.listHeader()
-          require(et == T_STRUCT, "schema elements must be structs")
-          schema = (0 until n).map(_ => readSchemaElement(r))
-        case 3 => numRows = r.zig()
-        case 4 =>
-          val (et, n) = r.listHeader()
-          require(et == T_STRUCT, "row groups must be structs")
-          rowGroups = (0 until n).map(_ => readRowGroup(r))
-        case 6 => createdBy = Some(r.str())
-        case _ => r.skip(t)
-      }
-    }
-    require(numRows >= 0 && schema.nonEmpty,
-      "torn parquet: footer without num_rows/schema")
-    PqFooter(version, numRows, createdBy, schema, rowGroups)
+    val metaLen = footerLength(p, p.length - 8, p.length)
+    val m = new FileMetaData()
+    decode("FileMetaData", m, p, p.length - 8 - metaLen, metaLen)
+    footerOf(m)
   }
 
   def readFile(path: java.nio.file.Path): PqFooter =
-    read(java.nio.file.Files.readAllBytes(path))
+    LibCodec.naming(path)(read(java.nio.file.Files.readAllBytes(path)))
 
   /** Parse a footer reading ONLY the file tail (footer length from the
     * trailing 8 bytes, then exactly the thrift region) plus the 4-byte
     * leading magic — O(footer) IO, the shape metadata reads must have
     * when files are GBs: [[readFile]]'s whole-file read is for
-    * fixture-scale use only.
+    * fixture-scale use only. Failures name the file.
     */
-  def readTail(path: java.nio.file.Path): PqFooter = {
+  def readTail(path: java.nio.file.Path): PqFooter = LibCodec.naming(path) {
     val ch = java.nio.channels.FileChannel.open(path,
       java.nio.file.StandardOpenOption.READ)
     try {
@@ -341,17 +193,14 @@ object ParquetFooter {
         }
         bb.array()
       }
-      val head = readAt(0, 4)
-      require(head.sameElements("PAR1".getBytes("US-ASCII")),
-        "not a parquet file (PAR1 framing)")
       val tail8 = readAt(size - 8, 8)
-      val metaLen = (tail8(0) & 0xff) | ((tail8(1) & 0xff) << 8) |
-        ((tail8(2) & 0xff) << 16) | ((tail8(3) & 0xff) << 24)
-      require(metaLen > 0 && metaLen <= size - 12,
-        s"torn parquet: footer length $metaLen")
-      // synthesize the minimal image read() expects: leading magic +
-      // thrift region + length + trailing magic
-      read(head ++ readAt(size - 8 - metaLen, metaLen + 8))
+      require(par1(readAt(0, 4), 0) && par1(tail8, 4),
+        "not a parquet file (PAR1 framing)")
+      val metaLen = footerLength(tail8, 0, size)
+      val m = new FileMetaData()
+      decode("FileMetaData", m, readAt(size - 8 - metaLen, metaLen), 0,
+        metaLen)
+      footerOf(m)
     } finally ch.close()
   }
 
@@ -374,10 +223,10 @@ object ParquetFooter {
         s"statLong on physical type $t (INT32/INT64 only)")
     }
 
-  /** One parsed page header (thrift compact PageHeader): `pageType` 0 =
-    * data v1, 2 = dictionary, 3 = data v2. `headerLen` is the header's
-    * own byte length, so the page body starts at `off + headerLen`. V2
-    * fields are -1/false when absent.
+  /** One parsed page header: `pageType` 0 = data v1, 2 = dictionary,
+    * 3 = data v2. `headerLen` is the header's own byte length, so the
+    * page body starts at `off + headerLen`. V2 fields are -1/false when
+    * absent.
     */
   final case class PqPageHeader(pageType: Int, uncompressedSize: Int,
       compressedSize: Int, numValues: Int, encoding: Int,
@@ -389,10 +238,11 @@ object ParquetFooter {
     * the data reader uses between pages).
     */
   def readPageHeader(p: Array[Byte], off: Int): PqPageHeader = {
-    val r = new TReader(p, off)
-    var pageType = -1
-    var unc = -1
-    var comp = -1
+    val h = new PageHeader()
+    val len = decode("PageHeader", h, p, off, math.max(p.length - off, 0))
+    require(h.getUncompressed_page_size >= 0 &&
+      h.getCompressed_page_size >= 0,
+      "torn parquet: incomplete page header")
     var numValues = -1
     var encoding = -1
     var defEnc = -1
@@ -401,48 +251,30 @@ object ParquetFooter {
     var defBytes = -1
     var repBytes = -1
     var isCompressed = true
-    r.struct { (id, t) =>
-      id match {
-        case 1 => pageType = r.zig().toInt
-        case 2 => unc = r.zig().toInt
-        case 3 => comp = r.zig().toInt
-        case 5 => // DataPageHeader (v1)
-          r.struct { (fid, ft) =>
-            fid match {
-              case 1 => numValues = r.zig().toInt
-              case 2 => encoding = r.zig().toInt
-              case 3 => defEnc = r.zig().toInt
-              case 4 => repEnc = r.zig().toInt
-              case _ => r.skip(ft)
-            }
-          }
-        case 7 => // DictionaryPageHeader
-          r.struct { (fid, ft) =>
-            fid match {
-              case 1 => numValues = r.zig().toInt
-              case 2 => encoding = r.zig().toInt
-              case _ => r.skip(ft)
-            }
-          }
-        case 8 => // DataPageHeaderV2
-          r.struct { (fid, ft) =>
-            fid match {
-              case 1 => numValues = r.zig().toInt
-              case 2 => numNulls = r.zig().toInt
-              case 4 => encoding = r.zig().toInt
-              case 5 => defBytes = r.zig().toInt
-              case 6 => repBytes = r.zig().toInt
-              case 7 => isCompressed = ft == T_TRUE
-              case _ => r.skip(ft)
-            }
-          }
-        case _ => r.skip(t)
-      }
+    if (h.isSetData_page_header) {
+      val d = h.getData_page_header
+      numValues = d.getNum_values
+      encoding = d.getEncoding.getValue
+      defEnc = d.getDefinition_level_encoding.getValue
+      repEnc = d.getRepetition_level_encoding.getValue
     }
-    require(pageType >= 0 && unc >= 0 && comp >= 0,
-      "torn parquet: incomplete page header")
-    PqPageHeader(pageType, unc, comp, numValues, encoding, defEnc,
-      repEnc, numNulls, defBytes, repBytes, isCompressed, r.pos - off)
+    if (h.isSetDictionary_page_header) {
+      val d = h.getDictionary_page_header
+      numValues = d.getNum_values
+      encoding = d.getEncoding.getValue
+    }
+    if (h.isSetData_page_header_v2) {
+      val d = h.getData_page_header_v2
+      numValues = d.getNum_values
+      numNulls = d.getNum_nulls
+      encoding = d.getEncoding.getValue
+      defBytes = d.getDefinition_levels_byte_length
+      repBytes = d.getRepetition_levels_byte_length
+      isCompressed = d.isIs_compressed
+    }
+    PqPageHeader(h.getType.getValue, h.getUncompressed_page_size,
+      h.getCompressed_page_size, numValues, encoding, defEnc, repEnc,
+      numNulls, defBytes, repBytes, isCompressed, len)
   }
 
   /** One page's location per the OffsetIndex: absolute file offset of
@@ -453,8 +285,7 @@ object ParquetFooter {
       firstRowIndex: Long)
 
   /** A chunk's OffsetIndex: one [[PqPageLocation]] per data page in
-    * file order (parquet-format OffsetIndex field 1; the
-    * unencoded-byte-size histogram field is skipped structurally).
+    * file order.
     */
   final case class PqOffsetIndex(pages: Seq[PqPageLocation])
 
@@ -469,165 +300,68 @@ object ParquetFooter {
       minValues: Seq[Array[Byte]], maxValues: Seq[Array[Byte]],
       boundaryOrder: Int, nullCounts: Option[Seq[Long]])
 
-  /** Parse one OffsetIndex thrift struct from its recorded byte range
+  /** Parse one OffsetIndex struct from its recorded byte range
     * (`PqColumn.offsetIndex`).
     */
   def readOffsetIndex(b: Array[Byte]): PqOffsetIndex = {
-    val r = new TReader(b, 0)
-    var pages = Seq.empty[PqPageLocation]
-    r.struct { (id, t) =>
-      id match {
-        case 1 =>
-          val (et, n) = r.listHeader()
-          require(et == T_STRUCT, "page_locations must be structs")
-          pages = (0 until n).map { _ =>
-            var off = -1L
-            var size = -1
-            var first = -1L
-            r.struct { (fid, ft) =>
-              fid match {
-                case 1 => off = r.zig()
-                case 2 => size = r.zig().toInt
-                case 3 => first = r.zig()
-                case _ => r.skip(ft)
-              }
-            }
-            require(off >= 0 && size > 0 && first >= 0,
-              "torn parquet: incomplete PageLocation")
-            PqPageLocation(off, size, first)
-          }
-        case _ => r.skip(t)
-      }
-    }
+    val oi = new OffsetIndex()
+    decode("OffsetIndex", oi, b, 0, b.length)
+    val pages = oi.getPage_locations.asScala.map { l =>
+      require(l.getOffset >= 0 && l.getCompressed_page_size > 0 &&
+        l.getFirst_row_index >= 0, "torn parquet: incomplete PageLocation")
+      PqPageLocation(l.getOffset, l.getCompressed_page_size,
+        l.getFirst_row_index)
+    }.toVector
     require(pages.nonEmpty, "torn parquet: OffsetIndex without pages")
     PqOffsetIndex(pages)
   }
 
-  /** Parse one ColumnIndex thrift struct from its recorded byte range
-    * (`PqColumn.columnIndex`). Boolean list elements are the compact
-    * protocol's one-byte 1=true / 2=false encoding.
+  /** Parse one ColumnIndex struct from its recorded byte range
+    * (`PqColumn.columnIndex`).
     */
   def readColumnIndex(b: Array[Byte]): PqColumnIndex = {
-    val r = new TReader(b, 0)
-    var nullPages = Seq.empty[Boolean]
-    var minVs = Seq.empty[Array[Byte]]
-    var maxVs = Seq.empty[Array[Byte]]
-    var order = 0
-    var nullCounts: Option[Seq[Long]] = None
-    r.struct { (id, t) =>
-      id match {
-        case 1 =>
-          val (et, n) = r.listHeader()
-          require(et == T_TRUE || et == T_FALSE,
-            s"null_pages element type $et")
-          nullPages = (0 until n).map(_ => r.u8() == 1)
-        case 2 =>
-          val (et, n) = r.listHeader()
-          require(et == T_BINARY, s"min_values element type $et")
-          minVs = (0 until n).map(_ => r.binary())
-        case 3 =>
-          val (et, n) = r.listHeader()
-          require(et == T_BINARY, s"max_values element type $et")
-          maxVs = (0 until n).map(_ => r.binary())
-        case 4 => order = r.zig().toInt
-        case 5 =>
-          val (et, n) = r.listHeader()
-          require(et == T_I64, s"null_counts element type $et")
-          nullCounts = Some((0 until n).map(_ => r.zig()))
-        case _ => r.skip(t)
-      }
+    val ci = new ColumnIndex()
+    decode("ColumnIndex", ci, b, 0, b.length)
+    def bytes(v: java.nio.ByteBuffer): Array[Byte] = {
+      val d = v.duplicate()
+      val out = new Array[Byte](d.remaining)
+      d.get(out)
+      out
     }
+    val nullPages = ci.getNull_pages.asScala.map(_.booleanValue).toVector
+    val minVs = ci.getMin_values.asScala.map(bytes).toVector
+    val maxVs = ci.getMax_values.asScala.map(bytes).toVector
+    val nullCounts =
+      if (ci.isSetNull_counts)
+        Some(ci.getNull_counts.asScala.map(_.longValue).toVector)
+      else None
     require(nullPages.nonEmpty && minVs.length == nullPages.length &&
       maxVs.length == nullPages.length,
       "torn parquet: ColumnIndex list lengths disagree")
     require(nullCounts.forall(_.length == nullPages.length),
       "torn parquet: null_counts length disagrees")
-    PqColumnIndex(nullPages, minVs, maxVs, order, nullCounts)
+    PqColumnIndex(nullPages, minVs, maxVs, ci.getBoundary_order.getValue,
+      nullCounts)
   }
 
-  /** Parse the thrift BloomFilterHeader at `off` (parquet
-    * BloomFilter.md): returns (header byte length, bitset numBytes)
-    * after REQUIRING the only standardized shape — split-block
-    * algorithm, XXHASH, uncompressed (each a one-armed thrift union
-    * whose field 1 must be present); anything else rejects loudly and
-    * the caller falls back to no-bloom planning.
+  /** Parse the BloomFilterHeader at `off` (parquet BloomFilter.md):
+    * returns (header byte length, bitset numBytes) after REQUIRING the
+    * only standardized shape — split-block algorithm, XXHASH,
+    * uncompressed; anything else rejects loudly and the caller falls
+    * back to no-bloom planning.
     */
   def readBloomHeader(p: Array[Byte], off: Int): (Int, Int) = {
-    val r = new TReader(p, off)
-    var numBytes = -1
-    var block = false
-    var xxhash = false
-    var uncompressed = false
-    r.struct { (id, t) =>
-      id match {
-        case 1 => numBytes = r.zig().toInt
-        case 2 => r.struct { (fid, ft) => // BloomFilterAlgorithm union
-          if (fid == 1) { block = true; r.skip(ft) } else r.skip(ft)
-        }
-        case 3 => r.struct { (fid, ft) => // BloomFilterHash union
-          if (fid == 1) { xxhash = true; r.skip(ft) } else r.skip(ft)
-        }
-        case 4 => r.struct { (fid, ft) => // BloomFilterCompression
-          if (fid == 1) { uncompressed = true; r.skip(ft) }
-          else r.skip(ft)
-        }
-        case _ => r.skip(t)
-      }
-    }
+    val h = new BloomFilterHeader()
+    val len = decode("BloomFilterHeader", h, p, off,
+      math.max(p.length - off, 0))
+    val numBytes = h.getNumBytes
     require(numBytes > 0 && numBytes % 32 == 0,
       s"torn parquet: bloom bitset of $numBytes bytes")
-    require(block && xxhash && uncompressed,
+    require(h.getAlgorithm.isSetBLOCK && h.getHash.isSetXXHASH &&
+      h.getCompression.isSetUNCOMPRESSED,
       "parquet bloom filter not the standard split-block/XXHASH/" +
         "uncompressed shape")
-    (r.pos - off, numBytes)
-  }
-
-  // the split-block bloom's eight per-word salts (BloomFilter.md)
-  private val BLOOM_SALT = Array(0x47b6137b, 0x44974d91, 0x8824ad5b,
-    0xa2b7289d, 0x705495c7, 0x2df1424b, 0x9efc4947, 0x5c6bfb31)
-
-  /** Split-block bloom membership: `hash` is xxHash64(seed 0) of the
-    * value's plain-encoded bytes; the bitset is `len` bytes at `off`
-    * (32-byte blocks of eight little-endian 32-bit words). False means
-    * DEFINITELY absent — the pruning lever; true only means maybe.
-    */
-  def bloomMightContain(b: Array[Byte], off: Int, len: Int,
-      hash: Long): Boolean = {
-    val blocks = len / 32
-    require(blocks > 0 && off + len <= b.length,
-      "torn parquet: bloom bitset out of bounds")
-    // block index = high32(hash) * blocks / 2^32 (unsigned fixed-point)
-    val blockOff = off + ((((hash >>> 32) * blocks) >>> 32).toInt << 5)
-    val key = hash.toInt
-    var j = 0
-    while (j < 8) {
-      val bit = (key * BLOOM_SALT(j)) >>> 27
-      val w = blockOff + (j << 2)
-      val word = (b(w) & 0xff) | ((b(w + 1) & 0xff) << 8) |
-        ((b(w + 2) & 0xff) << 16) | (b(w + 3) << 24)
-      if (((word >>> bit) & 1) == 0) return false
-      j += 1
-    }
-    true
-  }
-
-  /** Set the eight salted bits `hash` maps to — the exact mirror of
-    * [[bloomMightContain]], used by the WRITER ([[ParquetWrite]]); the
-    * bitset is 32-byte blocks of eight little-endian 32-bit words.
-    */
-  def bloomInsert(b: Array[Byte], hash: Long): Unit = {
-    val blocks = b.length / 32
-    require(blocks > 0 && b.length % 32 == 0,
-      s"bloom bitset of ${b.length} bytes")
-    val blockOff = ((((hash >>> 32) * blocks) >>> 32).toInt << 5)
-    val key = hash.toInt
-    var j = 0
-    while (j < 8) {
-      val bit = (key * BLOOM_SALT(j)) >>> 27
-      val at = blockOff + (j << 2) + (bit >>> 3)
-      b(at) = (b(at) | (1 << (bit & 7))).toByte
-      j += 1
-    }
+    (len, numBytes)
   }
 
   /** Decode an INT32/INT64/FLOAT/DOUBLE statistics value to Double

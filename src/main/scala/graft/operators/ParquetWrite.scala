@@ -1,15 +1,25 @@
 package graft.operators
 
-/** Parquet WRITER from scratch (pure JVM) — the other half of owning
-  * the engine's storage format: [[ParquetFooter]]/[[ParquetData]] read
-  * foreign parquet without parquet-mr, this module writes parquet
-  * without it. Emits the classic, maximally-interoperable shape every
-  * reader accepts: PAR1 framing, v1 data pages behind
-  * RLE/bit-packed-hybrid definition levels (bit width 1, flat optional
-  * leaves), values either PLAIN or — when a row group's column repeats
-  * enough to pay for it (parquet-mr's own policy shape: bounded
-  * dictionary attempt, fall back to PLAIN past 64 Ki distinct or under
-  * 2× repetition) — a PLAIN dictionary page + RLE_DICTIONARY index
+import scala.jdk.CollectionConverters._
+
+import org.apache.parquet.column.values.bloomfilter.BlockSplitBloomFilter
+import org.apache.parquet.format.{BloomFilterAlgorithm,
+  BloomFilterCompression, BloomFilterHash, BloomFilterHeader,
+  BoundaryOrder, ColumnChunk, ColumnIndex, ColumnMetaData,
+  CompressionCodec, ConvertedType, DataPageHeader, DictionaryPageHeader,
+  Encoding, FieldRepetitionType, FileMetaData, OffsetIndex, PageHeader,
+  PageLocation, PageType, RowGroup, SchemaElement, SplitBlockAlgorithm,
+  Statistics, Type, Uncompressed, Util, XxHash}
+
+/** Parquet WRITER — the other half of owning the engine's storage
+  * format: [[ParquetFooter]]/[[ParquetData]] read parquet for graft's
+  * own planning, this module writes it. Emits the classic,
+  * maximally-interoperable shape every reader accepts: PAR1 framing, v1
+  * data pages behind RLE/bit-packed-hybrid definition levels (bit width
+  * 1, flat optional leaves), values either PLAIN or — when a row group's
+  * column repeats enough to pay for it (parquet-mr's own policy shape:
+  * bounded dictionary attempt, fall back to PLAIN past 64 Ki distinct or
+  * under 2× repetition) — a PLAIN dictionary page + RLE_DICTIONARY index
   * pages, page compression through the codec libraries Spark ships
   * (snappy-java, zstd-jni at level 3, or UNCOMPRESSED),
   * per-chunk Statistics (min_value/max_value/null_count, the modern
@@ -17,12 +27,12 @@ package graft.operators
   * ColumnIndex per stats-bearing chunk — parquet-mr's column-index
   * filter page-skips on our output), opt-in SPLIT-BLOCK BLOOM FILTERS
   * per chunk (`bloomColumns`; BLOCK/XXHASH/UNCOMPRESSED header +
-  * bitset, locations in ColumnMetaData 14/15 — parquet-mr probes them
-  * and `graftpq` plans zero partitions for proven-absent point
-  * lookups), and a FileMetaData footer in the
-  * THRIFT COMPACT PROTOCOL — short-form delta field headers, zigzag
-  * varints, length-prefixed binaries, size+type list headers —
-  * mirrored against the reader's TReader.
+  * bitset, located from ColumnMetaData — parquet-mr probes them and
+  * `graftpq` plans zero partitions for proven-absent point lookups), and
+  * a FileMetaData footer. Every metadata structure is built as the
+  * generated parquet-format class and serialized by
+  * `org.apache.parquet.format.Util`; the only hand-written bytes are
+  * the data encodings (levels, dictionary indices, PLAIN values).
   *
   * Supported leaves: BOOLEAN, INT32 (+DATE days), INT64
   * (+TIMESTAMP_MICROS), FLOAT, DOUBLE, BYTE_ARRAY (UTF8 strings and
@@ -37,9 +47,8 @@ package graft.operators
   * Validated three ways in ParquetWriteSpec: Spark's own parquet-mr
   * vectorized reader and this repo's [[ParquetData]] both decode
   * written files row-identically, and `graftpq` prunes row groups from
-  * the written footer statistics. Formats per the public
-  * parquet-format specification (parquet.thrift, Encodings.md) and the
-  * Thrift compact protocol spec.
+  * the written footer statistics. Encodings per the public
+  * parquet-format specification (Encodings.md).
   */
 object ParquetWrite {
 
@@ -154,67 +163,6 @@ object ParquetWrite {
     case m: PwMapNode => 3 + nodeCount(m.value)
   }
 
-  // thrift compact element types (mirror of ParquetFooter's TReader)
-  private val T_TRUE = 1
-  private val T_I32 = 5
-  private val T_I64 = 6
-  private val T_BINARY = 8
-  private val T_LIST = 9
-  private val T_STRUCT = 12
-
-  /** Thrift compact WRITER: tracks the per-struct last-field-id stack
-    * the short-form delta headers need.
-    */
-  private final class TWriter(out: java.io.ByteArrayOutputStream) {
-    private var last: List[Int] = List(0)
-    def varint(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7fL) != 0) {
-        out.write(((v & 0x7f) | 0x80).toInt)
-        v >>>= 7
-      }
-      out.write(v.toInt)
-    }
-    private def zig(v: Long): Unit = varint((v << 1) ^ (v >> 63))
-    private def fieldHeader(id: Int, typ: Int): Unit = {
-      val delta = id - last.head
-      if (delta > 0 && delta <= 15) out.write((delta << 4) | typ)
-      else { out.write(typ); zig(id.toLong) }
-      last = id :: last.tail
-    }
-    def i32(id: Int, v: Int): Unit = { fieldHeader(id, T_I32); zig(v) }
-    def i64(id: Int, v: Long): Unit = { fieldHeader(id, T_I64); zig(v) }
-    def bool(id: Int, v: Boolean): Unit =
-      fieldHeader(id, if (v) T_TRUE else 2)
-    def binary(id: Int, b: Array[Byte]): Unit = {
-      fieldHeader(id, T_BINARY)
-      varint(b.length)
-      out.write(b, 0, b.length)
-    }
-    def str(id: Int, s: String): Unit = binary(id, s.getBytes("UTF-8"))
-    def listHeader(id: Int, elemType: Int, size: Int): Unit = {
-      fieldHeader(id, T_LIST)
-      if (size < 15) out.write((size << 4) | elemType)
-      else { out.write(0xf0 | elemType); varint(size.toLong) }
-    }
-    // bare LIST ELEMENT writers (no field header): i64 elements are
-    // zigzag varints, binary elements length-prefixed, bool elements
-    // one byte (1 true / 2 false) per the compact protocol
-    def elemI64(v: Long): Unit = zig(v)
-    def elemBinary(b: Array[Byte]): Unit = {
-      varint(b.length.toLong)
-      out.write(b, 0, b.length)
-    }
-    def elemBool(v: Boolean): Unit = out.write(if (v) 1 else 2)
-    /** Open a struct field; the caller writes its fields then calls
-      * [[structEnd]]. List elements use [[structBegin]] directly (no
-      * field header).
-      */
-    def structField(id: Int): Unit = { fieldHeader(id, T_STRUCT); structBegin() }
-    def structBegin(): Unit = last = 0 :: last
-    def structEnd(): Unit = { out.write(0); last = last.tail }
-  }
-
   // -------------------------------------------------------------------
   // value encoding
 
@@ -224,6 +172,15 @@ object ParquetWrite {
       write((v >>> 16) & 0xff); write((v >>> 24) & 0xff)
     }
     def le64(v: Long): Unit = { le32(v.toInt); le32((v >>> 32).toInt) }
+    /** Unsigned LEB128 — the RLE/bit-packed hybrid's run headers. */
+    def varint(v0: Long): Unit = {
+      var v = v0
+      while ((v & ~0x7fL) != 0) {
+        write(((v & 0x7f) | 0x80).toInt)
+        v >>>= 7
+      }
+      write(v.toInt)
+    }
   }
 
   /** RLE/bit-packed hybrid definition levels for a flat optional leaf
@@ -234,16 +191,15 @@ object ParquetWrite {
     */
   private def defLevels(nulls: Array[Boolean], n: Int): Array[Byte] = {
     val body = new Ba
-    val w = new TWriter(body)
     var anyNull = false
     var i = 0
     while (i < n && !anyNull) { anyNull = nulls(i); i += 1 }
     if (!anyNull) {
-      w.varint((n.toLong << 1)) // RLE run of n
+      body.varint(n.toLong << 1) // RLE run of n
       body.write(1) // value 1 in ceil(1/8) = 1 byte
     } else {
       val groups = (n + 7) / 8
-      w.varint((groups.toLong << 1) | 1) // bit-packed header
+      body.varint((groups.toLong << 1) | 1) // bit-packed header
       var g = 0
       while (g < groups) {
         var b = 0
@@ -273,12 +229,11 @@ object ParquetWrite {
       width: Int): Array[Byte] = {
     val n = to - from
     val body = new Ba
-    val w = new TWriter(body)
     var allSame = true
     var i = from + 1
     while (i < to && allSame) { allSame = levels(i) == levels(from); i += 1 }
     if (n > 0 && allSame) {
-      w.varint(n.toLong << 1) // RLE run
+      body.varint(n.toLong << 1) // RLE run
       val byteW = (width + 7) / 8
       var k = 0
       while (k < byteW) {
@@ -286,7 +241,7 @@ object ParquetWrite {
       }
     } else if (n > 0) {
       val groups = (n + 7) / 8
-      w.varint((groups.toLong << 1) | 1) // bit-packed header
+      body.varint((groups.toLong << 1) | 1) // bit-packed header
       var g = 0
       while (g < groups) {
         val bits = new Array[Byte](width)
@@ -445,19 +400,18 @@ object ParquetWrite {
       : Array[Byte] = {
     val out = new Ba
     out.write(width)
-    val w = new TWriter(out)
     var allSame = true
     var i = 1
     while (i < n && allSame) { allSame = idx(i) == idx(0); i += 1 }
     if (n == 0) () // all-null page: empty index region
     else if (allSame) {
-      w.varint(n.toLong << 1)
+      out.varint(n.toLong << 1)
       val byteW = (width + 7) / 8
       var k = 0
       while (k < byteW) { out.write((idx(0) >>> (8 * k)) & 0xff); k += 1 }
     } else {
       val groups = (n + 7) / 8
-      w.varint((groups.toLong << 1) | 1)
+      out.varint((groups.toLong << 1) | 1)
       var g = 0
       while (g < groups) {
         val bits = new Array[Byte](width)
@@ -483,6 +437,23 @@ object ParquetWrite {
 
   private def bitsFor(max: Int): Int =
     32 - Integer.numberOfLeadingZeros(max)
+
+  /** The bytes one `Util.write*` call emits. */
+  private def serialized(write: java.io.OutputStream => Unit)
+      : Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    write(out)
+    out.toByteArray
+  }
+
+  /** A v1 DATA_PAGE header: RLE definition and repetition levels. */
+  private def dataPageHeader(rawLen: Int, packedLen: Int, numValues: Int,
+      encoding: Encoding): Array[Byte] = {
+    val h = new PageHeader(PageType.DATA_PAGE, rawLen, packedLen)
+    h.setData_page_header(new DataPageHeader(numValues, encoding,
+      Encoding.RLE, Encoding.RLE))
+    serialized(Util.writePageHeader(h, _))
+  }
 
   /** One DATA page's location + stats — what the page-index section
     * (ColumnIndex/OffsetIndex) serializes. `firstRow` is row-group
@@ -663,18 +634,11 @@ object ParquetWrite {
             }
             val raw = plainValues(f, entries, entries.length)
             val packed = compressBody(raw, codec)
-            val hdr = new Ba
-            val w = new TWriter(hdr)
-            w.structBegin()
-            w.i32(1, 2) // type: DICTIONARY_PAGE
-            w.i32(2, raw.length)
-            w.i32(3, packed.length)
-            w.structField(7) // DictionaryPageHeader
-            w.i32(1, entries.length) // num_values
-            w.i32(2, 0) // encoding: PLAIN
-            w.structEnd()
-            w.structEnd()
-            val hb = hdr.toByteArray
+            val h = new PageHeader(PageType.DICTIONARY_PAGE, raw.length,
+              packed.length)
+            h.setDictionary_page_header(
+              new DictionaryPageHeader(entries.length, Encoding.PLAIN))
+            val hb = serialized(Util.writePageHeader(h, _))
             dictOffset = Some(pos)
             emit(hb)
             emit(packed)
@@ -715,20 +679,8 @@ object ParquetWrite {
             body.write(pv, 0, pv.length)
             val raw = body.toByteArray
             val packed = compressBody(raw, codec)
-            val hdr = new Ba
-            val w = new TWriter(hdr)
-            w.structBegin()
-            w.i32(1, 0) // type: DATA_PAGE
-            w.i32(2, raw.length)
-            w.i32(3, packed.length)
-            w.structField(5) // DataPageHeader
-            w.i32(1, n) // num_values
-            w.i32(2, if (useDict) 8 else 0) // RLE_DICTIONARY / PLAIN
-            w.i32(3, 3) // definition_level_encoding: RLE
-            w.i32(4, 3) // repetition_level_encoding: RLE
-            w.structEnd()
-            w.structEnd()
-            val hb = hdr.toByteArray
+            val hb = dataPageHeader(raw.length, packed.length, n,
+              if (useDict) Encoding.RLE_DICTIONARY else Encoding.PLAIN)
             // page-index record: location + THIS page's stats (same
             // comparison domains as the chunk stats above)
             val pageStart = pos
@@ -848,20 +800,9 @@ object ParquetWrite {
             body.write(pv, 0, pv.length)
             val raw = body.toByteArray
             val packed = compressBody(raw, codec)
-            val hdr = new Ba
-            val w = new TWriter(hdr)
-            w.structBegin()
-            w.i32(1, 0) // type: DATA_PAGE
-            w.i32(2, raw.length)
-            w.i32(3, packed.length)
-            w.structField(5) // DataPageHeader
-            w.i32(1, entries) // num_values = level entries
-            w.i32(2, 0) // PLAIN
-            w.i32(3, 3) // definition levels: RLE
-            w.i32(4, 3) // repetition levels: RLE
-            w.structEnd()
-            w.structEnd()
-            val hb = hdr.toByteArray
+            // num_values = level entries
+            val hb = dataPageHeader(raw.length, packed.length, entries,
+              Encoding.PLAIN)
             // level-bearing chunk: page LOCATION only (no per-page
             // stats — same reasoning as the omitted chunk Statistics)
             pages += PageInfo(pos, hb.length + packed.length,
@@ -1155,7 +1096,7 @@ object ParquetWrite {
       // BloomFilterHeader (BLOCK/XXHASH/UNCOMPRESSED) + the bitset,
       // sized for ~1% fpp at the chunk's observed NDV (power-of-two
       // bytes, 32 B floor / 1 MiB cap, parquet-mr's policy shape);
-      // locations land in ColumnMetaData fields 14/15
+      // locations land in ColumnMetaData.bloom_filter_offset/length
       val bloomLocs: Seq[Seq[Option[(Long, Int)]]] =
         gs.map(_.chunks.map { ch =>
           Option(ch.bloomHashes).filter(_.nonEmpty).map { hs =>
@@ -1165,22 +1106,14 @@ object ParquetWrite {
             while (nbytes.toLong * 8 < bitsNeeded && nbytes < (1 << 20))
               nbytes <<= 1
             val bits = new Array[Byte](nbytes)
-            hs.foreach(ParquetFooter.bloomInsert(bits, _))
-            val hdr = new Ba
-            val w = new TWriter(hdr)
-            w.structBegin()
-            w.i32(1, nbytes) // numBytes
-            w.structField(2) // algorithm union: 1 = BLOCK
-            w.structField(1); w.structEnd()
-            w.structEnd()
-            w.structField(3) // hash union: 1 = XXHASH
-            w.structField(1); w.structEnd()
-            w.structEnd()
-            w.structField(4) // compression union: 1 = UNCOMPRESSED
-            w.structField(1); w.structEnd()
-            w.structEnd()
-            w.structEnd()
-            val hb = hdr.toByteArray
+            val bloom = new BlockSplitBloomFilter(bits)
+            hs.foreach(bloom.insertHash)
+            val hb = serialized(Util.writeBloomFilterHeader(
+              new BloomFilterHeader(nbytes,
+                BloomFilterAlgorithm.BLOCK(new SplitBlockAlgorithm()),
+                BloomFilterHash.XXHASH(new XxHash()),
+                BloomFilterCompression.UNCOMPRESSED(new Uncompressed())),
+              _))
             val at = pos
             emit(hb)
             emit(bits)
@@ -1194,6 +1127,11 @@ object ParquetWrite {
       // OffsetIndex per chunk (page locations + row-group-relative
       // first row indexes). Readers find both through the ColumnChunk
       // offset fields; readers that predate the page index ignore it.
+      def emitStruct(bytes: Array[Byte]): Option[(Long, Int)] = {
+        val at = pos
+        emit(bytes)
+        Some((at, bytes.length))
+      }
       val indexLocs: Seq[Seq[(Option[(Long, Int)], Option[(Long, Int)])]] =
         gs.map(_.chunks.map { ch =>
           val ci: Option[(Long, Int)] =
@@ -1201,87 +1139,47 @@ object ParquetWrite {
                 p.nullPage || (p.minV.isDefined && p.maxV.isDefined)))
               None // no comparable per-page stats: OffsetIndex only
             else {
-              val b = new Ba
-              val iw = new TWriter(b)
-              iw.structBegin()
-              iw.listHeader(1, T_TRUE, ch.pages.length) // null_pages
-              for (p <- ch.pages) iw.elemBool(p.nullPage)
-              iw.listHeader(2, T_BINARY, ch.pages.length) // min_values
-              for (p <- ch.pages)
-                iw.elemBinary(p.minV.getOrElse(Array.emptyByteArray))
-              iw.listHeader(3, T_BINARY, ch.pages.length) // max_values
-              for (p <- ch.pages)
-                iw.elemBinary(p.maxV.getOrElse(Array.emptyByteArray))
-              iw.i32(4, 0) // boundary_order: UNORDERED
-              iw.listHeader(5, T_I64, ch.pages.length) // null_counts
-              for (p <- ch.pages) iw.elemI64(p.nullCount)
-              iw.structEnd()
-              val bytes = b.toByteArray
-              val at = pos
-              emit(bytes)
-              Some((at, bytes.length))
+              def values(v: PageInfo => Option[Array[Byte]]) =
+                ch.pages.map(p => java.nio.ByteBuffer.wrap(
+                  v(p).getOrElse(Array.emptyByteArray))).asJava
+              val ix = new ColumnIndex(
+                ch.pages.map(p => Boolean.box(p.nullPage)).asJava,
+                values(_.minV), values(_.maxV), BoundaryOrder.UNORDERED)
+              ix.setNull_counts(ch.pages.map(p => Long.box(p.nullCount)).asJava)
+              emitStruct(serialized(Util.writeColumnIndex(ix, _)))
             }
           val oi: Option[(Long, Int)] =
             if (ch.pages.isEmpty) None
-            else {
-              val b = new Ba
-              val iw = new TWriter(b)
-              iw.structBegin()
-              iw.listHeader(1, T_STRUCT, ch.pages.length)
-              for (p <- ch.pages) { // PageLocation
-                iw.structBegin()
-                iw.i64(1, p.offset)
-                iw.i32(2, p.compressedSize)
-                iw.i64(3, p.firstRow)
-                iw.structEnd()
-              }
-              iw.structEnd()
-              val bytes = b.toByteArray
-              val at = pos
-              emit(bytes)
-              Some((at, bytes.length))
-            }
+            else emitStruct(serialized(Util.writeOffsetIndex(
+              new OffsetIndex(ch.pages.map(p => new PageLocation(p.offset,
+                p.compressedSize, p.firstRow)).asJava), _)))
           (ci, oi)
         })
-      // footer: FileMetaData in thrift compact
-      val fb = new Ba
-      val w = new TWriter(fb)
-      w.structBegin()
-      w.i32(1, 1) // version
-      val schemaCount = 1 + fields.map {
-        case _: PwLeafCol => 1
-        case s: PwStructCol => 1 + s.fields.length
-        case _: PwListCol => 3
-        case _: PwMapCol => 4
-        case t: PwTreeCol => nodeCount(t.root)
-      }.sum
-      w.listHeader(2, T_STRUCT, schemaCount) // schema
-      w.structBegin() // root SchemaElement
-      w.i32(3, 0) // repetition: REQUIRED
-      w.str(4, "schema")
-      w.i32(5, fields.length) // num_children
-      w.structEnd()
+      // footer: FileMetaData
+      val schema = new java.util.ArrayList[SchemaElement]()
+      def element(name: String, repetition: Int): SchemaElement = {
+        val e = new SchemaElement(name)
+        e.setRepetition_type(FieldRepetitionType.findByValue(repetition))
+        schema.add(e)
+        e
+      }
+      element("schema", 0).setNum_children(fields.length) // REQUIRED root
       def leafElement(f: PwField, repetition: Int): Unit = {
-        w.structBegin()
-        w.i32(1, f.physicalType)
-        if (f.typeLength > 0) w.i32(2, f.typeLength)
-        w.i32(3, repetition)
-        w.str(4, f.name)
-        f.convertedType.foreach(ct => w.i32(6, ct))
+        val e = element(f.name, repetition)
+        e.setType(Type.findByValue(f.physicalType))
+        if (f.typeLength > 0) e.setType_length(f.typeLength)
+        f.convertedType.foreach(ct =>
+          e.setConverted_type(ConvertedType.findByValue(ct)))
         if (f.convertedType.contains(5)) { // DECIMAL annotation
-          w.i32(7, f.scale)
-          w.i32(8, f.precision)
+          e.setScale(f.scale)
+          e.setPrecision(f.precision)
         }
-        w.structEnd()
       }
       def groupElement(name: String, repetition: Int, children: Int,
-          converted: Option[Int]): Unit = {
-        w.structBegin() // no type field: a group
-        w.i32(3, repetition)
-        w.str(4, name)
-        w.i32(5, children)
-        converted.foreach(ct => w.i32(6, ct))
-        w.structEnd()
+          converted: Option[ConvertedType]): Unit = {
+        val e = element(name, repetition) // no type field: a group
+        e.setNum_children(children)
+        converted.foreach(e.setConverted_type)
       }
       def emitNode(n: PwNode, repetition: Int): Unit = n match {
         case PwLeafNode(f) => leafElement(f, repetition)
@@ -1289,11 +1187,11 @@ object ParquetWrite {
           groupElement(nm, repetition, fs.length, None)
           for (k <- fs) emitNode(k, 1)
         case PwListNode(nm, e) => // 3-level LIST (LogicalTypes.md)
-          groupElement(nm, repetition, 1, Some(3))
+          groupElement(nm, repetition, 1, Some(ConvertedType.LIST))
           groupElement("list", 2, 1, None) // REPEATED
           emitNode(renameNode(e, "element"), 1)
         case PwMapNode(nm, k, v) => // 3-level MAP
-          groupElement(nm, repetition, 1, Some(1))
+          groupElement(nm, repetition, 1, Some(ConvertedType.MAP))
           groupElement("key_value", 2, 2, None) // REPEATED
           leafElement(k.copy(name = "key"), 0) // REQUIRED
           emitNode(renameNode(v, "value"), 1)
@@ -1304,86 +1202,63 @@ object ParquetWrite {
           groupElement(st.name, 1, st.fields.length, None)
           for (f <- st.fields) leafElement(f, 1)
         case ls: PwListCol => // 3-level LIST (LogicalTypes.md)
-          groupElement(ls.name, 1, 1, Some(3))
+          groupElement(ls.name, 1, 1, Some(ConvertedType.LIST))
           groupElement("list", 2, 1, None) // REPEATED
           leafElement(ls.element.copy(name = "element"), 1)
         case mp: PwMapCol => // 3-level MAP
-          groupElement(mp.name, 1, 1, Some(1))
+          groupElement(mp.name, 1, 1, Some(ConvertedType.MAP))
           groupElement("key_value", 2, 2, None) // REPEATED
           leafElement(mp.key.copy(name = "key"), 0) // REQUIRED
           leafElement(mp.value.copy(name = "value"), 1)
         case tc: PwTreeCol => emitNode(tc.root, 1)
       }
-      w.i64(3, total) // num_rows
-      w.listHeader(4, T_STRUCT, gs.length) // row_groups
-      for ((g, gi) <- gs.zipWithIndex) {
-        w.structBegin()
-        w.listHeader(1, T_STRUCT, g.chunks.length)
-        for ((ch, cxi) <- g.chunks.zipWithIndex) {
+      val rowGroups = gs.zipWithIndex.map { case (g, gi) =>
+        val chunks = g.chunks.zipWithIndex.map { case (ch, cxi) =>
           val (ciLoc, oiLoc) = indexLocs(gi)(cxi)
-          w.structBegin() // ColumnChunk
-          w.i64(2, if (ch.chunkStart >= 0) ch.chunkStart
-            else ch.dataPageOffset) // file_offset
-          w.structField(3) // ColumnMetaData
-          w.i32(1, ch.field.physicalType)
-          if (ch.dictPageOffset.isDefined) {
-            w.listHeader(2, T_I32, 3)
-            w.varint((0L << 1)) // PLAIN (dictionary page; zigzag 0)
-            w.varint((3L << 1)) // RLE (levels; zigzag 3)
-            w.varint((8L << 1)) // RLE_DICTIONARY (zigzag 8)
-          } else {
-            w.listHeader(2, T_I32, 2)
-            w.varint((0L << 1)) // PLAIN (zigzag 0)
-            w.varint((3L << 1)) // RLE (zigzag 3)
-          }
-          val parts = ch.path
-          w.listHeader(3, T_BINARY, parts.length)
-          for (part <- parts) {
-            val nb = part.getBytes("UTF-8")
-            w.varint(nb.length.toLong)
-            fb.write(nb, 0, nb.length)
-          }
-          w.i32(4, codec)
-          w.i64(5, ch.numValues)
-          w.i64(6, ch.totalUncompressed)
-          w.i64(7, ch.totalCompressed)
-          w.i64(9, ch.dataPageOffset)
-          ch.dictPageOffset.foreach(w.i64(11, _))
+          val m = new ColumnMetaData(Type.findByValue(ch.field.physicalType),
+            (if (ch.dictPageOffset.isDefined)
+              Seq(Encoding.PLAIN, Encoding.RLE, Encoding.RLE_DICTIONARY)
+            else Seq(Encoding.PLAIN, Encoding.RLE)).asJava,
+            ch.path.asJava, CompressionCodec.findByValue(codec),
+            ch.numValues, ch.totalUncompressed, ch.totalCompressed,
+            ch.dataPageOffset)
+          ch.dictPageOffset.foreach(m.setDictionary_page_offset)
           if (ch.nullCount >= 0) { // nested chunks (-1) omit Statistics
-            w.structField(12) // Statistics
-            w.i64(3, ch.nullCount)
-            ch.maxV.foreach(w.binary(5, _)) // max_value
-            ch.minV.foreach(w.binary(6, _)) // min_value
-            w.structEnd()
+            val st = new Statistics()
+            st.setNull_count(ch.nullCount)
+            ch.maxV.foreach(v => st.setMax_value(v))
+            ch.minV.foreach(v => st.setMin_value(v))
+            m.setStatistics(st)
           }
           bloomLocs(gi)(cxi).foreach { case (o, l) =>
-            w.i64(14, o) // bloom_filter_offset
-            w.i32(15, l) // bloom_filter_length (header + bitset)
+            m.setBloom_filter_offset(o)
+            m.setBloom_filter_length(l) // header + bitset
           }
-          w.structEnd() // ColumnMetaData
+          val cc = new ColumnChunk(
+            if (ch.chunkStart >= 0) ch.chunkStart else ch.dataPageOffset)
+          cc.setMeta_data(m)
           oiLoc.foreach { case (o, l) =>
-            w.i64(4, o) // offset_index_offset
-            w.i32(5, l) // offset_index_length
+            cc.setOffset_index_offset(o)
+            cc.setOffset_index_length(l)
           }
           ciLoc.foreach { case (o, l) =>
-            w.i64(6, o) // column_index_offset
-            w.i32(7, l) // column_index_length
+            cc.setColumn_index_offset(o)
+            cc.setColumn_index_length(l)
           }
-          w.structEnd() // ColumnChunk
+          cc
         }
-        w.i64(2, g.chunks.map(_.totalUncompressed).sum)
-        w.i64(3, g.numRows)
-        w.structEnd()
+        new RowGroup(chunks.asJava, g.chunks.map(_.totalUncompressed).sum,
+          g.numRows)
       }
+      val meta = new FileMetaData(1, schema, total, rowGroups.asJava)
       // created_by must parse under parquet-mr's VersionParser
       // ("<app> version <ver> (build <hash>)") — an unparseable string
       // trips the PARQUET-251 corrupt-statistics guard and makes
       // foreign readers IGNORE the written min/max (observed: orc-mr
       // logged "Ignoring statistics because created_by could not be
       // parsed: graft" and lost pruning on our files)
-      w.str(6, createdBy)
-      w.structEnd()
-      val footer = fb.toByteArray
+      meta.setCreated_by(createdBy)
+      val footer = serialized(Util.writeFileMetaData(meta, _))
       emit(footer)
       val tail = new Ba
       tail.le32(footer.length)

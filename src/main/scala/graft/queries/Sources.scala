@@ -670,13 +670,13 @@ object Sources {
 
   // ---------------------------------------------------------------------
   // S22: parquet footer scan (operators.ParquetFooter) — the engine
-  // reads its OWN storage format's metadata from scratch (PAR1 framing,
-  // thrift compact protocol, FileMetaData/RowGroup/ColumnMetaData/
-  // Statistics), the layer footer-driven planning stands on: per-file
-  // row counts and key-column min/max/null-count WITHOUT touching any
-  // data page. The oracle re-derives every fact by FULL SCAN in DuckDB
-  // — a genuinely independent engine agreeing with a from-scratch
-  // metadata parse of Spark-written files. parquet-mr cross-validation
+  // reads its OWN storage format's metadata (PAR1 framing, then
+  // FileMetaData/RowGroup/ColumnMetaData/Statistics through the
+  // parquet-format classes), the layer footer-driven planning stands
+  // on: per-file row counts and key-column min/max/null-count WITHOUT
+  // touching any data page. The oracle re-derives every fact by FULL
+  // SCAN in DuckDB — a genuinely independent engine agreeing with a
+  // footer-only read of Spark-written files. parquet-mr cross-validation
   // lives in ParquetFooterSpec. Scale shape: ~KB of footer per file
   // regardless of file size; tables fan out one-per-task.
   private def s22ParquetFooter(s: SparkSession, dir: String): DataFrame = {
@@ -721,8 +721,8 @@ object Sources {
 
   // ---------------------------------------------------------------------
   // S23: ORC tail scan (operators.OrcMeta) — the second columnar
-  // format's metadata read from scratch (protobuf wire format,
-  // postscript, ZSTD-framed footer chunks through operators.Zstd over
+  // format's metadata (postscript and footer through the OrcProto
+  // classes, ZSTD-framed footer chunks through operators.Zstd over
   // zstd-jni), answering row counts and column
   // ranges from KBs of tail per file; the oracle re-derives every fact
   // by full scan of the parquet-side events table (the ORC fixture is
@@ -945,7 +945,7 @@ object Sources {
   // ---------------------------------------------------------------------
   // S27: parquet DATA scan from scratch (operators.ParquetData) — the
   // engine reads its OWN storage format's PAGES, not just the footer
-  // (s22): thrift PageHeader walk, dictionary + v1 data pages, the
+  // (s22): PageHeader walk, dictionary + v1 data pages, the
   // RLE/bit-packed hybrid definition levels and index streams, PLAIN
   // longs/doubles and dictionary-encoded strings, ZSTD page
   // decompression through operators.Zstd (zstd-jni) — then the
@@ -1009,7 +1009,7 @@ object Sources {
 
   // ---------------------------------------------------------------------
   // S28: the `graftpq` DataSource V2 (sources.GraftParquet) end-to-end —
-  // the from-scratch parquet stack surfaced the Spark-FIRST way: not a
+  // graft's own parquet stack surfaced the Spark-FIRST way: not a
   // mapPartitions ingest (s27's shape) but a registered source whose
   // scan Catalyst plans like any other — schema inferred from our
   // footer reader, filters pushed into the ScanBuilder (row-group stats
@@ -1039,7 +1039,7 @@ object Sources {
   // ---------------------------------------------------------------------
   // S29: ORC stripe-data scan from scratch (operators.OrcData) — the
   // second columnar format's DATA, not just its tail (s23): stripe
-  // directory and StripeFooter protobufs, integer RLEv2 in all four
+  // directory and StripeFooters, integer RLEv2 in all four
   // sub-encodings, boolean/byte RLE present streams, dictionary AND
   // direct strings, every stream's chunk framing through
   // operators.Zstd — then the recovered rows flow through
@@ -1111,9 +1111,9 @@ object Sources {
       |GROUP BY event_type ORDER BY event_type""".stripMargin
 
   // ---------------------------------------------------------------------
-  // S31: the from-scratch parquet WRITER (operators.ParquetWrite)
+  // S31: graft's own parquet WRITER (operators.ParquetWrite)
   // end-to-end — the engine WRITES its storage format without
-  // parquet-mr (thrift-compact footer, v1 PLAIN pages behind
+  // parquet-mr's writer (parquet-format footer, v1 PLAIN pages behind
   // RLE-hybrid definition levels, snappy-java page compression, modern
   // min_value/max_value chunk statistics), distributed one file per
   // partition where the data is. The read-back goes through Spark's

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table,
   TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions,
@@ -25,7 +26,7 @@ import graft.operators.OrcData.{OrcColStat, OrcStripe, OrcTypeNode}
 
 /** `graftorc` — the engine's own ORC scan as a first-class Spark
   * DataSource V2, the columnar twin of [[GraftParquet]]'s `graftpq`:
-  * planned entirely from the from-scratch readers — schema and stripe
+  * planned entirely from graft's own readers — schema and stripe
   * directory from [[OrcData.readPlan]] (postscript + footer + Metadata
   * tail IO only, never a data byte), stripes decoded by
   * [[OrcData.readStripeRows]] through this repo's own
@@ -147,16 +148,44 @@ object GraftOrc {
     }
   }
 
+  /** The type attribute Spark's ORC writer records its own type name
+    * under (`string` on STRING, `timestamp` on TIMESTAMP,
+    * `timestamp_ntz` on LONG).
+    */
+  private[sources] val CatalystType = "spark.sql.catalyst.type"
+
   /** Root-struct fields to a Spark schema; kinds per orc_proto
     * Type.Kind, restricted to what [[OrcData.readColumnTree]] decodes —
     * LIST/MAP/STRUCT recurse (Spark's ORC source reports every nested
-    * level nullable, matched here for schema parity).
+    * level nullable, matched here for schema parity). Leaf types follow
+    * Spark's ORC reader: a [[CatalystType]] attribute names the type
+    * (only the names whose values this reader decodes are accepted:
+    * the kind's own type, and `timestamp_ntz` micros over LONG), and
+    * TIMESTAMP_INSTANT, which Spark's reader cannot map, rejects.
     */
   private[sources] def toSparkSchema(types: Seq[OrcTypeNode])
       : StructType = {
     require(types.nonEmpty && types.head.kind == 12,
       "graftorc: ORC root type is not a struct")
     def dataTypeOf(id: Int, n: String): DataType = {
+      val node = types(id)
+      val kindType = kindTypeOf(id, n)
+      node.attributes.get(CatalystType) match {
+        case Some(name) if !kindType.isInstanceOf[StructType] &&
+            !kindType.isInstanceOf[ArrayType] &&
+            !kindType.isInstanceOf[MapType] =>
+          CatalystSqlParser.parseDataType(name) match {
+            case t if t == kindType => t
+            case TimestampNTZType if kindType == LongType =>
+              TimestampNTZType
+            case t => throw new IllegalArgumentException(
+              s"graftorc: column '$n' Spark type '$name' over ORC kind " +
+                s"${node.kind} unsupported")
+          }
+        case _ => kindType
+      }
+    }
+    def kindTypeOf(id: Int, n: String): DataType = {
       val node = types(id)
       node.kind match {
         case 0 => BooleanType
@@ -168,7 +197,10 @@ object GraftOrc {
         case 6 => DoubleType
         case 7 => StringType
         case 8 => BinaryType
-        case 9 | 18 => TimestampType // micros from the decode layer
+        case 9 => TimestampType // micros from the decode layer
+        case 18 => throw new IllegalArgumentException(
+          s"graftorc: column '$n' is ORC TIMESTAMP_INSTANT, which " +
+            "Spark's ORC reader does not map either")
         case 14 =>
           require(node.precision > 0 && node.precision <= 38 &&
             node.scale >= 0 && node.scale <= node.precision,
@@ -274,8 +306,13 @@ object GraftOrc {
     val headTypes = OrcData.readPlan(files.head._1.toPath).meta.types
     val headRoot = headTypes.head
     val idByName = headRoot.fieldNames.zip(headRoot.subtypes).toMap
+    // a leaf Spark retyped by attribute (TIMESTAMP_NTZ over LONG) is
+    // not the kind its statistics describe: no pushdown from them
     def kindOf(c: String): Option[Int] =
-      idByName.get(c).map(headTypes(_).kind)
+      idByName.get(c).map(headTypes(_))
+        .filterNot(_.attributes.get(CatalystType).exists(a =>
+          CatalystSqlParser.parseDataType(a) == TimestampNTZType))
+        .map(_.kind)
     // kinds 1-4 = byte/short/int/long (IntegerStatistics), 7 =
     // string, 15 = date (DateStatistics exact epoch days); partition
     // columns answer from their EXACT dir values, any parsable type

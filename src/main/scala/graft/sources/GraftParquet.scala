@@ -2,6 +2,7 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.parquet.column.values.bloomfilter.BlockSplitBloomFilter
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table,
   TableCapability, TableProvider}
@@ -16,6 +17,7 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition,
   SupportsPushDownAggregates, SupportsPushDownFilters,
   SupportsPushDownRequiredColumns, SupportsReportStatistics,
   SupportsRuntimeV2Filtering, Statistics => V2Statistics}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo, Filter,
   GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan,
   LessThanOrEqual, StringStartsWith}
@@ -27,7 +29,7 @@ import graft.operators.{ParquetData, ParquetFooter}
 import graft.operators.ParquetFooter.{PqColumn, PqSchemaField}
 
 /** `graftpq` — the engine's own parquet scan as a first-class Spark
-  * DataSource V2, planned entirely from the from-scratch readers:
+  * DataSource V2, planned entirely from graft's own readers:
   * schema inference and row-group planning from [[ParquetFooter]]
   * (footer-tail IO only, never a data byte), pages decoded by
   * [[ParquetData]] through this repo's own
@@ -179,8 +181,35 @@ object GraftParquet {
     * alongside logicalType for all shapes mapped here). DECIMAL carries
     * the SchemaElement's precision/scale over INT32 / INT64 /
     * FIXED_LEN_BYTE_ARRAY storage.
+    *
+    * An INT64 leaf whose LogicalType is TIMESTAMP maps the way Spark's
+    * `ParquetToSparkSchemaConverter` maps it under the active session
+    * conf: MICROS is `TimestampNTZType` when not adjusted to UTC (and
+    * `spark.sql.parquet.inferTimestampNTZ.enabled` holds), else
+    * `TimestampType`; NANOS is `LongType` under
+    * `spark.sql.legacy.parquet.nanosAsLong` and rejects by name
+    * otherwise. The LogicalType wins over the converted type, as in
+    * parquet-mr.
     */
   private[sources] def leafType(f: PqSchemaField): DataType =
+    f.timestamp.filter(_ => f.physicalType == 2) match {
+      case Some(ts) if ts.unit == 1 =>
+        if (ts.adjustedToUtc ||
+            !SQLConf.get.parquetInferTimestampNTZEnabled) TimestampType
+        else TimestampNTZType
+      case Some(ts) if ts.unit == 2 =>
+        if (SQLConf.get.legacyParquetNanosAsLong) LongType
+        else throw new IllegalArgumentException(
+          s"graftpq: column '${f.name}' is INT64 TIMESTAMP(NANOS), which " +
+            "Spark's parquet reader rejects unless " +
+            "spark.sql.legacy.parquet.nanosAsLong is set")
+      case Some(ts) if ts.unit == 0 => throw new IllegalArgumentException(
+        s"graftpq: TIMESTAMP_MILLIS column '${f.name}' unsupported " +
+          "(writers emit micros)")
+      case _ => convertedLeafType(f)
+    }
+
+  private def convertedLeafType(f: PqSchemaField): DataType =
     (f.physicalType, f.convertedType) match {
       case (_, Some(5)) => // DECIMAL (ConvertedType 5)
         require(f.precision > 0 && f.precision <= 38 &&
@@ -1115,7 +1144,7 @@ object GraftParquet {
             new java.math.BigInteger(v.asInstanceOf[Array[Byte]]),
             scale)), precision, scale)
       }
-    } else leafType(f) match {
+    } else convertedLeafType(f) match {
       case StringType =>
         v => if (v == null) null
           else UTF8String.fromString(v.asInstanceOf[String])
@@ -2505,6 +2534,9 @@ private[sources] class GraftParquetScanBuilder(fullSchema: StructType,
     residual
   }
 
+  private def columnType(name: String): Option[DataType] =
+    fullSchema.fields.find(_.name == name).map(_.dataType)
+
   private def numericCol(name: String): Boolean =
     fullSchema.fields.find(_.name == name).exists(f => f.dataType match {
       case ByteType | ShortType | IntegerType | LongType | FloatType |
@@ -2537,7 +2569,15 @@ private[sources] class GraftParquetScanBuilder(fullSchema: StructType,
     */
   override def pushAggregation(aggregation: Aggregation): Boolean = {
     if (!allConsumed) return false
+    // a MIN/MAX typed from stats must carry the scan's own column type
+    // (the commit manifest records no LogicalType, so it cannot tell a
+    // TIMESTAMP_NTZ leaf from a TIMESTAMP one)
     aggPlan = GraftParquet.planAggregation(aggregation, path, consumed)
+      .filter(_.specs.forall(s => s.kind match {
+        case GraftParquet.PqMin(c) => columnType(c).contains(s.dt)
+        case GraftParquet.PqMax(c) => columnType(c).contains(s.dt)
+        case _ => true
+      }))
     aggPlan.isDefined
   }
 
@@ -3057,7 +3097,7 @@ private[sources] class GraftParquetScan(fullSchema: StructType,
       // per-file cache: a chunk's split-block bloom loads once however
       // many equality filters consult it
       val bloomCache = new scala.collection.mutable.HashMap[Long,
-        Option[(Array[Byte], Int, Int)]]()
+        Option[BlockSplitBloomFilter]]()
       try {
         footer.rowGroups.iterator.zip(starts.iterator).filter {
           case (rg, _) =>
@@ -3265,7 +3305,7 @@ private[sources] class GraftParquetScan(fullSchema: StructType,
       leaves: Map[String, PqSchemaField],
       readAt: ((Long, Int)) => Array[Byte],
       cache: scala.collection.mutable.Map[Long,
-        Option[(Array[Byte], Int, Int)]],
+        Option[BlockSplitBloomFilter]],
       f: Filter): Boolean = {
     def hashOf(leaf: PqSchemaField, v: Any): Option[Long] = {
       if (leaf.convertedType.contains(5)) return None // DECIMAL
@@ -3297,19 +3337,17 @@ private[sources] class GraftParquetScan(fullSchema: StructType,
               val (hlen, nbytes) = ParquetFooter.readBloomHeader(all, 0)
               require(hlen + nbytes <= len,
                 s"torn parquet: bloom $nbytes bytes past its length")
-              Some((all, hlen, nbytes))
+              Some(new BlockSplitBloomFilter(
+                java.util.Arrays.copyOfRange(all, hlen, hlen + nbytes)))
             case None =>
               // header first (tiny; the ≥32-byte bitset follows, so a
               // 32-byte read never crosses EOF), then exactly the bits
               val head = readAt((boff, 32))
               val (hlen, nbytes) = ParquetFooter.readBloomHeader(head, 0)
-              Some((readAt((boff + hlen, nbytes)), 0, nbytes))
+              Some(new BlockSplitBloomFilter(readAt((boff + hlen, nbytes))))
           }
         } catch { case _: Exception => None }) // non-standard: no prune
-      loaded.forall { case (bits, off, len) =>
-        hashOf(leaf, v).forall(h =>
-          ParquetFooter.bloomMightContain(bits, off, len, h))
-      }
+      loaded.forall(bloom => hashOf(leaf, v).forall(bloom.findHash))
     }).getOrElse(true)
     f match {
       case EqualTo(c, v) => might(c, v)
