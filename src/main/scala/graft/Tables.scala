@@ -94,8 +94,7 @@ object Tables {
   def tCpu(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = t(spark, dir, name)
     val dp = spark.sparkContext.defaultParallelism
-    if (sys.env.getOrElse("SPARK_GRAFT_CPU_SPLIT", "1") == "0" ||
-        effectiveSplits(dir, name) >= dp) df
+    if (effectiveSplits(dir, name) >= dp) df
     else df.repartition(dp)
   }
 

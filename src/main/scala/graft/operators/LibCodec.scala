@@ -12,7 +12,7 @@ import scala.util.control.NonFatal
   * so a torn record fails one task loudly instead of escaping as an
   * unchecked library exception.
   */
-private[operators] object LibCodec {
+private[graft] object LibCodec {
 
   /** Decompressed-size ceiling (1 GiB): the bomb guard every codec
     * applies when the input itself gives no tighter bound.

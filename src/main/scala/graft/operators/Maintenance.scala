@@ -2021,8 +2021,9 @@ object Maintenance {
     dvEntries(spark, tablePath, upTo).map(applyDv(df, _)).getOrElse(df)
 
   /** Every recorded vector position, grouped by file basename, sorted,
-    * de-duplicated and GAP-VARINT PACKED — DRIVER-side through the
-    * repo's own parquet decoder (no Spark job at scan-planning time).
+    * de-duplicated and GAP-VARINT PACKED — DRIVER-side through
+    * parquet-hadoop's record reader (no Spark job at scan-planning
+    * time).
     * The retained planning map holds ~1–2 bytes per deleted row
     * (ULEB128 of the first position then the successive gaps) instead
     * of boxed 8-byte Longs — the compressed-descriptor memory shape
@@ -2039,12 +2040,19 @@ object Maintenance {
         .getOrElse(Array.empty[java.io.File]).toSeq
         .filter(f => f.getName.endsWith(".parquet") && f.isFile)
         .foreach { f =>
-          ParquetData.readRows(Files.readAllBytes(f.toPath),
-            Seq("__dv_file", "__dv_pos")).foreach { r =>
-            perFile.getOrElseUpdate(String.valueOf(r(0)),
-              new scala.collection.mutable.ArrayBuffer[Long]()) +=
-              r(1).asInstanceOf[Long]
-          }
+          ParquetFooter.readTail(f.toPath) // bounded footer check first
+          val reader = org.apache.parquet.hadoop.ParquetReader.builder(
+            new org.apache.parquet.hadoop.example.GroupReadSupport(),
+            new org.apache.hadoop.fs.Path(f.toURI)).build()
+          try {
+            var g = reader.read()
+            while (g != null) {
+              perFile.getOrElseUpdate(g.getString("__dv_file", 0),
+                new scala.collection.mutable.ArrayBuffer[Long]()) +=
+                g.getLong("__dv_pos", 0)
+              g = reader.read()
+            }
+          } finally reader.close()
         }
     }
     perFile.iterator.map { case (f, buf) =>

@@ -36,8 +36,7 @@ import org.apache.orc.OrcProto
   * files across every supported codec, dictionary AND direct strings,
   * real nulls, and multi-stripe files.
   *
-  * Scale shape: same contract as [[ParquetData]] — one file image per
-  * task at fixture scale, and by construction every stripe decodes from
+  * Scale shape: one file image per task at fixture scale, and by construction every stripe decodes from
   * its own footer-recorded offset, so a cluster-scale scan hands each
   * task a stripe byte range.
   */

@@ -2,8 +2,7 @@ package graft.operators
 
 /** ORC WRITER from scratch (pure JVM) — the write-side twin of
   * [[OrcData]]/[[OrcMeta]], completing ownership of the second columnar
-  * format in both directions (parquet already has
-  * [[ParquetData]]/[[ParquetWrite]]). Emits the classic uncompressed
+  * format in both directions (parquet has [[ParquetWrite]]). Emits the classic uncompressed
   * shape every ORC reader accepts:
   *
   *   - "ORC" 3-byte header, stripes of INDEX then DATA streams — one

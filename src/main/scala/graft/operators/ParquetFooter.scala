@@ -3,7 +3,10 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 
 import org.apache.parquet.format.{BloomFilterHeader, ColumnChunk,
-  ColumnIndex, FileMetaData, OffsetIndex, PageHeader, SchemaElement}
+  ColumnIndex, ColumnOrder, FileMetaData, OffsetIndex, PageHeader,
+  SchemaElement}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.schema.MessageType
 import shaded.parquet.org.apache.thrift.{TBase, TException}
 import shaded.parquet.org.apache.thrift.protocol.TCompactProtocol
 import shaded.parquet.org.apache.thrift.transport.TIOStreamTransport
@@ -48,7 +51,14 @@ object ParquetFooter {
       bloomOffset: Option[Long] = None,
       bloomLength: Option[Int] = None)
 
-  final case class PqRowGroup(numRows: Long, columns: Seq[PqColumn])
+  /** One row group. `startOffset`/`compressedSize` are its byte span as
+    * parquet-mr computes it when it selects row groups for a split by
+    * midpoint (the first chunk's first page; the group's
+    * total_compressed_size, else the sum of its chunks'), so a split
+    * of exactly this span selects exactly this group.
+    */
+  final case class PqRowGroup(numRows: Long, columns: Seq[PqColumn],
+      startOffset: Long = -1L, compressedSize: Long = -1L)
 
   /** The LogicalType annotation's TIMESTAMP arm: `unit` 0 = MILLIS,
     * 1 = MICROS, 2 = NANOS.
@@ -63,9 +73,23 @@ object ParquetFooter {
       scale: Int = 0, precision: Int = 0, // DECIMAL annotation
       timestamp: Option[PqTimestamp] = None)
 
+  /** `messageType` is the same schema as parquet-mr's [[MessageType]],
+    * what Spark's schema converter and reader take, converted on first
+    * use from the decoded schema elements and column orders.
+    */
   final case class PqFooter(version: Int, numRows: Long,
       createdBy: Option[String], schema: Seq[PqSchemaField],
-      rowGroups: Seq[PqRowGroup])
+      rowGroups: Seq[PqRowGroup])(elements: java.util.List[SchemaElement],
+      columnOrders: Option[java.util.List[ColumnOrder]]) {
+    lazy val messageType: MessageType = {
+      // a schema-only footer, converted the way parquet-mr converts one
+      val m = new FileMetaData(version, elements, numRows,
+        java.util.Collections.emptyList())
+      columnOrders.foreach(m.setColumn_orders)
+      LibCodec.loud("parquet schema")(new ParquetMetadataConverter()
+        .fromParquetMetadata(m).getFileMetaData.getSchema)
+    }
+  }
 
   /** Decode one thrift struct from `p[off, off + len)` into `struct`
     * with the compact protocol, its string and container limits set to
@@ -137,12 +161,33 @@ object ParquetFooter {
 
   private def footerOf(m: FileMetaData): PqFooter = {
     require(m.getSchemaSize > 0, "torn parquet: footer without a schema")
+    val rowGroups = m.getRow_groups.asScala.map { g =>
+      val cols = g.getColumns.asScala.flatMap(column).toVector
+      PqRowGroup(g.getNum_rows, cols,
+        cols.headOption.map(c => math.min(c.dataPageOffset,
+          c.dictPageOffset.getOrElse(c.dataPageOffset))).getOrElse(-1L),
+        if (g.isSetTotal_compressed_size) g.getTotal_compressed_size
+        else cols.map(_.totalCompressedSize).sum)
+    }.toVector
     PqFooter(m.getVersion, m.getNum_rows,
       if (m.isSetCreated_by) Some(m.getCreated_by) else None,
-      m.getSchema.asScala.map(schemaField).toVector,
-      m.getRow_groups.asScala.map(g =>
-        PqRowGroup(g.getNum_rows,
-          g.getColumns.asScala.flatMap(column).toVector)).toVector)
+      m.getSchema.asScala.map(schemaField).toVector, rowGroups)(
+      m.getSchema,
+      if (m.isSetColumn_orders) Some(m.getColumn_orders) else None)
+  }
+
+  /** The absolute file byte range holding every page of a column chunk
+    * (dictionary first when present): what a reader fetches to decode
+    * the chunk.
+    */
+  def chunkRange(col: PqColumn): (Long, Long) = {
+    require(col.dataPageOffset >= 0,
+      s"torn parquet: column '${col.path}' missing its data-page offset")
+    require(col.totalCompressedSize >= 0,
+      s"torn parquet: column '${col.path}' missing its compressed size")
+    val start = math.min(col.dataPageOffset,
+      col.dictPageOffset.filter(_ > 0).getOrElse(col.dataPageOffset))
+    (start, start + col.totalCompressedSize)
   }
 
   /** The FileMetaData length at `b(at)` (the `len` of the trailing
@@ -276,6 +321,164 @@ object ParquetFooter {
       h.getCompressed_page_size, numValues, encoding, defEnc, repEnc,
       numNulls, defBytes, repBytes, isCompressed, len)
   }
+
+  /** Check every page of one column chunk before a reader that trusts
+    * page headers decodes it. parquet-mr allocates a page's declared
+    * `uncompressed_page_size` (and a dictionary's declared entry count)
+    * before it decompresses, so each header is decoded here with the
+    * bounded thrift reader and each declared size must be what the page
+    * body can justify: the body length for uncompressed pages, the
+    * snappy preamble, the gzip ISIZE, the zstd frame content size (else
+    * the frame's block bound) and LZ4_RAW's 255x ratio, each inside the
+    * codec's own worst-case ratio. When `viaIndex`, the chunk's
+    * OffsetIndex (which a page-skipping reader seeks by) must name
+    * exactly the walked data pages. Reads the headers and a few bytes
+    * per body, never a whole page; anything else rejects as an
+    * `IllegalArgumentException`. Returns whether a data page is
+    * BYTE_STREAM_SPLIT-encoded (which Spark's vectorized reader
+    * rejects).
+    */
+  def checkPages(ch: java.nio.channels.FileChannel, col: PqColumn,
+      viaIndex: Boolean): Boolean = {
+    val size = ch.size()
+    def readAt(off: Long, n: Int): Array[Byte] = {
+      val bb = java.nio.ByteBuffer.allocate(n)
+      var pos = off
+      while (bb.hasRemaining) {
+        val r = ch.read(bb, pos)
+        require(r > 0, "torn parquet: short page read")
+        pos += r
+      }
+      bb.array()
+    }
+    val (start, end) = chunkRange(col)
+    require(start >= 4 && start <= end && end <= size - 8,
+      s"torn parquet: column '${col.path}' chunk [$start, $end) lies " +
+        s"outside the $size-byte file")
+    col.codec match {
+      case 0 | 1 | 2 | 6 | 7 => ()
+      case 3 => throw new IllegalArgumentException(
+        "parquet codec 3 (LZO) unsupported")
+      case 4 => throw new IllegalArgumentException(
+        "parquet codec 4 (BROTLI) unsupported")
+      case 5 => throw new IllegalArgumentException(
+        "parquet codec 5 (LZ4 hadoop-framed, deprecated) unsupported — " +
+          "writers emit LZ4_RAW (7)")
+      case c => throw new IllegalArgumentException(
+        s"parquet codec $c unknown")
+    }
+    val dataPages = scala.collection.mutable.ArrayBuffer[(Long, Int)]()
+    var byteStreamSplit = false
+    var pos = start
+    while (pos < end) {
+      // grow the header window until the header decodes (4 MiB at most)
+      val most = math.min(end - pos, 4L << 20)
+      var window = math.min(most, 256L).toInt
+      var h: PqPageHeader = null
+      while (h == null) {
+        try h = readPageHeader(readAt(pos, window), 0)
+        catch {
+          case _: IllegalArgumentException if window < most =>
+            window = math.min(most, window * 4L).toInt
+        }
+      }
+      val body = pos + h.headerLen
+      val bodyLen = h.compressedSize.toLong
+      require(body + bodyLen <= end,
+        s"torn parquet: page at $pos overruns column '${col.path}'")
+      val declared = LibCodec.declared("parquet page", h.uncompressedSize)
+      // a v2 data page keeps its levels uncompressed ahead of the values
+      val levels =
+        if (h.pageType != 3) 0L
+        else math.max(h.repLevelsByteLength, 0).toLong +
+          math.max(h.defLevelsByteLength, 0)
+      require(levels <= bodyLen && levels <= declared,
+        s"torn parquet: v2 page levels exceed the page at $pos")
+      val vOff = body + levels
+      val vLen = bodyLen - levels
+      val vDeclared = declared - levels
+      def justified(ok: Boolean, why: String): Unit =
+        require(ok, s"parquet page at $pos declares $declared " +
+          s"uncompressed bytes, $why")
+      if (col.codec == 0 || (h.pageType == 3 && !h.isCompressed))
+        justified(vDeclared == vLen, s"stored body is $vLen")
+      else col.codec match {
+        case 1 => // snappy: varint preamble = uncompressed length
+          val b = readAt(vOff, math.min(vLen, 5L).toInt)
+          var n = 0L
+          var i = 0
+          while (i < b.length && (i == 0 || (b(i - 1) & 0x80) != 0)) {
+            n |= (b(i) & 0x7fL) << (7 * i); i += 1
+          }
+          justified(n == vDeclared && vDeclared <= 22L * vLen,
+            s"snappy body says $n in $vLen bytes")
+        case 2 => // gzip: ISIZE trailer = uncompressed length mod 2^32
+          justified(vLen >= 18, s"gzip body is $vLen bytes")
+          val isize = LibCodec.le32(readAt(vOff + vLen - 4, 4), 0) &
+            0xffffffffL
+          justified(isize == vDeclared && vDeclared <= 1032L * vLen,
+            s"gzip ISIZE says $isize in $vLen bytes")
+        case 6 => justified(zstdBound(readAt(vOff,
+            math.min(vLen, 18L).toInt), vLen, vDeclared),
+            s"zstd frame cannot hold that in $vLen bytes")
+        case 7 => justified(vDeclared <= 255L * vLen + 16,
+            s"LZ4_RAW cannot expand $vLen bytes that far")
+      }
+      if (h.pageType == 2)
+        require(h.numValues >= 0 && h.numValues <= declared,
+          s"torn parquet: dictionary page at $pos declares " +
+            s"${h.numValues} entries in $declared bytes")
+      else {
+        dataPages += ((pos, (h.headerLen + bodyLen).toInt))
+        byteStreamSplit ||= h.encoding == 9
+      }
+      pos = body + bodyLen
+    }
+    for (loc <- col.offsetIndex if viaIndex) {
+      val pages = readOffsetIndex(readAt(loc._1, loc._2)).pages
+        .map(p => (p.offset, p.compressedSize))
+      require(pages == dataPages.toSeq,
+        s"torn parquet: column '${col.path}' OffsetIndex disagrees " +
+          "with its pages")
+    }
+    byteStreamSplit
+  }
+
+  /** Whether a zstd frame whose first bytes are `head` and whose
+    * length is `len` can decompress to `declared` bytes: exactly its
+    * content size when the frame header records one, else at most one
+    * full block per three compressed bytes (each block carries a
+    * 3-byte header).
+    */
+  private def zstdBound(head: Array[Byte], len: Long,
+      declared: Long): Boolean =
+    head.length >= 6 && LibCodec.le32(head, 0) == 0xFD2FB528 && {
+      val fhd = head(4) & 0xff
+      val single = (fhd & 0x20) != 0
+      val fcsSize = (fhd >>> 6) match {
+        case 0 => if (single) 1 else 0
+        case 1 => 2
+        case 2 => 4
+        case _ => 8
+      }
+      val dictSize = Array(0, 1, 2, 4)(fhd & 3)
+      val fcsAt = 5 + (if (single) 0 else 1) + dictSize
+      if (fcsSize > 0) {
+        fcsAt + fcsSize <= head.length && {
+          var v = 0L
+          var i = 0
+          while (i < fcsSize) {
+            v |= (head(fcsAt + i) & 0xffL) << (8 * i); i += 1
+          }
+          (if (fcsSize == 2) v + 256 else v) == declared
+        }
+      } else {
+        val wd = head(5) & 0xff
+        val base = 1L << (10 + (wd >>> 3))
+        val window = base + (base / 8) * (wd & 7)
+        declared <= (len / 3 + 1) * math.min(window, 128L * 1024)
+      }
+    }
 
   /** One page's location per the OffsetIndex: absolute file offset of
     * its header, compressed size (header + body), and the index of its

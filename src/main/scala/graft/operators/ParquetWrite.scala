@@ -12,8 +12,9 @@ import org.apache.parquet.format.{BloomFilterAlgorithm,
   Statistics, Type, Uncompressed, Util, XxHash}
 
 /** Parquet WRITER — the other half of owning the engine's storage
-  * format: [[ParquetFooter]]/[[ParquetData]] read parquet for graft's
-  * own planning, this module writes it. Emits the classic,
+  * format: [[ParquetFooter]] reads parquet metadata for graft's own
+  * planning (Spark's parquet reader decodes the pages), this module
+  * writes it. Emits the classic,
   * maximally-interoperable shape every reader accepts: PAR1 framing, v1
   * data pages behind RLE/bit-packed-hybrid definition levels (bit width
   * 1, flat optional leaves), values either PLAIN or — when a row group's
@@ -44,10 +45,9 @@ import org.apache.parquet.format.{BloomFilterAlgorithm,
   * lets [[sources.GraftParquet]] (and any foreign reader) plan
   * byte-range tasks over files this module wrote.
   *
-  * Validated three ways in ParquetWriteSpec: Spark's own parquet-mr
-  * vectorized reader and this repo's [[ParquetData]] both decode
-  * written files row-identically, and `graftpq` prunes row groups from
-  * the written footer statistics. Encodings per the public
+  * Validated in ParquetWriteSpec: Spark's own parquet-mr reader decodes
+  * written files row-identically, directly and through `graftpq`, and
+  * `graftpq` prunes row groups from the written footer statistics. Encodings per the public
   * parquet-format specification (Encodings.md).
   */
 object ParquetWrite {
@@ -126,10 +126,8 @@ object ParquetWrite {
 
   /** ARBITRARY-DEPTH nested column (the general shape behind
     * [[PwTreeCol]]): any combination of struct / 3-level LIST /
-    * 3-level MAP over leaves, shredded by the generic Dremel walker —
-    * the write-side twin of the read path's
-    * [[sources.GraftParquet]] TreePlan (and of [[OrcWrite]]'s
-    * depth-unlimited tree shredder). Values carried as: struct →
+    * 3-level MAP over leaves, shredded by the generic Dremel walker
+    * (the twin of [[OrcWrite]]'s depth-unlimited tree shredder). Values carried as: struct →
     * Array[Any] aligned with fields; list → Seq[Any]; map →
     * Seq[(Any, Any)]; every node optional except map keys (REQUIRED
     * per the spec).
@@ -221,8 +219,8 @@ object ParquetWrite {
 
   /** The general level region (nested columns: definition levels of
     * width > 1 and repetition levels): RLE single run when constant,
-    * bit-packed groups of 8 otherwise, 4-byte length prefix — the same
-    * hybrid [[ParquetData.readHybrid]] and every spec reader decode.
+    * bit-packed groups of 8 otherwise, 4-byte length prefix — the
+    * RLE/bit-packed hybrid every parquet reader decodes.
     * `levels[from, to)` is the page's slice; `width` ≥ 1.
     */
   private def levelRegion(levels: Array[Int], from: Int, to: Int,

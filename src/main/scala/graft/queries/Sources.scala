@@ -943,17 +943,12 @@ object Sources {
       |FROM lines GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   // ---------------------------------------------------------------------
-  // S27: parquet DATA scan from scratch (operators.ParquetData) — the
-  // engine reads its OWN storage format's PAGES, not just the footer
-  // (s22): PageHeader walk, dictionary + v1 data pages, the
-  // RLE/bit-packed hybrid definition levels and index streams, PLAIN
-  // longs/doubles and dictionary-encoded strings, ZSTD page
-  // decompression through operators.Zstd (zstd-jni) — then the
-  // recovered rows flow through Spark-native groupBy/agg. The oracle
-  // full-scans the same events data on the parquet side in DuckDB, so
-  // a slipped level, wrong dictionary index, misaligned null, or
-  // byte-order bug in any page fails the value compare. Same fan-out
-  // contract as s22/s23: one FILE per task.
+  // S27: parquet DATA scan of the engine's zstd fixture through Spark's
+  // own parquet reader (dictionary + v1 data pages, RLE/bit-packed
+  // levels, PLAIN longs/doubles and dictionary-encoded strings, ZSTD
+  // page decompression) — then the rows flow through Spark-native
+  // groupBy/agg. The oracle full-scans the same events data on the
+  // parquet side in DuckDB, so the fixture's pages are value-checked.
   /** Build-once zstd-compressed parquet fixture (explicitly pinned so
     * the page path exercises the zstd page decompression regardless
     * of the session default); 2 files so the file fan-out is real.
@@ -973,22 +968,10 @@ object Sources {
     tmp
   }
 
-  private def s27ParquetScan(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val tmp = ensureParquetDataFixture(s, dir)
-    val files = new java.io.File(tmp).listFiles()
-      .filter(f => f.getName.endsWith(".parquet"))
-      .map(_.getAbsolutePath).toSeq.sorted
-    s.createDataset(files).repartition(math.max(files.size, 1))
-      .mapPartitions(_.flatMap { path =>
-        val bytes = java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(path))
-        graft.operators.ParquetData.readRows(bytes,
-          Seq("event_id", "user_id", "event_type", "value"))
-          .map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long],
-            r(2).asInstanceOf[String], r(3).asInstanceOf[Double]))
-      })
-      .toDF("event_id", "user_id", "event_type", "value")
+  private def s27ParquetScan(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(ensureParquetDataFixture(s, dir))
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        col("value"))
       .groupBy(col("event_type"))
       .agg((sum(round(col("value") * 100).cast("long")) / 100.0)
         .as("sum_value"),
@@ -997,7 +980,6 @@ object Sources {
         max(col("event_id")).as("max_id"),
         count(lit(1)).as("n"))
       .orderBy(col("event_type"))
-  }
 
   private val s27ParquetScanSql =
     """SELECT event_type,
@@ -1010,7 +992,7 @@ object Sources {
   // ---------------------------------------------------------------------
   // S28: the `graftpq` DataSource V2 (sources.GraftParquet) end-to-end —
   // graft's own parquet stack surfaced the Spark-FIRST way: not a
-  // mapPartitions ingest (s27's shape) but a registered source whose
+  // plain file read (s27's shape) but a registered source whose
   // scan Catalyst plans like any other — schema inferred from our
   // footer reader, filters pushed into the ScanBuilder (row-group stats
   // pruning driver-side), columns pruned down to the leaves the query
@@ -1160,9 +1142,9 @@ object Sources {
   // every real warehouse file has. The fixture derives every value
   // EXACTLY (string-built decimals: no double-rounding ambiguity
   // between engines), Spark's writer emits it zstd-compressed, the
-  // from-scratch DSv2 source plans + decodes it (Dremel level
-  // reassembly), and the oracle re-derives the same aggregate from the
-  // source table in DuckDB.
+  // graftpq DSv2 source plans it and Spark's parquet reader decodes
+  // it, and the oracle re-derives the same aggregate from the source
+  // table in DuckDB.
 
   def ensureRichParquetFixture(s: SparkSession, dir: String): String = {
     val tmp = new java.io.File(sys.props("java.io.tmpdir"),
@@ -1408,11 +1390,10 @@ object Sources {
     tmp
   }
 
-  // S37: MAP columns through the from-scratch graftpq plane — the
-  // 3-level `key_value` Dremel shape decoded as two leaf streams
-  // (required keys, optional values) sharing the map's rep/def
-  // skeleton. Null maps, empty maps and null VALUES are all distinct
-  // states the level streams must keep apart; the oracle re-derives
+  // S37: MAP columns through the graftpq plane — the 3-level
+  // `key_value` shape (required keys, optional values). Null maps,
+  // empty maps and null VALUES are all distinct states the read must
+  // keep apart; the oracle re-derives
   // every entry from the source table's closed forms.
   private def s37MapScan(s: SparkSession, dir: String): DataFrame = {
     val tmp = ensureMapParquetFixture(s, dir)
@@ -1564,9 +1545,8 @@ object Sources {
     tmp
   }
 
-  // S40: LIST-of-STRUCT through the from-scratch graftpq plane — the
-  // element struct's leaves share the list's Dremel skeleton and the
-  // per-slot def levels keep element-null / field-null / value apart;
+  // S40: LIST-of-STRUCT through the graftpq plane — element-null,
+  // field-null and value must stay apart;
   // the oracle re-derives every leg from the source table's closed
   // forms.
   private def s40ListStruct(s: SparkSession, dir: String): DataFrame = {
@@ -1830,8 +1810,7 @@ object Sources {
   /** Build-once parquet fixture with DEEP nested columns — a
     * list-of-list, a struct containing a list, and a map whose value
     * is a struct containing a list, with nulls/empties at every level
-    * — the s43 input (every shape the generic TreePlan assembler
-    * covers beyond the one-level specialized plans).
+    * — the s43 input.
     */
   def ensureDeepPqFixture(s: SparkSession, dir: String): String = {
     val tmp = new java.io.File(sys.props("java.io.tmpdir"),
@@ -1900,11 +1879,9 @@ object Sources {
     tmp
   }
 
-  // S43: DEEP-nested parquet through the generic graftpq node-tree
-  // assembler — list-of-list, struct-containing-list, map values that
-  // are structs containing lists: each leaf's level streams parse into
-  // nested slots, siblings zip by their shared list skeleton, and def
-  // thresholds keep null-ancestor / null-value / empty-collection
+  // S43: DEEP-nested parquet through graftpq — list-of-list,
+  // struct-containing-list, map values that are structs containing
+  // lists: null-ancestor / null-value / empty-collection must stay
   // apart at EVERY level. The oracle re-derives each aggregate from
   // the source table's closed forms.
   private def s43PqDeepnested(s: SparkSession, dir: String): DataFrame =

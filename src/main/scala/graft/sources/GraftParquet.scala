@@ -1,9 +1,14 @@
 package graft.sources
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.parquet.column.values.bloomfilter.BlockSplitBloomFilter
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.parquet.schema.MessageType
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
+import org.apache.spark.sql.catalyst.expressions.JoinedRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table,
   TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, Literal,
@@ -17,6 +22,11 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition,
   SupportsPushDownAggregates, SupportsPushDownFilters,
   SupportsPushDownRequiredColumns, SupportsReportStatistics,
   SupportsRuntimeV2Filtering, Statistics => V2Statistics}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.datasources.v2.parquet.{
+  ParquetPartitionReaderFactory, ParquetScan}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo, Filter,
   GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan,
@@ -25,45 +35,38 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.operators.{ParquetData, ParquetFooter}
+import graft.operators.{LibCodec, ParquetFooter}
 import graft.operators.ParquetFooter.{PqColumn, PqSchemaField}
 
 /** `graftpq` — the engine's own parquet scan as a first-class Spark
-  * DataSource V2, planned entirely from graft's own readers:
-  * schema inference and row-group planning from [[ParquetFooter]]
-  * (footer-tail IO only, never a data byte), pages decoded by
-  * [[ParquetData]] through this repo's own
-  * Snappy/Inflate/Zstd/Lz4 codecs. The scan-planning surface Spark's
-  * built-in parquet source gets from parquet-mr is re-derived here:
+  * DataSource V2. graft does the planning from its own metadata
+  * readers; Spark's own parquet reader decodes the pages:
   *
+  *  - '''schema''' from [[ParquetFooter]]'s bounded footer decode
+  *    (footer-tail IO only, never a data byte), typed by Spark's
+  *    `ParquetToSparkSchemaConverter`;
   *  - '''column pruning''' ([[SupportsPushDownRequiredColumns]]): only
-  *    the requested leaves' chunk ranges are ever read or decoded;
+  *    the requested leaves' chunks are ever read or decoded;
   *  - '''filter pushdown''' ([[SupportsPushDownFilters]]): numeric AND
   *    string comparisons, IN, LIKE-prefix, IS [NOT] NULL and null-safe
-  *    equality prune whole ROW GROUPS against footer min/max/null
-  *    stats before any task launches, then PAGES within the survivors
-  *    against the ColumnIndex/OffsetIndex (parquet-mr RowRanges
-  *    semantics: per-column surviving page spans intersect, pruned
-  *    page bodies are never decompressed). Every filter is still
-  *    re-evaluated by Spark post-scan — stats pruning is page/group
-  *    granular, so the pushed set is advisory, exactly like
-  *    parquet-mr's;
+  *    equality prune whole FILES (partition dirs, commit manifest) and
+  *    ROW GROUPS (footer min/max/null stats, split-block blooms) before
+  *    any task launches, then PAGES within the survivors against the
+  *    ColumnIndex/OffsetIndex (parquet-mr RowRanges semantics:
+  *    per-column surviving page spans intersect). Every filter is
+  *    still re-evaluated by Spark post-scan — stats pruning is
+  *    page/group granular, so the pushed set is advisory, exactly
+  *    like parquet-mr's;
   *  - '''split planning''': one [[InputPartition]] per surviving row
-  *    group, and each task fetches ONLY its chunks' byte ranges
-  *    ([[ParquetData.chunkRange]]) via positional reads — at 100 TB a
-  *    task touches O(its row group), not O(its file).
+  *    group; each task hands Spark's `ParquetPartitionReaderFactory`
+  *    exactly that group's byte span, checks the requested chunks'
+  *    page headers first, and masks the rows to the planned page
+  *    ranges minus the deletion-vector positions ([[GraftPqReader]])
+  *    — at 100 TB a task touches O(its row group), not O(its file).
   *
   * Registered as `graftpq` via DataSourceRegister (META-INF/services),
-  * so `spark.read.format("graftpq").load(dir)` resolves it. Supported
-  * shapes: flat leaves (incl. DECIMAL over INT32/INT64/FLBA/BYTE_ARRAY
-  * per LogicalTypes.md) and ANY standard nesting of struct / 3-level
-  * LIST / 3-level MAP to any depth — the common one-level shapes run
-  * specialized assembly, everything deeper (list-of-list, list-of-map,
-  * lists and maps inside structs, nested map values…) the generic
-  * Dremel node-tree assembler ([[GraftParquet.TreePlan]]); legacy
-  * 2-level repeated shapes, non-leaf/non-required map keys and
-  * remaining unsupported physical types reject loudly by name at
-  * schema-inference time.
+  * so `spark.read.format("graftpq").load(dir)` resolves it. It reads
+  * every shape Spark's parquet reader reads.
   */
 class GraftParquet extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
@@ -147,8 +150,7 @@ object GraftParquet {
           .map(_._1)
       }
     if (files.isEmpty) return new StructType()
-    val base = toSparkSchema(
-      ParquetFooter.readTail(files.head.toPath).schema)
+    val base = sparkSchema(ParquetFooter.readTail(files.head.toPath))
     // partition columns live in dir names, not file leaves — appended
     // last, the same surface Spark's own file sources expose
     StructType(base.fields ++ partCols.map { case (n, t) =>
@@ -175,260 +177,104 @@ object GraftParquet {
     }
   }
 
-  /** Map a leaf's physical + converted type to Spark; parquet physical
-    * types per format spec §Types, converted types per
-    * §LogicalTypes.md's compat table (Spark writes converted_type
-    * alongside logicalType for all shapes mapped here). DECIMAL carries
-    * the SchemaElement's precision/scale over INT32 / INT64 /
-    * FIXED_LEN_BYTE_ARRAY storage.
-    *
-    * An INT64 leaf whose LogicalType is TIMESTAMP maps the way Spark's
-    * `ParquetToSparkSchemaConverter` maps it under the active session
-    * conf: MICROS is `TimestampNTZType` when not adjusted to UTC (and
-    * `spark.sql.parquet.inferTimestampNTZ.enabled` holds), else
-    * `TimestampType`; NANOS is `LongType` under
-    * `spark.sql.legacy.parquet.nanosAsLong` and rejects by name
-    * otherwise. The LogicalType wins over the converted type, as in
-    * parquet-mr.
+  /** A footer's Spark schema: Spark's own converter over parquet-mr's
+    * view of the schema graft's bounded decoder parsed, under the
+    * session's parquet settings, so the schema graftpq reports is the
+    * one Spark's reader decodes. Every field reads nullable, Spark's
+    * file-source convention (a scan over many files cannot promise any
+    * file's REQUIRED annotation holds across all of them).
     */
-  private[sources] def leafType(f: PqSchemaField): DataType =
-    f.timestamp.filter(_ => f.physicalType == 2) match {
-      case Some(ts) if ts.unit == 1 =>
-        if (ts.adjustedToUtc ||
-            !SQLConf.get.parquetInferTimestampNTZEnabled) TimestampType
-        else TimestampNTZType
-      case Some(ts) if ts.unit == 2 =>
-        if (SQLConf.get.legacyParquetNanosAsLong) LongType
-        else throw new IllegalArgumentException(
-          s"graftpq: column '${f.name}' is INT64 TIMESTAMP(NANOS), which " +
-            "Spark's parquet reader rejects unless " +
-            "spark.sql.legacy.parquet.nanosAsLong is set")
-      case Some(ts) if ts.unit == 0 => throw new IllegalArgumentException(
-        s"graftpq: TIMESTAMP_MILLIS column '${f.name}' unsupported " +
-          "(writers emit micros)")
-      case _ => convertedLeafType(f)
+  private[sources] def sparkSchema(footer: ParquetFooter.PqFooter)
+      : StructType = {
+    val converter = new ParquetToSparkSchemaConverter(SQLConf.get)
+    val m = footer.messageType
+    val names = m.getFields.asScala.map(_.getName)
+    require(names.distinct.length == names.length,
+      s"graftpq: duplicate column names in ${names.mkString(", ")}")
+    // field by field, so a column Spark's reader rejects is named
+    graft.Tables.asNullable(StructType(m.getFields.asScala.toSeq.flatMap {
+      t =>
+        try converter.convert(new MessageType(m.getName, t)).fields
+        catch {
+          case NonFatal(e) =>
+            throw new IllegalArgumentException(
+              s"graftpq: column '${t.getName}': ${e.getMessage}", e)
+        }
+    })).asInstanceOf[StructType]
+  }
+
+  /** The footer's top-level primitive columns by name: the leaves whose
+    * footer, page-index and bloom statistics describe rows one to one.
+    */
+  private[sources] def flatLeaves(schema: Seq[PqSchemaField])
+      : Map[String, PqSchemaField] = {
+    require(schema.nonEmpty, "graftpq: empty parquet schema")
+    var i = 1 // skip the root element
+    def skip(): PqSchemaField = {
+      require(i < schema.length, "graftpq: torn schema list")
+      val f = schema(i)
+      i += 1
+      (0 until f.numChildren).foreach(_ => skip())
+      f
     }
+    (0 until schema.head.numChildren).map(_ => skip())
+      .filter(f => f.numChildren == 0 && !f.repetition.contains(2))
+      .map(f => f.name -> f).toMap
+  }
 
-  private def convertedLeafType(f: PqSchemaField): DataType =
-    (f.physicalType, f.convertedType) match {
-      case (_, Some(5)) => // DECIMAL (ConvertedType 5)
-        require(f.precision > 0 && f.precision <= 38 &&
-          f.scale >= 0 && f.scale <= f.precision,
-          s"graftpq: DECIMAL(${f.precision},${f.scale}) on '${f.name}' " +
-            "out of range")
-        require(f.physicalType == 1 || f.physicalType == 2 ||
-          f.physicalType == 7 || f.physicalType == 6,
-          s"graftpq: DECIMAL column '${f.name}' over physical type " +
-            s"${f.physicalType} unsupported")
-        DecimalType(f.precision, f.scale)
-      case (0, _) => BooleanType
-      case (1, Some(6)) => DateType // DATE: days since epoch
-      case (1, Some(15)) => ByteType // INT_8
-      case (1, Some(16)) => ShortType // INT_16
-      case (1, _) => IntegerType
-      case (2, Some(10)) => TimestampType // TIMESTAMP_MICROS
-      case (2, Some(9)) => throw new IllegalArgumentException(
-        s"graftpq: TIMESTAMP_MILLIS column '${f.name}' unsupported " +
-          "(writers emit micros)")
-      case (2, _) => LongType
-      case (3, _) => TimestampType // INT96 legacy: decoded to micros
-      case (4, _) => FloatType
-      case (5, _) => DoubleType
-      case (6, Some(0)) | (6, Some(4)) => StringType // UTF8 / ENUM
-      case (6, None) => BinaryType // unannotated bytes (Spark parity)
-      case (6, Some(ct)) => throw new IllegalArgumentException(
-        s"graftpq: BYTE_ARRAY column '${f.name}' converted type $ct " +
-          "unsupported")
-      case (p, _) => throw new IllegalArgumentException(
-        s"graftpq: column '${f.name}' physical type $p unsupported " +
-          "(FIXED_LEN_BYTE_ARRAY outside DECIMAL rejects by name)")
+  /** The dotted paths of the file leaves a read of `data` decodes: a
+    * leaf is requested when its path walks through `data`'s struct
+    * fields by name; a list or map on the way brings every leaf under
+    * it.
+    */
+  private[sources] def requestedPaths(schema: Seq[PqSchemaField],
+      data: StructType): Set[String] = {
+    require(schema.nonEmpty, "graftpq: empty parquet schema")
+    val out = Set.newBuilder[String]
+    var i = 1 // skip the root element
+    def walk(prefix: String, want: Option[DataType]): Unit = {
+      require(i < schema.length, "graftpq: torn schema list")
+      val f = schema(i)
+      i += 1
+      val path = if (prefix.isEmpty) f.name else s"$prefix.${f.name}"
+      val mine = want.flatMap {
+        case st: StructType => st.fields.find(_.name == f.name)
+          .map(_.dataType)
+        case other => Some(other)
+      }
+      if (f.numChildren == 0) { if (mine.isDefined) out += path }
+      else (0 until f.numChildren).foreach(_ => walk(path, mine))
     }
+    (0 until schema.head.numChildren).foreach(_ => walk("", Some(data)))
+    out.result()
+  }
 
-  /** One leaf's decode contract: its dotted column path in the row
-    * group, the schema element (physical type / type_length / decimal
-    * annotation), and the Dremel level bounds accumulated on the path
-    * from the root (an optional or repeated ancestor each add one
-    * definition level; a repeated ancestor adds one repetition level).
+  /** The Spark type of an INT32/INT64 leaf's statistics, from its
+    * physical and converted type (what the commit manifest records);
+    * None for anything else, which then answers no MIN/MAX.
     */
-  final case class PqLeafPlan(path: String, field: PqSchemaField,
-      maxDef: Int, maxRep: Int)
-
-  /** One top-level Spark field re-assembled from leaf streams. */
-  sealed trait PqFieldPlan extends Serializable {
-    def name: String
-    def leafs: Seq[PqLeafPlan]
-    def sparkField: StructField
+  private def intStatType(physicalType: Int, convertedType: Option[Int])
+      : Option[DataType] = (physicalType, convertedType) match {
+    case (1, None) => Some(IntegerType)
+    case (1, Some(6)) => Some(DateType)
+    case (1, Some(15)) => Some(ByteType)
+    case (1, Some(16)) => Some(ShortType)
+    case (2, None) => Some(LongType)
+    case (2, Some(10)) => Some(TimestampType) // TIMESTAMP_MICROS
+    case _ => None
   }
-  // Read schemas report everything nullable, matching Spark's own
-  // file-source convention (a scan over many files can't promise any
-  // file's REQUIRED annotation holds across all of them); the decode
-  // paths still honor each chunk's true repetition via the leaf plans.
 
-  /** A flat leaf column. */
-  final case class FlatPlan(leaf: PqLeafPlan) extends PqFieldPlan {
-    def name: String = leaf.field.name
-    def leafs: Seq[PqLeafPlan] = Seq(leaf)
-    def sparkField: StructField =
-      StructField(name, leafType(leaf.field), nullable = true)
-  }
-  /** The 3-level LIST shape (LogicalTypes.md `<list-repetition> group
-    * NAME (LIST) { repeated group list { <element> } }`): `nullDef` is
-    * the highest def level meaning the list itself is null (-1 for a
-    * required list), `emptyDef` the level meaning present-but-empty.
+  /** Whether group-relative row `pos` lies in one of the sorted
+    * disjoint `[start, end)` pairs of `ranges`.
     */
-  final case class ListPlan(name: String, leaf: PqLeafPlan,
-      nullDef: Int, emptyDef: Int, listNullable: Boolean,
-      elemNullable: Boolean) extends PqFieldPlan {
-    def leafs: Seq[PqLeafPlan] = Seq(leaf)
-    def sparkField: StructField = StructField(name,
-      ArrayType(leafType(leaf.field), containsNull = true),
-      nullable = true)
-  }
-  /** The 3-level LIST whose element is a STRUCT of primitive leaves —
-    * every leaf stream shares the list's rep/def skeleton, so each
-    * reassembles through the list machinery and the per-element DEF
-    * levels arbitrate the three states the zip must keep apart: def <
-    * `structPresentDef` = the struct element itself is null, def ≥
-    * that but < the leaf's max = the struct is present with this FIELD
-    * null, def = the leaf max = a value.
-    */
-  final case class ListStructPlan(name: String, fields: Seq[PqLeafPlan],
-      structPresentDef: Int, nullDef: Int, emptyDef: Int)
-    extends PqFieldPlan {
-    def leafs: Seq[PqLeafPlan] = fields
-    def sparkField: StructField = StructField(name,
-      ArrayType(StructType(fields.map { l =>
-        StructField(l.field.name, leafType(l.field), nullable = true)
-      }), containsNull = true), nullable = true)
-  }
-  /** A struct of fields, each itself a [[FlatPlan]] or a nested
-    * [[StructPlan]] (structs-of-structs to any depth; repeated shapes
-    * inside a struct reject at plan time). The struct is present at
-    * def level ≥ `presentDef` (0 for a required struct, which is never
-    * null) — a descendant leaf's def < presentDef marks the whole
-    * struct null at that row, and def levels below an inner struct's
-    * presentDef mark that INNER struct null while the outer one still
-    * materializes (the standard Dremel reading).
-    */
-  final case class StructPlan(name: String, presentDef: Int,
-      fields: Seq[PqFieldPlan]) extends PqFieldPlan {
-    def leafs: Seq[PqLeafPlan] = fields.flatMap(_.leafs)
-    def sparkField: StructField = StructField(name,
-      StructType(fields.map(_.sparkField)), nullable = true)
-  }
-  /** The standard 3-level MAP shape (LogicalTypes.md `<map-repetition>
-    * group NAME (MAP) { repeated group key_value { required KEY;
-    * <value-repetition> VALUE; } }`): two leaf streams sharing the
-    * map's rep/def structure — in Dremel terms a LIST of (key, value)
-    * pairs, so both streams reassemble through the list machinery and
-    * zip into Spark's map representation.
-    */
-  final case class MapPlan(name: String, keyLeaf: PqLeafPlan,
-      valueLeaf: PqLeafPlan, nullDef: Int, emptyDef: Int,
-      mapNullable: Boolean, valueNullable: Boolean) extends PqFieldPlan {
-    def leafs: Seq[PqLeafPlan] = Seq(keyLeaf, valueLeaf)
-    // valueContainsNull always true: the many-files nullable-reporting
-    // convention (class note above) — `valueNullable` still drives the
-    // def-level accounting for THIS file's chunks
-    def sparkField: StructField = StructField(name,
-      MapType(leafType(keyLeaf.field), leafType(valueLeaf.field),
-        valueContainsNull = true), nullable = true)
-  }
-  /** A hive-style partition column: no leaf streams in the file — the
-    * per-file value comes from the `col=value` path segment (raw,
-    * unescaped; None = `__HIVE_DEFAULT_PARTITION__`), typed by the
-    * committed table's tracked schema.
-    */
-  final case class ConstPlan(name: String, dt: DataType,
-      raw: Option[String]) extends PqFieldPlan {
-    def leafs: Seq[PqLeafPlan] = Nil
-    def sparkField: StructField = StructField(name, dt, nullable = true)
-  }
-
-  // ------------------------------------------------------------------
-  // The GENERAL nested plan: any combination of struct / 3-level LIST /
-  // 3-level MAP to any depth (list-of-list, list-of-map, lists and maps
-  // inside structs, nested map values, structs inside list elements…).
-  // The specialized plans above stay for the common flat/one-level
-  // shapes (they feed the stats/page-pruning machinery and the fast
-  // flat decode); everything deeper routes here. Assembly is the
-  // Dremel model run generally: each leaf's level streams parse into
-  // nested [[graft.operators.ParquetData.DSlot]] slots
-  // (ParquetData.parseNested), and a sibling-zipping builder walks this
-  // node tree aligning the leaves' parses by their shared list
-  // skeleton — def-level thresholds per node (presentDef / emptyDef)
-  // arbitrate null ancestor vs null value vs empty collection.
-
-  sealed trait PNode extends Serializable
-  /** A leaf: value present at `leaf.maxDef`; `contentDefs(i)` = min def
-    * at which the (i+1)-th repeated ancestor holds an element (what
-    * parseNested descends by).
-    */
-  final case class PLeaf(leaf: PqLeafPlan, contentDefs: Array[Int])
-    extends PNode
-  /** A 3-level LIST: null below `emptyDef` (only when nullable), empty
-    * AT it, elements above; `repLevel` = its 1-based repeated depth.
-    */
-  final case class PList(elem: PNode, repLevel: Int, emptyDef: Int,
-      nullable: Boolean) extends PNode
-  /** A 3-level MAP: a LIST of (required-key, value) pairs. */
-  final case class PMap(key: PLeaf, value: PNode, repLevel: Int,
-      emptyDef: Int, nullable: Boolean) extends PNode
-  /** A struct: null when a descendant leaf's def < `presentDef`. */
-  final case class PStruct(fields: Seq[(String, PNode)], presentDef: Int,
-      nullable: Boolean) extends PNode
-
-  private[sources] def collectLeaves(n: PNode): Seq[PLeaf] = n match {
-    case l: PLeaf => Seq(l)
-    case l: PList => collectLeaves(l.elem)
-    case m: PMap => m.key +: collectLeaves(m.value)
-    case s: PStruct => s.fields.flatMap(f => collectLeaves(f._2))
-  }
-
-  private[sources] def leafCount(n: PNode): Int = n match {
-    case _: PLeaf => 1
-    case l: PList => leafCount(l.elem)
-    case m: PMap => 1 + leafCount(m.value)
-    case s: PStruct => s.fields.map(f => leafCount(f._2)).sum
-  }
-
-  private[sources] def sparkTypeOf(n: PNode): DataType = n match {
-    case l: PLeaf => leafType(l.leaf.field)
-    case l: PList => ArrayType(sparkTypeOf(l.elem), containsNull = true)
-    case m: PMap => MapType(leafType(m.key.leaf.field),
-      sparkTypeOf(m.value), valueContainsNull = true)
-    case s: PStruct => StructType(s.fields.map { case (nm, k) =>
-      StructField(nm, sparkTypeOf(k), nullable = true)
-    })
-  }
-
-  /** Restrict a node tree to Catalyst's requested (pruned, possibly
-    * reordered) shape — the TreePlan twin of the planner's
-    * StructPlan/ListStructPlan restriction.
-    */
-  private[sources] def restrictNode(n: PNode, dt: DataType,
-      path: String, file: String): PNode = (n, dt) match {
-    case (s: PStruct, st: StructType) =>
-      s.copy(fields = st.fields.map { inner =>
-        val kid = s.fields.find(_._1 == inner.name)
-          .getOrElse(throw new IllegalArgumentException(
-            s"graftpq: struct field '$path.${inner.name}' not in $file"))
-        inner.name -> restrictNode(kid._2, inner.dataType,
-          s"$path.${inner.name}", file)
-      }.toSeq)
-    case (l: PList, ArrayType(et, _)) =>
-      l.copy(elem = restrictNode(l.elem, et, path, file))
-    case (m: PMap, MapType(_, vt, _)) =>
-      m.copy(value = restrictNode(m.value, vt, path, file))
-    case _ => n
-  }
-
-  /** The generic deep-nested plan (see [[PNode]]). */
-  final case class TreePlan(name: String, root: PNode)
-    extends PqFieldPlan {
-    def leafs: Seq[PqLeafPlan] = collectLeaves(root).map(_.leaf)
-    def sparkField: StructField =
-      StructField(name, sparkTypeOf(root), nullable = true)
+  private[sources] def inRanges(ranges: Array[Long], pos: Long): Boolean = {
+    var lo = 0
+    var hi = ranges.length / 2
+    while (lo < hi) { // first pair whose end is past pos
+      val mid = (lo + hi) >>> 1
+      if (ranges(2 * mid + 1) <= pos) lo = mid + 1 else hi = mid
+    }
+    lo < ranges.length / 2 && ranges(2 * lo) <= pos
   }
 
   /** Hive path-segment unescape: `%XX` encodes the CHAR with that hex
@@ -922,241 +768,6 @@ object GraftParquet {
     if (keep.forall(identity)) None else Some(keep)
   }
 
-  /** One schema element with its parsed children — the footer's
-    * depth-first list made a tree, what the plan builders match on.
-    */
-  private[sources] final case class RawNode(f: PqSchemaField,
-      kids: Seq[RawNode])
-
-  private def opt(x: PqSchemaField): Int = x.repetition match {
-    case Some(0) => 0 // required
-    case Some(1) | None => 1 // optional (absent defaults optional)
-    case Some(2) => throw new IllegalArgumentException(
-      s"graftpq: repeated field '${x.name}' outside a LIST/MAP " +
-        "wrapper unsupported (2-level legacy lists)")
-    case Some(r) => throw new IllegalArgumentException(
-      s"graftpq: repetition $r on '${x.name}'")
-  }
-
-  /** Walk the footer's depth-first schema list into per-top-field
-    * assembly plans. The common shapes get the specialized plans (flat
-    * leaves — which alone feed stats/page pruning —, structs of
-    * leaves/structs, 3-level LIST of a leaf or of a struct of leaves,
-    * 3-level MAP of leaf key/values); EVERY deeper standard shape —
-    * list-of-list, list-of-map, lists/maps inside structs, nested map
-    * values, structs below list elements — routes to the generic
-    * [[TreePlan]]. Non-standard shapes (legacy 2-level lists, non-leaf
-    * or non-required map keys) still reject loudly by name.
-    */
-  private[sources] def fieldPlans(schema: Seq[PqSchemaField])
-      : Seq[PqFieldPlan] = {
-    require(schema.nonEmpty, "graftpq: empty parquet schema")
-    var i = 1 // skip the root element
-    def parse(): RawNode = {
-      require(i < schema.length, "graftpq: torn schema list")
-      val f = schema(i)
-      i += 1
-      RawNode(f, (0 until f.numChildren).map(_ => parse()))
-    }
-    val tops = (0 until schema.head.numChildren).map(_ => parse())
-    require(i == schema.length,
-      s"graftpq: schema walk consumed $i of ${schema.length} elements")
-    tops.map(topPlan)
-  }
-
-  /** True when the subtree is structs-of-structs over plain leaves
-    * (the [[StructPlan]] shape).
-    */
-  private def structSimple(n: RawNode): Boolean =
-    n.kids.forall { k =>
-      !k.f.repetition.contains(2) &&
-      (k.f.numChildren == 0 ||
-        (!k.f.convertedType.exists(Set(1, 2, 3)) && structSimple(k)))
-    }
-
-  private def listParts(n: RawNode): (RawNode, RawNode) = {
-    require(n.kids.length == 1,
-      s"graftpq: LIST '${n.f.name}' must wrap one repeated group")
-    val mid = n.kids.head
-    require(mid.f.repetition.contains(2) && mid.kids.length == 1,
-      s"graftpq: LIST '${n.f.name}' lacks the 3-level repeated group " +
-        "(2-level legacy lists unsupported)")
-    (mid, mid.kids.head)
-  }
-
-  private def topPlan(n: RawNode): PqFieldPlan = {
-    val f = n.f
-    if (f.numChildren == 0) {
-      FlatPlan(PqLeafPlan(f.name, f, opt(f), 0))
-    } else if (f.convertedType.contains(3)) { // LIST
-      val (mid, elem) = listParts(n)
-      val listOpt = opt(f)
-      if (elem.f.numChildren == 0) {
-        val elemOpt = opt(elem.f)
-        ListPlan(f.name,
-          PqLeafPlan(s"${f.name}.${mid.f.name}.${elem.f.name}", elem.f,
-            listOpt + 1 + elemOpt, 1),
-          nullDef = listOpt - 1, emptyDef = listOpt,
-          listNullable = listOpt == 1, elemNullable = elemOpt == 1)
-      } else if (!elem.f.convertedType.exists(Set(1, 2, 3)) &&
-          elem.kids.forall(k =>
-            k.f.numChildren == 0 && !k.f.repetition.contains(2))) {
-        // list-of-STRUCT of leaves: the element group's leaves share
-        // the list's rep skeleton (maxRep 1)
-        val elemOpt = opt(elem.f)
-        val structPresentDef = listOpt + 1 + elemOpt
-        ListStructPlan(f.name,
-          elem.kids.map { k =>
-            PqLeafPlan(
-              s"${f.name}.${mid.f.name}.${elem.f.name}.${k.f.name}",
-              k.f, structPresentDef + opt(k.f), 1)
-          },
-          structPresentDef,
-          nullDef = listOpt - 1, emptyDef = listOpt)
-      } else TreePlan(f.name, walkNode(n, f.name, 0, 0, Nil))
-    } else if (f.convertedType.contains(1)) { // MAP
-      val mapOpt = opt(f)
-      require(n.kids.length == 1,
-        s"graftpq: MAP '${f.name}' must wrap one repeated key_value " +
-          "group")
-      val kv = n.kids.head
-      require(kv.f.repetition.contains(2) && kv.kids.length == 2,
-        s"graftpq: MAP '${f.name}' lacks the 3-level repeated " +
-          "key_value group (2-level legacy maps unsupported)")
-      val k = kv.kids(0)
-      val v = kv.kids(1)
-      require(k.f.numChildren == 0,
-        s"graftpq: MAP '${f.name}' non-leaf key unsupported")
-      require(k.f.repetition.contains(0) || k.f.repetition.isEmpty,
-        s"graftpq: MAP '${f.name}' key must be required")
-      if (v.f.numChildren == 0) {
-        val valOpt = opt(v.f)
-        MapPlan(f.name,
-          PqLeafPlan(s"${f.name}.${kv.f.name}.${k.f.name}", k.f,
-            mapOpt + 1, 1),
-          PqLeafPlan(s"${f.name}.${kv.f.name}.${v.f.name}", v.f,
-            mapOpt + 1 + valOpt, 1),
-          nullDef = mapOpt - 1, emptyDef = mapOpt,
-          mapNullable = mapOpt == 1, valueNullable = valOpt == 1)
-      } else TreePlan(f.name, walkNode(n, f.name, 0, 0, Nil))
-    } else if (f.convertedType.contains(2)) {
-      throw new IllegalArgumentException(
-        s"graftpq: bare MAP_KEY_VALUE group '${f.name}' at top " +
-          "level unsupported")
-    } else if (structSimple(n)) { // struct of leaves/structs
-      def walkStruct(g: RawNode, prefix: String,
-          presentDef: Int): StructPlan =
-        StructPlan(g.f.name, presentDef, g.kids.map { k =>
-          if (k.f.numChildren == 0)
-            FlatPlan(PqLeafPlan(s"$prefix${k.f.name}", k.f,
-              presentDef + opt(k.f), 0)): PqFieldPlan
-          else walkStruct(k, s"$prefix${k.f.name}.",
-            presentDef + opt(k.f))
-        })
-      walkStruct(n, s"${f.name}.", opt(f))
-    } else TreePlan(f.name, walkNode(n, f.name, 0, 0, Nil))
-  }
-
-  /** Build the generic node tree: `baseDef`/`baseRep` accumulate the
-    * ancestors' contributions, `contentDefs` the per-repeated-level
-    * descend thresholds each leaf's parse needs.
-    */
-  private def walkNode(n: RawNode, path: String, baseDef: Int,
-      baseRep: Int, contentDefs: List[Int]): PNode = {
-    val f = n.f
-    if (f.numChildren == 0) {
-      PLeaf(PqLeafPlan(path, f, baseDef + opt(f), baseRep),
-        contentDefs.toArray)
-    } else if (f.convertedType.contains(3)) { // LIST
-      val (mid, elem) = listParts(n)
-      val lo = opt(f)
-      val emptyDef = baseDef + lo
-      PList(walkNode(elem, s"$path.${mid.f.name}.${elem.f.name}",
-        emptyDef + 1, baseRep + 1, contentDefs :+ (emptyDef + 1)),
-        baseRep + 1, emptyDef, lo == 1)
-    } else if (f.convertedType.contains(1)) { // MAP
-      val mo = opt(f)
-      require(n.kids.length == 1,
-        s"graftpq: MAP '$path' must wrap one repeated key_value group")
-      val kv = n.kids.head
-      require(kv.f.repetition.contains(2) && kv.kids.length == 2,
-        s"graftpq: MAP '$path' lacks the 3-level repeated key_value " +
-          "group (2-level legacy maps unsupported)")
-      val k = kv.kids(0)
-      val v = kv.kids(1)
-      require(k.f.numChildren == 0,
-        s"graftpq: MAP '$path' non-leaf key unsupported")
-      require(k.f.repetition.contains(0) || k.f.repetition.isEmpty,
-        s"graftpq: MAP '$path' key must be required")
-      val emptyDef = baseDef + mo
-      val cd = contentDefs :+ (emptyDef + 1)
-      PMap(
-        PLeaf(PqLeafPlan(s"$path.${kv.f.name}.${k.f.name}", k.f,
-          emptyDef + 1, baseRep + 1), cd.toArray),
-        walkNode(v, s"$path.${kv.f.name}.${v.f.name}", emptyDef + 1,
-          baseRep + 1, cd),
-        baseRep + 1, emptyDef, mo == 1)
-    } else if (f.convertedType.contains(2)) {
-      throw new IllegalArgumentException(
-        s"graftpq: bare MAP_KEY_VALUE group '$path' unsupported")
-    } else { // plain group: struct
-      val so = opt(f)
-      PStruct(n.kids.map(k => k.f.name ->
-        walkNode(k, s"$path.${k.f.name}", baseDef + so, baseRep,
-          contentDefs)),
-        baseDef + so, so == 1)
-    }
-  }
-
-  private[sources] def toSparkSchema(schema: Seq[PqSchemaField])
-      : StructType = StructType(fieldPlans(schema).map(_.sparkField))
-
-  /** Flat leaves only — the [[graft.operators.ParquetData.readRows]]
-    * whole-file iterator contract (fixture-scale shard ingest).
-    */
-  private[sources] def flatLeaves(schema: Seq[PqSchemaField])
-      : Seq[PqSchemaField] = {
-    require(schema.nonEmpty, "graftpq: empty parquet schema")
-    val leaves = schema.drop(1)
-    require(leaves.forall(_.numChildren == 0),
-      "graftpq: nested parquet schemas unsupported (flat leaves only)")
-    leaves
-  }
-
-  /** Adapt one decoded leaf value to Spark's internal representation:
-    * UTF8String for strings, Byte/Short narrowing, [[Decimal]] from the
-    * unscaled INT32/INT64/FLBA storage; Date/Timestamp physical values
-    * pass through (day int / micro long).
-    */
-  private[sources] def leafAdapter(f: PqSchemaField): Any => Any =
-    if (f.convertedType.contains(5)) { // DECIMAL
-      val scale = f.scale
-      val precision = f.precision
-      f.physicalType match {
-        case 1 => v => if (v == null) null
-          else Decimal(BigDecimal(java.math.BigDecimal.valueOf(
-            v.asInstanceOf[Int].toLong, scale)), precision, scale)
-        case 2 => v => if (v == null) null
-          else Decimal(BigDecimal(java.math.BigDecimal.valueOf(
-            v.asInstanceOf[Long], scale)), precision, scale)
-        case _ => v => if (v == null) null
-          else Decimal(BigDecimal(new java.math.BigDecimal(
-            new java.math.BigInteger(v.asInstanceOf[Array[Byte]]),
-            scale)), precision, scale)
-      }
-    } else convertedLeafType(f) match {
-      case StringType =>
-        v => if (v == null) null
-          else UTF8String.fromString(v.asInstanceOf[String])
-      case ByteType =>
-        v => if (v == null) null
-          else java.lang.Byte.valueOf(v.asInstanceOf[Int].toByte)
-      case ShortType =>
-        v => if (v == null) null
-          else java.lang.Short.valueOf(v.asInstanceOf[Int].toShort)
-      case _ => identity
-    }
-
   // ------------------------------------------------------------------
   // Aggregate pushdown: COUNT(*) / COUNT(col) / MIN / MAX answered
   // ENTIRELY from footer statistics — at 100 TB a `SELECT count(*),
@@ -1371,9 +982,8 @@ object GraftParquet {
     // its own chunks (and, for strings, its own created_by) during
     // the sweep below
     val headFooter = ParquetFooter.readTail(files.head._1.toPath)
-    val headLeaves: Map[String, PqSchemaField] =
-      fieldPlans(headFooter.schema)
-        .collect { case FlatPlan(l) => l.field.name -> l.field }.toMap
+    val headLeaves = flatLeaves(headFooter.schema)
+    val headTypes = sparkSchema(headFooter)
     val headExactStrings =
       headFooter.createdBy.contains(graft.operators.ParquetWrite.createdBy)
     // MIN/MAX: partition columns answer from their EXACT dir values
@@ -1385,12 +995,21 @@ object GraftParquet {
         case ByteType | ShortType | IntegerType | LongType |
           StringType | DateType => true
         case _ => false
-      }.orElse(headLeaves.get(c).collect {
+      }.orElse(headLeaves.get(c).flatMap {
+        // int-backed stats (unsigned and DECIMAL storage excluded),
+        // typed as Spark's converter types the column
         case f if Set(1, 2).contains(f.physicalType) &&
-            !f.convertedType.contains(5) => leafType(f)
+            !f.convertedType.exists(ct => ct == 5 ||
+              (ct >= 11 && ct <= 14)) =>
+          headTypes.find(_.name == c).map(_.dataType).filter {
+            case ByteType | ShortType | IntegerType | LongType |
+              DateType | TimestampType | TimestampNTZType => true
+            case _ => false
+          }
         case f if headExactStrings && f.physicalType == 6 &&
             (f.convertedType.contains(0) ||
-              f.convertedType.contains(4)) => StringType
+              f.convertedType.contains(4)) => Some(StringType)
+        case _ => None
       })
     val specsOpt = agg.aggregateExpressions.toSeq.map {
       case _: CountStar =>
@@ -1419,10 +1038,7 @@ object GraftParquet {
         Option[(Seq[Option[String]], Array[Any])]]] =
       planPar(files) { case (f, partVals) =>
         val footer = ParquetFooter.readTail(f.toPath)
-        val leaves: Map[String, PqSchemaField] =
-          fieldPlans(footer.schema)
-            .collect { case FlatPlan(l) => l.field.name -> l.field }
-            .toMap
+        val leaves = flatLeaves(footer.schema)
         // exactness is PER FILE: a directory mixing engine-written and
         // foreign files keeps string extremes only if every file
         // proves its own stats untruncated
@@ -1503,9 +1119,8 @@ object GraftParquet {
     * folded from the commit log's exact agg-stats manifest — the
     * caller proved it covers every live file, so NO file is ever
     * opened (spec-pinned by poisoning whole data files). Column types
-    * come from the manifest's recorded physical/converted pair through
-    * the same [[leafType]] mapping the footer tier uses; the
-    * `mmExact` flag keeps "provably all-null" (a legal null extreme)
+    * come from the manifest's recorded physical/converted pair
+    * ([[intStatType]]); the `mmExact` flag keeps "provably all-null" (a legal null extreme)
     * apart from "stats missing" (reject, like the footer tier's
     * absent-stat row group).
     */
@@ -1523,14 +1138,14 @@ object GraftParquet {
         case ByteType | ShortType | IntegerType | LongType |
           StringType | DateType => true
         case _ => false
-      }.orElse(headCols.get(c).collect {
+      }.orElse(headCols.get(c).flatMap {
         case st if st.mmExact && st.min.isDefined =>
-          leafType(PqSchemaField(c, st.physicalType, 0,
-            st.convertedType))
+          intStatType(st.physicalType, st.convertedType)
         // string extremes recorded at commit time behind the
         // exact-writer gate — the fold below re-checks sExact PER
         // FILE, so a table mixing engine and foreign appends rejects
-        case st if st.sExact && st.sMin.isDefined => StringType
+        case st if st.sExact && st.sMin.isDefined => Some(StringType)
+        case _ => None
       })
     val specsOpt = agg.aggregateExpressions.toSeq.map {
       case _: CountStar =>
@@ -1724,53 +1339,6 @@ object GraftParquet {
           if (vs(i) == null) null else vad(vs(i))))
       }
     case _ => identity // Int/Long/Float/Double/Boolean/Binary/day/micros
-  }
-
-  /** The per-file assembly plans for a required read schema: partition
-    * columns become [[ConstPlan]]s carrying the file's dir values,
-    * everything else resolves by name against the footer's field plans
-    * — restricted and reordered recursively, because Catalyst's
-    * nested-schema pruning can request a struct subset in a different
-    * order at any depth. Shared by the batch scan and the streaming
-    * micro-batch planner.
-    */
-  private[sources] def reqPlansFor(plans: Seq[PqFieldPlan],
-      required: StructType, partColTypes: Map[String, DataType],
-      partVals: Map[String, Option[String]], fileName: String)
-      : Seq[PqFieldPlan] = {
-    val byName = plans.map(p => p.name -> p).toMap
-    required.fields.map { rf =>
-      partColTypes.get(rf.name) match {
-        case Some(dt) => ConstPlan(rf.name, dt, partVals(rf.name))
-        case None =>
-          val plan = byName.getOrElse(rf.name,
-            throw new IllegalArgumentException(
-              s"graftpq: column '${rf.name}' not in $fileName"))
-          def restrict(p: PqFieldPlan, dt: DataType): PqFieldPlan =
-            (p, dt) match {
-              case (sp: StructPlan, st: StructType) =>
-                sp.copy(fields = st.fields.map { inner =>
-                  val kid = sp.fields.find(_.name == inner.name)
-                    .getOrElse(throw new IllegalArgumentException(
-                      s"graftpq: struct field " +
-                        s"'${sp.name}.${inner.name}' not in $fileName"))
-                  restrict(kid, inner.dataType)
-                }.toSeq)
-              case (lp: ListStructPlan, ArrayType(st: StructType, _)) =>
-                lp.copy(fields = st.fields.map { inner =>
-                  lp.fields.find(_.field.name == inner.name)
-                    .getOrElse(throw new IllegalArgumentException(
-                      s"graftpq: list element field " +
-                        s"'${lp.name}.${inner.name}' not in $fileName"))
-                }.toSeq)
-              case (tp: TreePlan, _) =>
-                tp.copy(root = restrictNode(tp.root, dt, tp.name,
-                  fileName))
-              case _ => p
-            }
-          restrict(plan, rf.dataType)
-      }
-    }.toSeq
   }
 
   /** Normalize temporal filter literals to Spark's INTERNAL units —
@@ -2659,16 +2227,20 @@ private[sources] final case class GraftPqAggPartition(
     rows: Seq[GraftParquet.PqAggRow]) extends InputPartition
 
 /** One surviving row group: the unit of scan parallelism. `columns`
-  * carry the absolute chunk offsets of every required LEAF, flattened
-  * in `plans`-then-leaf order, so the reader fetches byte ranges.
+  * are the chunks of every requested leaf (what the reader's page
+  * check walks, and the planner's size and TOP-N statistics);
+  * `partVals` the file's raw partition-dir values; `rowStart` the
+  * group's first file row and `span` its (offset, length) byte span,
+  * which selects exactly this group in Spark's parquet reader.
   * `ranges` are the page-index surviving row spans (group-relative
   * `[start, end)` pairs, sorted disjoint; empty = the whole group) and
-  * `skip` the outstanding deletion-vector positions IN THE COMPACTED
-  * space the ranges leave behind.
+  * `skip` the outstanding deletion-vector positions inside them
+  * (group-relative, sorted).
   */
 final case class GraftPqPartition(path: String,
     rgRows: Long, columns: Seq[PqColumn],
-    plans: Seq[GraftParquet.PqFieldPlan],
+    partVals: Map[String, Option[String]],
+    rowStart: Long, span: (Long, Long),
     skip: Array[Long] = Array.emptyLongArray,
     ranges: Array[Long] = Array.emptyLongArray,
     // this file's writer provably never truncates binary stats (the
@@ -3062,14 +2634,12 @@ private[sources] class GraftParquetScan(fullSchema: StructType,
     // pool, order preserved. At 100 TB a sequential tail sweep over
     // the surviving files is the planning bottleneck (10k files ≈ 10k
     // round trips serialized); parallel planning overlaps them.
+    val dataRequired =
+      StructType(required.fields.filterNot(f => partColTypes.contains(f.name)))
     GraftParquet.planPar(survivors) { case (f, partVals) =>
       val footer = ParquetFooter.readTail(f.toPath)
-      val plans = GraftParquet.fieldPlans(footer.schema)
-      val reqPlans = GraftParquet.reqPlansFor(plans, required,
-        partColTypes, partVals, f.getName)
-      val statLeaves = plans.collect { case fp: GraftParquet.FlatPlan =>
-        fp.leaf.field.name -> fp.leaf.field
-      }.toMap
+      val wanted = GraftParquet.requestedPaths(footer.schema, dataRequired)
+      val statLeaves = GraftParquet.flatLeaves(footer.schema)
       // file row index (what the vectors record) is global across row
       // groups, so every group's start offset accumulates over the
       // FULL footer order — including groups the stats then prune;
@@ -3108,18 +2678,15 @@ private[sources] class GraftParquetScan(fullSchema: StructType,
           val ranges = pageRanges(rg, statLeaves, indexBytes)
           if (ranges != null && ranges.isEmpty) None // every page dead
           else {
-            val cols = reqPlans.flatMap(_.leafs).map(l =>
-              rg.columns.find(_.path == l.path).getOrElse(
-                throw new IllegalArgumentException(
-                  s"graftpq: chunk for '${l.path}' missing in " +
-                    f.getName)))
             val lo = lowerBound(dvPos, rowStart)
             val hi = lowerBound(dvPos, rowStart + rg.numRows)
             val skip = java.util.Arrays.copyOfRange(dvPos, lo, hi)
               .map(_ - rowStart) // group-relative, stays sorted
-            Some(GraftPqPartition(f.getAbsolutePath, rg.numRows, cols,
-              reqPlans,
-              if (ranges == null) skip else remapSkip(skip, ranges),
+            Some(GraftPqPartition(f.getAbsolutePath, rg.numRows,
+              rg.columns.filter(c => wanted(c.path)), partVals, rowStart,
+              (rg.startOffset, rg.compressedSize),
+              if (ranges == null) skip
+              else skip.filter(GraftParquet.inRanges(ranges, _)),
               if (ranges == null) Array.emptyLongArray else ranges,
               exactStr = footer.createdBy.contains(
                 graft.operators.ParquetWrite.createdBy)))
@@ -3251,32 +2818,6 @@ private[sources] class GraftParquetScan(fullSchema: StructType,
       if (a(i + 1) <= b(j + 1)) i += 2 else j += 2
     }
     buf.toArray
-  }
-
-  /** Re-express group-relative DV positions in the compacted row space
-    * the surviving ranges leave behind (positions outside every range
-    * are already gone — the pruned pages never emit them).
-    */
-  private def remapSkip(skip: Array[Long], ranges: Array[Long])
-      : Array[Long] = {
-    if (skip.isEmpty) skip
-    else {
-      val buf = new scala.collection.mutable.ArrayBuffer[Long]
-      var base = 0L
-      var ri = 0
-      var k = 0
-      while (k < skip.length) {
-        val pos = skip(k)
-        while (ri < ranges.length && ranges(ri + 1) <= pos) {
-          base += ranges(ri + 1) - ranges(ri)
-          ri += 2
-        }
-        if (ri < ranges.length && pos >= ranges(ri))
-          buf += base + (pos - ranges(ri))
-        k += 1
-      }
-      buf.toArray
-    }
   }
 
   /** First index whose value is >= `key` in a sorted array. */
@@ -3482,378 +3023,175 @@ private[sources] class GraftParquetScan(fullSchema: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftPqReaderFactory(required)
+    GraftPqReaderFactory(required, partColsCached, pushed)
 }
 
-private[sources] class GraftPqReaderFactory(required: StructType)
+private[sources] object GraftPqReaderFactory {
+
+  /** graftpq's reader factory over `required`: Spark's own row-mode
+    * parquet reader factory, built through [[ParquetScan]] so it
+    * carries the session's parquet settings. It decodes the requested
+    * data columns plus the file row index; the reader joins the
+    * partition values on as a view. `filters` reach it only so parquet-mr can skip the row
+    * groups and pages they rule out (pruned pages are then never read
+    * or decompressed); which rows a task returns stays graft's
+    * planning.
+    */
+  def apply(required: StructType, partCols: Seq[(String, DataType)],
+      filters: Array[Filter]): GraftPqReaderFactory = {
+    val spark = SparkSession.active
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val key = (spark.sparkContext, required, partCols,
+      spark.sessionState.conf.getAllConfs,
+      hadoopConf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap)
+    val partNames = partCols.map(_._1).toSet
+    built.synchronized(Option(built.get(key))).getOrElse {
+      val f = build(spark, hadoopConf, required, partCols)
+      built.synchronized(built.put(key, f))
+      f
+    }.fresh(filters.filter(_.references.forall(!partNames(_))))
+  }
+
+  /** Building Spark's factory broadcasts a hadoop conf (about 18 ms a
+    * query on a 4-core host) while dashboards re-read the same shapes,
+    * so the latest 32 are kept and copied (sharing the broadcast, with
+    * each scan's filters) for as long as the context, schemas and every
+    * session and hadoop setting are the same.
+    */
+  private val built = new java.util.LinkedHashMap[AnyRef,
+      GraftPqReaderFactory](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[AnyRef,
+        GraftPqReaderFactory]): Boolean = size() > 32
+  }
+
+  private def build(spark: SparkSession,
+      hadoopConf: org.apache.hadoop.conf.Configuration,
+      required: StructType, partCols: Seq[(String, DataType)])
+      : GraftPqReaderFactory = {
+    val partNames = partCols.map(_._1).toSet
+    val data = StructType(required.fields.filterNot(f =>
+      partNames(f.name)))
+    val parts = StructType(required.fields.filter(f => partNames(f.name)))
+    // Spark's reader copies its whole hadoop conf, under the conf's lock,
+    // for every row group it opens: hand it only the settings made on
+    // top of Hadoop's *-default.xml (the code that reads them carries
+    // those defaults itself), about 1,100 entries fewer
+    val settings = new org.apache.hadoop.conf.Configuration(false)
+    hadoopConf.iterator().asScala.foreach { e =>
+      val from = hadoopConf.getPropertySources(e.getKey)
+      if (from == null || !from.last.endsWith("-default.xml"))
+        settings.set(e.getKey, e.getValue)
+    }
+    val sparkFactory = ParquetScan(spark, settings, null, data,
+      data.add(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
+        LongType),
+      new StructType(), Array.empty, CaseInsensitiveStringMap.empty())
+      .createReaderFactory().asInstanceOf[ParquetPartitionReaderFactory]
+    // rows are Spark's (data ++ row index) joined with the partition
+    // values
+    val ordinals = required.fields.map(f =>
+      if (partNames(f.name)) data.length + 1 + parts.fieldIndex(f.name)
+      else data.fieldIndex(f.name)).toSeq
+    // Spark's vectorized reader rejects BYTE_STREAM_SPLIT pages; its
+    // row-based mode reads them
+    val rowConf = sparkFactory.sqlConf.clone()
+    rowConf.setConf(SQLConf.PARQUET_VECTORIZED_READER_ENABLED, false)
+    new GraftPqReaderFactory(sparkFactory,
+      sparkFactory.copy(sqlConf = rowConf), required, ordinals,
+      data.length, parts.fields.map(f => f.name -> f.dataType).toSeq,
+      skipsPages = false)
+  }
+}
+
+private[sources] class GraftPqReaderFactory(
+    sparkFactory: ParquetPartitionReaderFactory,
+    rowModeFactory: ParquetPartitionReaderFactory, required: StructType,
+    ordinals: Seq[Int], rowIndexOrdinal: Int,
+    partCols: Seq[(String, DataType)], skipsPages: Boolean)
   extends PartitionReaderFactory {
+
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] =
-    new GraftPqReader(partition.asInstanceOf[GraftPqPartition], required)
+    new GraftPqReader(partition.asInstanceOf[GraftPqPartition], this)
+
+  /** Spark's reader over exactly `p`'s row group. */
+  private[sources] def open(p: GraftPqPartition)
+      : PartitionReader[InternalRow] = {
+    val file = new java.io.File(p.path)
+    // parquet-mr trusts each page's declared sizes when it allocates:
+    // check them with the bounded decoder first (the footer itself
+    // was parsed by graft's bounded decoder at planning)
+    val ch = java.nio.channels.FileChannel.open(file.toPath,
+      java.nio.file.StandardOpenOption.READ)
+    val byteStreamSplit =
+      try p.columns.map(ParquetFooter.checkPages(ch, _, skipsPages))
+        .contains(true)
+      finally ch.close()
+    (if (byteStreamSplit) rowModeFactory else sparkFactory)
+      .buildReader(PartitionedFile(InternalRow.empty,
+        SparkPath.fromPath(new org.apache.hadoop.fs.Path(file.toURI)),
+        p.span._1, p.span._2, Array.empty[String], 0L, file.length()))
+  }
+
+  /** This factory over fresh copies of Spark's factories (which keep
+    * the reader they last built in a field) given `filters`.
+    */
+  private[sources] def fresh(filters: Array[Filter]): GraftPqReaderFactory =
+    new GraftPqReaderFactory(sparkFactory.copy(filters = filters),
+      rowModeFactory.copy(filters = filters), required, ordinals,
+      rowIndexOrdinal, partCols, skipsPages = filters.nonEmpty)
+
+  /** A view of Spark's rows joined with `p`'s partition values, in
+    * `required` order.
+    */
+  private[sources] def view(): ProjectingInternalRow =
+    ProjectingInternalRow(required, ordinals)
+
+  private[sources] def partitionValues(p: GraftPqPartition): InternalRow =
+    InternalRow.fromSeq(partCols.map { case (n, dt) =>
+      GraftParquet.partitionValue(dt, p.partVals(n))
+    })
+
+  private[sources] def rowIndex(r: InternalRow): Long =
+    r.getLong(rowIndexOrdinal)
 }
 
-/** Decodes one row group: positional reads of each required chunk's
-  * byte range, level+value streams through
-  * [[ParquetData.readChunkLevels]], Dremel reassembly per field plan
-  * (flat scatter / 3-level list / one-level struct), values adapted to
-  * Spark's internal representations (UTF8String, Decimal,
-  * GenericArrayData, nested InternalRow; DateType's day int and
-  * TimestampType's micro long are already the physical values).
+/** Reads one planned row group through Spark's parquet reader and
+  * returns exactly the rows graft planned: one group-relative position
+  * mask, from each row's file row index, drops the rows outside the
+  * page-index `ranges` and at the deletion-vector `skip` positions.
+  * Reader failures surface as `IllegalArgumentException`s naming the
+  * file.
   */
 private[sources] class GraftPqReader(p: GraftPqPartition,
-    required: StructType) extends PartitionReader[InternalRow] {
+    f: GraftPqReaderFactory) extends PartitionReader[InternalRow] {
 
-  import GraftParquet.{FlatPlan, ListPlan, StructPlan}
+  private def loud[A](body: => A): A =
+    LibCodec.naming(p.path)(LibCodec.loud("parquet reader")(body))
 
-  // page-index surviving spans: flat leaves decode PRUNED (skipped
-  // pages never decompress), repeated shapes decode fully and compact
-  // after assembly (a v1 page header cannot row-align repeated data)
-  private val ranges: Array[Long] = if (p.ranges.isEmpty) null else p.ranges
-  private val fullRows = p.rgRows.toInt
-  private val survRows =
-    if (ranges == null) fullRows
-    else {
-      var s = 0L
-      var i = 0
-      while (i < ranges.length) { s += ranges(i + 1) - ranges(i); i += 2 }
-      s.toInt
-    }
-  /** Original row index per surviving slot (null = identity). */
-  private val survIdx: Array[Int] =
-    if (ranges == null) null
-    else {
-      val a = new Array[Int](survRows)
-      var k = 0
-      var i = 0
-      while (i < ranges.length) {
-        var r = ranges(i)
-        while (r < ranges(i + 1)) { a(k) = r.toInt; k += 1; r += 1 }
-        i += 2
-      }
-      a
-    }
+  private val inner = loud(f.open(p))
+  private val partValues = f.partitionValues(p)
+  private val joined = new JoinedRow()
+  private val out = f.view()
 
-  /** One row-aligned array of internal values per required field. */
-  private val cols: Array[Array[Any]] = {
-    val ch = java.nio.channels.FileChannel.open(
-      java.nio.file.Paths.get(p.path),
-      java.nio.file.StandardOpenOption.READ)
+  override def next(): Boolean =
     try {
-      val rows = survRows
-      var colIdx = 0
-      def readAt(off: Long, len: Int): Array[Byte] = {
-        val bb = java.nio.ByteBuffer.allocate(len)
-        var pos = off
-        while (bb.hasRemaining) {
-          val r = ch.read(bb, pos)
-          require(r > 0, "torn parquet: short index read")
-          pos += r
-        }
-        bb.array()
+      var found = false
+      while (!found && inner.next()) {
+        val r = inner.get()
+        val pos = f.rowIndex(r) - p.rowStart
+        require(pos >= 0 && pos < p.rgRows,
+          s"row ${pos + p.rowStart} lies outside the planned row group " +
+            s"[${p.rowStart}, ${p.rowStart + p.rgRows})")
+        found =
+          (p.ranges.isEmpty || GraftParquet.inRanges(p.ranges, pos)) &&
+            java.util.Arrays.binarySearch(p.skip, pos) < 0
+        if (found) out.project(joined(r, partValues))
       }
-      // a nested plan decodes page-pruned only when EVERY one of its
-      // upcoming leaf chunks carries an OffsetIndex (whose presence
-      // also guarantees record-aligned pages); otherwise it decodes
-      // fully and compacts after assembly
-      def planPruned(leafCount: Int): Boolean =
-        ranges != null && (0 until leafCount).forall(k =>
-          p.columns(colIdx + k).offsetIndex.isDefined)
-      def levelsOf(leaf: GraftParquet.PqLeafPlan,
-          pruned: Boolean = false, prunedRep: Boolean = false)
-          : (ParquetData.ChunkLevels, ParquetFooter.PqColumn) = {
-        val col = p.columns(colIdx)
-        colIdx += 1
-        val (start, end) = ParquetData.chunkRange(col)
-        require(end - start <= Int.MaxValue,
-          s"graftpq: ${end - start}-byte chunk exceeds buffer limits")
-        val bb = java.nio.ByteBuffer.allocate((end - start).toInt)
-        var pos = start
-        while (bb.hasRemaining) {
-          val r = ch.read(bb, pos)
-          require(r > 0, "torn parquet: short chunk read")
-          pos += r
-        }
-        require(col.numValues >= 0 && col.numValues <= Int.MaxValue,
-          s"graftpq: chunk value count ${col.numValues}")
-        // DECIMAL-over-BYTE_ARRAY and unannotated BYTE_ARRAY (binary)
-        // must come back as raw bytes, not UTF-8 Strings — substitute
-        // the decoder's raw pseudo-type (leafAdapter then passes the
-        // bytes to BigInteger / Spark's binary representation)
-        val physical =
-          if (leaf.field.physicalType == 6 &&
-              (leaf.field.convertedType.contains(5) ||
-                leaf.field.convertedType.isEmpty))
-            ParquetData.RawByteArray
-          else leaf.field.physicalType
-        // FlatPlan leaves (pruned) row-align from headers alone;
-        // repeated leaves (prunedRep) additionally ship their chunk's
-        // OffsetIndex fences — either way skipped pages stay
-        // compressed; anything else decodes fully, compacted after
-        val fences: Array[Long] =
-          if (!prunedRep) null
-          else {
-            val loc = col.offsetIndex.getOrElse(
-              throw new IllegalStateException(
-                s"graftpq: pruned decode of '${leaf.path}' without " +
-                  "an OffsetIndex"))
-            ParquetFooter.readOffsetIndex(readAt(loc._1, loc._2))
-              .pages.map(_.firstRowIndex).toArray
-          }
-        (ParquetData.readChunkLevels(bb.array(), col, leaf.maxDef,
-          leaf.maxRep, physical, leaf.field.typeLength,
-          col.numValues.toInt, base = start,
-          rowRanges = if (pruned || prunedRep) ranges else null,
-          pageFirstRows = fences), col)
-      }
-      // Recursive assembly: each plan yields its row-aligned values
-      // plus one descendant leaf's def stream (what a CONTAINING
-      // struct needs to place its own nulls — def < the outer
-      // presentDef marks the outer struct null regardless of the
-      // inner value). Chunk order follows plans-then-leafs by
-      // construction, matching the planner's flatMap(_.leafs).
-      def assemble(plan: GraftParquet.PqFieldPlan)
-          : (Array[Any], Array[Int]) = plan match {
-        case GraftParquet.ConstPlan(_, dt, raw) =>
-          // partition-dir column: one constant for the whole group
-          val v = GraftParquet.partitionValue(dt, raw)
-          (Array.fill[Any](rows)(v), null)
-        case FlatPlan(leaf) =>
-          val (lv, _) = levelsOf(leaf, pruned = true)
-          require(lv.defs.length == rows,
-            s"graftpq: flat chunk '${leaf.path}' has " +
-              s"${lv.defs.length} values for $rows rows")
-          val ad = GraftParquet.leafAdapter(leaf.field)
-          val out = new Array[Any](rows)
-          var v = 0
-          var i = 0
-          while (i < rows) {
-            if (lv.defs(i) == leaf.maxDef) {
-              out(i) = ad(lv.vals(v)); v += 1
-            }
-            i += 1
-          }
-          (out, lv.defs)
-        case ListPlan(_, leaf, nullDef, emptyDef, _, _) =>
-          val pn = planPruned(1)
-          val (lv, _) = levelsOf(leaf, prunedRep = pn)
-          val ad = GraftParquet.leafAdapter(leaf.field)
-          val full = ParquetData.assembleList(lv,
-            if (pn) rows else fullRows, leaf.maxDef, emptyDef, nullDef)
-          val rowsOut =
-            if (pn || survIdx == null) full
-            else Array.tabulate[Any](rows)(s => full(survIdx(s)))
-          (rowsOut.map[Any] {
-            case null => null
-            case s: Seq[_] =>
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(
-                s.map(ad).toArray)
-          }, null)
-        case GraftParquet.ListStructPlan(name, fields,
-            structPresentDef, nullDef, emptyDef) =>
-          // every leaf shares the list skeleton; the FIRST leaf's
-          // per-element defs arbitrate element-null vs field-null
-          val pnLs = planPruned(fields.length)
-          val perLeaf = fields.map { l =>
-            val (lv, _) = levelsOf(l, prunedRep = pnLs)
-            val (vals, defs) = ParquetData.assembleListLevels(lv,
-              if (pnLs) rows else fullRows, l.maxDef, emptyDef, nullDef)
-            (vals, defs, GraftParquet.leafAdapter(l.field))
-          }
-          val (v0, d0, _) = perLeaf.head
-          (Array.tabulate[Any](rows) { s =>
-            val i = if (pnLs || survIdx == null) s else survIdx(s)
-            v0(i) match {
-              case null => null
-              case s0: Seq[_] =>
-                val n = s0.length
-                perLeaf.foreach { case (v, _, _) =>
-                  val len = v(i) match {
-                    case s: Seq[_] => s.length
-                    case _ => -1
-                  }
-                  require(len == n, s"torn parquet: list-of-struct " +
-                    s"'$name' leaves disagree ($len vs $n elements)")
-                }
-                new org.apache.spark.sql.catalyst.util.GenericArrayData(
-                  Array.tabulate[Any](n) { e =>
-                    if (d0(i)(e) < structPresentDef) null
-                    else InternalRow.fromSeq(perLeaf.map {
-                      case (v, _, ad) =>
-                        val x = v(i).asInstanceOf[Seq[Any]](e)
-                        if (x == null) null else ad(x)
-                    })
-                  })
-            }
-          }, null)
-        case GraftParquet.MapPlan(name, kLeaf, vLeaf, nullDef,
-            emptyDef, _, _) =>
-          // a MAP is a LIST of (key, value): both leaf streams carry
-          // the same map-level rep/def skeleton, so each reassembles
-          // through the list machinery and the per-row seqs zip
-          val pnM = planPruned(2)
-          val (klv, _) = levelsOf(kLeaf, prunedRep = pnM)
-          val (vlv, _) = levelsOf(vLeaf, prunedRep = pnM)
-          val kad = GraftParquet.leafAdapter(kLeaf.field)
-          val vad = GraftParquet.leafAdapter(vLeaf.field)
-          val mapRows = if (pnM) rows else fullRows
-          val keys = ParquetData.assembleList(klv, mapRows,
-            kLeaf.maxDef, emptyDef, nullDef)
-          val vals = ParquetData.assembleList(vlv, mapRows,
-            vLeaf.maxDef, emptyDef, nullDef)
-          (Array.tabulate[Any](rows) { s =>
-            val i = if (pnM || survIdx == null) s else survIdx(s)
-            (keys(i), vals(i)) match {
-              case (null, _) => null
-              case (ks: Seq[_], vs: Seq[_]) =>
-                require(ks.length == vs.length,
-                  s"torn parquet: map '$name' has ${ks.length} keys " +
-                    s"for ${vs.length} values in one row")
-                new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-                  new org.apache.spark.sql.catalyst.util.GenericArrayData(
-                    ks.map(kad).toArray),
-                  new org.apache.spark.sql.catalyst.util.GenericArrayData(
-                    vs.map(vad).toArray))
-              case other => throw new IllegalStateException(
-                s"graftpq: map '$name' assembly $other")
-            }
-          }, null)
-        case tp: GraftParquet.TreePlan =>
-          // the GENERAL deep-nested assembly: each leaf parses into
-          // nested DSlot trees, then the node-tree builder zips
-          // siblings by their shared list skeleton (def thresholds
-          // arbitrate null ancestor / null value / empty collection)
-          val leaves = GraftParquet.collectLeaves(tp.root)
-          // pruned-nested when every leaf has an OffsetIndex; flat
-          // leaves inside the tree row-align from headers, repeated
-          // ones from their fences — all siblings land on the same
-          // compacted row set
-          val pnT = planPruned(leaves.length)
-          val parsed: Array[Array[ParquetData.DSlot]] = leaves.map {
-            pl =>
-              val (lv, _) = levelsOf(pl.leaf, prunedRep = pnT)
-              ParquetData.parseNested(lv, if (pnT) rows else fullRows,
-                pl.contentDefs, pl.leaf.maxDef)
-          }.toArray
-          val adapters: Array[Any => Any] =
-            leaves.map(pl => GraftParquet.leafAdapter(pl.leaf.field))
-              .toArray
-          def build(node: GraftParquet.PNode, base: Int,
-              slot: Int => ParquetData.DSlot): Any = node match {
-            case pl: GraftParquet.PLeaf =>
-              val s = slot(base)
-              if (s.defLevel == pl.leaf.maxDef) adapters(base)(s.value)
-              else null
-            case st: GraftParquet.PStruct =>
-              // every descendant leaf records the same def at a null
-              // ancestor — read the first
-              if (st.nullable && slot(base).defLevel < st.presentDef)
-                null
-              else {
-                var off = base
-                InternalRow.fromSeq(st.fields.map { case (_, k) =>
-                  val v = build(k, off, slot)
-                  off += GraftParquet.leafCount(k)
-                  v
-                })
-              }
-            case ls: GraftParquet.PList =>
-              val s0 = slot(base)
-              if (s0.elems == null) {
-                if (s0.defLevel == ls.emptyDef)
-                  new org.apache.spark.sql.catalyst.util
-                    .GenericArrayData(Array.empty[Any])
-                else null // defLevel below emptyDef: the list is null
-              } else {
-                val cnt = GraftParquet.leafCount(ls)
-                val m = s0.elems.length
-                var k = 1
-                while (k < cnt) {
-                  val sk = slot(base + k)
-                  require(sk.elems != null && sk.elems.length == m,
-                    s"torn parquet: '${tp.name}' list leaves disagree")
-                  k += 1
-                }
-                new org.apache.spark.sql.catalyst.util.GenericArrayData(
-                  Array.tabulate[Any](m)(e =>
-                    build(ls.elem, base, idx => slot(idx).elems(e))))
-              }
-            case mp: GraftParquet.PMap =>
-              val s0 = slot(base)
-              if (s0.elems == null) {
-                if (s0.defLevel == mp.emptyDef)
-                  new org.apache.spark.sql.catalyst.util
-                    .ArrayBasedMapData(
-                    new org.apache.spark.sql.catalyst.util
-                      .GenericArrayData(Array.empty[Any]),
-                    new org.apache.spark.sql.catalyst.util
-                      .GenericArrayData(Array.empty[Any]))
-                else null
-              } else {
-                val cnt = GraftParquet.leafCount(mp)
-                val m = s0.elems.length
-                var k = 1
-                while (k < cnt) {
-                  val sk = slot(base + k)
-                  require(sk.elems != null && sk.elems.length == m,
-                    s"torn parquet: '${tp.name}' map leaves disagree")
-                  k += 1
-                }
-                val keys = Array.tabulate[Any](m) { e =>
-                  val ks = slot(base).elems(e)
-                  require(ks.defLevel == mp.key.leaf.maxDef,
-                    s"torn parquet: null map key in '${tp.name}'")
-                  adapters(base)(ks.value)
-                }
-                val vals = Array.tabulate[Any](m)(e =>
-                  build(mp.value, base + 1, idx => slot(idx).elems(e)))
-                new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-                  new org.apache.spark.sql.catalyst.util
-                    .GenericArrayData(keys),
-                  new org.apache.spark.sql.catalyst.util
-                    .GenericArrayData(vals))
-              }
-          }
-          (Array.tabulate[Any](rows) { s =>
-            val i = if (pnT || survIdx == null) s else survIdx(s)
-            build(tp.root, 0, k => parsed(k)(i))
-          }, null)
-        case StructPlan(name, presentDef, fields) =>
-          val kids = fields.map(assemble)
-          val defs = kids.collectFirst {
-            case (_, d) if d != null => d
-          }.getOrElse(throw new IllegalArgumentException(
-            s"graftpq: struct '$name' has no leaf descendant"))
-          val kidVals = kids.map(_._1)
-          val out = new Array[Any](rows)
-          var r = 0
-          while (r < rows) {
-            // null iff the shared ancestor path's level says so (every
-            // descendant leaf agrees by construction — read the first)
-            out(r) =
-              if (defs(r) < presentDef) null
-              else InternalRow.fromSeq(kidVals.map(_(r)))
-            r += 1
-          }
-          (out, defs)
-      }
-      p.plans.map(pl => assemble(pl)._1).toArray
-    } finally ch.close()
-  }
+      found
+    } catch { case NonFatal(e) => loud(throw e) }
 
-  private var row = -1
-  private var si = 0 // cursor into p.skip (sorted, group-relative)
+  override def get(): InternalRow = out
 
-  override def next(): Boolean = {
-    row += 1
-    // hop deletion-vector positions (compacted space) — sorted cursor
-    while (si < p.skip.length && p.skip(si) == row) {
-      si += 1; row += 1
-    }
-    row < survRows
-  }
-
-  override def get(): InternalRow =
-    InternalRow.fromSeq((0 until cols.length).map(c => cols(c)(row)))
-
-  override def close(): Unit = ()
+  override def close(): Unit = inner.close()
 }

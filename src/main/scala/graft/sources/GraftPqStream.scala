@@ -64,9 +64,10 @@ private[sources] final case class GraftStreamLimits(
   *    instead of silently dropping them from the streamed total;
   *  - '''each added file plans through the batch machinery''' — the
   *    same footer-tail reads, per-row-group splits and column pruning
-  *    ([[GraftParquet.reqPlansFor]]), decoded by the same
-  *    [[GraftPqReaderFactory]]; partition-dir values surface as typed
-  *    constant columns parsed from each file's `col=value` path;
+  *    ([[GraftParquet.requestedPaths]]), decoded by the same
+  *    [[GraftPqReaderFactory]] (Spark's parquet reader); partition-dir
+  *    values surface as typed constant columns parsed from each file's
+  *    `col=value` path;
   *  - '''non-append versions fail LOUDLY.''' A rewrite / delete /
   *    merge / update / restore / deletion-vector version is not
   *    expressible as an append stream; silently re-emitting or
@@ -182,7 +183,8 @@ private[sources] class GraftPqMicroBatch(path: String,
       end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[GraftPqStreamOffset]
     val e = end.asInstanceOf[GraftPqStreamOffset]
-    val partColTypes: Map[String, DataType] = partCols.toMap
+    val dataRequired = StructType(required.fields.filterNot(f =>
+      partCols.exists(_._1 == f.name)))
     val rels: Seq[String] =
       if (s.version == e.version) {
         if (e.files > s.files)
@@ -210,17 +212,12 @@ private[sources] class GraftPqMicroBatch(path: String,
         if (partCols.isEmpty) Map.empty
         else GraftParquet.partValsFromRel(rel, partCols.map(_._1))
       val footer = ParquetFooter.readTail(f.toPath)
-      val plans = GraftParquet.fieldPlans(footer.schema)
-      val reqPlans = GraftParquet.reqPlansFor(plans, required,
-        partColTypes, partVals, f.getName)
-      footer.rowGroups.map { rg =>
+      val wanted = GraftParquet.requestedPaths(footer.schema, dataRequired)
+      val starts = footer.rowGroups.scanLeft(0L)(_ + _.numRows)
+      footer.rowGroups.zip(starts).map { case (rg, rowStart) =>
         GraftPqPartition(f.getAbsolutePath, rg.numRows,
-          reqPlans.flatMap(_.leafs).map(l =>
-            rg.columns.find(_.path == l.path).getOrElse(
-              throw new IllegalArgumentException(
-                s"graftpq: chunk for '${l.path}' missing in " +
-                  f.getName))),
-          reqPlans): InputPartition
+          rg.columns.filter(c => wanted(c.path)), partVals, rowStart,
+          (rg.startOffset, rg.compressedSize)): InputPartition
       }
     }.toArray
   }
@@ -267,5 +264,5 @@ private[sources] class GraftPqMicroBatch(path: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftPqReaderFactory(required)
+    GraftPqReaderFactory(required, partCols, Array.empty)
 }

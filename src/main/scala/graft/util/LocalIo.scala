@@ -43,9 +43,9 @@ import org.apache.spark.sql.SparkSession
   * Scale posture: this is a LOCAL-MODE setting by construction — a
   * production deployment reads `hdfs://`/`s3a://` paths whose
   * FileSystem bindings this does not touch (their integrity story is
-  * the store's own). It is parameterised (`SPARK_GRAFT_LOCAL_RAWFS=0`
-  * restores the checksummed defaults) so the driver's bench stays
-  * comparable and the change is one env var to revert.
+  * the store's own). The A-B against the checksummed defaults is
+  * recorded in OPTIMIZATION_r20.md; the raw binding is the only
+  * behaviour.
   *
   * Results are byte-identical: checksums change neither file contents
   * nor row order, only sibling `.crc` files and read-side verification.
@@ -55,17 +55,12 @@ import org.apache.spark.sql.SparkSession
   */
 object LocalIo {
 
-  private def disabled: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_LOCAL_RAWFS", "1") == "0"
-
-  /** Apply the FileContext-side raw binding to a session builder (no-op
-    * when `SPARK_GRAFT_LOCAL_RAWFS=0`). The FileSystem-side tuning is
-    * instance-level — see [[relaxLocalChecksums]], which callers apply
-    * to the built session.
+  /** Apply the FileContext-side raw binding to a session builder. The
+    * FileSystem-side tuning is instance-level — see
+    * [[relaxLocalChecksums]], which callers apply to the built session.
     */
   def tune(b: SparkSession.Builder): SparkSession.Builder =
-    if (disabled) b
-    else b.config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+    b.config("spark.hadoop.fs.AbstractFileSystem.file.impl",
       "org.apache.hadoop.fs.local.RawLocalFs")
 
   /** The local session every driver entry point (Bench, Verify, Profile,
@@ -91,16 +86,13 @@ object LocalIo {
   }
 
   /** Disable checksum write/verify on the process-wide cached local
-    * FileSystem instance (no-op when `SPARK_GRAFT_LOCAL_RAWFS=0`).
-    * Returns the session for call-site chaining.
+    * FileSystem instance. Returns the session for call-site chaining.
     */
   def relaxLocalChecksums(spark: SparkSession): SparkSession = {
-    if (!disabled) {
-      val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-        spark.sparkContext.hadoopConfiguration)
-      fs.setWriteChecksum(false)
-      fs.setVerifyChecksum(false)
-    }
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+    fs.setWriteChecksum(false)
+    fs.setVerifyChecksum(false)
     spark
   }
 }

@@ -35,8 +35,17 @@ class DecoderFuzzSpec extends AnyFunSuite {
     java.nio.file.Files.readAllBytes(f.toPath)
   }
 
-  private def parquetRows(b: Array[Byte]): Int =
-    op.ParquetData.readRows(b, Seq("a", "b", "c", "d")).length
+  private lazy val fuzzFile = java.nio.file.Files
+    .createTempDirectory("graft-fuzz-graftpq").resolve("part-0.parquet")
+
+  /** The mutated image read through graftpq, its readers driven on
+    * this thread.
+    */
+  private def parquetRows(b: Array[Byte]): Int = {
+    java.nio.file.Files.write(fuzzFile, b)
+    GraftPqDirect.count(SparkTestSession.spark.read.format("graftpq")
+      .load(fuzzFile.toString))
+  }
 
   private def orcRows(b: Array[Byte]): Int =
     op.OrcData.readRows(b, Seq("a", "b", "c", "d")).length

@@ -1,17 +1,15 @@
 package graft
 
+import org.apache.spark.sql.AnalysisException
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.ParquetData
-
-/** Parquet data-page decoding (operators.ParquetData), cross-validated
-  * against Spark's own vectorized reader on Spark-written files: every
-  * supported codec (pages decompressed through the
-  * Snappy/Inflate/Zstd/Lz4 codec objects), both writer versions (v1
-  * and v2 pages), real nulls through the definition levels, dictionary
-  * AND plain-fallback value pages, booleans/ints/longs/floats/doubles/
-  * strings, and multi-page chunks under a tiny page size. Torn pages
-  * and pages declaring a huge uncompressed size reject loudly.
+/** Parquet data pages through `graftpq`, whose reader hands the pages
+  * to Spark's parquet reader only after checking their headers:
+  * Spark-written files under every codec, v2 pages and multi-page
+  * chunks with dictionary fallback read row-identically to Spark's own
+  * source; torn pages and pages declaring a huge uncompressed size
+  * reject loudly, the latter before the reader allocates what they
+  * declare.
   */
 class ParquetDataSpec extends AnyFunSuite {
 
@@ -35,30 +33,23 @@ class ParquetDataSpec extends AnyFunSuite {
       .write.mode("overwrite").option("compression", codec).parquet(dir)
   }
 
-  private def sparkRows(dir: String): Seq[Seq[Any]] =
-    spark.read.parquet(dir).collect().toSeq
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.select(cols.map(org.apache.spark.sql.functions.col): _*)
+      .collect().toSeq
       .map(r => cols.indices.map(i => if (r.isNullAt(i)) null else r.get(i)))
       .sortBy(_.head.asInstanceOf[Long])
 
-  private def ourRows(dir: String): Seq[Seq[Any]] = {
-    val f = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    ParquetData.readRows(
-      java.nio.file.Files.readAllBytes(f.toPath), cols)
-      .map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long])
-  }
-
   private def compare(dir: String, label: String): Unit = {
-    val want = sparkRows(dir)
-    val got = ourRows(dir)
+    val want = rowsOf(spark.read.parquet(dir))
+    val got = rowsOf(spark.read.format("graftpq").load(dir))
     assert(got.size == want.size, s"$label: ${got.size} vs ${want.size}")
     for ((w, g) <- want.zip(got))
       assert(w == g, s"$label row ${w.head}: $w vs $g")
   }
 
-  test("Spark-written files decode row-identically across every codec " +
-      "(pages through our own Snappy/Inflate/Zstd/Lz4)") {
-    for (codec <- Seq("uncompressed", "snappy", "gzip", "zstd")) {
+  test("Spark-written files decode row-identically through graftpq " +
+      "across every codec") {
+    for (codec <- Seq("uncompressed", "snappy", "gzip", "zstd", "lz4_raw")) {
       val dir = java.nio.file.Files
         .createTempDirectory(s"graft-pqdata-$codec").toString
       writeDf(dir, codec)
@@ -73,11 +64,13 @@ class ParquetDataSpec extends AnyFunSuite {
     val prev = hc.get("parquet.writer.version")
     hc.set("parquet.writer.version", "v2")
     try {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-pqdata-v2").toString
-      writeDf(dir, "zstd")
-      compare(dir, "v2-zstd")
-      graft.streaming.WorkDirs.deleteRecursively(new java.io.File(dir))
+      for (codec <- Seq("uncompressed", "zstd")) {
+        val dir = java.nio.file.Files
+          .createTempDirectory("graft-pqdata-v2").toString
+        writeDf(dir, codec)
+        compare(dir, s"v2-$codec")
+        graft.streaming.WorkDirs.deleteRecursively(new java.io.File(dir))
+      }
     } finally {
       if (prev == null) hc.unset("parquet.writer.version")
       else hc.set("parquet.writer.version", prev)
@@ -96,6 +89,11 @@ class ParquetDataSpec extends AnyFunSuite {
         .createTempDirectory("graft-pqdata-pages").toString
       writeDf(dir, "snappy")
       compare(dir, "tiny-pages")
+      // page skipping seeks by the OffsetIndex the page check verifies
+      val id = spark.read.format("graftpq").load(dir)
+        .filter("id >= 2000 AND id < 2010")
+      assert(rowsOf(id) ==
+        rowsOf(spark.read.parquet(dir).filter("id >= 2000 AND id < 2010")))
       graft.streaming.WorkDirs.deleteRecursively(new java.io.File(dir))
     } finally {
       if (prevPage == null) hc.unset("parquet.page.size")
@@ -112,8 +110,10 @@ class ParquetDataSpec extends AnyFunSuite {
     val f = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".parquet")).head
     val good = java.nio.file.Files.readAllBytes(f.toPath)
-    def decodeAll(b: Array[Byte]): Unit =
-      ParquetData.readRows(b, cols).length
+    def decodeAll(b: Array[Byte]): Unit = {
+      java.nio.file.Files.write(f.toPath, b)
+      GraftPqDirect.count(spark.read.format("graftpq").load(dir))
+    }
     // truncating the body while keeping the footer intact: the page
     // walk must hit a bounds guard, never an index crash
     val torn = good.take(good.length / 4) ++
@@ -123,25 +123,54 @@ class ParquetDataSpec extends AnyFunSuite {
       case e => fail(s"quiet crash class: ${e.getClass} ${e.getMessage}")
     }
     // unknown column
-    val e2 = intercept[IllegalArgumentException](
-      ParquetData.readRows(good, Seq("nope")).length)
+    java.nio.file.Files.write(f.toPath, good)
+    val e2 = intercept[AnalysisException](
+      spark.read.format("graftpq").load(dir).select("nope").collect())
     assert(e2.getMessage.contains("nope"), e2.getMessage)
     graft.streaming.WorkDirs.deleteRecursively(new java.io.File(dir))
   }
 
+  /** A one-row parquet file: one required INT64 column `v` holding
+    * 424242 in one v1 data page whose body `codec` compressed and
+    * whose header declares `unc` uncompressed bytes.
+    */
+  private def oneValueFile(file: java.io.File, codec: Int,
+      body: Array[Byte], unc: Int): Unit = {
+    import org.apache.parquet.format._
+    def thrift(write: java.io.OutputStream => Unit): Array[Byte] = {
+      val out = new java.io.ByteArrayOutputStream()
+      write(out)
+      out.toByteArray
+    }
+    val header = new PageHeader(PageType.DATA_PAGE, unc, body.length)
+    header.setData_page_header(
+      new DataPageHeader(1, Encoding.PLAIN, Encoding.RLE, Encoding.RLE))
+    val chunk = thrift(Util.writePageHeader(header, _)) ++ body
+    val meta = new ColumnMetaData(Type.INT64,
+      java.util.List.of(Encoding.PLAIN), java.util.List.of("v"),
+      CompressionCodec.findByValue(codec), 1L, chunk.length.toLong,
+      chunk.length.toLong, 4L)
+    val column = new ColumnChunk(4L)
+    column.setMeta_data(meta)
+    val root = new SchemaElement("m")
+    root.setNum_children(1)
+    val leaf = new SchemaElement("v")
+    leaf.setType(Type.INT64)
+    leaf.setRepetition_type(FieldRepetitionType.REQUIRED)
+    val footer = thrift(Util.writeFileMetaData(new FileMetaData(1,
+      java.util.List.of(root, leaf), 1L, java.util.List.of(
+        new RowGroup(java.util.List.of(column), chunk.length.toLong,
+          1L))), _))
+    val len = java.nio.ByteBuffer.allocate(4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(footer.length)
+      .array()
+    val magic = "PAR1".getBytes("US-ASCII")
+    java.nio.file.Files.write(file.toPath,
+      magic ++ chunk ++ footer ++ len ++ magic)
+  }
+
   test("a page header declaring a huge uncompressed size rejects before " +
       "any allocation, on every codec") {
-    // one hand-built v1 data page (thrift compact PageHeader) holding a
-    // single required INT64 value, its body compressed by `codec`
-    def varint(v0: Long): Array[Byte] = {
-      val b = Array.newBuilder[Byte]
-      var v = v0
-      while ((v & ~0x7fL) != 0) { b += ((v & 0x7f) | 0x80).toByte; v >>>= 7 }
-      b += v.toByte
-      b.result()
-    }
-    def i32(v: Int): Array[Byte] = // field delta 1, compact type i32
-      Array[Byte](0x15) ++ varint(((v << 1) ^ (v >> 31)) & 0xffffffffL)
     val value = java.nio.ByteBuffer.allocate(8)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN).putLong(424242L).array()
     def gzip(b: Array[Byte]): Array[Byte] = {
@@ -156,31 +185,32 @@ class ParquetDataSpec extends AnyFunSuite {
       6 -> com.github.luben.zstd.Zstd.compress(value, 3),
       7 -> net.jpountz.lz4.LZ4Factory.fastestInstance().fastCompressor()
         .compress(value))
-    def chunk(codec: Int, body: Array[Byte], unc: Int) = {
-      val dataPageHeader = i32(1) ++ i32(0) ++ i32(3) ++ i32(3) ++
-        Array[Byte](0)
-      val bytes = i32(0) ++ i32(unc) ++ i32(body.length) ++
-        Array[Byte](0x2c) ++ dataPageHeader ++ Array[Byte](0) ++ body
-      val col = graft.operators.ParquetFooter.PqColumn("v", 2, 1L, codec,
-        None, None, None, dataPageOffset = 0L,
-        totalCompressedSize = bytes.length.toLong)
-      () => ParquetData.readChunkLevels(bytes, col, 0, 0, 2, 0, 1)
-    }
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-pqdata-huge").toFile
+    val file = new java.io.File(dir, "part-0.parquet")
     val threads = java.lang.management.ManagementFactory.getThreadMXBean
       .asInstanceOf[com.sun.management.ThreadMXBean]
     val me = Thread.currentThread.getId
-    for ((codec, body) <- bodies) {
+    try for ((codec, body) <- bodies) {
       // the honest header decodes: the hand-built page itself is valid
-      assert(chunk(codec, body, 8)().vals.toSeq == Seq(424242L),
+      oneValueFile(file, codec, body, 8)
+      val df = spark.read.format("graftpq").load(file.toString)
+      assert(df.collect().toSeq.map(_.getLong(0)) == Seq(424242L),
         s"codec $codec")
       for (huge <- Seq(1 << 30, Int.MaxValue)) {
+        oneValueFile(file, codec, body, huge)
+        // plan first: only the reader runs in the measured window
+        val (parts, factory) = GraftPqDirect.plan(
+          spark.read.format("graftpq").load(file.toString))
         val before = threads.getThreadAllocatedBytes(me)
-        val e = intercept[IllegalArgumentException](chunk(codec, body, huge)())
+        val e = intercept[IllegalArgumentException](
+          parts.foreach(GraftPqDirect.rows(factory, _)))
         val allocated = threads.getThreadAllocatedBytes(me) - before
         assert(allocated < (16L << 20),
           s"codec $codec, declared $huge: allocated $allocated bytes " +
             s"before rejecting (${e.getMessage})")
+        assert(e.getMessage.contains(file.getName), e.getMessage)
       }
-    }
+    } finally graft.streaming.WorkDirs.deleteRecursively(dir)
   }
 }

@@ -2,19 +2,27 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{ParquetData, ParquetFooter, ParquetWrite}
+import graft.operators.{ParquetFooter, ParquetWrite}
 import graft.operators.ParquetWrite.PwFields
 
 /** The from-scratch parquet WRITER (operators.ParquetWrite), validated
   * against two independent readers: Spark's own parquet-mr vectorized
   * reader must decode written files row-identically (the strong
-  * foreign-reader direction), this repo's own [[ParquetData]] must
-  * round-trip them, and `graftpq` must prune row groups from the
-  * written footer statistics.
+  * foreign-reader direction), `graftpq` must round-trip them and
+  * prune row groups from the written footer statistics.
   */
 class ParquetWriteSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
+
+  /** `f`'s rows through graftpq, in order of the first column. */
+  private def graftpqRows(f: java.io.File, cols: Seq[String])
+      : Vector[Array[Any]] =
+    spark.read.format("graftpq").load(f.toString)
+      .select(cols.map(org.apache.spark.sql.functions.col): _*)
+      .orderBy(cols.head).collect().toVector
+      .map(r => Array.tabulate[Any](cols.length)(i =>
+        if (r.isNullAt(i)) null else r.get(i)))
 
   private def tmpDir(tag: String): java.io.File =
     java.nio.file.Files.createTempDirectory(s"graft-pqwrite-$tag")
@@ -82,7 +90,7 @@ class ParquetWriteSpec extends AnyFunSuite {
       val footer = ParquetFooter.read(bytes)
       assert(footer.numRows == 2500)
       assert(footer.rowGroups.length == 4) // 700+700+700+400
-      val got = ParquetData.readRows(bytes, Seq("id", "s", "d")).toVector
+      val got = graftpqRows(f, Seq("id", "s", "d"))
       assert(got.length == 2500)
       assert(got(0)(0) == 0L && got(0)(1) == null && got(0)(2) == 0.0)
       assert(got(10)(1) == "row-10")
@@ -165,9 +173,7 @@ class ParquetWriteSpec extends AnyFunSuite {
       assert(got.agg(org.apache.spark.sql.functions.sum("code"))
         .head.getLong(0) == (0 until 60000).map(_ % 12).map(_.toLong).sum)
       // our own reader decodes the RLE_DICTIONARY pages too
-      val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-      val own = ParquetData.readRows(bytes, Seq("id", "ev", "code"))
-        .toVector
+      val own = graftpqRows(f, Seq("id", "ev", "code"))
       assert(own.length == 60000)
       assert(own(3)(1) == "type_3" && own(50)(1) == null)
       // the size claim: the same rows written by Spark's own writer
@@ -204,8 +210,7 @@ class ParquetWriteSpec extends AnyFunSuite {
       assert(got.count() == 5000)
       assert(got.filter("s IS NULL").count() ==
         (0 until 5000).count(_ % 9 == 0))
-      val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-      val own = ParquetData.readRows(bytes, Seq("id", "s")).toVector
+      val own = graftpqRows(f, Seq("id", "s"))
       assert(own.length == 5000 && own(1)(1) == "payload-1")
     } finally graft.streaming.WorkDirs.deleteRecursively(dir)
   }

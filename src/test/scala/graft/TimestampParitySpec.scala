@@ -6,8 +6,6 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType,
   TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.ParquetFooter.{PqSchemaField, PqTimestamp}
-import graft.sources.GraftParquetTypesBridge
 
 /** graftpq and graftorc return the same schemas and rows as Spark's own
   * parquet and ORC readers under any session time zone: every sfSmoke
@@ -184,21 +182,22 @@ class TimestampParitySpec extends AnyFunSuite {
 
   test("INT64 TIMESTAMP(NANOS) maps as Spark's converter does: LongType " +
       "under nanosAsLong, a named reject otherwise") {
-    val nanos = PqSchemaField("t", 2, 0, None, hasLogicalType = true,
-      timestamp = Some(PqTimestamp(adjustedToUtc = true, unit = 2)))
+    val p = parquetMrFixture
+    def inferred(c: String) =
+      spark.read.format("graftpq").load(p).schema(c).dataType
     withConf("spark.sql.legacy.parquet.nanosAsLong" -> "true") {
-      assert(GraftParquetTypesBridge.leafType(nanos) == LongType)
+      assert(inferred("nanos") == LongType)
     }
     withConf("spark.sql.legacy.parquet.nanosAsLong" -> "false") {
-      val e = intercept[IllegalArgumentException](
-        GraftParquetTypesBridge.leafType(nanos))
-      assert(e.getMessage.contains("'t'") &&
+      val e = intercept[IllegalArgumentException](inferred("nanos"))
+      assert(e.getMessage.contains("'nanos'") &&
         e.getMessage.contains("NANOS"), e.getMessage)
     }
-    val ntz = nanos.copy(timestamp = Some(PqTimestamp(false, 1)))
-    assert(GraftParquetTypesBridge.leafType(ntz) == TimestampNTZType)
-    withConf("spark.sql.parquet.inferTimestampNTZ.enabled" -> "false") {
-      assert(GraftParquetTypesBridge.leafType(ntz) == TimestampType)
+    withConf("spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+      assert(inferred("ntz") == TimestampNTZType)
+      withConf("spark.sql.parquet.inferTimestampNTZ.enabled" -> "false") {
+        assert(inferred("ntz") == TimestampType)
+      }
     }
   }
 }

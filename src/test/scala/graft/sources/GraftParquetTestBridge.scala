@@ -8,9 +8,3 @@ object GraftParquetTestBridge {
   def escapePath(s: String): String = GraftParquet.escapePathName(s)
   def unescapePath(s: String): String = GraftParquet.unescapePathName(s)
 }
-
-/** Test-only visibility bridge to graftpq's leaf type mapping. */
-object GraftParquetTypesBridge {
-  def leafType(f: graft.operators.ParquetFooter.PqSchemaField)
-      : org.apache.spark.sql.types.DataType = GraftParquet.leafType(f)
-}
