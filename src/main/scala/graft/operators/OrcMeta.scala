@@ -75,12 +75,34 @@ object OrcMeta {
     * compression block size (256 KiB when unset). LZO rejects by name.
     */
   private[operators] def decompressStream(p: Array[Byte], off: Int, len: Int,
-      compression: Int, blockSize: Int): Array[Byte] = compression match {
-    case 0 => java.util.Arrays.copyOfRange(p, off, off + len)
+      compression: Int, blockSize: Int): Array[Byte] =
+    if (compression == 0) java.util.Arrays.copyOfRange(p, off, off + len)
+    else {
+      val out = new java.io.ByteArrayOutputStream()
+      eachChunk(p, off, len, compression, blockSize)(out.write)
+      out.toByteArray
+    }
+
+  /** The decompressed length of an ORC stream, one chunk held at a
+    * time.
+    */
+  private[operators] def decompressedLength(p: Array[Byte], off: Int,
+      len: Int, compression: Int, blockSize: Int): Long = {
+    var n = 0L
+    eachChunk(p, off, len, compression, blockSize)((_, _, k) => n += k)
+    n
+  }
+
+  /** `f(bytes, offset, length)` over each decompressed chunk of the
+    * stream [[decompressStream]] describes, in order.
+    */
+  private def eachChunk(p: Array[Byte], off: Int, len: Int,
+      compression: Int, blockSize: Int)(f: (Array[Byte], Int, Int) => Unit)
+      : Unit = compression match {
+    case 0 => f(p, off, len)
     case 1 | 2 | 4 | 5 =>
       val max = LibCodec.declared("ORC compression block",
         if (blockSize > 0) blockSize else 1 << 18)
-      val out = new java.io.ByteArrayOutputStream()
       var o = off
       val end = off + len
       while (o < end) {
@@ -91,7 +113,7 @@ object OrcMeta {
         val original = (h & 1) != 0
         val n = h >>> 1
         require(o + n <= end, s"torn ORC: $n-byte chunk overruns")
-        if (original) out.write(p, o, n)
+        if (original) f(p, o, n)
         else {
           val dec = compression match {
             case 1 => // ZLIB = raw deflate
@@ -101,11 +123,10 @@ object OrcMeta {
             case 5 => Zstd.decompress(p, o, n, max)
             case _ => Lz4.decompressBlockUnknown(p, o, n, max)
           }
-          out.write(dec, 0, dec.length)
+          f(dec, 0, dec.length)
         }
         o += n
       }
-      out.toByteArray
     case 3 => throw new IllegalArgumentException(
       "ORC compression kind 3 (LZO) unsupported")
     case c => throw new IllegalArgumentException(

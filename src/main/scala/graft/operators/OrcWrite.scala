@@ -1,8 +1,8 @@
 package graft.operators
 
-/** ORC WRITER from scratch (pure JVM) — the write-side twin of
-  * [[OrcData]]/[[OrcMeta]], completing ownership of the second columnar
-  * format in both directions (parquet has [[ParquetWrite]]). Emits the classic uncompressed
+/** ORC WRITER (pure JVM), the write side of the second columnar format
+  * next to [[OrcData]]/[[OrcMeta]]'s planning reads (parquet has
+  * [[ParquetWrite]]). Emits the classic uncompressed
   * shape every ORC reader accepts:
   *
   *   - "ORC" 3-byte header, stripes of INDEX then DATA streams — one
@@ -48,8 +48,8 @@ package graft.operators
   *
   * Validated the strong way in OrcWriteSpec: Spark's own orc-core
   * reader — the independent implementation — must read written files
-  * row-identically, and this repo's [[OrcData.readRows]] must
-  * round-trip them. Formats per the public ORC v1 specification
+  * row-identically, directly and through `graftorc`. Formats per the
+  * public ORC v1 specification
   * (orc_proto.proto field ids, RLE sections).
   *
   * Scale shape: same contract as [[ParquetWrite]] — the distributed
@@ -144,7 +144,7 @@ object OrcWrite {
   }
 
   // -------------------------------------------------------------------
-  // run-length encoders (the encode direction of OrcData's decoders)
+  // run-length encoders
 
   /** Byte RLE, literal-group form: headers −n (n ≤ 128) then n raw
     * bytes — spec-legal for any content. Runs never cross a `breaks`
@@ -327,9 +327,7 @@ object OrcWrite {
   private val K_SECONDARY = 5
   private val K_ROW_INDEX = 6 // INDEX-area stream (one per column)
 
-  /** Unbounded base-128 zigzag varints — the DECIMAL DATA stream, the
-    * encode inverse of OrcData.readBigVarints.
-    */
+  /** Unbounded base-128 zigzag varints — the DECIMAL DATA stream. */
   private def bigVarints(vals: Seq[java.math.BigInteger]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(vals.length * 3)
     for (v <- vals) {
@@ -350,8 +348,7 @@ object OrcWrite {
 
   /** The SECONDARY-stream nanos packing: strip `z` trailing decimal
     * zeros (only ever 2..7) and record `z − 1` in the low 3 bits
-    * (0 ⇒ none stripped; the decoder multiplies by 10^(code+1)) — the
-    * exact inverse of [[OrcData]]'s parseNanos.
+    * (0 ⇒ none stripped; the decoder multiplies by 10^(code+1)).
     */
   private def formatNanos(n: Long): Long =
     if (n == 0) 0L
@@ -447,7 +444,7 @@ object OrcWrite {
       case 9 | 18 => // TIMESTAMP: signed seconds since the 2015
         // base (DATA) + packed nanos (SECONDARY). The reader re-floors
         // a negative second with nonzero nanos, so the writer stores
-        // floor + 1 there — the exact inverse of OrcData's decode.
+        // floor + 1 there (orc-core's convention).
         val secs = new Array[Long](nonNull)
         val nanos = new Array[Long](nonNull)
         var v = 0
@@ -622,8 +619,7 @@ object OrcWrite {
     * children carry its non-null slots, and a LIST/MAP's children
     * carry the concatenation of its non-null collections (LENGTH
     * stream, unsigned RLEv2). Values: LIST = Seq[Any], MAP =
-    * Seq[(key, value)], STRUCT = Seq[Any] of field values — the same
-    * shapes [[graft.operators.OrcData.readColumnTree]] yields.
+    * Seq[(key, value)], STRUCT = Seq[Any] of field values.
     */
   private def buildColumnTree(f: OwField, colId: Int,
       vals: Array[Any], n: Int,
@@ -760,7 +756,7 @@ object OrcWrite {
   // column statistics (orc_proto ColumnStatistics and friends) — the
   // skip-side metadata that lets readers prune: written per stripe into
   // the Metadata section (graftorc's stripe pruning consumes exactly
-  // that, OrcData.parseMetadata) and merged into the file footer's
+  // that, through OrcData.readPlan) and merged into the file footer's
   // `statistics` field (orc-core's Reader.getStatistics)
 
   /** UTF-8 byte order == Unicode code-point order, which differs from
@@ -1157,9 +1153,9 @@ object OrcWrite {
           }
         // BLOOM_FILTER_UTF8 streams (INDEX area, selected columns):
         // one BloomFilter per row group, orc-core's exact shape —
-        // numHashFunctions + utf8bitset (LE long words), values hashed
-        // with Murmur3-64(seed 104729) over UTF-8 bytes for strings
-        // and Thomas Wang's mix for the integer family, sized for the
+        // numHashFunctions + utf8bitset (LE long words), values added
+        // through orc-core's BloomFilter (Murmur3-64 over UTF-8 bytes
+        // for strings, its long hash for the integer family), sized for the
         // group's rows at 0.01 fpp (tighter than orc-core's 0.05
         // default — ~10 bits/row buys whole-file point-lookup pruning)
         val bloomStreams: Seq[BuiltStream] =
@@ -1182,29 +1178,26 @@ object OrcWrite {
                     (math.log(2) * math.log(2))).toInt + 63) / 64) * 64
                   val k = math.max(1, math.round(
                     nBits.toDouble / entries * math.log(2)).toInt)
-                  val words = new Array[Long](nBits / 64)
+                  val bloom = new org.apache.orc.util.BloomFilter(
+                    new Array[Long](nBits / 64), k)
                   var i = from
                   while (i < to) {
-                    val v = colVals(c)(i)
-                    if (v != null) {
-                      val h = f.kind match {
-                        case 7 => OrcData.orcMurmur64(
-                          v.asInstanceOf[String].getBytes(
-                            java.nio.charset.StandardCharsets.UTF_8))
-                        case _ => OrcData.orcLongHash(v match {
-                          case x: java.lang.Integer => x.longValue
-                          case x: java.lang.Long => x.longValue
-                          case x: java.lang.Short => x.longValue
-                          case x: java.lang.Byte => x.longValue
-                          case x => throw new IllegalArgumentException(
-                            s"bloom filter on column '${f.name}': " +
-                              s"${x.getClass.getName} values unsupported")
-                        })
-                      }
-                      OrcData.orcBloomSet(words, k, h)
+                    colVals(c)(i) match {
+                      case null => ()
+                      case v: String if f.kind == 7 =>
+                        val u = v.getBytes(
+                          java.nio.charset.StandardCharsets.UTF_8)
+                        bloom.addBytes(u, 0, u.length)
+                      case x @ (_: java.lang.Integer | _: java.lang.Long |
+                          _: java.lang.Short | _: java.lang.Byte) =>
+                        bloom.addLong(x.asInstanceOf[Number].longValue)
+                      case x => throw new IllegalArgumentException(
+                        s"bloom filter on column '${f.name}': " +
+                          s"${x.getClass.getName} values unsupported")
                     }
                     i += 1
                   }
+                  val words = bloom.getBitSet
                   pb.msg(1) { m =>
                     m.uint(1, k.toLong)
                     val le = new Array[Byte](words.length * 8)

@@ -1019,33 +1019,16 @@ object Sources {
       |GROUP BY event_type ORDER BY event_type""".stripMargin
 
   // ---------------------------------------------------------------------
-  // S29: ORC stripe-data scan from scratch (operators.OrcData) — the
-  // second columnar format's DATA, not just its tail (s23): stripe
-  // directory and StripeFooters, integer RLEv2 in all four
-  // sub-encodings, boolean/byte RLE present streams, dictionary AND
-  // direct strings, every stream's chunk framing through
-  // operators.Zstd — then the recovered rows flow through
-  // Spark-native groupBy/agg. The oracle full-scans the parquet-side
-  // events table (the fixture is a lossless ORC round-trip of it), so
-  // a slipped run header, wrong patch gap, misaligned present bit, or
-  // dictionary-index bug fails the value compare. Same fan-out
-  // contract as s22/s23: one FILE per task.
-  private def s29OrcData(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val tmp = ensureOrcMetaFixture(s, dir)
-    val files = new java.io.File(tmp).listFiles()
-      .filter(_.getName.endsWith(".orc")).map(_.getAbsolutePath).toSeq
-      .sorted
-    s.createDataset(files).repartition(math.max(files.size, 1))
-      .mapPartitions(_.flatMap { path =>
-        val bytes = java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(path))
-        graft.operators.OrcData.readRows(bytes,
-          Seq("event_id", "user_id", "event_type"))
-          .map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long],
-            r(2).asInstanceOf[String]))
-      })
-      .toDF("event_id", "user_id", "event_type")
+  // S29: ORC DATA scan of the engine's zstd fixture through Spark's
+  // own ORC reader (stripe directory and StripeFooters, integer RLEv2,
+  // boolean/byte RLE present streams, dictionary AND direct strings,
+  // ZSTD chunk framing) — then the rows flow through Spark-native
+  // groupBy/agg. The oracle full-scans the parquet-side events table
+  // (the fixture is a lossless ORC round-trip of it), so the fixture's
+  // stripes are value-checked.
+  private def s29OrcData(s: SparkSession, dir: String): DataFrame =
+    s.read.orc(ensureOrcMetaFixture(s, dir))
+      .select(col("event_id"), col("user_id"), col("event_type"))
       .groupBy(col("event_type"))
       .agg(sum(col("event_id")).as("sum_id"),
         countDistinct(col("user_id")).as("n_users"),
@@ -1053,7 +1036,6 @@ object Sources {
         max(col("event_id")).as("max_id"),
         count(lit(1)).as("n"))
       .orderBy(col("event_type"))
-  }
 
   private val s29OrcDataSql =
     """SELECT event_type, CAST(sum(event_id) AS BIGINT) AS sum_id,
@@ -1064,13 +1046,13 @@ object Sources {
 
   // ---------------------------------------------------------------------
   // S30: the `graftorc` DataSource V2 (sources.GraftOrc) end-to-end —
-  // the from-scratch ORC stack surfaced the Spark-FIRST way, the twin
-  // of s28's graftpq: not a mapPartitions ingest (s29's shape) but a
-  // registered source Catalyst plans like any other — schema inferred
-  // from our protobuf footer walk, filters pushed into the ScanBuilder
-  // (per-stripe Metadata stats pruning driver-side), columns pruned to
-  // the streams the query touches, one InputPartition per stripe with
-  // a byte-range positional read. The oracle re-derives the same
+  // graft's ORC planning surfaced the Spark-FIRST way, the twin of
+  // s28's graftpq: a registered source Catalyst plans like any other —
+  // schema inferred from the footer graft parses, filters pushed into
+  // the ScanBuilder (per-stripe Metadata stats pruning driver-side),
+  // columns pruned to the ones the query touches, one InputPartition
+  // per stripe, each decoded over its byte span by Spark's own ORC
+  // reader. The oracle re-derives the same
   // answer from full scans in DuckDB, so the whole
   // plan-prune-decode chain is value-checked.
   private def s30OrcDsv2(s: SparkSession, dir: String): DataFrame = {
@@ -1469,9 +1451,9 @@ object Sources {
     tmp
   }
 
-  // S39: nested LIST/STRUCT/MAP through the from-scratch graftorc
-  // plane — ORC's child-only-when-parent-present convention (PRESENT +
-  // LENGTH streams, no Dremel levels) reassembled recursively; null
+  // S39: nested LIST/STRUCT/MAP through graftorc — ORC's
+  // child-only-when-parent-present convention (PRESENT + LENGTH
+  // streams, no Dremel levels), decoded by Spark's ORC reader; null
   // lists, empty lists, null elements, null structs, null struct
   // FIELDS, null maps and null map values are all distinct states the
   // oracle re-derives from the source table's closed forms.
@@ -2406,7 +2388,7 @@ object Sources {
   // are commit versions, each trigger plans exactly the files the new
   // versions ADDED (O(new versions), never a directory listing — the
   // Delta streaming-source IO shape at 100 TB), decoded by the same
-  // from-scratch row-group readers. Two appends stream out through one
+  // row-group readers as graftpq's batch scans. Two appends stream out through one
   // AvailableNow run; the oracle recomputes the aggregate over the
   // whole source table.
   private def s53PqStream(s: SparkSession, dir: String): DataFrame = {

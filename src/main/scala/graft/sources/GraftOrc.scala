@@ -1,6 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.catalyst.InternalRow
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import org.apache.orc.TypeDescription
+import org.apache.orc.util.BloomFilter
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table,
   TableCapability, TableProvider}
@@ -14,6 +20,10 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition,
   SupportsPushDownAggregates, SupportsPushDownFilters,
   SupportsPushDownRequiredColumns, SupportsReportStatistics,
   SupportsRuntimeV2Filtering, Statistics => V2Statistics}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.datasources.orc.OrcUtils
+import org.apache.spark.sql.execution.datasources.v2.orc.{
+  OrcPartitionReaderFactory, OrcScan}
 import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo, Filter,
   GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan,
   LessThanOrEqual, StringStartsWith}
@@ -21,41 +31,39 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.operators.OrcData
+import graft.operators.{LibCodec, OrcData}
 import graft.operators.OrcData.{OrcColStat, OrcStripe, OrcTypeNode}
 
 /** `graftorc` — the engine's own ORC scan as a first-class Spark
-  * DataSource V2, the columnar twin of [[GraftParquet]]'s `graftpq`:
-  * planned entirely from graft's own readers — schema and stripe
-  * directory from [[OrcData.readPlan]] (postscript + footer + Metadata
-  * tail IO only, never a data byte), stripes decoded by
-  * [[OrcData.readStripeRows]] through this repo's own
-  * Inflate/Snappy/Lz4/Zstd chunk codecs. The same three planning
-  * levers the built-in ORC source gets from orc-core are re-derived:
+  * DataSource V2, the twin of [[GraftParquet]]'s `graftpq`. graft
+  * plans the scan from file tails: schema and stripe directory from
+  * [[OrcData.readPlan]] (postscript + footer + Metadata tail IO only,
+  * never a data byte). Each planned stripe is then decoded by Spark's
+  * own ORC reader (orc-core), over exactly the stripe's byte span,
+  * after [[OrcData.checkStripe]] has checked its stripe footer. The
+  * planning levers:
   *
   *  - '''column pruning''' ([[SupportsPushDownRequiredColumns]]): only
-  *    the requested columns' streams are ever decoded;
+  *    the requested columns are read;
   *  - '''filter pushdown''' ([[SupportsPushDownFilters]]): numeric AND
   *    string (code-point) comparisons, IN, LIKE-prefix and IS [NOT]
   *    NULL / null-safe equality prune whole STRIPES against the
   *    Metadata section's per-stripe column statistics before any task
-  *    launches, then — when the file carries ROW INDEXES — prune at
-  *    ROW-GROUP grain from the RowIndexEntry statistics (two more
-  *    O(KB) positional reads per surviving stripe), the reader
-  *    SEEKING to the surviving group span mid-stripe instead of
-  *    decoding from the top (pruning stays group-granular, so every
-  *    filter is still re-evaluated by Spark post-scan, exactly like
-  *    orc-core's SearchArgument path);
+  *    launches, then — when the file carries ROW INDEXES — drop
+  *    stripes whose every ROW GROUP the RowIndexEntry statistics and
+  *    blooms rule out (two more O(KB) positional reads per surviving
+  *    stripe). The same filters reach Spark's reader, whose
+  *    SearchArgument skips the row groups they rule out inside a
+  *    stripe. Pruning stays group-granular, so every filter is still
+  *    re-evaluated by Spark post-scan;
   *  - '''split planning''': one [[InputPartition]] per surviving
-  *    stripe, and each task fetches ONLY its stripe's byte range via a
-  *    positional read — at 100 TB a task touches O(its stripe), not
-  *    O(its file).
+  *    stripe, and each task reads ONLY its stripe's byte range — at
+  *    100 TB a task touches O(its stripe), not O(its file).
   *
   * Registered as `graftorc` via DataSourceRegister (META-INF/services),
-  * so `spark.read.format("graftorc").load(dir)` resolves it. Every ORC
-  * primitive kind — including TIMESTAMP (micros), DECIMAL (all
-  * precisions) and BINARY — plus nested LIST/MAP/STRUCT to any depth;
-  * UNION rejects loudly by name at schema-inference time.
+  * so `spark.read.format("graftorc").load(dir)` resolves it. Every type
+  * Spark's ORC reader maps, nested LIST/MAP/STRUCT included; UNION and
+  * TIMESTAMP_INSTANT reject loudly by name at schema-inference time.
   *
   * FORMAT ROLES, a stated contract: PARQUET is the engine's TABLE
   * format — the commit protocol ([[graft.operators.Maintenance]]:
@@ -123,7 +131,7 @@ object GraftOrc {
         .map(_._1)
     if (files.isEmpty) return new StructType()
     val base = GraftOrc.toSparkSchema(
-      OrcData.readPlan(files.head.toPath).meta.types)
+      OrcData.readPlan(files.head.toPath).meta.schema)
     StructType(base.fields ++ partCols.map { case (n, t) =>
       StructField(n, t, nullable = true)
     })
@@ -154,90 +162,49 @@ object GraftOrc {
     */
   private[sources] val CatalystType = "spark.sql.catalyst.type"
 
-  /** Root-struct fields to a Spark schema; kinds per orc_proto
-    * Type.Kind, restricted to what [[OrcData.readColumnTree]] decodes —
-    * LIST/MAP/STRUCT recurse (Spark's ORC source reports every nested
-    * level nullable, matched here for schema parity). Leaf types follow
-    * Spark's ORC reader: a [[CatalystType]] attribute names the type
-    * (only the names whose values this reader decodes are accepted:
-    * the kind's own type, and `timestamp_ntz` micros over LONG), and
-    * TIMESTAMP_INSTANT, which Spark's reader cannot map, rejects.
+  /** The Spark schema of an ORC file's types, the one Spark's ORC
+    * reader decodes: Spark's `OrcUtils.toCatalystSchema` of orc-core's
+    * `TypeDescription`. Rejected by name: UNION and TIMESTAMP_INSTANT,
+    * which Spark's reader does not map, and a [[CatalystType]] attribute
+    * naming a type Spark's reader cannot read from the column's kind
+    * (it honours the kind's own type, and `timestamp_ntz` over LONG).
     */
-  private[sources] def toSparkSchema(types: Seq[OrcTypeNode])
-      : StructType = {
-    require(types.nonEmpty && types.head.kind == 12,
+  private[sources] def toSparkSchema(root: TypeDescription)
+      : StructType = LibCodec.loud("ORC schema") {
+    require(root.getCategory == TypeDescription.Category.STRUCT,
       "graftorc: ORC root type is not a struct")
-    def dataTypeOf(id: Int, n: String): DataType = {
-      val node = types(id)
-      val kindType = kindTypeOf(id, n)
-      node.attributes.get(CatalystType) match {
-        case Some(name) if !kindType.isInstanceOf[StructType] &&
-            !kindType.isInstanceOf[ArrayType] &&
-            !kindType.isInstanceOf[MapType] =>
-          CatalystSqlParser.parseDataType(name) match {
-            case t if t == kindType => t
-            case TimestampNTZType if kindType == LongType =>
-              TimestampNTZType
-            case t => throw new IllegalArgumentException(
-              s"graftorc: column '$n' Spark type '$name' over ORC kind " +
-                s"${node.kind} unsupported")
+    def check(t: TypeDescription, n: String): Unit = {
+      import TypeDescription.Category._
+      t.getCategory match {
+        case STRUCT => t.getFieldNames.asScala.zip(t.getChildren.asScala)
+          .foreach { case (f, c) =>
+            check(c, if (n.isEmpty) f else s"$n.$f")
           }
-        case _ => kindType
-      }
-    }
-    def kindTypeOf(id: Int, n: String): DataType = {
-      val node = types(id)
-      node.kind match {
-        case 0 => BooleanType
-        case 1 => ByteType
-        case 2 => ShortType
-        case 3 => IntegerType
-        case 4 => LongType
-        case 5 => FloatType
-        case 6 => DoubleType
-        case 7 => StringType
-        case 8 => BinaryType
-        case 9 => TimestampType // micros from the decode layer
-        case 18 => throw new IllegalArgumentException(
+        case LIST => check(t.getChildren.get(0), s"$n.element")
+        case MAP =>
+          check(t.getChildren.get(0), s"$n.key")
+          check(t.getChildren.get(1), s"$n.value")
+        case UNION => throw new IllegalArgumentException(
+          s"graftorc: column '$n' is an ORC UNION, which Spark's ORC " +
+            "reader does not map")
+        case TIMESTAMP_INSTANT => throw new IllegalArgumentException(
           s"graftorc: column '$n' is ORC TIMESTAMP_INSTANT, which " +
             "Spark's ORC reader does not map either")
-        case 14 =>
-          require(node.precision > 0 && node.precision <= 38 &&
-            node.scale >= 0 && node.scale <= node.precision,
-            s"graftorc: DECIMAL(${node.precision},${node.scale}) on " +
-              s"'$n' out of range")
-          DecimalType(node.precision, node.scale)
-        case 15 => DateType
-        case 10 =>
-          require(node.subtypes.length == 1,
-            s"graftorc: LIST '$n' arity ${node.subtypes.length}")
-          ArrayType(dataTypeOf(node.subtypes.head, s"$n.element"),
-            containsNull = true)
-        case 11 =>
-          require(node.subtypes.length == 2,
-            s"graftorc: MAP '$n' arity ${node.subtypes.length}")
-          MapType(dataTypeOf(node.subtypes.head, s"$n.key"),
-            dataTypeOf(node.subtypes(1), s"$n.value"),
-            valueContainsNull = true)
-        case 12 =>
-          require(node.subtypes.length == node.fieldNames.length,
-            s"graftorc: STRUCT '$n' field/subtype arity mismatch")
-          StructType(node.fieldNames.zip(node.subtypes).map {
-            case (fn, fid) =>
-              StructField(fn, dataTypeOf(fid, s"$n.$fn"),
-                nullable = true)
-          })
-        case k => throw new IllegalArgumentException(
-          s"graftorc: column '$n' ORC kind $k unsupported " +
-            "(UNION rejects by name)")
+        case DECIMAL => () // Spark's reader ignores the attribute here
+        case _ => Option(t.getAttributeValue(CatalystType)).foreach { a =>
+          val own = CatalystSqlParser.parseDataType(t.toString)
+          CatalystSqlParser.parseDataType(a) match {
+            case dt if dt == own => ()
+            case TimestampNTZType if own == LongType => ()
+            case _ => throw new IllegalArgumentException(
+              s"graftorc: column '$n' Spark type '$a' over ORC type " +
+                s"$t unsupported")
+          }
+        }
       }
     }
-    val root = types.head
-    require(root.subtypes.length == root.fieldNames.length,
-      "torn ORC: root field/subtype arity mismatch")
-    StructType(root.fieldNames.zip(root.subtypes).map { case (n, id) =>
-      StructField(n, dataTypeOf(id, n), nullable = true)
-    })
+    check(root, "")
+    OrcUtils.toCatalystSchema(root)
   }
 
   /** Translate a pushed [[Aggregation]] into per-file partial rows
@@ -303,16 +270,17 @@ object GraftOrc {
       return Some(PqPushedAgg(groups.map(g => g -> partType(g)),
         specsOpt.flatten, Vector.empty))
     }
-    val headTypes = OrcData.readPlan(files.head._1.toPath).meta.types
-    val headRoot = headTypes.head
+    val headMeta = OrcData.readPlan(files.head._1.toPath).meta
+    val headRoot = headMeta.types.head
     val idByName = headRoot.fieldNames.zip(headRoot.subtypes).toMap
     // a leaf Spark retyped by attribute (TIMESTAMP_NTZ over LONG) is
     // not the kind its statistics describe: no pushdown from them
     def kindOf(c: String): Option[Int] =
-      idByName.get(c).map(headTypes(_))
-        .filterNot(_.attributes.get(CatalystType).exists(a =>
-          CatalystSqlParser.parseDataType(a) == TimestampNTZType))
-        .map(_.kind)
+      idByName.get(c)
+        .filterNot(id => Option(headMeta.schema.findSubtype(id)
+          .getAttributeValue(CatalystType)).exists(a =>
+            CatalystSqlParser.parseDataType(a) == TimestampNTZType))
+        .map(headMeta.types(_).kind)
     // kinds 1-4 = byte/short/int/long (IntegerStatistics), 7 =
     // string, 15 = date (DateStatistics exact epoch days); partition
     // columns answer from their EXACT dir values, any parsable type
@@ -379,7 +347,7 @@ object GraftOrc {
             specs.zipWithIndex.foreach { case (spec, i) =>
               def statOf(c: String, si: Int): Option[OrcColStat] = for {
                 id <- ids.get(c)
-                if types(id).kind == headTypes(idByName(c)).kind
+                if types(id).kind == headMeta.types(idByName(c)).kind
                 st <- plan.stripeStats(si).lift(id)
               } yield st
               if (ok) spec.kind match {
@@ -539,6 +507,7 @@ private[sources] class GraftOrcScanBuilder(fullSchema: StructType,
 
   private var required: StructType = fullSchema
   private var pushed: Array[Filter] = Array.empty
+  private var readerFilters: Array[Filter] = Array.empty
   private var consumed: Array[Filter] = Array.empty
   private var aggPlan: Option[GraftParquet.PqPushedAgg] = None
   private var limit: Int = -1
@@ -634,6 +603,10 @@ private[sources] class GraftOrcScanBuilder(fullSchema: StructType,
     // temporal literals normalize to days/micros — the units the
     // parsed DateStatistics/TimestampStatistics ranges carry
     pushed = filters.filter(prunable).map(GraftParquet.normTemporal)
+    // Spark's reader takes the data-column filters as Spark gave them:
+    // its OrcFilters reads date and timestamp literals, not days/micros
+    readerFilters = filters.filter(f => prunable(f) &&
+      !f.references.exists(partTypeB.contains))
     // row-exact partition predicates are CONSUMED — see the graftpq
     // twin: applied file-in-or-file-out at planning, removed from
     // Spark's re-evaluation, re-arming agg push and the planning caps
@@ -679,20 +652,22 @@ private[sources] class GraftOrcScanBuilder(fullSchema: StructType,
     case Some(p) => new GraftPqAggScan(p, path, fmt = "graftorc")
     case None =>
       new GraftOrcScan(fullSchema, required, pushed, path, limit, topn,
-        consumed)
+        consumed, readerFilters)
   }
 }
 
 /** One surviving stripe: the unit of scan parallelism. The stripe
-  * entry carries its absolute offset and section lengths, so the
-  * reader fetches exactly its byte range.
+  * entry carries its absolute offset and section lengths, so Spark's
+  * reader opens exactly its byte range. `groupRange` is the surviving
+  * row-group span planning found (statistics and size estimates use
+  * it); inside the stripe, orc-core's SearchArgument skips groups.
   */
 final case class GraftOrcPartition(path: String, stripe: OrcStripe,
     compression: Int, blockSize: Int, types: Seq[OrcTypeNode],
     colIds: Seq[Int], stride: Int = 0,
     groupRange: Option[(Int, Int)] = None,
-    // hive partition fields: (name, type, raw dir value) — spliced as
-    // constants by the reader, never decoded from the file
+    // hive partition fields: (name, type, raw dir value) — appended
+    // as constants by Spark's reader, never read from the file
     partSpec: Seq[(String, DataType, Option[String])] = Nil)
   extends InputPartition
 
@@ -700,7 +675,8 @@ private[sources] class GraftOrcScan(fullSchema: StructType,
     required: StructType, pushed: Array[Filter], path: String,
     limit: Int = -1,
     topn: Option[GraftParquet.PqTopN] = None,
-    consumed: Array[Filter] = Array.empty)
+    consumed: Array[Filter] = Array.empty,
+    readerFilters: Array[Filter] = Array.empty)
   extends Scan with Batch with SupportsReportStatistics
   with SupportsRuntimeV2Filtering {
 
@@ -801,9 +777,7 @@ private[sources] class GraftOrcScan(fullSchema: StructType,
     * filter is pushed, two more O(KB) positional reads per surviving
     * stripe (its index area + stripe footer) prune at ROW-GROUP grain:
     * a stripe whose every group is disjoint drops entirely, and a
-    * partially-matching stripe plans only its surviving group span —
-    * the reader then SEEKS to that span instead of decoding the
-    * stripe.
+    * partially-matching stripe records its surviving group span.
     */
   override def planInputPartitions(): Array[InputPartition] = {
     var c = cached
@@ -921,20 +895,10 @@ private[sources] class GraftOrcScan(fullSchema: StructType,
           val range: Option[(Int, Int)] =
             if (!useIx || stripe.indexLength == 0) Some((0, Int.MaxValue))
             else {
-              def readAt(pos: Long, n: Long): Array[Byte] = {
-                require(n <= Int.MaxValue, s"graftorc: $n-byte read")
-                val bb = java.nio.ByteBuffer.allocate(n.toInt)
-                var p = pos
-                while (bb.hasRemaining) {
-                  val r = ch.read(bb, p)
-                  require(r > 0, "torn ORC: short planning read")
-                  p += r
-                }
-                bb.array()
-              }
-              val ixBytes = readAt(stripe.offset, stripe.indexLength)
-              val ftBytes = readAt(stripe.offset + stripe.indexLength +
-                stripe.dataLength, stripe.footerLength)
+              val ixBytes = OrcData.readAt(ch, stripe.offset,
+                stripe.indexLength)
+              val ftBytes = OrcData.readAt(ch, stripe.offset +
+                stripe.indexLength + stripe.dataLength, stripe.footerLength)
               val gsRaw = OrcData.rowGroupStats(ixBytes, ftBytes,
                 plan.meta.compression, plan.meta.blockSize, pushedIds)
               // row-group twin of readPlan's string-stat writer fence:
@@ -953,7 +917,7 @@ private[sources] class GraftOrcScan(fullSchema: StructType,
                 case In(c, _) => Seq(c)
                 case _ => Nil
               }.distinct.flatMap(idByName.get)
-              val blooms: Map[Int, Seq[OrcData.OrcBloom]] =
+              val blooms: Map[Int, Seq[Option[BloomFilter]]] =
                 if (eqIds.isEmpty) Map.empty
                 else OrcData.rowGroupBlooms(ixBytes, ftBytes,
                   plan.meta.compression, plan.meta.blockSize, eqIds)
@@ -961,9 +925,8 @@ private[sources] class GraftOrcScan(fullSchema: StructType,
                 def might(c: String, v: Any): Boolean = (for {
                   id <- idByName.get(c)
                   bl <- blooms.get(id)
-                  bg <- bl.lift(g)
-                  h <- orcHashOf(plan.meta.types(id).kind, v)
-                } yield OrcData.orcBloomMightContain(bg, h))
+                  bg <- bl.lift(g).flatten
+                } yield bloomMayHold(bg, plan.meta.types(id).kind, v))
                   .getOrElse(true)
                 flt match {
                   case EqualTo(c, v) => might(c, v)
@@ -1119,26 +1082,21 @@ private[sources] class GraftOrcScan(fullSchema: StructType,
     }
   }
 
-  /** The 64-bit hash ORC blooms filed this value under: Murmur3-64
-    * (orc-core shape, seed 104729) of the UTF-8 bytes for strings,
-    * Thomas Wang's mix of the long value for the integer family;
-    * anything else never bloom-prunes.
+  /** Whether row-group `bloom` may hold `v`, a value of an ORC column
+    * of `kind`: Murmur3-64 of a string's UTF-8 bytes, the long hash of
+    * the integer family. Other values never bloom-prune.
     */
-  private def orcHashOf(kind: Int, v: Any): Option[Long] = kind match {
-    case 7 => v match { // STRING
-      case s: String => Some(OrcData.orcMurmur64(
-        s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-      case _ => None
+  private def bloomMayHold(bloom: BloomFilter, kind: Int, v: Any)
+      : Boolean =
+    (kind, v) match {
+      case (7, s: String) => // STRING
+        val u = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        bloom.testBytes(u, 0, u.length)
+      case (1 | 2 | 3 | 4, n @ (_: java.lang.Long | _: java.lang.Integer |
+          _: java.lang.Short | _: java.lang.Byte)) => // BYTE..LONG
+        bloom.testLong(n.asInstanceOf[Number].longValue)
+      case _ => true
     }
-    case 1 | 2 | 3 | 4 => v match { // BYTE/SHORT/INT/LONG
-      case n: java.lang.Long => Some(OrcData.orcLongHash(n.longValue))
-      case n: java.lang.Integer => Some(OrcData.orcLongHash(n.longValue))
-      case n: java.lang.Short => Some(OrcData.orcLongHash(n.longValue))
-      case n: java.lang.Byte => Some(OrcData.orcLongHash(n.longValue))
-      case _ => None
-    }
-    case _ => None
-  }
 
   private def colsOf(f: Filter): Seq[String] = f match {
     case EqualTo(c, _) => Seq(c)
@@ -1153,121 +1111,93 @@ private[sources] class GraftOrcScan(fullSchema: StructType,
     case _ => Nil // IsNotNull alone rarely prunes a group
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftOrcReaderFactory(required)
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val partNames = GraftOrc.partitionColsOf(path).map(_._1).toSet
+    GraftOrcReaderFactory(
+      StructType(fullSchema.fields.filterNot(f => partNames(f.name))),
+      required, partNames, readerFilters)
+  }
 }
 
-private[sources] class GraftOrcReaderFactory(required: StructType)
-  extends PartitionReaderFactory {
+private[sources] object GraftOrcReaderFactory {
+
+  /** graftorc's reader factory over `required`: Spark's own row-mode ORC
+    * reader factory, built through [[OrcScan]] so it carries the
+    * session's ORC settings, over the files' `data` schema. Spark's rows
+    * are the requested data columns followed by the partition values;
+    * the reader projects them into `required` order. `filters` (data
+    * columns only) reach it only so orc-core's SearchArgument skips the
+    * row groups they rule out; Spark re-evaluates every filter after the
+    * scan. They are part of the cache key because Spark's reader writes
+    * its SearchArgument into the conf its built factory broadcasts.
+    */
+  def apply(data: StructType, required: StructType, partNames: Set[String],
+      filters: Array[Filter]): GraftOrcReaderFactory =
+    built((data, required, partNames, filters.toSeq)) { (spark, settings) =>
+      val readData = StructType(required.fields.filterNot(f =>
+        partNames(f.name)))
+      val parts = StructType(required.fields.filter(f => partNames(f.name)))
+      val sparkFactory = OrcScan(spark, settings, null, data, readData,
+        parts, CaseInsensitiveStringMap.empty(), pushedFilters = filters)
+        .createReaderFactory().asInstanceOf[OrcPartitionReaderFactory]
+      new GraftOrcReaderFactory(sparkFactory, required,
+        required.fields.map(f =>
+          if (partNames(f.name)) readData.length + parts.fieldIndex(f.name)
+          else readData.fieldIndex(f.name)).toSeq)
+    }
+
+  private val built = new SparkReaderFactories[GraftOrcReaderFactory]
+}
+
+private[sources] class GraftOrcReaderFactory(
+    sparkFactory: OrcPartitionReaderFactory, required: StructType,
+    ordinals: Seq[Int]) extends PartitionReaderFactory {
+
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] =
-    new GraftOrcReader(partition.asInstanceOf[GraftOrcPartition],
-      required)
+    new GraftOrcReader(partition.asInstanceOf[GraftOrcPartition], this)
+
+  /** Spark's reader over exactly `p`'s stripe, once
+    * [[OrcData.checkStripe]] has passed the stripe footer of every
+    * requested column.
+    */
+  private[sources] def open(p: GraftOrcPartition)
+      : PartitionReader[InternalRow] = {
+    val file = new java.io.File(p.path)
+    OrcData.checkStripe(file.toPath, p.stripe, p.compression, p.blockSize,
+      p.colIds.flatMap(OrcData.subtreeIds(p.types, _)))
+    sparkFactory.buildReader(PartitionedFile(
+      InternalRow.fromSeq(p.partSpec.map { case (_, dt, raw) =>
+        GraftParquet.partitionValue(dt, raw)
+      }),
+      SparkPath.fromPath(new org.apache.hadoop.fs.Path(file.toURI)),
+      p.stripe.offset,
+      p.stripe.indexLength + p.stripe.dataLength + p.stripe.footerLength,
+      Array.empty[String], 0L, file.length()))
+  }
+
+  /** A view of Spark's rows in `required` order. */
+  private[sources] def view(): ProjectingInternalRow =
+    ProjectingInternalRow(required, ordinals)
 }
 
-/** Decodes one stripe: a positional read of exactly the stripe's byte
-  * range (index + data + stripe footer), rows via
-  * [[OrcData.readStripeRows]] with `base = stripe.offset`, values
-  * adapted to Spark's internal representations (UTF8String; DateType's
-  * day int is already the physical value).
+/** Reads one planned stripe through Spark's ORC reader. Reader failures
+  * surface as `IllegalArgumentException`s naming the file.
   */
 private[sources] class GraftOrcReader(p: GraftOrcPartition,
-    required: StructType) extends PartitionReader[InternalRow] {
+    f: GraftOrcReaderFactory) extends PartitionReader[InternalRow] {
 
-  private val rows: Iterator[Array[Any]] = {
-    val span = p.stripe.indexLength + p.stripe.dataLength +
-      p.stripe.footerLength
-    require(span <= Int.MaxValue,
-      s"graftorc: $span-byte stripe exceeds buffer limits")
-    val ch = java.nio.channels.FileChannel.open(
-      java.nio.file.Paths.get(p.path),
-      java.nio.file.StandardOpenOption.READ)
-    val buf = try {
-      val bb = java.nio.ByteBuffer.allocate(span.toInt)
-      var pos = p.stripe.offset
-      while (bb.hasRemaining) {
-        val r = ch.read(bb, pos)
-        require(r > 0, "torn ORC: short stripe read")
-        pos += r
-      }
-      bb.array()
-    } finally ch.close()
-    p.groupRange match {
-      case Some((g0, g1)) =>
-        OrcData.readStripeRowsRange(buf, p.stripe.offset, p.stripe,
-          p.compression, p.blockSize, p.types, p.colIds, p.stride,
-          g0, math.min(g1.toLong,
-            (p.stripe.rows + p.stride - 1) / p.stride).toInt)
-      case None =>
-        OrcData.readStripeRows(buf, p.stripe.offset, p.stripe,
-          p.compression, p.blockSize, p.types, p.colIds)
-    }
-  }
+  private def loud[A](body: => A): A =
+    LibCodec.naming(p.path)(LibCodec.loud("ORC reader")(body))
 
-  private def adaptOf(dt: DataType): Any => Any = dt match {
-    case StringType =>
-      v => if (v == null) null
-        else UTF8String.fromString(v.asInstanceOf[String])
-    case d: DecimalType =>
-      v => if (v == null) null
-        else Decimal(BigDecimal(v.asInstanceOf[java.math.BigDecimal]),
-          d.precision, d.scale)
-    case ArrayType(et, _) =>
-      val ad = adaptOf(et)
-      v => if (v == null) null
-        else new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          v.asInstanceOf[Seq[Any]].map(ad).toArray)
-    case MapType(kt, vt, _) =>
-      val kad = adaptOf(kt)
-      val vad = adaptOf(vt)
-      v => if (v == null) null
-        else {
-          val kvs = v.asInstanceOf[Seq[(Any, Any)]]
-          new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-            new org.apache.spark.sql.catalyst.util.GenericArrayData(
-              kvs.map(p => kad(p._1)).toArray),
-            new org.apache.spark.sql.catalyst.util.GenericArrayData(
-              kvs.map(p => vad(p._2)).toArray))
-        }
-    case st: StructType =>
-      val ads = st.fields.map(f => adaptOf(f.dataType))
-      v => if (v == null) null
-        else {
-          val fs = v.asInstanceOf[Seq[Any]]
-          InternalRow.fromSeq(fs.lazyZip(ads).map((x, ad) => ad(x)))
-        }
-    case _ => identity // TimestampType micros / BinaryType bytes
-  }
-
-  // hive partition fields splice in as constants (parsed once from
-  // the file's dir values); data fields take the decoded columns in
-  // order — the decode yielded exactly the non-partition fields
-  private val partConst: Map[String, Any] = p.partSpec.map {
-    case (n, dt, raw) => n -> GraftParquet.partitionValue(dt, raw)
-  }.toMap
-
-  private val adapt: Array[Any => Any] =
-    required.fields.map[Any => Any](f => adaptOf(f.dataType))
-
-  private val dataIdx: Array[Int] = {
-    var next = 0
-    required.fields.map { f =>
-      if (partConst.contains(f.name)) -1
-      else { val i = next; next += 1; i }
-    }
-  }
-
-  private var cur: Array[Any] = _
+  private val inner = loud(f.open(p))
+  private val out = f.view()
 
   override def next(): Boolean =
-    if (rows.hasNext) { cur = rows.next(); true } else false
+    try inner.next() && { out.project(inner.get()); true }
+    catch { case NonFatal(e) => loud(throw e) }
 
-  override def get(): InternalRow =
-    InternalRow.fromSeq(required.fields.indices.map { c =>
-      val di = dataIdx(c)
-      if (di < 0) partConst(required.fields(c).name)
-      else adapt(c)(cur(di))
-    })
+  override def get(): InternalRow = out
 
-  override def close(): Unit = ()
+  override def close(): Unit = inner.close()
 }

@@ -3039,49 +3039,24 @@ private[sources] object GraftPqReaderFactory {
     */
   def apply(required: StructType, partCols: Seq[(String, DataType)],
       filters: Array[Filter]): GraftPqReaderFactory = {
-    val spark = SparkSession.active
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    val key = (spark.sparkContext, required, partCols,
-      spark.sessionState.conf.getAllConfs,
-      hadoopConf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap)
     val partNames = partCols.map(_._1).toSet
-    built.synchronized(Option(built.get(key))).getOrElse {
-      val f = build(spark, hadoopConf, required, partCols)
-      built.synchronized(built.put(key, f))
-      f
-    }.fresh(filters.filter(_.references.forall(!partNames(_))))
+    built((required, partCols))(build(_, _, required, partCols))
+      .fresh(filters.filter(_.references.forall(!partNames(_))))
   }
 
-  /** Building Spark's factory broadcasts a hadoop conf (about 18 ms a
-    * query on a 4-core host) while dashboards re-read the same shapes,
-    * so the latest 32 are kept and copied (sharing the broadcast, with
-    * each scan's filters) for as long as the context, schemas and every
-    * session and hadoop setting are the same.
+  /** Built factories are copied per scan (sharing the broadcast) with
+    * that scan's filters.
     */
-  private val built = new java.util.LinkedHashMap[AnyRef,
-      GraftPqReaderFactory](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[AnyRef,
-        GraftPqReaderFactory]): Boolean = size() > 32
-  }
+  private val built = new SparkReaderFactories[GraftPqReaderFactory]
 
   private def build(spark: SparkSession,
-      hadoopConf: org.apache.hadoop.conf.Configuration,
+      settings: org.apache.hadoop.conf.Configuration,
       required: StructType, partCols: Seq[(String, DataType)])
       : GraftPqReaderFactory = {
     val partNames = partCols.map(_._1).toSet
     val data = StructType(required.fields.filterNot(f =>
       partNames(f.name)))
     val parts = StructType(required.fields.filter(f => partNames(f.name)))
-    // Spark's reader copies its whole hadoop conf, under the conf's lock,
-    // for every row group it opens: hand it only the settings made on
-    // top of Hadoop's *-default.xml (the code that reads them carries
-    // those defaults itself), about 1,100 entries fewer
-    val settings = new org.apache.hadoop.conf.Configuration(false)
-    hadoopConf.iterator().asScala.foreach { e =>
-      val from = hadoopConf.getPropertySources(e.getKey)
-      if (from == null || !from.last.endsWith("-default.xml"))
-        settings.set(e.getKey, e.getValue)
-    }
     val sparkFactory = ParquetScan(spark, settings, null, data,
       data.add(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
         LongType),

@@ -47,8 +47,17 @@ class DecoderFuzzSpec extends AnyFunSuite {
       .load(fuzzFile.toString))
   }
 
-  private def orcRows(b: Array[Byte]): Int =
-    op.OrcData.readRows(b, Seq("a", "b", "c", "d")).length
+  private lazy val fuzzOrcFile = java.nio.file.Files
+    .createTempDirectory("graft-fuzz-graftorc").resolve("part-0.orc")
+
+  /** The mutated image read through graftorc, its readers driven on
+    * this thread.
+    */
+  private def orcRows(b: Array[Byte]): Int = {
+    java.nio.file.Files.write(fuzzOrcFile, b)
+    GraftPqDirect.count(SparkTestSession.spark.read.format("graftorc")
+      .load(fuzzOrcFile.getParent.toString))
+  }
 
   private type Case = (String, Seq[Array[Byte]], Array[Byte] => Any)
 

@@ -17,40 +17,38 @@ class LocalIoSpec extends AnyFunSuite {
     "and FileSystem.getLocal still casts (the RocksDB upload path)") {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(conf)
+    // from Hadoop's checksummed defaults (the shared session starts
+    // relaxed, and is left so)
+    fs.setWriteChecksum(true)
+    fs.setVerifyChecksum(true)
     graft.util.LocalIo.relaxLocalChecksums(spark)
-    try {
-      // 1) the exact cast RocksDBFileManager.saveImmutableFilesToDfs does
-      val local = org.apache.hadoop.fs.FileSystem.getLocal(conf)
-      assert(local.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem])
+    // 1) the exact cast RocksDBFileManager.saveImmutableFilesToDfs does
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(conf)
+    assert(local.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem])
 
-      // 2) a Spark write through the relaxed instance lands no .crc
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-localio").toFile
-      val out = new java.io.File(dir, "t").getAbsolutePath
-      import spark.implicits._
-      Seq(1L, 2L, 3L).toDF("v").coalesce(1)
-        .write.mode("overwrite").parquet(out)
-      val crcs = Option(new java.io.File(out).listFiles())
-        .getOrElse(Array.empty).filter(_.getName.endsWith(".crc"))
-      assert(crcs.isEmpty,
-        s"checksum siblings written despite relaxLocalChecksums: " +
-          crcs.map(_.getName).mkString(","))
-      // and the data reads back
-      assert(spark.read.parquet(out).count() == 3L)
+    // 2) a Spark write through the relaxed instance lands no .crc
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-localio").toFile
+    val out = new java.io.File(dir, "t").getAbsolutePath
+    import spark.implicits._
+    Seq(1L, 2L, 3L).toDF("v").coalesce(1)
+      .write.mode("overwrite").parquet(out)
+    val crcs = Option(new java.io.File(out).listFiles())
+      .getOrElse(Array.empty).filter(_.getName.endsWith(".crc"))
+    assert(crcs.isEmpty,
+      s"checksum siblings written despite relaxLocalChecksums: " +
+        crcs.map(_.getName).mkString(","))
+    // and the data reads back
+    assert(spark.read.parquet(out).count() == 3L)
 
-      // 3) the copyFromLocalFile path RocksDB uses end-to-end
-      val src = new java.io.File(dir, "blob.bin")
-      java.nio.file.Files.write(src.toPath, Array[Byte](1, 2, 3))
-      val dst = new org.apache.hadoop.fs.Path(
-        new java.io.File(dir, "blob-up.bin").getAbsolutePath)
-      local.copyFromLocalFile(
-        new org.apache.hadoop.fs.Path(src.getAbsolutePath), dst)
-      assert(new java.io.File(dir, "blob-up.bin").length() == 3L)
-      graft.util.Fs.deleteRecursively(dir)
-    } finally {
-      // restore the process-wide default so other suites see stock flags
-      fs.setWriteChecksum(true)
-      fs.setVerifyChecksum(true)
-    }
+    // 3) the copyFromLocalFile path RocksDB uses end-to-end
+    val src = new java.io.File(dir, "blob.bin")
+    java.nio.file.Files.write(src.toPath, Array[Byte](1, 2, 3))
+    val dst = new org.apache.hadoop.fs.Path(
+      new java.io.File(dir, "blob-up.bin").getAbsolutePath)
+    local.copyFromLocalFile(
+      new org.apache.hadoop.fs.Path(src.getAbsolutePath), dst)
+    assert(new java.io.File(dir, "blob-up.bin").length() == 3L)
+    graft.util.Fs.deleteRecursively(dir)
   }
 }

@@ -4,13 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.OrcData
 
-/** ORC stripe-data decoding (operators.OrcData), cross-validated
-  * against orc-core via Spark's own ORC reader on Spark-written files:
-  * every supported codec (chunk framing through this repo's own
-  * Inflate/Snappy/Lz4/Zstd), dictionary AND direct strings, real nulls
-  * through the present streams, booleans/ints/longs/floats/doubles/
-  * dates, and multi-stripe files under a tiny stripe size. Torn files
-  * reject loudly.
+/** ORC stripe data read through `graftorc` (graft's stripe planning,
+  * Spark's ORC reader per stripe), compared with `spark.read.orc` on
+  * Spark-written files: every supported codec, dictionary AND direct
+  * strings, real nulls through the present streams,
+  * booleans/ints/longs/floats/doubles/dates, every RLEv2
+  * sub-encoding, and multi-stripe files under a tiny stripe size. Torn
+  * files and unknown columns reject loudly.
   */
 class OrcDataSpec extends AnyFunSuite {
 
@@ -42,22 +42,15 @@ class OrcDataSpec extends AnyFunSuite {
       .map(r => cols.indices.map(i => if (r.isNullAt(i)) null else r.get(i)))
       .sortBy(_.head.asInstanceOf[Long])
 
-  private def ourRows(dir: String): Seq[Seq[Any]] = {
-    val f = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".orc")).head
-    OrcData.readRows(java.nio.file.Files.readAllBytes(f.toPath), cols)
-      .map(_.toSeq.zipWithIndex.map {
-        // our DATE decode is the physical epoch-day int; orc-core
-        // surfaces java.sql.Date — normalize for the compare
-        case (v: Int, 8) =>
-          java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(v))
-        case (v, _) => v
-      }).toSeq.sortBy(_.head.asInstanceOf[Long])
-  }
+  /** `cols` of `dir` read through graftorc, sorted by the first. */
+  private def graftorcRows(dir: String, cols: Seq[String]): Seq[Seq[Any]] =
+    spark.read.format("graftorc").load(dir).select(cols.map(
+      org.apache.spark.sql.functions.col): _*).collect().toSeq
+      .map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
 
   private def compare(dir: String, label: String): Unit = {
     val want = sparkRows(dir)
-    val got = ourRows(dir)
+    val got = graftorcRows(dir, cols)
     assert(got.size == want.size, s"$label: ${got.size} vs ${want.size}")
     for ((w, g) <- want.zip(got))
       assert(w == g, s"$label row ${w.head}: $w vs $g")
@@ -122,13 +115,9 @@ class OrcDataSpec extends AnyFunSuite {
     }.toDF(("id" +: zoo): _*)
       .coalesce(1)
       .write.mode("overwrite").option("compression", "none").orc(dir)
-    val f = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".orc")).head
     val want = spark.read.orc(dir).collect().toSeq
       .map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
-    val got = OrcData.readRows(
-      java.nio.file.Files.readAllBytes(f.toPath), "id" +: zoo)
-      .map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long])
+    val got = graftorcRows(dir, "id" +: zoo)
     assert(got.size == want.size)
     for ((w, g) <- want.zip(got)) assert(w == g, s"$w vs $g")
     graft.streaming.WorkDirs.deleteRecursively(new java.io.File(dir))
@@ -142,15 +131,22 @@ class OrcDataSpec extends AnyFunSuite {
       .filter(_.getName.endsWith(".orc")).head
     val good = java.nio.file.Files.readAllBytes(f.toPath)
     val torn = good.take(good.length / 4) ++ good.takeRight(good.length / 2)
+    val tornDir = java.nio.file.Files
+      .createTempDirectory("graft-orcdata-torn-copy")
+    java.nio.file.Files.write(tornDir.resolve("part-0.orc"), torn)
     intercept[Exception] {
-      OrcData.readRows(torn, cols).length
+      GraftPqDirect.count(spark.read.format("graftorc")
+        .load(tornDir.toString))
     } match {
       case _: IllegalArgumentException | _: IllegalStateException => ()
       case e => fail(s"quiet crash class: ${e.getClass} ${e.getMessage}")
     }
-    val e2 = intercept[IllegalArgumentException](
-      OrcData.readRows(good, Seq("nope")).length)
+    // a declared column the files lack is named by graftorc's planning
+    val e2 = intercept[IllegalArgumentException](GraftPqDirect.count(
+      spark.read.format("graftorc").schema("id bigint, nope string")
+        .load(dir)))
     assert(e2.getMessage.contains("nope"), e2.getMessage)
+    graft.streaming.WorkDirs.deleteRecursively(tornDir.toFile)
     graft.streaming.WorkDirs.deleteRecursively(new java.io.File(dir))
   }
 }

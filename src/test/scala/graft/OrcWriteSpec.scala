@@ -2,17 +2,25 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{OrcData, OrcWrite}
+import graft.operators.OrcWrite
 import graft.operators.OrcWrite.OwFields
 
-/** The from-scratch ORC writer (operators.OrcWrite), validated against
-  * two independent readers: Spark's own orc-core reader must decode
-  * written files row-identically (the strong foreign-reader
-  * direction), and this repo's [[OrcData]] must round-trip them.
+/** The ORC writer (operators.OrcWrite), validated against Spark's own
+  * orc-core reader, which must decode written files row-identically
+  * both directly and through `graftorc`'s stripe planning.
   */
 class OrcWriteSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
+
+  /** `cols` of the ORC files in `dir` read through graftorc, in file
+    * order.
+    */
+  private def graftorcRows(dir: java.io.File, cols: String*)
+      : Vector[Seq[Any]] =
+    spark.read.format("graftorc").load(dir.toString)
+      .select(cols.map(org.apache.spark.sql.functions.col): _*)
+      .collect().toVector.map(_.toSeq)
 
   private def tmpDir(tag: String): java.io.File =
     java.nio.file.Files.createTempDirectory(s"graft-orcwrite-$tag")
@@ -80,8 +88,7 @@ class OrcWriteSpec extends AnyFunSuite {
         Double.box(i / 4.0)))
       val f = new java.io.File(dir, "part-00000.orc")
       OrcWrite.writeFile(f.toPath, fields, rows, stripeRows = 600)
-      val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-      val got = OrcData.readRows(bytes, Seq("id", "s", "d")).toVector
+      val got = graftorcRows(dir, "id", "s", "d")
       assert(got.length == 2500)
       assert(got(0)(0) == -900000000000L && got(0)(1) == null)
       assert(got(10)(1) == "row-10")
@@ -112,8 +119,7 @@ class OrcWriteSpec extends AnyFunSuite {
       assert(got.count() == 30000)
       assert(got.filter("ev = 'type_3'").count() ==
         (0 until 30000).count(i => i % 50 != 0 && i % 8 == 3))
-      val bytes = java.nio.file.Files.readAllBytes(fz.toPath)
-      val own = OrcData.readRows(bytes, Seq("id", "ev", "d")).toVector
+      val own = graftorcRows(dir, "id", "ev", "d")
       assert(own.length == 30000)
       assert(own(3)(1) == "type_3" && own(50)(1) == null)
       assert(own(299)(2) == 299 * 0.25)
@@ -580,6 +586,37 @@ class OrcWriteSpec extends AnyFunSuite {
         "absent key should plan zero stripes")
       val present = orc.filter(col("key") === md5("4242")).collect()
       assert(present.length == 1 && present(0).getLong(0) == 4242L)
+    } finally graft.streaming.WorkDirs.deleteRecursively(dir)
+  }
+
+  test("int-family blooms hash as orc-core does: zero and negative " +
+      "keys survive orc-core's SearchArgument and graftorc's bloom " +
+      "pruning, on our files and Spark's") {
+    import org.apache.spark.sql.functions.col
+    val dir = tmpDir("longbloom")
+    try {
+      // unsorted keys, so only the blooms can prune a point lookup
+      def key(i: Int): Long = -((i.toLong * 2654435761L) % 1000003L)
+      val ours = new java.io.File(dir, "ours")
+      ours.mkdirs()
+      OrcWrite.writeFile(new java.io.File(ours, "part-0.orc").toPath,
+        Seq(OwFields.long("id")),
+        (0 until 20000).iterator.map(i => Array[Any](Long.box(key(i)))),
+        rowIndexStride = 1000, bloomColumns = Set("id"))
+      val theirs = new java.io.File(dir, "theirs").toString
+      spark.range(0, 20000).select(
+        (-((col("id") * 2654435761L) % 1000003L)).as("id"))
+        .coalesce(1).write.option("orc.bloom.filter.columns", "id")
+        .option("orc.row.index.stride", "1000").orc(theirs)
+      for (i <- Seq(0, 5, 1234, 19999)) {
+        val k = key(i)
+        assert(spark.read.orc(ours.toString).where(col("id") === k)
+          .count() == 1, s"orc-core lost key $k of our file")
+        for (d <- Seq(ours.toString, theirs))
+          assert(spark.read.format("graftorc").load(d)
+            .where(col("id") === k).count() == 1,
+            s"graftorc lost key $k of $d")
+      }
     } finally graft.streaming.WorkDirs.deleteRecursively(dir)
   }
 }

@@ -3,7 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (guide: one session per suite;
-  * sharing across suites is safe because config is identical).
+  * sharing across suites is safe because config is identical). Like the
+  * driver entry points' session it skips local `.crc` checksums
+  * (`LocalIo.relaxLocalChecksums`), so a suite may edit a written file
+  * in place.
   */
 object SparkTestSession {
   lazy val spark: SparkSession = {
@@ -18,6 +21,7 @@ object SparkTestSession {
       .config("spark.scheduler.mode", "FAIR")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .getOrCreate()
+    graft.util.LocalIo.relaxLocalChecksums(s)
     s.sparkContext.setLogLevel("WARN")
     s
   }
