@@ -230,8 +230,8 @@ object OrcData {
       // the one choke point every planner-side consumer reads through
       // — so string queries over such files fall back to row data
       // (slower, never wrong). Numeric stats are unaffected (ordering
-      // of sint64/double stats never depended on collation). The
-      // engine's own writer stamps writerVersion 1 (OrcWrite).
+      // of sint64/double stats never depended on collation). OrcWrite
+      // writes through orc-core, which stamps its current version.
       val trusted =
         if (psr.writerVersion >= 1) stats
         else stats.map(_.map(stripStringStats))
@@ -385,6 +385,7 @@ object OrcData {
 
   // stream kinds (orc_proto Stream.Kind)
   private val K_LENGTH = 2
+  private val K_DICTIONARY_DATA = 3
   private val K_ROW_INDEX = 6
   private val K_BLOOM_UTF8 = 8
 
@@ -400,7 +401,8 @@ object OrcData {
     * decoder. Required: the stripe lies inside the file; its streams
     * exactly fill the index and data sections; and each of `colIds`
     * has an encoding orc-core decodes, with a dictionary its LENGTH
-    * stream can hold. Failures are `IllegalArgumentException`s.
+    * stream can hold and whose lengths its DICTIONARY_DATA stream
+    * holds. Failures are `IllegalArgumentException`s.
     */
   def checkStripe(path: java.nio.file.Path, stripe: OrcStripe,
       compression: Int, blockSize: Int, colIds: Seq[Int]): Unit = {
@@ -444,22 +446,67 @@ object OrcData {
         // not in the file. The stripe's row count is no bound: a LIST or
         // MAP child holds one value per element.
         if ((enc.kind == 1 || enc.kind == 3) && enc.dictSize != 0) {
-          val lengths = data.indices.filter(i =>
-            data(i).kind == K_LENGTH && data(i).column == id)
-          require(lengths.length <= 1,
-            s"torn ORC: column $id has ${lengths.length} LENGTH streams")
-          val bytes = lengths.headOption.fold(0L) { i =>
-            val b = readAt(ch, at(i), data(i).length)
+          def streamOf(kind: Int, what: String): Option[Array[Byte]] = {
+            val ss = data.indices.filter(i =>
+              data(i).kind == kind && data(i).column == id)
+            require(ss.length <= 1,
+              s"torn ORC: column $id has ${ss.length} $what streams")
+            ss.headOption.map(i => readAt(ch, at(i), data(i).length))
+          }
+          def decompressed(b: Array[Byte]): Long =
             OrcMeta.decompressedLength(b, 0, b.length, compression,
               blockSize)
-          }
+          val lengths = streamOf(K_LENGTH, "LENGTH")
+          val bytes = lengths.fold(0L)(decompressed)
           require(enc.dictSize > 0 && enc.dictSize <= 128 * bytes,
             s"torn ORC: column $id dictionary claims ${enc.dictSize} " +
               s"entries, its LENGTH stream decompresses to $bytes bytes")
+          // orc-core then allocates the dictionary's bytes as one array
+          // sized by the sum of its first dictSize lengths
+          val dataBytes =
+            streamOf(K_DICTIONARY_DATA, "DICTIONARY_DATA").fold(0L)(
+              decompressed)
+          val sum = lengthSum(lengths.get, enc.dictSize, enc.kind == 3,
+            compression, blockSize, dataBytes)
+          require(sum <= dataBytes,
+            s"torn ORC: column $id dictionary lengths sum past its " +
+              s"$dataBytes-byte DICTIONARY_DATA stream")
         }
       }
     } finally ch.close()
   }
+
+  /** The sum of the first `n` values of the unsigned integer stream
+    * `b` (RLE v2 when `v2`, else v1), decoded by orc-core's own readers
+    * one compression chunk at a time; past `limit` it stops at the
+    * first value that crosses it.
+    */
+  private def lengthSum(b: Array[Byte], n: Long, v2: Boolean,
+      compression: Int, blockSize: Int, limit: Long): Long =
+    LibCodec.loud("ORC dictionary LENGTH stream") {
+      import org.apache.orc.impl.{BufferChunk, InStream, OrcCodecPool,
+        RunLengthIntegerReader, RunLengthIntegerReaderV2}
+      val kind = org.apache.orc.CompressionKind.values()(compression)
+      val codec = if (compression == 0) null else OrcCodecPool.getCodec(kind)
+      try {
+        val opts = InStream.options()
+        if (codec != null) opts.withCodec(codec)
+          .withBufferSize(if (blockSize > 0) blockSize else 1 << 18)
+        val in = InStream.create("LENGTH",
+          new BufferChunk(java.nio.ByteBuffer.wrap(b), 0), 0, b.length, opts)
+        val r =
+          if (v2) new RunLengthIntegerReaderV2(in, false, false)
+          else new RunLengthIntegerReader(in, false)
+        var sum = 0L
+        var k = 0L
+        while (k < n && sum <= limit && r.hasNext) {
+          val v = r.next()
+          sum = if (v < 0 || v > limit - sum) limit + 1 else sum + v
+          k += 1
+        }
+        sum
+      } finally if (codec != null) OrcCodecPool.returnCodec(kind, codec)
+    }
 
   /** The stream directory and column encodings of one StripeFooter; a
     * stream or encoding kind this reader does not know becomes -1.

@@ -62,8 +62,11 @@ object OrcMeta {
     // a kind this reader does not know lands in the unknown fields and
     // would otherwise read as NONE
     require(!ps.getUnknownFields.hasField(2), "ORC compression kind unknown")
+    // orc-core's writer takes buffers below 2^23 (the 3-byte chunk
+    // header holds 23 bits of length), and its reader sizes its
+    // decompression buffers from this value
     val blockSize = ps.getCompressionBlockSize
-    require(blockSize >= 0 && blockSize <= (1L << 26),
+    require(blockSize >= 0 && blockSize < (1L << 23),
       s"torn ORC: compression block size $blockSize")
     (ps, psLen)
   }

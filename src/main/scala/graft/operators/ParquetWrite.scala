@@ -126,8 +126,8 @@ object ParquetWrite {
 
   /** ARBITRARY-DEPTH nested column (the general shape behind
     * [[PwTreeCol]]): any combination of struct / 3-level LIST /
-    * 3-level MAP over leaves, shredded by the generic Dremel walker
-    * (the twin of [[OrcWrite]]'s depth-unlimited tree shredder). Values carried as: struct →
+    * 3-level MAP over leaves, shredded by the generic Dremel walker.
+    * Values carried as: struct →
     * Array[Any] aligned with fields; list → Seq[Any]; map →
     * Seq[(Any, Any)]; every node optional except map keys (REQUIRED
     * per the spec).

@@ -2016,15 +2016,13 @@ object Sources {
       |GROUP BY event_type ORDER BY event_type""".stripMargin
 
   // ---------------------------------------------------------------------
-  // S35: the from-scratch ORC WRITER (operators.OrcWrite) end-to-end —
-  // the ORC twin of s31: the engine WRITES its second storage format
-  // without orc-core (hand-built protobuf postscript/footer/stripe
-  // footers, RLEv2 DIRECT integer runs, boolean-RLE present streams,
-  // DIRECT_V2 strings), distributed one file per partition where the
-  // data is. The read-back goes through Spark's OWN orc-core reader —
-  // the independent implementation — so a wrong proto field id, broken
-  // RLE run or misplaced stream offset fails the scan or the value
-  // compare; the oracle re-derives the aggregate from the source table.
+  // S35: the ORC WRITER (operators.OrcWrite) end-to-end — the ORC twin
+  // of s31: the engine writes its second storage format through
+  // graft's write API (orc-core's Writer encodes), distributed one file
+  // per partition where the data is. The read-back goes through Spark's
+  // own ORC reader, so a value the writer's setter mangles fails the
+  // value compare; the oracle re-derives the aggregate from the source
+  // table.
   private def s35OrcWrite(s: SparkSession, dir: String): DataFrame = {
     val tmp = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft-orcwz-${graft.Tables.fingerprint(dir, "events")}")
@@ -2035,7 +2033,7 @@ object Sources {
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("value"))
           .repartition(s.sparkContext.defaultParallelism),
-        tmp, compression = 5) // every section zstd-framed
+        tmp, compression = 5)
     }
     s.read.orc(tmp)
       .groupBy(col("event_type"))
@@ -2333,7 +2331,8 @@ object Sources {
       |FROM events""".stripMargin
 
   // S51/S52: the DSv2 WRITE path end-to-end — `df.write.format(
-  // "graftpq"/"graftorc").save(dir)` runs the from-scratch writers
+  // "graftpq"/"graftorc").save(dir)` runs graft's writers (the
+  // from-scratch ParquetWrite, OrcWrite over orc-core's writer)
   // task-parallel (bounded-queue streaming, rename-on-task-commit),
   // and the INDEPENDENT readers (parquet-mr / orc-core via Spark)
   // decode the result — so a user writes AND reads both formats

@@ -1296,7 +1296,7 @@ object GraftParquet {
   }
 
   /** Adapt one INTERNAL (catalyst) value to the plain-JVM shapes the
-    * from-scratch writers take ([[graft.operators.ParquetWrite]] /
+    * writers take ([[graft.operators.ParquetWrite]] /
     * [[graft.operators.OrcWrite]]): UTF8String → String, Decimal →
     * java BigDecimal (parquet then packs it to unscaled storage
     * through the writer's own leaf adapter), Byte/Short widen to Int
@@ -1304,7 +1304,7 @@ object GraftParquet {
     * micro-longs pass through, lists become Seq, maps Seq[(k,v)], and
     * structs pack via `structPack` (Array for parquet, Seq for ORC).
     */
-  private[sources] def internalAdapter(dt: DataType, orc: Boolean,
+  private[graft] def internalAdapter(dt: DataType, orc: Boolean,
       structPack: Seq[Any] => Any): Any => Any = dt match {
     case ByteType => v => Int.box(v.asInstanceOf[Byte].toInt)
     case ShortType => v => Int.box(v.asInstanceOf[Short].toInt)
@@ -1473,7 +1473,7 @@ private[sources] class GraftParquetTable(schema: StructType,
 
 /** The DSv2 WRITE half of both sources: `df.write.format("graftpq"/
   * "graftorc").mode("append"/"overwrite")[.partitionBy(cols)]
-  * .save(dir)` runs the from-scratch writers
+  * .save(dir)` runs graft's writers
   * ([[graft.operators.ParquetWrite]] / [[graft.operators.OrcWrite]])
   * WHERE THE DATA IS — one task per partition streams its rows through
   * bounded queues into the writers (no per-task buffering of the whole
@@ -1640,7 +1640,7 @@ private[sources] class GraftWriteBuilder(path: String,
 /** `df.writeStream.format("graftpq").option("path", dir)` — the SINK
   * half of the engine's streaming loop (the version-tailing source is
   * the read half): every micro-batch stages its files into a PRIVATE
-  * per-epoch dir (task-parallel, bounded queues, the same from-scratch
+  * per-epoch dir (task-parallel, bounded queues, the same parquet
   * writer), and the epoch COMMIT runs the commit protocol's lock-held
   * tail through [[graft.operators.Maintenance.commitStagedAppend]] —
   * schema merge + enforcement, version-unique renames, live registry,
@@ -1852,8 +1852,7 @@ private[sources] class GraftSingleFileWriter(dir: java.io.File,
         }
       }
       if (orc)
-        graft.operators.OrcWrite.writeFile(tmp.toPath,
-          graft.operators.OrcWrite.fieldsOf(fileSchema), it,
+        graft.operators.OrcWrite.writeFile(tmp.toPath, fileSchema, it,
           compression = 5)
       else
         graft.operators.ParquetWrite.writeColumns(tmp.toPath,

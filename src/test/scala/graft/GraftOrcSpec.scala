@@ -203,17 +203,16 @@ class GraftOrcSpec extends AnyFunSuite {
       "AND on orc-core's (mid-run seek positions)") {
     import org.apache.spark.sql.functions._
     import graft.operators.OrcWrite
-    import graft.operators.OrcWrite.OwFields
+    import org.apache.spark.sql.types._
     val dir = java.nio.file.Files
       .createTempDirectory("graft-graftorc-rgprune").toString
     try {
-      // our own writer: 16000-row stripes, 2000-row groups, zstd —
-      // seeks land on fresh runs / fresh chunks
+      // our own writer: 16000-row stripes, 2000-row groups, zstd
       val ownFile = new java.io.File(dir, "own")
       ownFile.mkdirs()
-      val fields = Seq(OwFields.long("id"), OwFields.string("tag"),
-        OwFields.double("v"),
-        OwFields.list("xs", OwFields.long("_elem")))
+      val fields = StructType(Seq(StructField("id", LongType),
+        StructField("tag", StringType), StructField("v", DoubleType),
+        StructField("xs", ArrayType(LongType))))
       val rows = (0 until 40000).iterator.map { i =>
         Array[Any](Long.box(i.toLong), s"t${i % 40}",
           if (i % 7 == 0) null else Double.box(i * 0.5),
@@ -253,9 +252,8 @@ class GraftOrcSpec extends AnyFunSuite {
       val none = spark.read.format("graftorc").load(ownFile.toString)
         .filter("id >= 16000 AND id < 16000") // empty range
       assert(none.count() == 0)
-      // orc-core's OWN output (Spark's writer, default 10000-row
-      // stride): seek positions point MID-RUN with value/bit drops —
-      // the general position semantics, not our fresh-run shape
+      // Spark's writer (default 10000-row stride): seek positions point
+      // MID-RUN with value/bit drops
       val sparkFile = new java.io.File(dir, "sparkw").toString
       spark.range(0, 40000).toDF("id")
         .select(col("id"), concat(lit("s"), col("id") % 37).as("tag"),
@@ -286,7 +284,7 @@ class GraftOrcSpec extends AnyFunSuite {
       "code-point stats, on our files AND Spark-written ones") {
     import org.apache.spark.sql.functions._
     import graft.operators.OrcWrite
-    import graft.operators.OrcWrite.OwFields
+    import org.apache.spark.sql.types._
     val dir = java.nio.file.Files
       .createTempDirectory("graft-graftorc-strprune").toString
     try {
@@ -294,7 +292,8 @@ class GraftOrcSpec extends AnyFunSuite {
       // id order, 8192-row stripes, 2048-row groups
       val ownFile = new java.io.File(dir, "own")
       ownFile.mkdirs()
-      val fields = Seq(OwFields.long("id"), OwFields.string("sym"))
+      val fields = StructType(Seq(StructField("id", LongType),
+        StructField("sym", StringType)))
       val rows = (0 until 40000).iterator.map { i =>
         Array[Any](Long.box(i.toLong), "s%05d".format(i))
       }

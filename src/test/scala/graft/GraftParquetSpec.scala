@@ -1515,7 +1515,7 @@ class GraftParquetSpec extends AnyFunSuite {
         "timestamp filter pruned no row groups")
       assert(tFiltered.count() ==
         spark.read.parquet(dir).filter(col("ts") < tsCut).count())
-      // ORC: the from-scratch writer emits DateStatistics /
+      // ORC: the writer (orc-core) emits DateStatistics /
       // TimestampStatistics; graftorc prunes stripes on them
       graft.operators.OrcWrite.writeDataFrame(
         df.coalesce(1).sortWithinPartitions("id"), odir,

@@ -11,8 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * (`OrcData.checkStripe`), so such a file rejects with an
   * `IllegalArgumentException` naming the file, having allocated little,
   * while a real dictionary larger than the stripe's row count (a LIST
-  * or MAP child's) still reads. A type tree whose walk would not end
-  * rejects at planning.
+  * or MAP child's) still reads. The same holds for dictionary lengths
+  * that sum past the DICTIONARY_DATA stream, which orc-core would
+  * allocate as one array. A type tree whose walk would not end, and a
+  * compression block orc-core's writer cannot write, reject at
+  * planning.
   */
 class OrcStripeLimitsSpec extends AnyFunSuite {
 
@@ -64,6 +67,65 @@ class OrcStripeLimitsSpec extends AnyFunSuite {
       .toByteArray
     f.take(sfAt) ++ sf ++ f.slice(sfAt + sfLen, footerAt) ++ newFooter ++
       newPs ++ Array(newPs.length.toByte)
+  }
+
+  /** The uncompressed one-stripe file `f` with column `col`'s `kind`
+    * stream replaced by `bytes`, and the lengths and offsets that follow
+    * from it (streams lie in stripe-footer order from the stripe's
+    * offset).
+    */
+  private def replaceStream(f: Array[Byte], col: Int,
+      kind: OrcProto.Stream.Kind, bytes: Array[Byte]): Array[Byte] = {
+    val psLen = f.last & 0xff
+    val post = OrcProto.PostScript.parser()
+      .parseFrom(f, f.length - 1 - psLen, psLen)
+    val footerAt = f.length - 1 - psLen - post.getFooterLength.toInt
+    val footer = OrcProto.Footer.parser()
+      .parseFrom(f, footerAt, post.getFooterLength.toInt)
+    assert(footer.getStripesCount == 1)
+    val stripe = footer.getStripes(0)
+    val sfAt = (stripe.getOffset + stripe.getIndexLength +
+      stripe.getDataLength).toInt
+    val sfLen = stripe.getFooterLength.toInt
+    val sf = OrcProto.StripeFooter.parser().parseFrom(f, sfAt, sfLen)
+    val k = (0 until sf.getStreamsCount).find { i =>
+      sf.getStreams(i).getColumn == col && sf.getStreams(i).getKind == kind
+    }.get
+    val at = (stripe.getOffset +
+      (0 until k).map(sf.getStreams(_).getLength).sum).toInt
+    val oldLen = sf.getStreams(k).getLength.toInt
+    val delta = bytes.length - oldLen
+    val newSf = sf.toBuilder.setStreams(k, sf.getStreams(k).toBuilder
+      .setLength(bytes.length)).build().toByteArray
+    val newFooter = footer.toBuilder.setStripes(0, stripe.toBuilder
+        .setDataLength(stripe.getDataLength + delta)
+        .setFooterLength(newSf.length))
+      .setContentLength(footer.getContentLength + delta + newSf.length -
+        sfLen)
+      .build().toByteArray
+    val newPs = post.toBuilder.setFooterLength(newFooter.length).build()
+      .toByteArray
+    f.take(at) ++ bytes ++ f.slice(at + oldLen, sfAt) ++ newSf ++
+      f.slice(sfAt + sfLen, footerAt) ++ newFooter ++ newPs ++
+      Array(newPs.length.toByte)
+  }
+
+  /** `values` as an unsigned RLE v2 integer stream, encoded by
+    * orc-core's writer.
+    */
+  private def rleV2(values: Seq[Long]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val w = new org.apache.orc.impl.RunLengthIntegerWriterV2(
+      new org.apache.orc.impl.OutStream("LENGTH",
+        new org.apache.orc.impl.writer.StreamOptions(1 << 18),
+        new org.apache.orc.PhysicalWriter.OutputReceiver {
+          def output(b: java.nio.ByteBuffer): Unit =
+            while (b.hasRemaining) out.write(b.get())
+          def suppress(): Unit = ()
+        }), false, true)
+    values.foreach(w.write)
+    w.flush()
+    out.toByteArray
   }
 
   /** `f` with column `col`'s encoding declaring `size` dictionary
@@ -157,6 +219,17 @@ class OrcStripeLimitsSpec extends AnyFunSuite {
       "2^28 rows")
   }
 
+  test("dictionary LENGTH values summing to about 2^31 bytes reject " +
+      "through graftorc before Spark's reader allocates the dictionary") {
+    // ten entries of "key0".."key9": a 40-byte DICTIONARY_DATA stream
+    def withLengths(len: Long): Array[Byte] = replaceStream(plain,
+      stringCol, OrcProto.Stream.Kind.LENGTH, rleV2(Seq.fill(10)(len)))
+    val (real, _, file) = readThrough(withLengths(4L))
+    graft.streaming.WorkDirs.deleteRecursively(file.getParent.toFile)
+    assert(real == Right(5000), "the splice with the real lengths")
+    rejectsSmall(withLengths(Int.MaxValue / 10), "2^31 dictionary bytes")
+  }
+
   test("LIST and MAP dictionaries larger than the stripe's row count " +
       "read through graftorc as spark.read.orc reads them") {
     val s = spark
@@ -220,13 +293,26 @@ class OrcStripeLimitsSpec extends AnyFunSuite {
       assert(got == Right(5000), s"block size $size")
       bytes
     }
+    // orc-core's writer rejects compression buffers of 2^23 and above
+    // (OutStream.assertBufferSizeValid; a chunk header holds 23 bits of
+    // length), so OrcMeta.postscript rejects such a declared block
+    for (size <- Seq(1L << 23, 1L << 26)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-orc-block")
+      val file = dir.resolve("part-0.orc")
+      java.nio.file.Files.write(file, atBlock(size))
+      try {
+        val e = intercept[IllegalArgumentException](GraftPqDirect.plan(
+          spark.read.format("graftorc").load(dir.toString)))
+        assert(e.getMessage.contains(file.toString), e.getMessage)
+        assert(e.getMessage.contains("compression block size"),
+          e.getMessage)
+      } finally graft.streaming.WorkDirs.deleteRecursively(dir.toFile)
+    }
+    // orc-core sizes its decompression buffers from the declared value
     val real = allocated(256L << 10)
-    val declared = allocated(1L << 26)
-    // OrcMeta.postscript accepts block sizes up to 2^26 because Spark's
-    // writer takes any orc.compress.size; orc-core then sizes its
-    // decompression buffers from the declared value
+    val largest = allocated((1L << 23) - 1)
     info(s"allocated ${real >> 10} KiB at the real 256 KiB block size, " +
-      s"${declared >> 10} KiB at a declared 2^26")
-    assert(declared < (1L << 30))
+      s"${largest >> 10} KiB at a declared 2^23-1")
+    assert(largest < (1L << 30))
   }
 }

@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.types._
+
 import graft.operators.OrcWrite
-import graft.operators.OrcWrite.OwFields
 
 /** The ORC writer (operators.OrcWrite), validated against Spark's own
   * orc-core reader, which must decode written files row-identically
@@ -22,6 +23,10 @@ class OrcWriteSpec extends AnyFunSuite {
       .select(cols.map(org.apache.spark.sql.functions.col): _*)
       .collect().toVector.map(_.toSeq)
 
+  /** A writer schema of nullable (name, type) columns. */
+  private def schema(cols: (String, DataType)*): StructType =
+    StructType(cols.map { case (n, t) => StructField(n, t) })
+
   private def tmpDir(tag: String): java.io.File =
     java.nio.file.Files.createTempDirectory(s"graft-orcwrite-$tag")
       .toFile
@@ -30,10 +35,10 @@ class OrcWriteSpec extends AnyFunSuite {
       "(all types, nulls, multiple stripes)") {
     val dir = tmpDir("types")
     try {
-      val fields = Seq(OwFields.long("id"), OwFields.int("k"),
-        OwFields.string("s"), OwFields.boolean("b"),
-        OwFields.double("d"), OwFields.date("dt"),
-        OwFields.timestamp("ts"))
+      val fields = schema("id" -> LongType, "k" -> IntegerType,
+        "s" -> StringType, "b" -> BooleanType,
+        "d" -> DoubleType, "dt" -> DateType,
+        "ts" -> TimestampType)
       // micros spanning both sides of 1970 with ragged sub-seconds
       // (ORC's truncate-vs-floor corner second is avoided by stepping
       // well clear of [-1s, 0))
@@ -80,8 +85,8 @@ class OrcWriteSpec extends AnyFunSuite {
   test("this repo's own reader round-trips written files") {
     val dir = tmpDir("own")
     try {
-      val fields = Seq(OwFields.long("id"), OwFields.string("s"),
-        OwFields.double("d"))
+      val fields = schema("id" -> LongType, "s" -> StringType,
+        "d" -> DoubleType)
       val rows = (0 until 2500).iterator.map(i => Array[Any](
         Long.box(i.toLong * 1000000007L - 900000000000L), // wide longs
         if (i % 9 == 0) null else s"row-$i",
@@ -102,8 +107,8 @@ class OrcWriteSpec extends AnyFunSuite {
     val dir = tmpDir("zstd")
     val dirNone = tmpDir("none")
     try {
-      val fields = Seq(OwFields.long("id"), OwFields.string("ev"),
-        OwFields.double("d"))
+      val fields = schema("id" -> LongType, "ev" -> StringType,
+        "d" -> DoubleType)
       def rows = (0 until 30000).iterator.map(i => Array[Any](
         Long.box(i.toLong),
         if (i % 50 == 0) null else s"type_${i % 8}", // repetitive
@@ -219,9 +224,9 @@ class OrcWriteSpec extends AnyFunSuite {
           .coalesce(1)
         val fU = new java.io.File(dirU, "u.orc")
         val fL = new java.io.File(dirU, "l.orc")
-        OrcWrite.writeFile(fU.toPath, Seq(OwFields.string("ev")),
+        OrcWrite.writeFile(fU.toPath, schema("ev" -> StringType),
           dfU.collect().iterator.map(r => Array[Any](r.getString(0))))
-        OrcWrite.writeFile(fL.toPath, Seq(OwFields.string("ev")),
+        OrcWrite.writeFile(fL.toPath, schema("ev" -> StringType),
           dfL.collect().iterator.map(r => Array[Any](r.getString(0))))
         assert(fL.length() < fU.length() / 3,
           s"dict ${fL.length()} vs direct ${fU.length()}")
@@ -233,9 +238,9 @@ class OrcWriteSpec extends AnyFunSuite {
       "stripe stats back; graftorc prunes stripes from them") {
     val dir = tmpDir("stats")
     try {
-      val fields = Seq(OwFields.long("id"), OwFields.string("s"),
-        OwFields.double("d"), OwFields.boolean("b"),
-        OwFields.date("dt"), OwFields.timestamp("ts"))
+      val fields = schema("id" -> LongType, "s" -> StringType,
+        "d" -> DoubleType, "b" -> BooleanType,
+        "dt" -> DateType, "ts" -> TimestampType)
       val N = 30000
       def mkRows = (0 until N).iterator.map { i =>
         Array[Any](
@@ -317,9 +322,8 @@ class OrcWriteSpec extends AnyFunSuite {
   }
 
   test("unsupported shapes reject loudly by name") {
-    import org.apache.spark.sql.types._
     val e = intercept[IllegalArgumentException] {
-      OrcWrite.fieldsOf(StructType(Seq(
+      OrcWrite.orcSchema(StructType(Seq(
         StructField("x", CalendarIntervalType))))
     }
     assert(e.getMessage.contains("unsupported"))
@@ -337,15 +341,13 @@ class OrcWriteSpec extends AnyFunSuite {
       // bool DATA (odd non-null counts → bit offsets), RLEv2 ints,
       // raw doubles, DIRECT and DICTIONARY strings, timestamp
       // DATA+SECONDARY, decimal varints, binary, list/struct/map
-      val fields = Seq(OwFields.long("id"), OwFields.boolean("flag"),
-        OwFields.double("v"), OwFields.string("tag"),
-        OwFields.string("txt"), OwFields.timestamp("ts"),
-        OwFields.decimal("dec", 12, 3), OwFields.binary("bin"),
-        OwFields.list("xs", OwFields.long("_elem")),
-        OwFields.struct("st", Seq(OwFields.long("a"),
-          OwFields.string("b"))),
-        OwFields.mapOf("m", OwFields.string("_key"),
-          OwFields.long("_value")))
+      val fields = schema("id" -> LongType, "flag" -> BooleanType,
+        "v" -> DoubleType, "tag" -> StringType,
+        "txt" -> StringType, "ts" -> TimestampType,
+        "dec" -> DecimalType(12, 3), "bin" -> BinaryType,
+        "xs" -> ArrayType(LongType),
+        "st" -> schema("a" -> LongType, "b" -> StringType),
+        "m" -> MapType(StringType, LongType))
       def rows = (0 until 40000).iterator.map { i =>
         Array[Any](
           Long.box(i.toLong),
@@ -514,8 +516,8 @@ class OrcWriteSpec extends AnyFunSuite {
       // unsorted high-cardinality string + long keys: every row
       // group's [min,max] spans the whole domain, so only the blooms
       // can prune the point lookups below
-      val fields = Seq(OwFields.long("id"), OwFields.string("key"),
-        OwFields.long("uid"))
+      val fields = schema("id" -> LongType, "key" -> StringType,
+        "uid" -> LongType)
       def rows = (0 until 40000).iterator.map { i =>
         Array[Any](Long.box(i.toLong), md5(i.toString),
           Long.box((i.toLong * 2654435761L) % 1000000007L))
@@ -600,7 +602,7 @@ class OrcWriteSpec extends AnyFunSuite {
       val ours = new java.io.File(dir, "ours")
       ours.mkdirs()
       OrcWrite.writeFile(new java.io.File(ours, "part-0.orc").toPath,
-        Seq(OwFields.long("id")),
+        schema("id" -> LongType),
         (0 until 20000).iterator.map(i => Array[Any](Long.box(key(i)))),
         rowIndexStride = 1000, bloomColumns = Set("id"))
       val theirs = new java.io.File(dir, "theirs").toString
@@ -618,5 +620,89 @@ class OrcWriteSpec extends AnyFunSuite {
             s"graftorc lost key $k of $d")
       }
     } finally graft.streaming.WorkDirs.deleteRecursively(dir)
+  }
+
+  test("writeDataFrame and df.write.format(\"graftorc\") leave only " +
+      "their final files: no .crc, .inprogress or .staged siblings") {
+    import spark.implicits._
+    val dir = tmpDir("listing")
+    try {
+      val df = (0 until 3000).map(i => (i.toLong, s"v${i % 17}"))
+        .toDF("id", "s").repartition(3)
+      val direct = new java.io.File(dir, "direct")
+      assert(OrcWrite.writeDataFrame(df, direct.toString) == 3000)
+      val names = direct.list().toSeq.sorted
+      assert(names.count(_.endsWith(".orc")) == 3, names)
+      assert(names.forall(n => n == "_SUCCESS" ||
+        (n.startsWith("part-") && n.endsWith(".orc"))), names)
+      val v2 = new java.io.File(dir, "v2")
+      df.write.format("graftorc").mode("overwrite").save(v2.toString)
+      val v2Names = v2.list().toSeq.sorted
+      assert(v2Names.count(_.endsWith(".orc")) == 3, v2Names)
+      assert(v2Names.forall(n => n == "_SUCCESS" ||
+        (n.startsWith("part-") && n.endsWith(".orc"))), v2Names)
+      assert(spark.read.orc(v2.toString).count() == 3000)
+    } finally graft.streaming.WorkDirs.deleteRecursively(dir)
+  }
+
+  test("pre-1970 TIMESTAMPs, 1969-12-31T23:59:59.5 included, read back " +
+      "equal through graftorc and spark.read.orc under UTC, " +
+      "America/Los_Angeles and Asia/Kolkata") {
+    import org.apache.spark.sql.functions.{col, struct, to_json}
+    val dir = tmpDir("prets")
+    val instants = Seq("1969-12-31T23:59:59.500Z",
+      "1969-12-31T23:59:59.999999Z", "1969-12-31T23:59:59Z",
+      "1969-12-31T23:59:58.000001Z", "1970-01-01T00:00:00Z",
+      "1970-01-01T00:00:00.000001Z", "1969-07-20T20:17:40.123456Z",
+      "1900-01-01T00:00:00.500Z", "2024-03-10T10:30:00.25Z")
+      .map(java.time.Instant.parse)
+    def micros(t: java.time.Instant): Long =
+      java.time.temporal.ChronoUnit.MICROS.between(
+        java.time.Instant.EPOCH, t)
+    val ours = new java.io.File(dir, "ours").toString
+    val theirs = new java.io.File(dir, "theirs").toString
+    val before = spark.conf.get("spark.sql.session.timeZone")
+    try {
+      new java.io.File(ours).mkdirs()
+      OrcWrite.writeFile(new java.io.File(ours, "part-0.orc").toPath,
+        schema("id" -> LongType, "ts" -> TimestampType),
+        instants.indices.iterator.map(i =>
+          Array[Any](Long.box(i.toLong), Long.box(micros(instants(i))))))
+      locally {
+        val s = spark
+        import s.implicits._
+        instants.zipWithIndex.map { case (t, i) =>
+          (i.toLong, java.sql.Timestamp.from(t))
+        }.toDF("id", "ts").coalesce(1).write.mode("overwrite").orc(theirs)
+      }
+      for (z <- Seq("UTC", "America/Los_Angeles", "Asia/Kolkata")) {
+        spark.conf.set("spark.sql.session.timeZone", z)
+        val readers = Seq(
+          "graftorc" -> spark.read.format("graftorc").load(ours),
+          "orc" -> spark.read.orc(ours),
+          "orc of Spark's file" -> spark.read.orc(theirs))
+        val got = readers.map { case (_, df) =>
+          df.orderBy("id").collect().map(_.getTimestamp(1).toInstant).toSeq
+        }
+        for (((what, _), g) <- readers.zip(got))
+          assert(g == got.head, s"$z $what")
+        // ORC stores seconds and nanos apart, and orc-core's reader
+        // lands a value in (-1 s, 0) one second late, whichever writer
+        // wrote it; every other value reads back exactly
+        for ((t, g) <- instants.zip(got.head)) {
+          val m = micros(t)
+          if (m > -1000000L && m < 0L) assert(g == t.plusSeconds(1), s"$z $t")
+          else assert(g == t, s"$z $t")
+        }
+        val rendered = readers.take(2).map { case (_, df) =>
+          df.select(to_json(struct(col("id"), col("ts"))))
+            .collect().map(_.getString(0)).toSeq.sorted
+        }
+        assert(rendered(0) == rendered(1), s"$z rendering")
+      }
+    } finally {
+      spark.conf.set("spark.sql.session.timeZone", before)
+      graft.streaming.WorkDirs.deleteRecursively(dir)
+    }
   }
 }
