@@ -1521,9 +1521,9 @@ object Maintenance {
     * `sExact`/`sMin`/`sMax` are the STRING twins (UTF8/ENUM leaves):
     * exact byte extremes in unsigned order, recorded ONLY when the
     * file's writer provably never truncates binary stats (the
-    * created_by gate, checked at commit time) — what lets string
-    * MIN/MAX and string TOP-N answer from the manifest with zero file
-    * IO. Lines written before this field existed parse with
+    * footer's exact-stats entry, checked at commit time) — what lets
+    * string MIN/MAX and string TOP-N answer from the manifest with zero
+    * file IO. Lines written before this field existed parse with
     * `sExact = false` (the planner then falls to the footer tier).
     */
   final case class AggColStat(nullCount: Option[Long],
@@ -1578,10 +1578,9 @@ object Maintenance {
       val rgs = footer.rowGroups
       val fileRows = rgs.map(_.numRows).sum
       // string extremes are recordable only when THIS file's writer
-      // provably never truncates binary stats — the same created_by
+      // provably never truncates binary stats — the same exact-stats
       // gate the footer-tier planner re-checks per file
-      val exactWriter =
-        footer.createdBy.contains(ParquetWrite.createdBy)
+      val exactWriter = footer.exactStats
       val colLines = leaves.map { leaf =>
         val chunks = rgs.map(rg => rg -> rg.columns.find(
           _.path == leaf.name))

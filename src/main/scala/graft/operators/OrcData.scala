@@ -336,6 +336,36 @@ object OrcData {
     }.toMap
   }
 
+  /** The row groups of `stripe` at row index stride `stride`,
+    * ceil(rows / stride), bounded by the stripe's own row index (its
+    * index area and footer, the two reads [[rowGroupStats]] takes).
+    * orc-core's reader allocates one flag per row group whenever it
+    * applies pushed filters, before it reads any index: 2^28 rows at
+    * stride 1 would be 256 MiB. A row index holds one entry per group,
+    * each at least 2 bytes, so a stripe claiming more groups than half
+    * its longest decompressed ROW_INDEX stream rejects.
+    */
+  def rowGroups(stripe: OrcStripe, stride: Int, indexBytes: Array[Byte],
+      footerBytes: Array[Byte], compression: Int, blockSize: Int): Int = {
+    require(stride > 0, s"bad row index stride $stride")
+    val (streams, _) = parseStripeFooter(OrcMeta.decompressStream(
+      footerBytes, 0, footerBytes.length, compression, blockSize))
+    val offsets = streams.scanLeft(0L)(_ + _.length).init
+    val longest = streams.zip(offsets).collect {
+      case (s, o) if s.kind == K_ROW_INDEX =>
+        require(o >= 0 && o + s.length <= indexBytes.length,
+          "torn ORC: index stream overruns the index area")
+        OrcMeta.decompressedLength(indexBytes, o.toInt, s.length.toInt,
+          compression, blockSize)
+    }.maxOption.getOrElse(0L)
+    val groups = (stripe.rows + stride - 1) / stride
+    require(groups <= longest / 2,
+      s"torn ORC: a ${stripe.rows}-row stripe at row index stride " +
+        s"$stride claims $groups row groups; its row index holds at " +
+        s"most ${longest / 2}")
+    groups.toInt
+  }
+
   /** Parse one decompressed BLOOM_FILTER_UTF8 stream (orc_proto
     * BloomFilterIndex): one orc-core BloomFilter per row group, over
     * the legacy repeated-fixed64 bitset or the utf8bitset's
@@ -402,10 +432,13 @@ object OrcData {
     * exactly fill the index and data sections; and each of `colIds`
     * has an encoding orc-core decodes, with a dictionary its LENGTH
     * stream can hold and whose lengths its DICTIONARY_DATA stream
-    * holds. Failures are `IllegalArgumentException`s.
+    * holds. With a row index `stride` (> 0 when the reader gets pushed
+    * filters), the stripe's row groups must fit its row index
+    * ([[rowGroups]]). Failures are `IllegalArgumentException`s.
     */
   def checkStripe(path: java.nio.file.Path, stripe: OrcStripe,
-      compression: Int, blockSize: Int, colIds: Seq[Int]): Unit = {
+      compression: Int, blockSize: Int, colIds: Seq[Int],
+      stride: Int = 0): Unit = {
     require(stripe.offset >= 3,
       s"torn ORC: stripe at ${stripe.offset} overlaps the file header")
     val ch = java.nio.channels.FileChannel.open(path,
@@ -417,6 +450,9 @@ object OrcData {
         stripe.dataLength, stripe.footerLength)
       val (streams, encs) = parseStripeFooter(OrcMeta.decompressStream(
         footer, 0, footer.length, compression, blockSize))
+      if (stride > 0) rowGroups(stripe, stride,
+        readAt(ch, stripe.offset, stripe.indexLength), footer,
+        compression, blockSize)
       def fills(section: String, ss: Seq[OrcStream], len: Long): Unit = {
         var left = len
         ss.foreach { s =>

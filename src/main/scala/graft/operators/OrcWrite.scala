@@ -31,8 +31,9 @@ import org.apache.spark.sql.types._
   *   - the file is written through the raw local file system: no `.crc`
   *     sibling next to it.
   *
-  * The distributed surface writes one file per partition where the data
-  * is, as [[ParquetWrite]] does.
+  * The distributed surface ([[writeDataFrame]]) writes one file per
+  * partition where the data is; the DSv2 writer of
+  * [[sources.GraftOrc]] writes through [[open]] on its task thread.
   */
 object OrcWrite {
 
@@ -145,19 +146,49 @@ object OrcWrite {
       case _ => bad(name, v)
     }
 
-  /** Write one complete ORC file; returns the row count. `rows` yields
-    * one `Array[Any]` per row aligned with `schema` (nulls as null;
-    * BOOLEAN/INT/LONG/DOUBLE/STRING/BINARY carried as
-    * Boolean/Int/Long/Double/String/Array[Byte], DECIMAL as a java or
-    * scala BigDecimal, DATE as Int epoch days, TIMESTAMP as Long epoch
-    * micros, ARRAY as a Seq, MAP as a Seq of (key, value) and STRUCT as
-    * a Seq of its field values). `compression` is the orc_proto
-    * CompressionKind: 0 NONE or 5 ZSTD.
+  /** One open ORC file: rows go in with `write` and fill one batch,
+    * which goes to orc-core's `Writer` when it is full or a stripe is
+    * due; `close` adds the last batch and writes the footer.
     */
-  def writeFile(path: java.nio.file.Path, schema: StructType,
-      rows: Iterator[Array[Any]], stripeRows: Int = 1 << 16,
-      compression: Int = 0, rowIndexStride: Int = 10000,
-      bloomColumns: Set[String] = Set.empty): Long = {
+  final class FileWriter private[OrcWrite] (writer: org.apache.orc.Writer,
+      orcType: org.apache.orc.TypeDescription, schema: StructType,
+      stripeRows: Int) extends java.io.Closeable {
+    private val batch = orcType.createRowBatch()
+    private val fields = schema.fields
+    private var inStripe = 0
+    var rows = 0L
+
+    def write(r: Array[Any]): Unit = {
+      require(r.length == fields.length,
+        s"row arity ${r.length} vs ${fields.length} fields")
+      var c = 0
+      while (c < fields.length) {
+        set(batch.cols(c), fields(c).dataType, fields(c).name,
+          batch.size, r(c))
+        c += 1
+      }
+      batch.size += 1
+      rows += 1
+      inStripe += 1
+      if (inStripe == stripeRows || batch.size == batch.getMaxSize) {
+        writer.addRowBatch(batch)
+        batch.reset()
+        if (inStripe == stripeRows) inStripe = 0
+      }
+    }
+
+    def close(): Unit =
+      try if (batch.size > 0) writer.addRowBatch(batch)
+      finally writer.close()
+  }
+
+  /** One open ORC file at `path` (overwritten if present); arguments
+    * as [[writeFile]].
+    */
+  def open(path: java.nio.file.Path, schema: StructType,
+      stripeRows: Int = 1 << 16, compression: Int = 0,
+      rowIndexStride: Int = 10000,
+      bloomColumns: Set[String] = Set.empty): FileWriter = {
     import org.apache.orc.{CompressionKind, OrcConf, OrcFile}
     require(stripeRows > 0, s"bad stripe row count $stripeRows")
     require(rowIndexStride >= 0, s"bad row index stride $rowIndexStride")
@@ -181,35 +212,28 @@ object OrcWrite {
     if (bloomColumns.nonEmpty && rowIndexStride > 0)
       opts.bloomFilterColumns(bloomColumns.mkString(","))
         .bloomFilterFpp(0.01)
-    val writer = OrcFile.createWriter(
-      new org.apache.hadoop.fs.Path(path.toAbsolutePath.toUri), opts)
-    val batch = orcType.createRowBatch()
-    val fields = schema.fields
-    var total = 0L
-    var inStripe = 0
-    try {
-      while (rows.hasNext) {
-        val r = rows.next()
-        require(r.length == fields.length,
-          s"row arity ${r.length} vs ${fields.length} fields")
-        var c = 0
-        while (c < fields.length) {
-          set(batch.cols(c), fields(c).dataType, fields(c).name,
-            batch.size, r(c))
-          c += 1
-        }
-        batch.size += 1
-        total += 1
-        inStripe += 1
-        if (inStripe == stripeRows || batch.size == batch.getMaxSize) {
-          writer.addRowBatch(batch)
-          batch.reset()
-          if (inStripe == stripeRows) inStripe = 0
-        }
-      }
-      if (batch.size > 0) writer.addRowBatch(batch)
-    } finally writer.close()
-    total
+    new FileWriter(OrcFile.createWriter(
+      new org.apache.hadoop.fs.Path(path.toAbsolutePath.toUri), opts),
+      orcType, schema, stripeRows)
+  }
+
+  /** Write one complete ORC file; returns the row count. `rows` yields
+    * one `Array[Any]` per row aligned with `schema` (nulls as null;
+    * BOOLEAN/INT/LONG/DOUBLE/STRING/BINARY carried as
+    * Boolean/Int/Long/Double/String/Array[Byte], DECIMAL as a java or
+    * scala BigDecimal, DATE as Int epoch days, TIMESTAMP as Long epoch
+    * micros, ARRAY as a Seq, MAP as a Seq of (key, value) and STRUCT as
+    * a Seq of its field values). `compression` is the orc_proto
+    * CompressionKind: 0 NONE or 5 ZSTD.
+    */
+  def writeFile(path: java.nio.file.Path, schema: StructType,
+      rows: Iterator[Array[Any]], stripeRows: Int = 1 << 16,
+      compression: Int = 0, rowIndexStride: Int = 10000,
+      bloomColumns: Set[String] = Set.empty): Long = {
+    val w = open(path, schema, stripeRows, compression, rowIndexStride,
+      bloomColumns)
+    scala.util.Using.resource(w)(_ => rows.foreach(w.write))
+    w.rows
   }
 
   /** Distributed write: every partition writes its own
@@ -226,18 +250,13 @@ object OrcWrite {
     orcSchema(schema) // unsupported types reject before any task runs
     val target = new java.io.File(dir)
     target.mkdirs()
-    val dts = schema.fields.map(_.dataType)
-    val adapt = dts.map(graft.sources.GraftParquet.internalAdapter(_,
-      orc = true, identity))
     val counts = df.queryExecution.toRdd.mapPartitionsWithIndex { (i, it) =>
-      val f = new java.io.File(target, f"part-$i%05d.orc")
-      val rs = it.map { row =>
-        Array.tabulate[Any](dts.length)(c =>
-          if (row.isNullAt(c)) null else adapt(c)(row.get(c, dts(c))))
-      }
-      val n = writeFile(f.toPath, schema, rs, stripeRows, compression,
-        rowIndexStride, bloomColumns)
-      if (n == 0) f.delete() // empty partitions leave no file
+      val adapt = graft.sources.GraftParquet.internalRowAdapter(schema)
+      val n =
+        if (!it.hasNext) 0L
+        else writeFile(new java.io.File(target, f"part-$i%05d.orc").toPath,
+          schema, it.map(adapt), stripeRows, compression, rowIndexStride,
+          bloomColumns)
       Iterator.single(n)
     }.collect().sum
     new java.io.FileOutputStream(new java.io.File(target, "_SUCCESS"))

@@ -73,13 +73,23 @@ object ParquetFooter {
       scale: Int = 0, precision: Int = 0, // DECIMAL annotation
       timestamp: Option[PqTimestamp] = None)
 
+  /** The footer key-value entry [[ParquetWrite]] writes: its chunk
+    * statistics hold the full values, never a truncated prefix. No
+    * flag in the format itself promises that of a foreign writer.
+    */
+  val ExactStatsKey: String = "graft.stats.untruncated"
+
   /** `messageType` is the same schema as parquet-mr's [[MessageType]],
     * what Spark's schema converter and reader take, converted on first
     * use from the decoded schema elements and column orders.
+    * `exactStats`: the file carries [[ExactStatsKey]], so its string
+    * min/max statistics are the column's exact extremes and may answer
+    * MIN/MAX and TOP-N; a foreign file's are bounds only.
     */
   final case class PqFooter(version: Int, numRows: Long,
       createdBy: Option[String], schema: Seq[PqSchemaField],
-      rowGroups: Seq[PqRowGroup])(elements: java.util.List[SchemaElement],
+      rowGroups: Seq[PqRowGroup], exactStats: Boolean = false)(
+      elements: java.util.List[SchemaElement],
       columnOrders: Option[java.util.List[ColumnOrder]]) {
     lazy val messageType: MessageType = {
       // a schema-only footer, converted the way parquet-mr converts one
@@ -171,7 +181,9 @@ object ParquetFooter {
     }.toVector
     PqFooter(m.getVersion, m.getNum_rows,
       if (m.isSetCreated_by) Some(m.getCreated_by) else None,
-      m.getSchema.asScala.map(schemaField).toVector, rowGroups)(
+      m.getSchema.asScala.map(schemaField).toVector, rowGroups,
+      m.isSetKey_value_metadata && m.getKey_value_metadata.asScala
+        .exists(kv => kv.getKey == ExactStatsKey && kv.getValue == "true"))(
       m.getSchema,
       if (m.isSetColumn_orders) Some(m.getColumn_orders) else None)
   }
@@ -444,27 +456,29 @@ object ParquetFooter {
     byteStreamSplit
   }
 
-  /** Whether a zstd frame whose first bytes are `head` and whose
-    * length is `len` can decompress to `declared` bytes: exactly its
+  /** Whether a zstd body whose first bytes are `head` and whose length
+    * is `len` can decompress to `declared` bytes: exactly its frame
     * content size when the frame header records one, else at most one
-    * full block per three compressed bytes (each block carries a
-    * 3-byte header).
+    * full 128 KiB block per three compressed bytes (each block carries
+    * a 3-byte header). A frame header that records no size, or bytes
+    * that do not start a frame at all (zstd rejects those when it
+    * decodes), get the block bound: any body could claim it.
     */
   private def zstdBound(head: Array[Byte], len: Long,
-      declared: Long): Boolean =
-    head.length >= 6 && LibCodec.le32(head, 0) == 0xFD2FB528 && {
-      val fhd = head(4) & 0xff
-      val single = (fhd & 0x20) != 0
-      val fcsSize = (fhd >>> 6) match {
-        case 0 => if (single) 1 else 0
-        case 1 => 2
-        case 2 => 4
-        case _ => 8
-      }
-      val dictSize = Array(0, 1, 2, 4)(fhd & 3)
-      val fcsAt = 5 + (if (single) 0 else 1) + dictSize
-      if (fcsSize > 0) {
-        fcsAt + fcsSize <= head.length && {
+      declared: Long): Boolean = {
+    val recorded = head.length >= 6 &&
+      LibCodec.le32(head, 0) == 0xFD2FB528 && {
+        val fhd = head(4) & 0xff
+        val single = (fhd & 0x20) != 0
+        val fcsSize = (fhd >>> 6) match {
+          case 0 => if (single) 1 else 0
+          case 1 => 2
+          case 2 => 4
+          case _ => 8
+        }
+        val dictSize = Array(0, 1, 2, 4)(fhd & 3)
+        val fcsAt = 5 + (if (single) 0 else 1) + dictSize
+        fcsSize > 0 && fcsAt + fcsSize <= head.length && {
           var v = 0L
           var i = 0
           while (i < fcsSize) {
@@ -472,13 +486,9 @@ object ParquetFooter {
           }
           (if (fcsSize == 2) v + 256 else v) == declared
         }
-      } else {
-        val wd = head(5) & 0xff
-        val base = 1L << (10 + (wd >>> 3))
-        val window = base + (base / 8) * (wd & 7)
-        declared <= (len / 3 + 1) * math.min(window, 128L * 1024)
       }
-    }
+    recorded || declared <= (len / 3 + 1) * (128L * 1024)
+  }
 
   /** One page's location per the OffsetIndex: absolute file offset of
     * its header, compressed size (header + body), and the index of its

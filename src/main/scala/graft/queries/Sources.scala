@@ -1075,16 +1075,14 @@ object Sources {
       |GROUP BY event_type ORDER BY event_type""".stripMargin
 
   // ---------------------------------------------------------------------
-  // S31: graft's own parquet WRITER (operators.ParquetWrite)
-  // end-to-end — the engine WRITES its storage format without
-  // parquet-mr's writer (parquet-format footer, v1 PLAIN pages behind
-  // RLE-hybrid definition levels, snappy-java page compression, modern
-  // min_value/max_value chunk statistics), distributed one file per
-  // partition where the data is. The read-back goes through Spark's
-  // OWN parquet-mr reader — the independent implementation — so a
-  // wrong field id, broken def-level run, bad stat encoding or
-  // misplaced page offset fails the scan or the value compare; the
-  // oracle re-derives the aggregate from the source table in DuckDB.
+  // S31: graft's parquet WRITE API (operators.ParquetWrite)
+  // end-to-end — parquet-mr's ParquetWriter with Spark's
+  // ParquetWriteSupport under graft's row-group/page geometry, codec
+  // and exact-stats footer entry, distributed one file per partition
+  // where the data is. The read-back goes through Spark's parquet-mr
+  // reader, so a wrong schema mapping, value conversion or footer
+  // fails the scan or the value compare; the oracle re-derives the
+  // aggregate from the source table in DuckDB.
   private def s31ParquetWrite(s: SparkSession, dir: String): DataFrame = {
     val tmp = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft-pqwrite-${graft.Tables.fingerprint(dir, "events")}")
@@ -1845,9 +1843,9 @@ object Sources {
             .as("ms"))
   }
 
-  /** Build-once fixture WRITTEN by the from-scratch ParquetWrite tree
-    * shredder (the s44 input) — the write-side twin of
-    * [[ensureDeepPqFixture]], same deep shapes, our pages/levels.
+  /** Build-once fixture WRITTEN through ParquetWrite (the s44
+    * input) — the write-side twin of [[ensureDeepPqFixture]], same
+    * deep shapes, written by parquet-mr under graft's geometry.
     */
   def ensureDeepWriteFixture(s: SparkSession, dir: String): String = {
     val tmp = new java.io.File(sys.props("java.io.tmpdir"),
@@ -1871,11 +1869,11 @@ object Sources {
       s.read.format("graftpq").load(ensureDeepPqFixture(s, dir)))
 
   // S44: the WRITE-side twin — the same deep shapes land through
-  // ParquetWrite's generic tree shredder (arbitrary-depth Dremel
-  // level streams, our pages and codecs) and the INDEPENDENT reader
-  // (Spark/parquet-mr) scans them; the oracle re-derives the same
-  // closed forms, so a shredding bug cannot cancel against a
-  // matching read-side bug.
+  // ParquetWrite (arbitrary-depth Dremel level streams, written by
+  // parquet-mr from the plan's own rows) and Spark's reader scans
+  // them; the oracle re-derives the same closed forms from the source
+  // table, so a conversion bug on the write side cannot cancel
+  // against the read side.
   private def s44PqDeepwrite(s: SparkSession, dir: String): DataFrame =
     deepNestedAgg(s.read.parquet(ensureDeepWriteFixture(s, dir)))
 
@@ -2331,11 +2329,11 @@ object Sources {
       |FROM events""".stripMargin
 
   // S51/S52: the DSv2 WRITE path end-to-end — `df.write.format(
-  // "graftpq"/"graftorc").save(dir)` runs graft's writers (the
-  // from-scratch ParquetWrite, OrcWrite over orc-core's writer)
-  // task-parallel (bounded-queue streaming, rename-on-task-commit),
-  // and the INDEPENDENT readers (parquet-mr / orc-core via Spark)
-  // decode the result — so a user writes AND reads both formats
+  // "graftpq"/"graftorc").save(dir)` runs graft's writers
+  // (ParquetWrite over parquet-mr's writer, OrcWrite over orc-core's)
+  // task-parallel (rows written on the task thread,
+  // rename-on-task-commit), and the INDEPENDENT readers (parquet-mr /
+  // orc-core via Spark) decode the result — so a user writes AND reads both formats
   // through the engine's own data plane with the stock DataFrame API.
   private def s51PqV2Write(s: SparkSession, dir: String): DataFrame = {
     val tmp = new java.io.File(sys.props("java.io.tmpdir"),
@@ -2574,9 +2572,9 @@ object Sources {
 
   // S58: STRING MIN/MAX aggregate pushdown — chunk stats carry no
   // exactness flag and foreign writers may truncate binary stats, so
-  // string extremes push ONLY when every footer's created_by proves
-  // the file came from this engine's own writer (which never
-  // truncates, spec-pinned); the s48 fixture is exactly that, so
+  // string extremes push ONLY when every footer carries the exact-stats
+  // entry of this engine's own writer (which never truncates,
+  // spec-pinned); the s48 fixture is exactly that, so
   // min/max(event_type) answer from footer metadata with zero data IO
   // alongside the numeric extremes.
   private def s58PqAggString(s: SparkSession, dir: String): DataFrame = {

@@ -89,7 +89,7 @@ import graft.operators.OrcData.{OrcColStat, OrcStripe, OrcTypeNode}
   * record — a file tier would add a second source of truth with
   * nothing to prune that the stripe tier doesn't already prune.
   * String dominators in that stripe tier are writer-fenced the same
-  * way the parquet manifest is `created_by`-gated: pre-HIVE-8732
+  * way the parquet manifest is exact-stats-gated: pre-HIVE-8732
   * files (PostScript writerVersion 0) have their string statistics
   * stripped at parse ([[graft.operators.OrcData]].readPlan and the
   * row-group twin below), so a UTF-16-ordered extreme can never
@@ -937,19 +937,21 @@ private[sources] class GraftOrcScan(fullSchema: StructType,
                   case _ => true
                 }
               }
-              val nGroups =
-                ((stripe.rows + stride - 1) / stride).toInt
+              val nGroups = LibCodec.naming(f)(OrcData.rowGroups(stripe,
+                stride, ixBytes, ftBytes, plan.meta.compression,
+                plan.meta.blockSize))
               val byName: Map[String, Seq[OrcColStat]] =
                 idByName.flatMap { case (n, id) =>
                   gs.get(id).map(n -> _)
                 }
-              val alive = (0 until nGroups).filter { g =>
+              def alive(g: Int): Boolean =
                 pushed.forall(survivesStat(
                   c => byName.get(c).flatMap(_.lift(g)), _)) &&
                 pushed.forall(bloomAlive(g, _))
-              }
-              if (alive.isEmpty) None // every group disjoint: drop
-              else Some((alive.head, alive.last + 1))
+              val first = (0 until nGroups).indexWhere(alive)
+              if (first < 0) None // every group disjoint: drop
+              else Some((first,
+                (0 until nGroups).lastIndexWhere(alive) + 1))
             }
           range.map { case (g0, g1) =>
             (GraftOrcPartition(f.getAbsolutePath, stripe,
@@ -1143,7 +1145,7 @@ private[sources] object GraftOrcReaderFactory {
       new GraftOrcReaderFactory(sparkFactory, required,
         required.fields.map(f =>
           if (partNames(f.name)) readData.length + parts.fieldIndex(f.name)
-          else readData.fieldIndex(f.name)).toSeq)
+          else readData.fieldIndex(f.name)).toSeq, filters.nonEmpty)
     }
 
   private val built = new SparkReaderFactories[GraftOrcReaderFactory]
@@ -1151,7 +1153,7 @@ private[sources] object GraftOrcReaderFactory {
 
 private[sources] class GraftOrcReaderFactory(
     sparkFactory: OrcPartitionReaderFactory, required: StructType,
-    ordinals: Seq[Int]) extends PartitionReaderFactory {
+    ordinals: Seq[Int], filtered: Boolean) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] =
@@ -1164,8 +1166,11 @@ private[sources] class GraftOrcReaderFactory(
   private[sources] def open(p: GraftOrcPartition)
       : PartitionReader[InternalRow] = {
     val file = new java.io.File(p.path)
+    // orc-core sizes its row-group flags from the stride only when it
+    // applies pushed filters
     OrcData.checkStripe(file.toPath, p.stripe, p.compression, p.blockSize,
-      p.colIds.flatMap(OrcData.subtreeIds(p.types, _)))
+      p.colIds.flatMap(OrcData.subtreeIds(p.types, _)),
+      if (filtered) p.stride else 0)
     sparkFactory.buildReader(PartitionedFile(
       InternalRow.fromSeq(p.partSpec.map { case (_, dt, raw) =>
         GraftParquet.partitionValue(dt, raw)

@@ -895,10 +895,12 @@ object GraftParquet {
     * STRING MIN/MAX (footer tier): chunk stats carry no exactness
     * flag and writers MAY truncate binary stats, so string extremes
     * from a foreign file are bounds, not answers. This engine's own
-    * writer ([[graft.operators.ParquetWrite]]) never truncates —
-    * spec-pinned — so when EVERY footer's `created_by` is the
-    * engine's, string MIN/MAX answer exactly from chunk stats (the
-    * per-file sweep re-checks each footer, not just the head).
+    * writer ([[graft.operators.ParquetWrite]]) never truncates and
+    * says so in the footer (`PqFooter.exactStats`), so when EVERY
+    * footer carries that entry, string MIN/MAX answer exactly from
+    * chunk stats (the per-file sweep re-checks each footer, not just
+    * the head). Files written before the entry existed fall back to
+    * reading data, with the same results.
     */
   private[sources] def planAggregation(agg: Aggregation, path: String,
       consumed: Array[Filter] = Array.empty): Option[PqPushedAgg] = {
@@ -979,13 +981,12 @@ object GraftParquet {
     }
 
     // shape the specs against the first footer; every file re-checks
-    // its own chunks (and, for strings, its own created_by) during
-    // the sweep below
+    // its own chunks (and, for strings, its own exact-stats entry)
+    // during the sweep below
     val headFooter = ParquetFooter.readTail(files.head._1.toPath)
     val headLeaves = flatLeaves(headFooter.schema)
     val headTypes = sparkSchema(headFooter)
-    val headExactStrings =
-      headFooter.createdBy.contains(graft.operators.ParquetWrite.createdBy)
+    val headExactStrings = headFooter.exactStats
     // MIN/MAX: partition columns answer from their EXACT dir values
     // (strings included); data leaves from int-backed stats, plus
     // UTF8 leaves behind the exact-writer gate; float/double never
@@ -1042,8 +1043,7 @@ object GraftParquet {
         // exactness is PER FILE: a directory mixing engine-written and
         // foreign files keeps string extremes only if every file
         // proves its own stats untruncated
-        val exactStrings = footer.createdBy
-          .contains(graft.operators.ParquetWrite.createdBy)
+        val exactStrings = footer.exactStats
         val rgs = footer.rowGroups
         val fileRows = rgs.map(_.numRows).sum
         if (groups.nonEmpty && fileRows == 0) Seq(Right(None))
@@ -1270,7 +1270,7 @@ object GraftParquet {
       wantMin: Boolean, exactStrings: Boolean = false): Option[Any] = {
     val leaf = leaves.get(c).getOrElse(return None)
     // BYTE_ARRAY admitted only when THIS file's writer provably never
-    // truncates binary stats (the created_by gate) — statTyped then
+    // truncates binary stats (the exact-stats gate) — statTyped then
     // decodes the exact UTF8 bytes
     if (!(Set(1, 2, 4, 5).contains(leaf.physicalType) ||
         (exactStrings && leaf.physicalType == 6)) ||
@@ -1295,42 +1295,26 @@ object GraftParquet {
     Some(best)
   }
 
-  /** Adapt one INTERNAL (catalyst) value to the plain-JVM shapes the
-    * writers take ([[graft.operators.ParquetWrite]] /
-    * [[graft.operators.OrcWrite]]): UTF8String → String, Decimal →
-    * java BigDecimal (parquet then packs it to unscaled storage
-    * through the writer's own leaf adapter), Byte/Short widen to Int
-    * (the writers' int32 representation), Date day-ints and Timestamp
-    * micro-longs pass through, lists become Seq, maps Seq[(k,v)], and
-    * structs pack via `structPack` (Array for parquet, Seq for ORC).
+  /** Adapt one INTERNAL (catalyst) value to the plain-JVM shapes
+    * [[graft.operators.OrcWrite]] takes: UTF8String → String, Decimal →
+    * java BigDecimal, Date day-ints and Timestamp micro-longs pass
+    * through, lists become Seq, maps Seq[(k,v)] and structs the Seq of
+    * their field values.
     */
-  private[graft] def internalAdapter(dt: DataType, orc: Boolean,
-      structPack: Seq[Any] => Any): Any => Any = dt match {
-    case ByteType => v => Int.box(v.asInstanceOf[Byte].toInt)
-    case ShortType => v => Int.box(v.asInstanceOf[Short].toInt)
+  private[graft] def internalAdapter(dt: DataType): Any => Any = dt match {
     case StringType => v => v.asInstanceOf[UTF8String].toString
-    case d: DecimalType =>
-      val pack: Any => Any =
-        if (orc) identity
-        else graft.operators.ParquetWrite.valueAdapt(d, "decimal")
-      v => pack(v.asInstanceOf[Decimal].toJavaBigDecimal)
+    case _: DecimalType => v => v.asInstanceOf[Decimal].toJavaBigDecimal
     case st: StructType =>
-      val ads = st.fields.map(f => internalAdapter(f.dataType, orc,
-        structPack))
-      val dts = st.fields.map(_.dataType)
-      v => {
-        val r = v.asInstanceOf[InternalRow]
-        structPack(Seq.tabulate[Any](ads.length)(i =>
-          if (r.isNullAt(i)) null else ads(i)(r.get(i, dts(i)))))
-      }
+      val row = internalRowAdapter(st)
+      v => row(v.asInstanceOf[InternalRow]).toSeq
     case ArrayType(et, _) =>
-      val ad = internalAdapter(et, orc, structPack)
+      val ad = internalAdapter(et)
       v => v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
         .toObjectArray(et).toSeq
         .map[Any](x => if (x == null) null else ad(x))
     case MapType(kt, vt, _) =>
-      val kad = internalAdapter(kt, orc, structPack)
-      val vad = internalAdapter(vt, orc, structPack)
+      val kad = internalAdapter(kt)
+      val vad = internalAdapter(vt)
       v => {
         val m = v.asInstanceOf[org.apache.spark.sql.catalyst.util.MapData]
         val ks = m.keyArray.toObjectArray(kt)
@@ -1338,7 +1322,18 @@ object GraftParquet {
         Seq.tabulate[(Any, Any)](ks.length)(i => (kad(ks(i)),
           if (vs(i) == null) null else vad(vs(i))))
       }
-    case _ => identity // Int/Long/Float/Double/Boolean/Binary/day/micros
+    case _ => identity // Int/Long/Double/Boolean/Binary/day/micros
+  }
+
+  /** One INTERNAL row of `schema` as the `Array[Any]` row
+    * [[graft.operators.OrcWrite]] takes ([[internalAdapter]] per field).
+    */
+  private[graft] def internalRowAdapter(schema: StructType)
+      : InternalRow => Array[Any] = {
+    val dts = schema.fields.map(_.dataType)
+    val ads = dts.map(internalAdapter)
+    r => Array.tabulate[Any](dts.length)(i =>
+      if (r.isNullAt(i)) null else ads(i)(r.get(i, dts(i))))
   }
 
   /** Normalize temporal filter literals to Spark's INTERNAL units —
@@ -1475,8 +1470,8 @@ private[sources] class GraftParquetTable(schema: StructType,
   * "graftorc").mode("append"/"overwrite")[.partitionBy(cols)]
   * .save(dir)` runs graft's writers
   * ([[graft.operators.ParquetWrite]] / [[graft.operators.OrcWrite]])
-  * WHERE THE DATA IS — one task per partition streams its rows through
-  * bounded queues into the writers (no per-task buffering of the whole
+  * WHERE THE DATA IS — one task per partition writes its rows into
+  * the writers on its own thread (no per-task buffering of the whole
   * partition), lands hidden `.inprogress` temp files, renames them to
   * hidden `.staged` names at TASK commit (Spark's commit coordinator
   * admits one attempt per Spark partition, so speculation/retries
@@ -1504,10 +1499,10 @@ private[sources] class GraftParquetTable(schema: StructType,
   * the commit protocol already consume, and the version-tailing
   * stream can follow. An append into an already-partitioned dir
   * inherits the recorded layout; a conflicting declaration rejects.
-  * One writer (bounded queue + thread) stays open per distinct
-  * partition value per task — at scale, repartition by the partition
-  * columns upstream so each task sees few distinct values, the same
-  * guidance as Spark's own dynamic-partition writes.
+  * One writer (one row group or stripe in memory) stays open per
+  * distinct partition value per task — at scale, repartition by the
+  * partition columns upstream so each task sees few distinct values,
+  * the same guidance as Spark's own dynamic-partition writes.
   */
 private[sources] class GraftWriteBuilder(path: String,
     schema: StructType, orc: Boolean,
@@ -1616,6 +1611,9 @@ private[sources] class GraftWriteBuilder(path: String,
       .filterNot { case (_, i) => partIdx.contains(i) }.map(_._1))
     require(fileSchema.fields.nonEmpty,
       s"$fmt: cannot write a table that is ALL partition columns")
+    // unsupported types reject by name before any task runs
+    if (orc) graft.operators.OrcWrite.orcSchema(fileSchema)
+    else graft.operators.ParquetWrite.check(fileSchema)
     val tf = truncateFirst
     new org.apache.spark.sql.connector.write.Write {
       override def toBatch
@@ -1640,8 +1638,8 @@ private[sources] class GraftWriteBuilder(path: String,
 /** `df.writeStream.format("graftpq").option("path", dir)` — the SINK
   * half of the engine's streaming loop (the version-tailing source is
   * the read half): every micro-batch stages its files into a PRIVATE
-  * per-epoch dir (task-parallel, bounded queues, the same parquet
-  * writer), and the epoch COMMIT runs the commit protocol's lock-held
+  * per-epoch dir (task-parallel, the same parquet writer), and the
+  * epoch COMMIT runs the commit protocol's lock-held
   * tail through [[graft.operators.Maintenance.commitStagedAppend]] —
   * schema merge + enforcement, version-unique renames, live registry,
   * add-delta snapshot, pruning stats and the exact agg-stats manifest.
@@ -1816,14 +1814,17 @@ private[sources] final case class GraftFileWriterFactory(path: String,
       partitionId, taskId)
 }
 
-/** One bounded-queue + writer-thread unit producing ONE file: memory
-  * is O(queue + one row group), never O(partition). The file lands as
-  * hidden `.inprogress`, moves to hidden `.staged` at task commit and
-  * to its final name only at job commit.
+/** One file of a task, written on the task thread: each row goes
+  * straight into the format's library writer (parquet-mr through
+  * [[graft.operators.ParquetWrite.open]], orc-core through
+  * [[graft.operators.OrcWrite.open]]), so memory is one row group or
+  * stripe, never the partition. The file lands as hidden
+  * `.inprogress`, moves to hidden `.staged` at task commit and to its
+  * final name only at job commit.
   */
 private[sources] class GraftSingleFileWriter(dir: java.io.File,
     base: String, fileSchema: StructType, orc: Boolean,
-    queueSlots: Int, publishAtTaskCommit: Boolean = false) {
+    publishAtTaskCommit: Boolean = false) {
 
   // mkdirs() can return false when a CONCURRENT task creates a path
   // segment first (the classic race) — re-check before failing
@@ -1834,46 +1835,21 @@ private[sources] class GraftSingleFileWriter(dir: java.io.File,
   private val staged = new java.io.File(dir, s".$base.$ext.staged")
   private val fin = new java.io.File(dir, s"$base.$ext")
 
-  private val queue =
-    new java.util.concurrent.ArrayBlockingQueue[AnyRef](queueSlots)
-  private val endMark = new Object
-  @volatile private var failure: Throwable = null
+  private val (out, writeRow): (java.io.Closeable, InternalRow => Unit) =
+    if (orc) {
+      val w = graft.operators.OrcWrite.open(tmp.toPath, fileSchema,
+        compression = 5)
+      val adapt = GraftParquet.internalRowAdapter(fileSchema)
+      (w, r => w.write(adapt(r)))
+    } else {
+      val w = graft.operators.ParquetWrite.open(tmp.toPath, fileSchema,
+        codec = 1)
+      (w, r => w.write(r))
+    }
   var rows = 0L
 
-  private val writer = new Thread(() => {
-    try {
-      val it = new Iterator[Array[Any]] {
-        private var nextItem: AnyRef = queue.take()
-        def hasNext: Boolean = nextItem ne endMark
-        def next(): Array[Any] = {
-          val r = nextItem.asInstanceOf[Array[Any]]
-          nextItem = queue.take()
-          r
-        }
-      }
-      if (orc)
-        graft.operators.OrcWrite.writeFile(tmp.toPath, fileSchema, it,
-          compression = 5)
-      else
-        graft.operators.ParquetWrite.writeColumns(tmp.toPath,
-          graft.operators.ParquetWrite.columnsOf(fileSchema), it,
-          codec = 1)
-    } catch {
-      case t: Throwable =>
-        failure = t
-        // unblock the producer, then drain whatever still arrives
-        while (queue.poll() ne null) ()
-        while (queue.take() ne endMark) ()
-    }
-  }, s"graft-write-$base")
-  writer.setDaemon(true)
-  writer.start()
-
-  def put(a: Array[Any]): Unit = {
-    if (failure != null) throw failure
-    queue.put(a)
-    rows += 1
-  }
+  /** Write one row of `fileSchema`. */
+  def write(row: InternalRow): Unit = { writeRow(row); rows += 1 }
 
   /** Finish the file and stage it; (staged, final) or None if empty.
     * `publishAtTaskCommit` writers (streaming epochs staging into a
@@ -1882,9 +1858,7 @@ private[sources] class GraftSingleFileWriter(dir: java.io.File,
     * boundary there, not the file name.
     */
   def stage(): Option[(String, String)] = {
-    queue.put(endMark)
-    writer.join()
-    if (failure != null) throw failure
+    out.close()
     if (rows == 0) { tmp.delete(); None }
     else if (publishAtTaskCommit) {
       require(tmp.renameTo(fin),
@@ -1898,20 +1872,18 @@ private[sources] class GraftSingleFileWriter(dir: java.io.File,
   }
 
   def abort(): Unit = {
-    queue.clear()
-    queue.put(endMark)
-    writer.join()
+    try out.close() catch { case NonFatal(_) => () }
     tmp.delete()
     staged.delete()
   }
 }
 
-/** One task's writer: adapts each internal row to the writers' plain
-  * JVM shapes IMMEDIATELY (internal rows are reused by the caller) and
-  * routes it — straight to the single file writer when unpartitioned,
-  * to the row's `col=value/` destination when partitioned (partition
-  * columns stripped from the written rows, one open file per distinct
-  * value seen by this task).
+/** One task's writer: routes each internal row — straight to the
+  * single file writer when unpartitioned, to the row's `col=value/`
+  * destination when partitioned (partition columns projected out of
+  * the written rows, one open file per distinct value seen by this
+  * task). Rows are written before `write` returns, so the caller may
+  * reuse them.
   */
 private[sources] class GraftFileDataWriter(dirPath: String,
     schema: StructType, fileSchema: StructType, partIdx: Seq[Int],
@@ -1921,15 +1893,10 @@ private[sources] class GraftFileDataWriter(dirPath: String,
 
   private val base = f"part-$partitionId%05d-$taskId"
   private val dts = schema.fields.map(_.dataType)
-  private val dataIdx: Array[Int] =
-    schema.fields.indices.filterNot(partIdx.contains).toArray
-  private val ads: Array[Any => Any] = dataIdx.map { i =>
-    GraftParquet.internalAdapter(dts(i), orc,
-      if (orc) (s: Seq[Any]) => s else (s: Seq[Any]) => s.toArray[Any])
-  }
-  // partitioned tasks keep several queues open: smaller slots bound
-  // the task's buffered rows at queues × slots
-  private val slots = if (partIdx.isEmpty) 1024 else 128
+  private val dataRow: ProjectingInternalRow =
+    if (partIdx.isEmpty) null
+    else ProjectingInternalRow(fileSchema,
+      schema.fields.indices.filterNot(partIdx.contains))
 
   private val writers = new scala.collection.mutable.LinkedHashMap[
     String, GraftSingleFileWriter]()
@@ -1937,7 +1904,7 @@ private[sources] class GraftFileDataWriter(dirPath: String,
     writers.getOrElseUpdate(rel, new GraftSingleFileWriter(
       if (rel.isEmpty) new java.io.File(dirPath)
       else new java.io.File(dirPath, rel),
-      base, fileSchema, orc, slots, publishAtTaskCommit))
+      base, fileSchema, orc, publishAtTaskCommit))
 
   private def partDir(row: InternalRow): String =
     partIdx.zipWithIndex.map { case (fi, _) =>
@@ -1950,16 +1917,12 @@ private[sources] class GraftFileDataWriter(dirPath: String,
       s"$name=$v"
     }.mkString("/")
 
-  override def write(row: InternalRow): Unit = {
-    val a = new Array[Any](dataIdx.length)
-    var i = 0
-    while (i < dataIdx.length) {
-      val fi = dataIdx(i)
-      a(i) = if (row.isNullAt(fi)) null else ads(i)(row.get(fi, dts(fi)))
-      i += 1
+  override def write(row: InternalRow): Unit =
+    if (dataRow == null) writerFor("").write(row)
+    else {
+      dataRow.project(row)
+      writerFor(partDir(row)).write(dataRow)
     }
-    writerFor(if (partIdx.isEmpty) "" else partDir(row)).put(a)
-  }
 
   override def commit()
       : org.apache.spark.sql.connector.write.WriterCommitMessage =
@@ -2243,7 +2206,7 @@ final case class GraftPqPartition(path: String,
     skip: Array[Long] = Array.emptyLongArray,
     ranges: Array[Long] = Array.emptyLongArray,
     // this file's writer provably never truncates binary stats (the
-    // created_by gate) — what lets a string TOP-N trust chunk bounds
+    // exact-stats gate) — what lets a string TOP-N trust chunk bounds
     exactStr: Boolean = false)
   extends InputPartition
 
@@ -2687,8 +2650,7 @@ private[sources] class GraftParquetScan(fullSchema: StructType,
               if (ranges == null) skip
               else skip.filter(GraftParquet.inRanges(ranges, _)),
               if (ranges == null) Array.emptyLongArray else ranges,
-              exactStr = footer.createdBy.contains(
-                graft.operators.ParquetWrite.createdBy)))
+              exactStr = footer.exactStats))
           }
         }.toVector // materialize before the channel closes
       } finally if (ich != null) ich.close()

@@ -752,14 +752,14 @@ class GraftParquetSpec extends AnyFunSuite {
       "filter plans EXACTLY one page's rows, on our files AND " +
       "parquet-mr-written ones") {
     import graft.operators.ParquetWrite
-    import graft.operators.ParquetWrite.PwFields
+    import org.apache.spark.sql.types._
     // our writer: one 40000-row file, 20000-row groups, 1000-row pages
     // (sorted ids → page stats are tight fences)
     val dir = java.nio.file.Files
       .createTempDirectory("graft-graftpq-pageix").toFile
     try {
-      val fields = Seq(PwFields.int64("id"), PwFields.string("tag"),
-        PwFields.double("v"))
+      val fields = StructType(Seq(StructField("id", LongType),
+        StructField("tag", StringType), StructField("v", DoubleType)))
       def rows = (0 until 40000).iterator.map { i =>
         Array[Any](Long.box(i.toLong), s"t${i % 50}",
           if (i % 7 == 0) null else Double.box(i * 0.5))
@@ -840,13 +840,14 @@ class GraftParquetSpec extends AnyFunSuite {
   test("STRING-keyed filters prune row groups AND pages from UTF-8 " +
       "byte-order stats, on our files AND Spark-written ones") {
     import graft.operators.ParquetWrite
-    import graft.operators.ParquetWrite.PwFields
+    import org.apache.spark.sql.types._
     val dir = java.nio.file.Files
       .createTempDirectory("graft-graftpq-strprune").toFile
     try {
       // our writer, string-clustered: sym sorts lexicographically in
       // id order; 8192-row groups, 1024-row pages
-      val fields = Seq(PwFields.int64("id"), PwFields.string("sym"))
+      val fields = StructType(Seq(StructField("id", LongType),
+        StructField("sym", StringType)))
       def rows = (0 until 40000).iterator.map { i =>
         Array[Any](Long.box(i.toLong), "s%05d".format(i))
       }
@@ -2831,4 +2832,135 @@ class GraftParquetSpec extends AnyFunSuite {
     } finally graft.streaming.WorkDirs
       .deleteRecursively(new java.io.File(work))
   }
+
+  test("a DSv2 write that fails mid-task fails the job with its cause " +
+      "and leaves no part, .inprogress, .staged or _SUCCESS file " +
+      "(graftpq and graftorc, partitioned)") {
+    import org.apache.spark.sql.functions.{col, udf}
+    // the second task throws only once the first has committed and
+    // ended, so the job's abort gets the first task's staged files in
+    // its messages and no task is left running
+    val boom = udf { (i: Long) =>
+      if (i == 2500L) {
+        GraftParquetSpec.firstTaskEnded.await(60,
+          java.util.concurrent.TimeUnit.SECONDS)
+        throw new IllegalStateException("boom at row 2500")
+      }
+      i
+    }
+    val ended = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskInfo.successful) GraftParquetSpec.firstTaskEnded.countDown()
+    }
+    spark.sparkContext.addSparkListener(ended)
+    try for (fmt <- Seq("graftpq", "graftorc")) {
+      GraftParquetSpec.firstTaskEnded =
+        new java.util.concurrent.CountDownLatch(1)
+      val dir = java.nio.file.Files
+        .createTempDirectory(s"graft-abort-$fmt").toFile
+      try {
+        // two tasks: the second throws after 500 rows, spread over
+        // four partition directories
+        val df = spark.range(0, 4000, 1, 2).toDF("id")
+          .select(boom(col("id")).as("id"), (col("id") % 4).as("p"))
+        val e = intercept[Exception] {
+          df.write.format(fmt).partitionBy("p").mode("append")
+            .save(dir.toString)
+        }
+        val causes = Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).toSeq
+        assert(causes.exists(c => String.valueOf(c.getMessage)
+          .contains("boom at row 2500")), s"$fmt: $e")
+        def files(d: java.io.File): Seq[java.io.File] =
+          Option(d.listFiles()).toSeq.flatten.flatMap { f =>
+            if (f.isDirectory) files(f) else Seq(f)
+          }
+        val left = files(dir).map(_.getName).filter(n =>
+          n.startsWith("part-") || n.contains(".inprogress") ||
+            n.contains(".staged") || n == "_SUCCESS")
+        assert(left.isEmpty, s"$fmt left ${left.mkString(", ")}")
+      } finally graft.streaming.WorkDirs.deleteRecursively(dir)
+    } finally spark.sparkContext.removeSparkListener(ended)
+  }
+
+  test("string statistics past parquet-mr's 4,096-byte limit: min, max " +
+      "and ORDER BY ... LIMIT through graftpq equal Spark's on our " +
+      "files; a footer without the exact-stats entry refuses the " +
+      "string push") {
+    import org.apache.spark.sql.functions.{col, max, min}
+    import org.apache.spark.sql.types._
+    import graft.operators.{ParquetFooter, ParquetWrite}
+    val work = java.nio.file.Files
+      .createTempDirectory("graft-graftpq-longstat").toFile
+    try {
+      val schema = StructType(Seq(StructField("id", LongType),
+        StructField("s", StringType)))
+      // group 0 holds a 5,000-byte maximum, group 1 short strings
+      val long = "z" * 5000
+      val wide = new java.io.File(work, "wide")
+      wide.mkdirs()
+      ParquetWrite.writeFile(new java.io.File(wide, "part-0.parquet")
+        .toPath, schema, (0 until 2000).iterator.map(i => Array[Any](
+          Long.box(i.toLong),
+          if (i == 7) long else f"m$i%05d")),
+        rowGroupRows = 1000, pageRows = 500)
+      val footer = ParquetFooter.readTail(
+        new java.io.File(wide, "part-0.parquet").toPath)
+      assert(footer.exactStats)
+      val chunks = footer.rowGroups.map(_.columns.find(_.path == "s").get)
+      assert(chunks(0).maxValue.isEmpty && chunks(1).maxValue.isDefined,
+        "parquet-mr keeps no min/max past 4,096 bytes")
+      val ours = spark.read.format("graftpq").load(wide.toString)
+      val theirs = spark.read.parquet(wide.toString)
+      def same(f: org.apache.spark.sql.DataFrame =>
+          org.apache.spark.sql.DataFrame): Unit =
+        assert(f(ours).collect().toSeq == f(theirs).collect().toSeq)
+      same(_.agg(min(col("s")), max(col("s"))))
+      same(_.orderBy(col("s").desc).limit(3).select("id", "s"))
+      same(_.orderBy(col("s")).limit(3).select("id", "s"))
+      assert(ours.agg(max(col("s"))).head.getString(0) == long)
+      // the same kind of file, short strings only: the push is taken;
+      // with the entry spliced out of the footer it is refused
+      val short = new java.io.File(work, "short")
+      short.mkdirs()
+      val file = new java.io.File(short, "part-0.parquet")
+      ParquetWrite.writeFile(file.toPath, schema,
+        (0 until 2000).iterator.map(i => Array[Any](Long.box(i.toLong),
+          f"m$i%05d")), rowGroupRows = 1000, pageRows = 500)
+      def pushed: Boolean = batchScan(
+          spark.read.format("graftpq").load(short.toString)
+            .agg(min(col("s")), max(col("s"))))
+        .scan.description().contains("PushedAggregation")
+      assert(pushed, "string extremes not pushed on our file")
+      val bytes = java.nio.file.Files.readAllBytes(file.toPath)
+      val metaLen = java.nio.ByteBuffer.wrap(bytes, bytes.length - 8, 4)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+      val metaAt = bytes.length - 8 - metaLen
+      val meta = org.apache.parquet.format.Util.readFileMetaData(
+        new java.io.ByteArrayInputStream(bytes, metaAt, metaLen))
+      meta.setKey_value_metadata(new java.util.ArrayList(
+        meta.getKey_value_metadata.stream()
+          .filter(kv => kv.getKey != ParquetFooter.ExactStatsKey)
+          .toList))
+      val out = new java.io.ByteArrayOutputStream()
+      org.apache.parquet.format.Util.writeFileMetaData(meta, out)
+      val spliced = out.toByteArray
+      java.nio.file.Files.write(file.toPath, bytes.take(metaAt) ++
+        spliced ++ java.nio.ByteBuffer.allocate(4)
+          .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(spliced.length)
+          .array() ++ "PAR1".getBytes("US-ASCII"))
+      assert(!ParquetFooter.readTail(file.toPath).exactStats)
+      assert(!pushed, "string extremes pushed without the entry")
+      val plain = spark.read.format("graftpq").load(short.toString)
+      assert(plain.agg(min(col("s")), max(col("s"))).collect().toSeq ==
+        spark.read.parquet(short.toString).agg(min(col("s")),
+          max(col("s"))).collect().toSeq)
+    } finally graft.streaming.WorkDirs.deleteRecursively(work)
+  }
+}
+
+private object GraftParquetSpec {
+  /** Opens once a task of the abort case's write has ended. */
+  @volatile var firstTaskEnded = new java.util.concurrent.CountDownLatch(1)
 }

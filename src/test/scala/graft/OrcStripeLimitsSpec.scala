@@ -230,6 +230,47 @@ class OrcStripeLimitsSpec extends AnyFunSuite {
     rejectsSmall(withLengths(Int.MaxValue / 10), "2^31 dictionary bytes")
   }
 
+  test("a stripe declaring 2^28 rows at row index stride 1 rejects " +
+      "through graftorc before Spark's reader allocates a flag per " +
+      "row group") {
+    def atStride(stride: Int, rows: Long): Array[Byte] = rewrite(plain,
+      ft = f => f.toBuilder.setRowIndexStride(stride).setNumberOfRows(rows)
+        .setStripes(0, f.getStripes(0).toBuilder.setNumberOfRows(rows))
+        .build())
+    // a pushed filter makes orc-core apply a SearchArgument; planning
+    // and reading both run on this thread
+    def scan(bytes: Array[Byte])
+        : (Either[Throwable, Int], Long, java.nio.file.Path) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-orc-groups")
+      val file = dir.resolve("part-0.orc")
+      java.nio.file.Files.write(file, bytes)
+      val me = Thread.currentThread.getId
+      val before = threads.getThreadAllocatedBytes(me)
+      val got =
+        try {
+          val (parts, factory) = GraftPqDirect.plan(spark.read
+            .format("graftorc").load(dir.toString).filter("id = 5"))
+          Right(parts.map(GraftPqDirect.rows(factory, _).length).sum)
+        } catch { case e: Exception => Left(e) }
+      (got, threads.getThreadAllocatedBytes(me) - before, file)
+    }
+    val (real, _, f0) = scan(atStride(5000, 5000L))
+    graft.streaming.WorkDirs.deleteRecursively(f0.getParent.toFile)
+    assert(real == Right(5000), "one 5,000-row group reads")
+    val (got, allocated, file) = scan(atStride(1, 1L << 28))
+    try {
+      val e = got match {
+        case Left(e: IllegalArgumentException) => e
+        case other => fail(s"read gave $other")
+      }
+      assert(e.getMessage.contains(file.toString), e.getMessage)
+      assert(e.getMessage.contains("row groups"), e.getMessage)
+      assert(allocated < (16L << 20),
+        s"allocated $allocated bytes before rejecting")
+    } finally graft.streaming.WorkDirs.deleteRecursively(
+      file.getParent.toFile)
+  }
+
   test("LIST and MAP dictionaries larger than the stripe's row count " +
       "read through graftorc as spark.read.orc reads them") {
     val s = spark

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{ParquetFooter, ParquetWrite}
-import graft.operators.ParquetWrite.PwFields
+import org.apache.spark.sql.types._
 
 /** The from-scratch parquet WRITER (operators.ParquetWrite), validated
   * against two independent readers: Spark's own parquet-mr vectorized
@@ -33,10 +33,11 @@ class ParquetWriteSpec extends AnyFunSuite {
     for (codec <- Seq(0, 1)) {
       val dir = tmpDir(s"codec$codec")
       try {
-        val fields = Seq(PwFields.int64("id"), PwFields.int32("k"),
-          PwFields.string("s"), PwFields.boolean("b"),
-          PwFields.float("f"), PwFields.double("d"),
-          PwFields.date("dt"), PwFields.timestampMicros("ts"))
+        val fields = StructType(Seq(StructField("id", LongType),
+          StructField("k", IntegerType), StructField("s", StringType),
+          StructField("b", BooleanType), StructField("f", FloatType),
+          StructField("d", DoubleType), StructField("dt", DateType),
+          StructField("ts", TimestampType)))
         val rows = (0 until 3000).iterator.map { i =>
           Array[Any](
             Long.box(i.toLong),
@@ -77,8 +78,8 @@ class ParquetWriteSpec extends AnyFunSuite {
   test("this repo's own reader round-trips written files") {
     val dir = tmpDir("own")
     try {
-      val fields = Seq(PwFields.int64("id"), PwFields.string("s"),
-        PwFields.double("d"))
+      val fields = StructType(Seq(StructField("id", LongType),
+        StructField("s", StringType), StructField("d", DoubleType)))
       val rows = (0 until 2500).iterator.map(i => Array[Any](
         Long.box(i.toLong),
         if (i % 9 == 0) null else s"row-$i",
@@ -106,7 +107,8 @@ class ParquetWriteSpec extends AnyFunSuite {
   test("graftpq prunes row groups from the written statistics") {
     val dir = tmpDir("prune")
     try {
-      val fields = Seq(PwFields.int64("id"), PwFields.double("x"))
+      val fields = StructType(Seq(StructField("id", LongType),
+        StructField("x", DoubleType)))
       val rows = (0 until 40000).iterator.map(i =>
         Array[Any](Long.box(i.toLong), Double.box(i / 2.0)))
       ParquetWrite.writeFile(
@@ -154,8 +156,9 @@ class ParquetWriteSpec extends AnyFunSuite {
     val dir = tmpDir("dict")
     val sparkDir = tmpDir("dict-spark")
     try {
-      val fields = Seq(PwFields.int64("id"), PwFields.string("ev"),
-        PwFields.int32("code"), PwFields.double("grp"))
+      val fields = StructType(Seq(StructField("id", LongType),
+        StructField("ev", StringType), StructField("code", IntegerType),
+        StructField("grp", DoubleType)))
       val rows = (0 until 60000).iterator.map(i => Array[Any](
         Long.box(i.toLong),
         if (i % 50 == 0) null else s"type_${i % 8}", // 8 distinct
@@ -199,7 +202,8 @@ class ParquetWriteSpec extends AnyFunSuite {
       "decode the written frames") {
     val dir = tmpDir("zstd")
     try {
-      val fields = Seq(PwFields.int64("id"), PwFields.string("s"))
+      val fields = StructType(Seq(StructField("id", LongType),
+        StructField("s", StringType)))
       val rows = (0 until 5000).iterator.map(i => Array[Any](
         Long.box(i.toLong),
         if (i % 9 == 0) null else s"payload-$i"))
@@ -221,7 +225,8 @@ class ParquetWriteSpec extends AnyFunSuite {
     try {
       val f = new java.io.File(dir, "part-00000.parquet")
       ParquetWrite.writeFile(f.toPath,
-        Seq(PwFields.int64("id"), PwFields.string("s")),
+        StructType(Seq(StructField("id", LongType),
+          StructField("s", StringType))),
         (0 until 500).iterator.map(i =>
           Array[Any](Long.box(i.toLong), s"v$i")), codec = 1)
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -442,8 +447,8 @@ class ParquetWriteSpec extends AnyFunSuite {
     import org.apache.parquet.filter2.compat.FilterCompat
     val dir = tmpDir("pageindex")
     try {
-      val fields = Seq(PwFields.int64("id"), PwFields.string("tag"),
-        PwFields.double("v"))
+      val fields = StructType(Seq(StructField("id", LongType),
+        StructField("tag", StringType), StructField("v", DoubleType)))
       def rows = (0 until 40000).iterator.map { i =>
         Array[Any](Long.box(i.toLong), s"t${i % 50}",
           if (i % 7 == 0) null else Double.box(i * 0.5))
@@ -520,26 +525,27 @@ class ParquetWriteSpec extends AnyFunSuite {
   test("unsupported shapes reject loudly by name") {
     val dir = tmpDir("reject")
     try {
-      val e1 = intercept[IllegalArgumentException] {
-        ParquetWrite.writeFile(
-          new java.io.File(dir, "bad.parquet").toPath,
-          Seq(ParquetWrite.PwField("x", 7)), // FLBA without a length
-          Iterator.single(Array[Any]("y")), codec = 0)
-      }
-      assert(e1.getMessage.contains("type_length"))
       val e2 = intercept[IllegalArgumentException] {
         ParquetWrite.writeFile(
           new java.io.File(dir, "bad2.parquet").toPath,
-          Seq(PwFields.int64("x")),
+          StructType(Seq(StructField("x", LongType))),
           Iterator.single(Array[Any](Long.box(1L))), codec = 3) // LZO
       }
       assert(e2.getMessage.contains("codec"))
-      import org.apache.spark.sql.types._
       val e3 = intercept[IllegalArgumentException] {
-        ParquetWrite.fieldsOf(StructType(Seq(
-          StructField("m", MapType(StringType, LongType)))))
+        ParquetWrite.check(StructType(Seq(StructField("m",
+          MapType(ArrayType(StringType), LongType)))))
       }
       assert(e3.getMessage.contains("unsupported"))
+      // types the writer never took still reject, by column name
+      for (dt <- Seq(ByteType, ShortType, TimestampNTZType,
+          DayTimeIntervalType())) {
+        val e = intercept[IllegalArgumentException] {
+          ParquetWrite.check(StructType(Seq(StructField("c", dt))))
+        }
+        assert(e.getMessage.contains("'c'") &&
+          e.getMessage.contains("unsupported"), e.getMessage)
+      }
     } finally graft.streaming.WorkDirs.deleteRecursively(dir)
   }
 
@@ -558,8 +564,8 @@ class ParquetWriteSpec extends AnyFunSuite {
       // unsorted high-cardinality string + long keys: every row
       // group's [min,max] covers the whole domain, so ONLY the blooms
       // can prune point lookups — the exact shape they exist for
-      val fields = Seq(PwFields.int64("id"), PwFields.string("key"),
-        PwFields.int64("uid"))
+      val fields = StructType(Seq(StructField("id", LongType),
+        StructField("key", StringType), StructField("uid", LongType)))
       def rows = (0 until 40000).iterator.map { i =>
         Array[Any](Long.box(i.toLong), md5(i.toString),
           Long.box((i.toLong * 2654435761L) % 1000000007L))

@@ -109,6 +109,50 @@ class TimestampParitySpec extends AnyFunSuite {
     assert(types("INT96") == Seq(LongType, TimestampType, TimestampNTZType))
   }
 
+  test("ParquetWrite DATE and TIMESTAMP values, pre-1970 and " +
+      "1969-12-31T23:59:59.5 included, read identically through graftpq " +
+      "and spark.read.parquet under three zones; TIMESTAMP_NTZ rejects " +
+      "by name") {
+    import org.apache.spark.sql.types.{DateType, StructField, StructType}
+    val instants = Seq("1969-12-31T23:59:59.500Z",
+      "1969-12-31T23:59:59.999999Z", "1969-12-31T23:59:59Z",
+      "1969-12-31T23:59:58.000001Z", "1970-01-01T00:00:00Z",
+      "1970-01-01T00:00:00.000001Z", "1969-07-20T20:17:40.123456Z",
+      "1900-01-01T00:00:00.500Z", "2024-03-10T10:30:00.25Z")
+      .map(java.time.Instant.parse)
+    val micros = instants.map(t => java.time.temporal.ChronoUnit.MICROS
+      .between(java.time.Instant.EPOCH, t))
+    // 0001-01-01, 1900-01-01, 1969-12-31, 1970-01-01, 2024-03-10 ...
+    val days = Seq(-719162, -25567, -1, 0, 19792, -2, 1, 365, -365)
+    val out = new java.io.File(dir, "pq-write")
+    out.mkdirs()
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("d", DateType), StructField("ts", TimestampType)))
+    graft.operators.ParquetWrite.writeFile(
+      new java.io.File(out, "part-0.parquet").toPath, schema,
+      instants.indices.iterator.map(i => Array[Any](Long.box(i.toLong),
+        Int.box(days(i)), Long.box(micros(i)))))
+    inZones { z =>
+      val ours = spark.read.format("graftpq").load(out.toString)
+      val theirs = spark.read.parquet(out.toString)
+      assertSame(s"$z ParquetWrite", ours, theirs)
+      for (df <- Seq(ours, theirs)) {
+        val got = df.orderBy("id")
+          .selectExpr("unix_date(d)", "unix_micros(ts)").collect()
+        assert(got.map(_.getInt(0)).toSeq == days, s"$z days")
+        assert(got.map(_.getLong(1)).toSeq == micros, s"$z micros")
+      }
+    }
+    val e = intercept[IllegalArgumentException] {
+      graft.operators.ParquetWrite.writeFile(
+        new java.io.File(out, "ntz.parquet").toPath,
+        StructType(Seq(StructField("ntz", TimestampNTZType))),
+        Iterator.single(Array[Any](Long.box(0L))))
+    }
+    assert(e.getMessage.contains("'ntz'") &&
+      e.getMessage.contains("unsupported"), e.getMessage)
+  }
+
   /** A parquet-mr-written file (no Spark metadata) holding INT64
     * TIMESTAMP(MICROS) adjusted and not adjusted to UTC, and
     * TIMESTAMP(NANOS).
